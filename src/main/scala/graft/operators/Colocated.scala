@@ -56,9 +56,9 @@ object Colocated {
     // rest) — partition indexes no longer align with the ring splits, and
     // a blind zip would join MISALIGNED ranges silently. Fall back to the
     // planner until OPTIMIZE folds the DVs away.
-    val anyDvs =
-      graft.write.Snapshots.dvsForPin(spark, leftDir, None).nonEmpty ||
-        graft.write.Snapshots.dvsForPin(spark, rightDir, None).nonEmpty
+    def hasDvs(dir: String): Boolean =
+      graft.write.Snapshots.snapshot(spark, dir, Some("listing")).dvs.nonEmpty
+    val anyDvs = hasDvs(leftDir) || hasDvs(rightDir)
     if (anyDvs || lRanges.isEmpty || lRanges != rRanges) {
       // not provably co-located: correct fallback through the planner
       return left.join(right,

@@ -2271,11 +2271,11 @@ object Battery {
         "WHERE source = 'src3' OR doc_id % 7 = 0")
       s.sql(s"DELETE FROM $cat.db.docs WHERE doc_id % 11 = 5")
       // merge-on-read contract: both DMLs kept every original base file
-      val now = graft.write.Snapshots.latestVersion(s, dir).get
-      val after = graft.write.Snapshots.files(s, dir, now).toSet
+      val now = graft.write.Snapshots.snapshot(s, dir, None)
+      val after = now.files.map(_.path).toSet
       require(before.subsetOf(after),
         s"merge-on-read DML rewrote base files: ${(before -- after).take(3)}")
-      require(graft.write.Snapshots.deletionVectors(s, dir, now).nonEmpty,
+      require(now.dvs.nonEmpty,
         "merge-on-read DML produced no deletion vectors")
       s.table(s"$cat.db.docs").select(col("doc_id"), col("source"), col("n_chars"))
     }),

@@ -50,7 +50,7 @@ private[sources] object GraftCowChangeData {
       spark: SparkSession,
       dir: String,
       cql: CqlSchema,
-      sourceVersion: Long,
+      source: Snapshots.TableSnapshot,
       scanned: Seq[String],
       replacement: DataFrame): Seq[String] = {
     val RidCol = GraftDataSource.RowIdCol
@@ -67,8 +67,7 @@ private[sources] object GraftCowChangeData {
     // old rows: the scanned files with the SOURCE version's DVs applied —
     // a MoR-then-CoW mix must not resurrect already-deleted positions
     val scannedSet = scanned.toSet
-    val dvs = Snapshots.deletionVectors(spark, dir, sourceVersion)
-      .filter { case (carrier, _) => scannedSet.contains(carrier) }
+    val dvs = source.dvs.filter { case (carrier, _) => scannedSet.contains(carrier) }
     val oldRaw: DataFrame =
       if (scanned.isEmpty)
         spark.createDataFrame(
@@ -105,8 +104,7 @@ private[sources] object GraftCowChangeData {
           else withPos.join(
             broadcast(deleted.toDF("__cdc_file", "__cdc_pos")),
             Seq("__cdc_file", "__cdc_pos"), "left_anti")
-        val bases = Snapshots.rowIdBindings(spark, dir, sourceVersion)
-          .filter { case (p, _) => scannedSet.contains(p) }.toSeq
+        val bases = source.rowIds.filter { case (p, _) => scannedSet.contains(p) }.toSeq
         val withRid = afterDv
           .join(broadcast(bases.toDF("__cdc_file", "__cdc_base")),
             Seq("__cdc_file"), "left_outer")

@@ -711,6 +711,11 @@ class GraftScanBuilder(
   private var topN: Option[(String, Boolean, Int)] = None
   private var statsOps: Option[(Seq[GraftStatsScan.Op], Array[TokenPruner.FileMeta])] = None
 
+  /** The ONE table state this read plans from: the stats answer and the
+   *  scan it builds see the same version, files and deletion vectors. */
+  private lazy val snapshot =
+    graft.write.Snapshots.snapshot(SparkSession.active, dir, snapshotPin)
+
   /** Top-k planning hint (`ORDER BY pk LIMIT k`): per-file min/max stats
    *  bound which files can possibly hold the k extreme rows, so an
    *  unfiltered top-k over a 100 TB table plans a handful of files
@@ -756,8 +761,7 @@ class GraftScanBuilder(
     // deletion vectors make footer row counts an OVERcount (they include
     // logically deleted rows) — metadata-only answers are unsound until
     // OPTIMIZE folds the DVs away
-    if (graft.write.Snapshots.dvsForPin(SparkSession.active, dir, snapshotPin).nonEmpty)
-      return None
+    if (snapshot.dvs.nonEmpty) return None
     def name(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case nr: NamedReference if nr.fieldNames.length == 1 => Some(nr.fieldNames()(0))
@@ -766,9 +770,7 @@ class GraftScanBuilder(
     // the SAME snapshot is validated against AND captured into the scan: a
     // file appended between planning and execution can neither crash the
     // stats lookup nor silently shift the answer off the validated set
-    val listed = TokenPruner.listFiles(SparkSession.active, dir)
-    val files = graft.write.Snapshots.resolveListing(
-      SparkSession.active, dir, snapshotPin, listed)
+    val files = snapshot.files
     def eligible(n: String): Boolean = {
       // footer stats are keyed by PHYSICAL names; renamed columns are
       // non-key by the catalog contract — conservatively decline rather
@@ -829,8 +831,8 @@ class GraftScanBuilder(
     statsOps match {
       case Some((ops, files)) => new GraftStatsScan(dir, ops, files)
       case None =>
-        new GraftScan(dir, annotated, required, pushed, cql, clustered, limit,
-          snapshotPin, changeFeed, topN, maxFilesPerTrigger, maxBytesPerTrigger,
+        new GraftScan(dir, annotated, required, pushed, cql, snapshot, clustered,
+          limit, snapshotPin, changeFeed, topN, maxFilesPerTrigger, maxBytesPerTrigger,
           colMap)
     }
 }
@@ -913,6 +915,7 @@ class GraftScan(
     required: StructType,
     pushed: Array[Filter],
     cql: CqlSchema,
+    resolve: => graft.write.Snapshots.TableSnapshot,
     clustered: Boolean = false,
     limit: Option[Int] = None,
     snapshotPin: Option[String] = None,
@@ -934,6 +937,10 @@ class GraftScan(
   }
 
   private lazy val spark = SparkSession.active
+
+  /** Resolved on first use and kept for the scan's lifetime: runtime
+   *  filters re-prune THIS state, never a newer version. */
+  private lazy val snapshot = resolve
 
   // ---- runtime filtering (SURVEY §4.1 "optional SupportsRuntimeFiltering"):
   // after a broadcast join's build side materializes, Spark hands the scan
@@ -959,31 +966,25 @@ class GraftScan(
 
   private def effectivePushed: Array[Filter] = pushed ++ runtime
 
-  @volatile private var listedCount: Int = -1
-
-  /** All data files, then token/key-stat pruned against pushed + runtime
-   *  pk filters (cache invalidated when runtime filters arrive). */
+  /** The snapshot's files, token/key-stat pruned against pushed + runtime
+   *  pk filters (cache invalidated when runtime filters arrive). Unpinned
+   *  reads of a logged table plan from the latest version, never the raw
+   *  listing (which can hold a half-landed batch or both generations of a
+   *  rewrite). */
   private def prunedFiles: Array[TokenPruner.FileMeta] = {
     var files = cachedPruned
     if (files == null) {
-      val listed = TokenPruner.listFiles(spark, dir)
-      // snapshot resolution BEFORE any pruning: explicit pin → that version;
-      // unpinned but the table has a log → latest snapshot (a live listing
-      // can hold a half-landed batch or both generations of a rewrite);
-      // a recorded file absent from the listing fails the scan
-      val all = graft.write.Snapshots.resolveListing(spark, dir, snapshotPin, listed)
-      listedCount = listed.length
       // GENERATED column inference: filters on a source column imply
       // pruning-only conjuncts on its generated column (monotone shapes),
       // so a timestamp range prunes `PARTITIONED BY (day)` directories
       // without the query naming day. Never returned to Spark.
       val derived = GraftDataSource.renameFilters(
         GeneratedColumns.derive(effectivePushed, dataSchema, sessionZone), colMap)
-      files = TokenPruner.prune(spark, all, physPushed ++ derived, cql)
+      files = TokenPruner.prune(spark, snapshot.files, physPushed ++ derived, cql)
       // row-count-based planning shrinks (LIMIT / top-k) are unsound while
       // deletion vectors hide rows inside files — footer counts overcount,
       // so a shrink could plan too few files and silently drop results
-      val hasDvs = graft.write.Snapshots.dvsForPin(spark, dir, snapshotPin).nonEmpty
+      val hasDvs = snapshot.dvs.nonEmpty
       // LIMIT planning: with no filters anywhere, any n rows satisfy an
       // unordered limit — plan only enough files (manifest/footer row
       // counts) instead of the whole table. Filters disable this (row
@@ -1035,7 +1036,7 @@ class GraftScan(
       override def value(): Long = v
     }
     Array(
-      m("graftFilesListed", listedCount.toLong),
+      m("graftFilesListed", snapshot.listed.toLong),
       m("graftFilesPlanned", planned.length.toLong),
       m("graftBytesPlanned", planned.map(_.sizeBytes).sum))
   }
@@ -1051,8 +1052,7 @@ class GraftScan(
     var m = cachedDvs
     if (m == null) {
       val planned = prunedFiles.map(_.path).toSet
-      m = graft.write.Snapshots.dvsForPin(spark, dir, snapshotPin)
-        .filter { case (base, _) => planned(base) }
+      m = snapshot.dvs.filter { case (base, _) => planned(base) }
       cachedDvs = m
     }
     m
@@ -1203,7 +1203,7 @@ class GraftScan(
       }.toSeq
       val ridBases =
         if (!metaRowIdRequested) Map.empty[String, Long]
-        else graft.write.Snapshots.ridsForPin(spark, dir, snapshotPin)
+        else snapshot.rowIds
       val positioned = org.apache.spark.sql.graftshim.PositionAwareScanUtil
         .positionedPartitions(positionedBatch.planInputPartitions(), dvMap, emitMeta,
           ridBases, storedRowIdTrails = metaRowIdRequested)

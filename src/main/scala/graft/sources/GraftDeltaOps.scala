@@ -232,7 +232,7 @@ class GraftDeltaWrite(
 
       // one immutable DV per touched carrier: union of its existing DV
       // (at the pinned source version) and this statement's positions
-      val existing = Snapshots.deletionVectors(spark, dir, sourceVersion)
+      val existing = op.source.get.dvs
       val dvUpdates = fresh.map { case (file, ps) =>
         val dvPath = DeletionVectors.newDvPath(dir)
         DeletionVectors.write(fs, dvPath,

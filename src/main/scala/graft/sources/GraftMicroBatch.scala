@@ -160,7 +160,8 @@ object GraftMicroBatchStream {
    *  [[graft.write.Snapshots.readChangesWithDeletes]]. */
   private[sources] def refuseDeletionVectors(
       spark: SparkSession, dir: String, planned: Seq[String]): Unit = {
-    val dvs = graft.write.Snapshots.dvsForPin(spark, dir, None)
+    // `listing`: the latest bindings over the same raw listing this stream tails
+    val dvs = graft.write.Snapshots.snapshot(spark, dir, Some("listing")).dvs
     if (dvs.isEmpty) return
     val hit = planned.filter(dvs.contains)
     if (hit.nonEmpty)

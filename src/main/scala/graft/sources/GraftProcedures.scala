@@ -217,12 +217,12 @@ private[sources] object GraftProcedures {
             s"column (have: ${all.map(_.name).mkString(", ")})")
           hit
         }
-      val head = Snapshots.latestVersion(spark, dir).getOrElse(
+      val snap = Snapshots.snapshot(spark, dir, None)
+      val head = snap.version.getOrElse(
         throw new IllegalArgumentException(
           s"sync_identity: $dir has no snapshot log"))
       val marks = Snapshots.identityHighWaterMarks(spark, dir, head)
-      val listed = TokenPruner.listFiles(spark, dir)
-      val live = Snapshots.resolveListing(spark, dir, Some(head.toString), listed)
+      val live = snap.files
       val extremes: Map[String, Option[Long]] =
         if (live.isEmpty) specs.map(s => s.name -> None).toMap
         else {

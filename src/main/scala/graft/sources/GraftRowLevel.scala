@@ -133,13 +133,13 @@ class GraftRowLevelScanBuilder(
 }
 
 /** The driver-side state a row-level scan shares with its write: the
- *  pinned source version and the finally-planned groups. One trait, two
- *  operations (copy-on-write [[GraftRowLevelOperation]] and merge-on-read
- *  [[GraftDeltaOperation]]). */
+ *  source snapshot (resolved by the FIRST scan, None until then) and the
+ *  finally-planned groups. One trait, two operations (copy-on-write
+ *  [[GraftRowLevelOperation]] and merge-on-read [[GraftDeltaOperation]]). */
 trait GraftRowLevelState {
-  @volatile private[sources] var sourceVersion: Option[Long] = None
-  @volatile private[sources] var sourcePinned: Boolean = false
+  @volatile private[sources] var source: Option[Snapshots.TableSnapshot] = None
   @volatile private[sources] var scannedFiles: Array[String] = Array.empty
+  private[sources] def sourceVersion: Option[Long] = source.flatMap(_.version)
 }
 
 class GraftRowLevelScan(
@@ -172,21 +172,19 @@ class GraftRowLevelScan(
     cachedPruned = null
   }
 
-  /** Live set pinned to the log head observed FIRST (then resolved with an
-   *  explicit pin) — the ordering makes the commit guard exact: a commit
-   *  racing past between the two steps fails the DML loudly instead of
+  /** The DML's one source state, shared by every scan of the operation
+   *  and by its write: the version it names is the commit guard, so a
+   *  commit racing past the resolution fails the DML loudly instead of
    *  letting it replace files it never read. */
+  private def source: Snapshots.TableSnapshot = op.synchronized {
+    if (op.source.isEmpty) op.source = Some(Snapshots.snapshot(spark, dir, None))
+    op.source.get
+  }
+
   private def prunedFiles: Array[TokenPruner.FileMeta] = {
     var files = cachedPruned
     if (files == null) {
-      if (!op.sourcePinned) {
-        op.sourceVersion = Snapshots.latestVersion(spark, dir)
-        op.sourcePinned = true
-      }
-      val listed = TokenPruner.listFiles(spark, dir)
-      val all = Snapshots.resolveListing(
-        spark, dir, op.sourceVersion.map(_.toString), listed)
-      files = TokenPruner.prune(spark, all,
+      files = TokenPruner.prune(spark, source.files,
         GraftDataSource.renameFilters(pushed ++ runtime, colMap), cql)
       cachedPruned = files
     }
@@ -210,11 +208,9 @@ class GraftRowLevelScan(
   /** DV bindings for the planned files at the pinned source version: a DML
    *  over dv-carrying files must not see (CoW: re-stage) already-deleted
    *  rows, and a delta DML needs physical coordinates regardless. */
-  private def dvMap: Map[String, String] = op.sourceVersion match {
-    case Some(v) =>
-      val planned = prunedFiles.map(_.path).toSet
-      Snapshots.deletionVectors(spark, dir, v).filter { case (b, _) => planned(b) }
-    case None => Map.empty
+  private def dvMap: Map[String, String] = {
+    val planned = prunedFiles.map(_.path).toSet
+    source.dvs.filter { case (b, _) => planned(b) }
   }
 
   /** What the parquet readers produce (PHYSICAL names) — the computed
@@ -267,9 +263,9 @@ class GraftRowLevelScan(
       }.toSeq
       val ridBases =
         if (!ridRequested) Map.empty[String, Long]
-        else Snapshots.rowIdBindings(spark, dir, op.sourceVersion.getOrElse(
-          throw new IllegalStateException(
-            s"row-tracked DML scan on $dir needs a pinned source version")))
+        else if (source.version.isEmpty) throw new IllegalStateException(
+          s"row-tracked DML scan on $dir needs a pinned source version")
+        else source.rowIds
       org.apache.spark.sql.graftshim.PositionAwareScanUtil.positionedPartitions(
         batch.planInputPartitions(), dvMap, emitMeta,
         ridBases, storedRowIdTrails = ridRequested)
@@ -529,13 +525,13 @@ class GraftReplaceDataWrite(
             else TokenPruner.listDataFiles(fs, fs.makeQualified(new Path(gen)))
               .map(_.getPath.toString).toSeq
           val scannedSet = scanned.toSet
-          val keep = Snapshots.files(spark, dir, v).filterNot(scannedSet.contains)
+          val keep = op.source.get.files.map(_.path).toSeq.filterNot(scannedSet.contains)
           val cdcFiles =
             if (!tableOptions.getBoolean("changeFeedCow", false)) Nil
             // the carried row id is threaded into the sidecar on tracked
             // tables (identity pairing), never treated as a value column
-            else GraftCowChangeData.record(spark, dir, cql, v, scanned.toSeq,
-              replacement)
+            else GraftCowChangeData.record(spark, dir, cql, op.source.get,
+              scanned.toSeq, replacement)
           Snapshots.commitRewrite(spark, dir, keep ++ genFiles,
             expectedParent = Some(v), cdcFiles = cdcFiles)
         case None =>

@@ -428,42 +428,85 @@ object Snapshots {
     readDvs(f, root, version)
   }
 
-  /** The DV bindings a scan must apply, resolved the same way
-   *  [[resolveListing]] resolves its file set: explicit pin → that
-   *  version's bindings; no pin → latest snapshot's (none without a log).
-   *  `snapshotVersion=listing` also applies the LATEST bindings — listing
-   *  mode exists to see out-of-band FILES, not to resurrect deleted rows. */
-  /** The ONE pin grammar (listing/latest/asof:<ms>/tag:<name>/<number>)
-   *  behind every scan-side resolution — dvsForPin, ridsForPin and
-   *  filterListing all call this, so a new spelling (or a trim/case fix)
-   *  cannot desynchronize which version a scan's files, DVs and row-id
-   *  bindings resolve to. None = "listing"/"latest" on a log-less table. */
-  private def resolvePin(spark: SparkSession, dir: String,
-      f: FileSystem, root: Path, pin: Option[String]): Option[Long] =
-    pin.map(_.trim.toLowerCase) match {
-      case Some("listing") | Some("latest") | None => latest(f, root)
-      case Some(asof) if asof.startsWith("asof:") =>
-        Some(versionAsOf(spark, dir, asof.stripPrefix("asof:").trim.toLong))
+  /**
+   * One resolved table state — what a read plans from. Built by
+   * [[snapshot]] with one log listing (only when the pin needs the latest
+   * version) and one read of the version file, so a scan's files, its
+   * deletion-vector bindings and its row-id bases always come from the
+   * SAME version: a commit landing mid-planning can never pair version v's
+   * files with v+1's DVs (which would resurrect DV-deleted rows).
+   *
+   * The pin grammar (the `snapshotVersion` read option), trimmed and
+   * case-folded; this is the one place it is parsed:
+   *  - none: the latest version when the table has a log; on a log-less
+   *    table the raw listing (version None, no DVs, no row ids);
+   *  - `latest`: the latest version; refused on a log-less table;
+   *  - `listing`: the raw listing (out-of-band files included) with the
+   *    LATEST version's DV and row-id bindings — listing mode exists to
+   *    see files the log never heard of, not to resurrect deleted rows;
+   *  - `asof:<epochMillis>`: the highest version committed at or before
+   *    that time ([[versionAsOf]]);
+   *  - `tag:<name>`: the tagged version ([[tag]]);
+   *  - `<number>`: that version; an unknown one fails loudly, never
+   *    falling back to "whatever is on disk".
+   *
+   * A pinned file absent from the live listing fails the resolution (a pin
+   * must never silently shrink); a shallow clone's out-of-root files are
+   * admitted with manifest-first/footer stats.
+   *
+   * @param files   planned data files with their planning stats
+   * @param dvs     data file → deletion-vector file
+   * @param rowIds  data file → base row id (empty unless row-tracked)
+   * @param listed  data files the raw listing held (scan metrics)
+   */
+  final case class TableSnapshot(
+      version: Option[Long],
+      files: Array[graft.sources.TokenPruner.FileMeta],
+      dvs: Map[String, String],
+      rowIds: Map[String, Long],
+      listed: Int)
+
+  /** Resolve `pin` (grammar on [[TableSnapshot]]) to one table state.
+   *  The version is fixed BEFORE the data files are listed, so every file
+   *  it names was committed before the listing ran. */
+  def snapshot(spark: SparkSession, dir: String, pin: Option[String]): TableSnapshot = {
+    val (f, root) = fs(spark, dir)
+    val spelled = pin.map(_.trim.toLowerCase)
+    val version = spelled match {
+      case None | Some("latest") | Some("listing") => latest(f, root)
+      case Some(a) if a.startsWith("asof:") =>
+        Some(versionAsOf(spark, dir, a.stripPrefix("asof:").trim.toLong))
       case Some(t) if t.startsWith("tag:") =>
         Some(resolveTag(spark, dir, t.stripPrefix("tag:").trim))
       case Some(n) => Some(n.toLong)
     }
-
-  def dvsForPin(spark: SparkSession, dir: String, pin: Option[String])
-      : Map[String, String] = {
-    val (f, root) = fs(spark, dir)
-    resolvePin(spark, dir, f, root, pin)
-      .map(readDvs(f, root, _)).getOrElse(Map.empty)
-  }
-
-  /** [[rowIdBindings]] resolved through the same pin grammar as
-   *  [[dvsForPin]] (listing/latest/asof:/tag:/version) — the scan-side
-   *  lookup. Empty map = not a row-tracked table (or no log). */
-  def ridsForPin(spark: SparkSession, dir: String, pin: Option[String])
-      : Map[String, Long] = {
-    val (f, root) = fs(spark, dir)
-    resolvePin(spark, dir, f, root, pin)
-      .map(readRids(f, root, _)).getOrElse(Map.empty)
+    if (version.isEmpty && spelled.contains("latest"))
+      throw new IllegalArgumentException(
+        s"snapshotVersion=latest but $dir has no snapshot log")
+    val text = version.map(readText(f, root, _))
+    val listed = graft.sources.TokenPruner.listFiles(spark, dir)
+    val files = version.zip(text) match {
+      case Some((v, t)) if !spelled.contains("listing") =>
+        // a SHALLOW CLONE's log references files OUTSIDE the table root
+        // (the source's data) — they can never appear in this dir's
+        // listing; admit them with manifest-first/footer stats instead
+        val (local, foreign) = parseFiles(t, root).toSet.partition(underRoot(root))
+        val have = listed.filter(m => local.contains(m.path))
+        if (have.length != local.size) {
+          val missing = (local -- have.map(_.path)).toSeq.sorted
+          throw new IllegalStateException(
+            s"snapshot v$v of $dir references ${missing.length} file(s) absent " +
+              s"from the live listing (vacuumed past retention or deleted out-of-band); " +
+              s"first missing: ${missing.head}")
+        }
+        if (foreign.isEmpty) have
+        else have ++ graft.sources.TokenPruner.foreignMetas(spark, dir, foreign.toSeq.sorted)
+      case _ => listed
+    }
+    TableSnapshot(version, files,
+      text.map(parseDvs(_, root)).getOrElse(Map.empty),
+      text.map(parseRids(_, root)).getOrElse(Map.empty),
+      listed.length)
   }
 
   /** Commit wall-clock (epoch millis) recorded in a version's header — the
@@ -955,7 +998,7 @@ object Snapshots {
    * one small commit with zero data movement. The log format already
    * round-trips out-of-root paths ([[relativize]] leaves them absolute),
    * scan planning admits them with manifest/footer stats
-   * ([[filterListing]]), appends land under the clone, DML rewrites
+   * ([[snapshot]]), appends land under the clone, DML rewrites
    * materialize affected foreign rows into clone-local generations, and
    * the clone's [[vacuum]] never deletes out-of-root files (the source
    * owns them). The documented trade, same as Delta: vacuuming the
@@ -1193,11 +1236,7 @@ object Snapshots {
    *  / `deleted_rows` say when to OPTIMIZE, `n_files` vs `bytes` say
    *  when to bin-pack. */
   def tableDetail(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val (f, root) = fs(spark, dir)
-    val listed = graft.sources.TokenPruner.listFiles(spark, dir)
-    val head = latest(f, root)
-    val live = resolveListing(spark, dir, None, listed)
-    val dvs = head.map(readDvs(f, root, _)).getOrElse(Map.empty)
+    val TableSnapshot(head, live, dvs, _, _) = snapshot(spark, dir, None)
     val deletedRows = dvs.values.map(p =>
       DeletionVectors.count(new Path(p).getFileSystem(
         spark.sessionState.newHadoopConf()), p)).sum
@@ -1314,13 +1353,15 @@ object Snapshots {
    *    compaction folds ("fold") contribute NOTHING — every key resolves
    *    identically across them by their commit contract.
    *
-   * Returns None when the walk cannot be trusted (intermediate version
-   * files vacuumed, a candidate data file gone from disk, or a pre-fold-tag
-   * legacy rewrite commit that cannot be told apart from CoW DML) — the
-   * caller must fall back to the full-state diff. Tombstones are NOT
-   * covered here: they live outside the version log and apply to both
-   * pinned states symmetrically unless the caller time-scopes them (the
-   * caller handles that case; see TokenSortedWriter.diffRows).
+   * A pre-fold-tag legacy rewrite commit cannot be told apart from CoW
+   * DML, so its added AND removed files all become candidates (sound, but
+   * possibly the whole table). Returns None when the walk cannot be
+   * trusted (intermediate version files vacuumed, a candidate data file
+   * gone from disk, a version file that fails to parse) — the caller must
+   * fall back to the full-state diff. Tombstones are NOT covered here:
+   * they live outside the version log and apply to both pinned states
+   * symmetrically unless the caller time-scopes them (the caller handles
+   * that case; see TokenSortedWriter.diffRows).
    */
   def diffCandidateFiles(
       spark: SparkSession, dir: String, fromVersion: Long, toVersion: Long)
@@ -1758,64 +1799,6 @@ object Snapshots {
     engine.foldLeft(df)(_.drop(_))
   }
 
-  /**
-   * Resolve the file set a scan plans from. An explicit pin filters to that
-   * version; with NO pin, a table that HAS a snapshot log defaults to its
-   * LATEST snapshot — the live listing can transiently hold a half-landed
-   * concurrent batch, and after a [[commitRewrite]] vacuumed with
-   * `keepLast > 1` it holds BOTH generations at once, so a listing-driven
-   * read would silently double-count every rewritten row. Raw
-   * listing-driven planning remains (a) the only mode for tables with no
-   * log and (b) an explicit opt-in via `snapshotVersion=listing` (e.g. to
-   * see out-of-band files the log was never told about).
-   */
-  def resolveListing(
-      spark: SparkSession,
-      dir: String,
-      pin: Option[String],
-      all: Array[graft.sources.TokenPruner.FileMeta])
-      : Array[graft.sources.TokenPruner.FileMeta] =
-    pin.map(_.trim.toLowerCase) match {
-      case Some("listing") => all
-      case Some(p) => filterListing(spark, dir, p, all)
-      case None =>
-        if (latestVersion(spark, dir).isEmpty) all
-        else filterListing(spark, dir, "latest", all)
-    }
-
-  /** Resolve a pinned version ("latest", a number, or "asof:<epochMillis>"
-   *  — the `TIMESTAMP AS OF` spelling, resolved via [[versionAsOf]])
-   *  against the log and restrict `all` (the live listing) to that
-   *  snapshot's files. A recorded file missing from the listing fails the
-   *  scan — a pin must never silently shrink. */
-  def filterListing(
-      spark: SparkSession,
-      dir: String,
-      pinned: String,
-      all: Array[graft.sources.TokenPruner.FileMeta])
-      : Array[graft.sources.TokenPruner.FileMeta] = {
-    val (f, root) = fs(spark, dir)
-    val version = resolvePin(spark, dir, f, root, Some(pinned))
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshotVersion=$pinned but $dir has no snapshot log"))
-    val want = readFiles(f, root, version).toSet
-    // a SHALLOW CLONE's log references files OUTSIDE the table root
-    // (the source's data) — they can never appear in this dir's listing;
-    // admit them with manifest-first/footer stats instead
-    val (local, foreign) = want.partition(underRoot(root))
-    val have = all.filter(m => local.contains(m.path))
-    if (have.length != local.size) {
-      val missing = (local -- have.map(_.path)).toSeq.sorted
-      throw new IllegalStateException(
-        s"snapshot v$version of $dir references ${missing.length} file(s) absent " +
-          s"from the live listing (vacuumed past retention or deleted out-of-band); " +
-          s"first missing: ${missing.head}")
-    }
-    if (foreign.isEmpty) have
-    else have ++ graft.sources.TokenPruner.foreignMetas(
-      spark, dir, foreign.toSeq.sorted)
-  }
-
   /** Bounded-parallel existence probe (pool of ≤16, the
    *  readFootersParallel shape): the tables worth validating file-by-file
    *  are exactly the big ones — a serial exists() loop over ~100k object-
@@ -1852,7 +1835,7 @@ object Snapshots {
 
   /** Is `path` under the table root? The ONE spelling of the
    *  out-of-root test every clone-aware site shares ([[vacuum]]'s
-   *  delete scope, [[filterListing]]'s foreign admission, the
+   *  delete scope, [[snapshot]]'s foreign admission, the
    *  maintenance guards) — paths compare as qualified URI strings, the
    *  same spelling [[relativize]] keys on, so the sites cannot diverge. */
   def underRoot(root: Path, path: String): Boolean = underRoot(root)(path)

@@ -643,10 +643,7 @@ object TokenSortedWriter {
     // 2. tombstones — partition-level (pk only) and row-level (pk + ck)
     // coexist in one _graft_deletes dir; a merged read distinguishes them by
     // null ck columns (ck is part of a primary key, never legitimately null)
-    val delPath = new org.apache.hadoop.fs.Path(path, DeletesDir)
-    val fs = delPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(delPath)) {
-      val deletesAll = spark.read.option("mergeSchema", "true").parquet(delPath.toString)
+    tombstones(spark, path).foreach { deletesAll =>
       // time-scoped tombstones: a PINNED state reconstruction (diffRows'
       // from-side) must not let deletes that landed AFTER the pin
       // retro-erase rows the downstream consumer synced before the delete
@@ -686,6 +683,21 @@ object TokenSortedWriter {
     }
 
     if (keepFeatureColumns) df else df.drop(WritetimeCol, ExpiresCol)
+  }
+
+  /** The table's `_graft_deletes` tombstones, or None when the dir holds no
+   *  data file (Spark cannot infer a schema from an empty dir). The one
+   *  reader of the dir: `mergeSchema` because partition, row and range
+   *  tombstones append with different columns; the listed files are read
+   *  by name, since Spark warns on every read of a `_`-prefixed path. */
+  private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val delPath = new Path(dir, DeletesDir)
+    val fs = delPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val files =
+      if (!fs.exists(delPath)) Array.empty[String]
+      else graft.sources.TokenPruner.listDataFiles(fs, delPath).map(_.getPath.toString)
+    if (files.isEmpty) None
+    else Some(spark.read.option("mergeSchema", "true").parquet(files.toIndexedSeq: _*))
   }
 
   /**
@@ -854,13 +866,7 @@ object TokenSortedWriter {
             // they cancel and contribute no candidates)
             val tombs: Option[DataFrame] =
               if (fromTombstoneHorizonMicros.isEmpty) None
-              else {
-                val tPath = new Path(dir, DeletesDir)
-                val tfs = tPath.getFileSystem(spark.sessionState.newHadoopConf())
-                if (!tfs.exists(tPath)) None
-                else Some(spark.read.parquet(tPath.toString)
-                  .select(parts.map(qcol): _*))
-              }
+              else tombstones(spark, dir).map(_.select(parts.map(qcol): _*))
             val all = (touched.toSeq ++ tombs.toSeq).reduceOption(_ unionByName _)
             Some(all.getOrElse(from.select(parts.map(qcol): _*).limit(0))
               .distinct())
@@ -920,9 +926,8 @@ object TokenSortedWriter {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val root = fs.makeQualified(p)
-    val listed = graft.sources.TokenPruner.listFiles(spark, dir)
-    val head = Snapshots.latestVersion(spark, dir)
-    val live = Snapshots.resolveListing(spark, dir, None, listed)
+    val Snapshots.TableSnapshot(head, live, dvBindings, _, _) =
+      Snapshots.snapshot(spark, dir, None)
     // dir-partitioned layouts work unchanged: each replacement lands in
     // its original's parent, i.e. the same graft_p_* partition dir, so
     // dir pruning keeps seeing the rows it should
@@ -930,12 +935,9 @@ object TokenSortedWriter {
     if (affected.isEmpty) return 0L
     val keyDf = broadcast(keys.select(schema.partitionKeys.map(qcol): _*))
     // merge-on-read state folds through this rewrite too: affected files
-    // read with their DVs applied (deleted rows neither counted nor
-    // re-staged), and the snapshot commit's kept-files filter drops the
-    // replaced files' stale bindings
-    val dvBindings = head
-      .map(v => Snapshots.deletionVectors(spark, dir, v))
-      .getOrElse(Map.empty[String, String])
+    // read with their DVs (dvBindings) applied — deleted rows neither
+    // counted nor re-staged — and the snapshot commit's kept-files filter
+    // drops the replaced files' stale bindings
     var removed = 0L
     val replacements = scala.collection.mutable.Map[String, Option[String]]()
     affected.foreach { meta =>
@@ -1030,7 +1032,7 @@ object TokenSortedWriter {
    *     time-travel windows open at the cost of disk until a later vacuum).
    *     At retain > 1 the live LISTING holds both generations, but reads
    *     stay correct: unpinned graft-source reads of a snapshotted table
-   *     plan from the latest snapshot ([[Snapshots.resolveListing]]), never
+   *     plan from the latest snapshot ([[Snapshots.snapshot]]), never
    *     the raw listing — spec-covered against the double-count that a
    *     listing-driven read would produce.
    *
@@ -1056,12 +1058,12 @@ object TokenSortedWriter {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val root = fs.makeQualified(p)
+    val snap = Snapshots.snapshot(spark, dir, None)
     // listing-driven fold: a shallow clone's out-of-root (source-owned)
     // files are invisible to the listing, so the rewrite would silently
     // drop their rows — refuse; DML materializes foreign rows locally
-    Snapshots.latestVersion(spark, dir).foreach { head =>
-      val foreign = Snapshots.files(spark, dir, head)
-        .filterNot(Snapshots.underRoot(root, _))
+    if (snap.version.isDefined) {
+      val foreign = snap.files.map(_.path).filterNot(Snapshots.underRoot(root))
       if (foreign.nonEmpty)
         throw new UnsupportedOperationException(
           s"compactInPlace on $dir: the snapshot references ${foreign.length} " +
@@ -1074,7 +1076,7 @@ object TokenSortedWriter {
       // rather than silently break every id-keyed consumer; layout
       // compaction on tracked tables is optimizeSmallFiles, which
       // materializes each row's current id into the packed file.
-      if (Snapshots.rowIdBindings(spark, dir, head).nonEmpty)
+      if (snap.rowIds.nonEmpty)
         throw new UnsupportedOperationException(
           s"compactInPlace on $dir: the table is row-tracked and the " +
             "multi-version fold cannot preserve stable row ids — use " +
@@ -1084,15 +1086,14 @@ object TokenSortedWriter {
       .map(_.getPath.toString).toSeq
     // census commit only when the log does not already describe the live
     // set — a log-current table must not burn a version on a duplicate
-    // (vacuum would then expire the REAL pre-compaction pin a step early)
-    val logCurrent = Snapshots.latestVersion(spark, dir)
-      .exists(v => Snapshots.files(spark, dir, v).toSet == live.toSet)
-    if (!logCurrent) Snapshots.commitAppend(spark, dir, live)
-    // the version the fold is computed FROM — the rewrite commit below
-    // carries it as its optimistic-concurrency guard: an append landing
-    // mid-compaction makes the rewrite fail loudly instead of silently
-    // dropping the appended files from the log
-    val sourceVersion = Snapshots.latestVersion(spark, dir).get
+    // (vacuum would then expire the REAL pre-compaction pin a step early).
+    // The result is the version the fold is computed FROM — the rewrite
+    // commit below carries it as its optimistic-concurrency guard: an
+    // append landing mid-compaction makes the rewrite fail loudly instead
+    // of silently dropping the appended files from the log
+    val sourceVersion = snap.version
+      .filter(_ => snap.files.map(_.path).toSet == live.toSet)
+      .getOrElse(Snapshots.commitAppend(spark, dir, live))
 
     // pinned to sourceVersion: the fold's scan and its concurrency guard
     // name the SAME state even if a concurrent append lands mid-write
@@ -1217,15 +1218,14 @@ object TokenSortedWriter {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val root = fs.makeQualified(p)
-    val head = Snapshots.latestVersion(spark, dir)
-    val listed = graft.sources.TokenPruner.listFiles(spark, dir)
+    val Snapshots.TableSnapshot(head, snapFiles, dvBindings, ridBases, _) =
+      Snapshots.snapshot(spark, dir, None)
     // OPTIMIZE never packs a shallow clone's out-of-root (source-owned)
     // files: the packed output would land in the SOURCE's directory, and
     // on dir-partitioned sources the partition value lives in the path.
     // Foreign rows materialize into clone-local files through DML instead.
     val inRoot = Snapshots.underRoot(root)
-    val liveAll = Snapshots.resolveListing(spark, dir, head.map(_.toString), listed)
-      .filter(m => inRoot(m.path))
+    val liveAll = snapFiles.filter(m => inRoot(m.path))
     // predicate scoping (CALL optimize(predicate => '…')): restrict
     // candidates to files that MAY hold matching rows — dir keys, column
     // stats, token ranges, all through the scan's own pruner. At 100 TB
@@ -1247,12 +1247,9 @@ object TokenSortedWriter {
     // the merge-on-read compaction trigger: a heavily-deleted large file
     // pays its row-based positional read tax on every scan until the
     // deletions are materialized away (DV counts are one header int each)
-    val headDvs = head
-      .map(v => Snapshots.deletionVectors(spark, dir, v))
-      .getOrElse(Map.empty[String, String])
     val hconf = spark.sessionState.newHadoopConf()
     def dvHeavy(m: graft.sources.TokenPruner.FileMeta): Boolean =
-      headDvs.get(m.path).exists { dvp =>
+      dvBindings.get(m.path).exists { dvp =>
         m.rows > 0 && DeletionVectors.count(
           new Path(dvp).getFileSystem(hconf), dvp).toDouble / m.rows > maxDvFraction
       }
@@ -1303,15 +1300,13 @@ object TokenSortedWriter {
     // the commit's kept-files filter drops the stale bindings. Logical
     // rows are unchanged (the DV'd rows were already deleted), so the
     // commit stays layout-only and change capture still rides across.
-    val dvBindings = headDvs
     val replaced = scala.collection.mutable.ArrayBuffer.empty[String]
     val fresh = scala.collection.mutable.ArrayBuffer.empty[String]
-    // row-tracked tables: the packed replacement must carry every row's
-    // CURRENT id materialized (stored id if the source file was itself a
-    // rewrite, else its base + physical position) — base+pos is meaningless
-    // in the packed file, where rows from many sources interleave
-    val ridBases: Map[String, Long] =
-      head.map(v => Snapshots.rowIdBindings(spark, dir, v)).getOrElse(Map.empty)
+    // row-tracked tables (ridBases non-empty): the packed replacement must
+    // carry every row's CURRENT id materialized (stored id if the source
+    // file was itself a rewrite, else its base + physical position) —
+    // base+pos is meaningless in the packed file, where rows from many
+    // sources interleave
     def basename(p: String): String = new Path(p).getName
     // exists-default-aware reads: a bin of pre-evolution files must not
     // bake null over a recorded ADD COLUMNS default — the packed file
@@ -1380,7 +1375,7 @@ object TokenSortedWriter {
     head match {
       case Some(v) =>
         val gone = replaced.toSet
-        val keep = Snapshots.files(spark, dir, v).filterNot(gone.contains)
+        val keep = snapFiles.map(_.path).toSeq.filterNot(gone.contains)
         // layoutOnly: change capture skips this commit (rows identical)
         try Snapshots.commitRewrite(spark, dir, keep ++ fresh,
           expectedParent = Some(v), layoutOnly = true)

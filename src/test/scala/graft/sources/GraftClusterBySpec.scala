@@ -91,10 +91,7 @@ class GraftClusterBySpec extends SparkSpec {
     val packed = TokenSortedWriter.optimizeSmallFiles(
       spark, CqlSchema("opt", Seq("id")), dir)
     assert(packed > 0L, "expected the small generations to pack")
-    val head = graft.write.Snapshots.latestVersion(spark, dir).get
-    val listed = TokenPruner.listFiles(spark, dir)
-    val live = graft.write.Snapshots.resolveListing(
-      spark, dir, Some(head.toString), listed)
+    val live = graft.write.Snapshots.snapshot(spark, dir, None).files
     // the packed replacement keeps the zorder column physically sorted, so
     // its row groups still give narrow ranges; band pruning remains useful
     val pruned = TokenPruner.prune(spark, live,

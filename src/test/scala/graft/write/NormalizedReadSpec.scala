@@ -164,6 +164,23 @@ class NormalizedReadSpec extends SparkSpec {
     assert(out.filter(col("k") === 3L).select("v").head().getString(0) == "reborn")
   }
 
+  test("an empty _graft_deletes dir reads as no tombstones (merged read and diff horizon)") {
+    import spark.implicits._
+    val dir = freshDir()
+    def append(keys: Seq[Long], wt: Long): Unit =
+      TokenSortedWriter.write(keys.map(k => (k, s"v_$k")).toDF("k", "v"), schema, dir,
+        SaveMode.Append, TokenSortedWriter.WriteConf(numPartitions = 2,
+          writetimeMicros = Some(wt), snapshot = true))
+    append(1L to 20L, 1000L)
+    append(21L to 25L, 2000L)
+    Files.createDirectories(java.nio.file.Paths.get(dir, TokenSortedWriter.DeletesDir))
+    assert(TokenSortedWriter.readNormalized(spark, schema, dir).count() == 25)
+    val diff = TokenSortedWriter.diffRows(spark, schema, dir, 1L, 2L,
+      fromTombstoneHorizonMicros = Some(1500L))
+    assert(diff.select("k", "op").as[(Long, String)].collect().toSet ==
+      (21L to 25L).map(_ -> "insert").toSet)
+  }
+
   test("range tombstones: ck interval deleted, unbounded side, newer reinsert survives") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_rt_spec_").toString + "/t"
