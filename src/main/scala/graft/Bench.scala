@@ -15,21 +15,33 @@ object Bench {
     // machinery) so the first measured query isn't charged for JIT/bootstrap
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/nation.parquet").count()
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // query → exception class of its first failure: a failed query keeps
+    // its elapsed time in the map (the stdout line is unchanged) but is
+    // named here and on stderr, and never counts as a steady number
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try SparkEntry.queries(name)(spark, sfDir).count()
+      catch { case e: Throwable =>
+        if (!failed.contains(name)) {
+          failed(name) = e.getClass.getName
+          System.err.println(s"[bench] FAILED $name: ${e.getClass.getName}: " +
+            Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse(""))
+        }
+      }
       (System.nanoTime() - t0) / 1e9
     }
-    val results = SparkEntry.queries.map { case (name, fn) => name -> timeOne(fn) }
+    val results = SparkEntry.queries.map { case (name, _) => name -> timeOne(name) }
     // Steady-state adjudication built in: full-battery timings carry
     // co-tenancy noise (page-cache/GC churn from 100+ preceding queries —
     // judged twice as phantom regressions). After the battery, re-run every
     // query that took > 2 s twice more in the now-quiet warm session (the
     // RunOne recipe) and report min(battery, reruns) as its steady number.
-    val steady = results.filter(_._2 > 2.0).map { case (name, t) =>
-      val reruns = (1 to 2).map(_ => timeOne(SparkEntry.queries(name)))
-      name -> math.min(t, reruns.min)
-    }
+    val steady = results.filter { case (n, t) => t > 2.0 && !failed.contains(n) }
+      .flatMap { case (name, t) =>
+        val reruns = (1 to 2).map(_ => timeOne(name))
+        if (failed.contains(name)) None else Some(name -> math.min(t, reruns.min))
+      }
     // The harness captures only the LAST 2000 chars of stdout and parses the
     // last line as JSON — the whole line must fit. Round-19 lesson: the
     // steady rerun map competed with the query map for the same budget and,
@@ -48,8 +60,10 @@ object Bench {
         s""""${k.takeWhile(_ != '_')}":${s"%.${dec}f".format(v)}""" }
         .mkString("{", ",", "}")
     def render(rs: Seq[(String, Double)], dec: Int, withSteady: Boolean): String = {
-      val st = if (!withSteady || steady.isEmpty) ""
-        else f""","steady":${jmap(steady, dec)},"steady_total":$steadyTotal%.3f"""
+      val st = (if (!withSteady || steady.isEmpty) ""
+        else f""","steady":${jmap(steady, dec)},"steady_total":$steadyTotal%.3f""") +
+        (if (!withSteady) "" else failed.map { case (k, c) =>
+          s""""${k.takeWhile(_ != '_')}":"$c"""" }.mkString(""","failed":{""", ",", "}"))
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jmap(rs, dec)}$st,"sf":"$sfDir"}"""
     }
     var entries = results.toSeq.sortBy(-_._2) // slowest first: keep the informative ones

@@ -53,35 +53,20 @@ object Normalize {
   /**
    * Keep only the latest version of each primary key, ordering versions by
    * `orderCols` (descending; first column is the write-timestamp analog,
-   * the rest are deterministic tie-breakers).
+   * the rest are deterministic tie-breakers) — the reference's
+   * merge-compaction collapse. One hash AGGREGATION,
+   * `max_by(struct(values…), struct(orderCols…))`, picks the row with the
+   * lexicographically greatest version tuple; the winner is unique when
+   * `orderCols` totally orders each key's versions (append every non-key
+   * column as tie-break).
    *
-   * Equivalent to the reference's merge-compaction collapse; implemented as
-   * `row_number() OVER (PARTITION BY pk, ck ORDER BY writetime DESC) = 1`.
-   */
-  def latestWriteWins(df: DataFrame, primaryKey: Seq[String], orderCols: Seq[String]): DataFrame = {
-    require(primaryKey.nonEmpty, "latestWriteWins needs a primary key")
-    require(orderCols.nonEmpty, "latestWriteWins needs a version ordering")
-    val w = Window
-      .partitionBy(primaryKey.map(qcol): _*)
-      .orderBy(orderCols.map(c => qcol(c).desc): _*)
-    df.withColumn("__graft_rn", row_number().over(w))
-      .filter(col("__graft_rn") === 1)
-      .drop("__graft_rn")
-  }
-
-  /**
-   * [[latestWriteWins]] as a single hash AGGREGATION instead of a ranking
-   * window: `max_by(struct(values…), struct(orderCols…))` picks the row with
-   * the lexicographically greatest version tuple — identical output when
-   * `orderCols` totally orders versions (append every non-key column as
-   * tie-break, as [[latestWriteWins]] callers do).
-   *
-   * Why it matters at 100 TB: the window plan must SORT every partition's
-   * rows by (pk, orderCols) before ranking; the aggregate plan is hash-based
-   * with MAP-SIDE partial aggregation — duplicate versions collapse before
-   * the shuffle, so shuffle volume drops from all-rows to distinct-keys, and
-   * no sort or spill-prone window buffer exists. Same single pk-shuffle
-   * lower bound, strictly less work per row.
+   * Why an aggregate and not a `row_number()` window: the window plan must
+   * SORT every partition's rows by (pk, orderCols) before ranking; the
+   * aggregate plan is hash-based with MAP-SIDE partial aggregation —
+   * duplicate versions collapse before the shuffle, so shuffle volume
+   * drops from all-rows to distinct-keys, and no sort or spill-prone window
+   * buffer exists. Same single pk-shuffle lower bound, strictly less work
+   * per row.
    */
   def latestWriteWinsAgg(df: DataFrame, primaryKey: Seq[String], orderCols: Seq[String]): DataFrame = {
     require(primaryKey.nonEmpty, "latestWriteWinsAgg needs a primary key")

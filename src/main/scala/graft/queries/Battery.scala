@@ -8394,10 +8394,13 @@ object Battery {
   /** Flagship end-to-end pipeline for the driver's smoke check: LWW-normalize
    *  lineitem, join dimensions (broadcast), aggregate revenue. */
   def flagship(spark: SparkSession, sfDir: String): DataFrame = {
-    val lww = Normalize.latestWriteWins(
-      li(spark, sfDir), Seq("l_orderkey", "l_linenumber"),
-      Seq("l_shipdate", "l_extendedprice", "l_quantity", "l_discount",
-        "l_tax", "l_returnflag", "l_linestatus", "l_partkey", "l_suppkey"))
+    val pk = Seq("l_orderkey", "l_linenumber")
+    val order = Seq("l_shipdate", "l_extendedprice", "l_quantity", "l_discount",
+      "l_tax", "l_returnflag", "l_linestatus", "l_partkey", "l_suppkey")
+    // only the key and version columns: the aggregate carries every
+    // non-key column it is given
+    val lww = Normalize.latestWriteWinsAgg(
+      li(spark, sfDir).select((pk ++ order).map(col): _*), pk, order)
     lww.join(ord(spark, sfDir), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust(spark, sfDir)), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment")).agg(

@@ -104,27 +104,14 @@ object ExistsDefaults {
     val confKey = org.apache.spark.sql.graftshim.GraftShims.footerSchemaConfKey(sqlConf)
     def cacheKey(p: String): String = p + "|" + confKey
     val misses = files.filterNot(p => footerSchemaCache.containsKey(cacheKey(p))).distinct
-    if (misses.nonEmpty) {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(16, misses.length))
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks = misses.map { p =>
-          new java.util.concurrent.Callable[(String, StructType)] {
-            override def call(): (String, StructType) =
-              p -> org.apache.spark.sql.graftshim.GraftShims
-                .footerSchema(conf, sqlConf, new Path(p))
-          }
-        }
-        pool.invokeAll(tasks.asJava).asScala.foreach { f =>
-          val (p, s) = f.get(); footerSchemaCache.put(cacheKey(p), s)
-        }
-      } catch {
-        // one transient FS hiccup or unreadable footer must not fail the
-        // read with a wrapped driver exception: fall back to the
-        // distributed mergeSchema job (Spark-side task retries included)
-        case scala.util.control.NonFatal(_) => return None
-      } finally pool.shutdown()
+    try graft.write.DriverPool.map(misses) { p =>
+      p -> org.apache.spark.sql.graftshim.GraftShims.footerSchema(conf, sqlConf, new Path(p))
+    }.foreach { case (p, s) => footerSchemaCache.put(cacheKey(p), s) }
+    catch {
+      // one transient FS hiccup or unreadable footer must not fail the
+      // read with a driver exception: fall back to the distributed
+      // mergeSchema job (Spark-side task retries included)
+      case scala.util.control.NonFatal(_) => return None
     }
     // first-seen field order, new fields appended — Spark's merge order.
     // Shared names must carry the IDENTICAL dataType (incl. nested

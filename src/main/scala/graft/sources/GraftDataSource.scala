@@ -1520,25 +1520,12 @@ object TokenPruner {
   private[graft] def readFootersParallel(
       conf: org.apache.hadoop.conf.Configuration,
       files: Array[(Path, Long)],
-      tolerant: Boolean = false): Array[FileMeta] = {
-    if (files.isEmpty) return Array.empty
-    def readOne(p: Path, l: Long): Option[FileMeta] =
+      tolerant: Boolean = false): Array[FileMeta] =
+    graft.write.DriverPool.map(files.toSeq) { case (p, l) =>
       if (!tolerant) Some(readFooterMeta(conf, p, l))
       else try Some(readFooterMeta(conf, p, l))
       catch { case _: java.io.FileNotFoundException => None }
-    if (files.length == 1)
-      return files.flatMap { case (p, l) => readOne(p, l) }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, files.length))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = files.toSeq.map { case (p, l) =>
-        new java.util.concurrent.Callable[Option[FileMeta]] {
-          override def call(): Option[FileMeta] = readOne(p, l)
-        }
-      }
-      pool.invokeAll(tasks.asJava).asScala.flatMap(_.get()).toArray
-    } finally pool.shutdown()
-  }
+    }.flatten.toArray
 
   def readFooterMeta(
       conf: org.apache.hadoop.conf.Configuration, path: Path, len: Long): FileMeta = {

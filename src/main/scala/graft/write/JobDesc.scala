@@ -18,3 +18,23 @@ object JobDesc {
     finally sc.setJobDescription(prev)
   }
 }
+
+/** Bounded-parallel driver-side map for per-file metadata probes (footers,
+  * existence checks, digests), whose cost is store round-trip latency, not
+  * CPU: at most 16 pool threads, results in input order, one item inline.
+  * Every task finishes before the pool is released; a task's exception
+  * then reaches the caller as itself, not wrapped. */
+object DriverPool {
+  def map[A, B](items: Seq[A])(fn: A => B): Seq[B] =
+    if (items.length <= 1) items.map(fn)
+    else {
+      import scala.jdk.CollectionConverters._
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, items.length))
+      try pool.invokeAll(items.map(a => (() => fn(a)): java.util.concurrent.Callable[B]).asJava)
+        .asScala.toSeq.map { r =>
+          try r.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
+      finally pool.shutdown()
+    }
+}

@@ -335,23 +335,11 @@ object Manifest {
         sizes.sum <= DriverDigestMaxBytes
     }
     if (small) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, paths.length))
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val futs = paths.toSeq.map { p =>
-          scala.concurrent.Future {
-            val hp = new Path(p)
-            (p, try Some(digestFile(hp.getFileSystem(conf), hp))
-                catch { case _: java.io.IOException => None })
-          }
-        }
-        scala.concurrent.Await
-          .result(scala.concurrent.Future.sequence(futs),
-            scala.concurrent.duration.Duration.Inf)
-          .toMap
-      } finally pool.shutdown()
+      DriverPool.map(paths.toSeq) { p =>
+        val hp = new Path(p)
+        (p, try Some(digestFile(hp.getFileSystem(conf), hp))
+            catch { case _: java.io.IOException => None })
+      }.toMap
     } else {
       val bc = spark.sparkContext.broadcast(
         new org.apache.spark.util.SerializableConfiguration(conf))

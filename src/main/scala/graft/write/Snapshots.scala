@@ -14,14 +14,27 @@ import org.apache.spark.sql.SparkSession
  * never sees a half-landed write batch).
  *
  * Layout: `<table>/_graft_snapshots/v<000000000012>.txt`, one file per
- * committed version:
+ * committed version, one tab-separated record per line ([[LogEntry]]
+ * parses and renders it; nothing else does):
  *
- *   graft-snapshot <tab> 1 <tab> <version> <tab> <epochMillis> <tab> <parent|->
- *   <relative data file path>
- *   ...
+ *   graft-snapshot <tab> 1 <tab> <version> <tab> <epochMillis> <tab> <parent|-> <tab> <kind>
+ *   <data file>
+ *   dv <tab> <data file> <tab> <deletion-vector file>
+ *   txn <tab> <appId> <tab> <epochId>
+ *   idhwm <tab> <column> <tab> <next identity value>
+ *   cdc <tab> <change-data file>
+ *   rid <tab> <data file> <tab> <base row id>
+ *   ridhwm <tab> <next free row id>
  *
- * Each snapshot lists the COMPLETE live data-file set at that version
- * (relative paths — the log survives a table move, like the manifest).
+ * Header columns: (1) the magic, (2) the format version, always 1, (3) the
+ * version, (4) the commit wall-clock in epoch millis, (5) the parent
+ * version, `-` for the first commit, (6) the [[CommitKind]] tag (`-`,
+ * `layout` or `fold`); a legacy 5-column header reads as a logical commit.
+ * Body lines come in the order above, each group sorted. Each snapshot
+ * lists the COMPLETE live data-file set at that version, by path relative
+ * to the table root (the log survives a table move, like the manifest);
+ * a path outside the root — a shallow clone's source files — stays
+ * absolute.
  * Commit is an optimistic exclusive create of the next version file: two
  * racing writers both compute v(N+1), the store accepts exactly one, and
  * the loser re-reads the winner's set and retries on v(N+2) — appends
@@ -216,217 +229,215 @@ object Snapshots {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
-  /** The absolute data-file paths of one committed version.
-   *  Throws for an unknown version — a typo'd pin must not fall back to
-   *  "whatever is on disk". */
-  def files(spark: SparkSession, dir: String, version: Long): Seq[String] = {
-    val (f, root) = fs(spark, dir)
-    readFiles(f, root, version)
+  /** What a commit did to the table's rows — header column 6. */
+  sealed abstract class CommitKind(val tag: String)
+  /** Rows may have changed: appends, DML, logical overwrites (`-`). */
+  case object Logical extends CommitKind("-")
+  /** A repack that moved bytes without changing logical rows (OPTIMIZE):
+   *  change capture skips it. */
+  case object Layout extends CommitKind("layout")
+  /** A rewrite that preserves the table's RESOLVED state (the compaction
+   *  LWW fold: multi-version rows collapse, tombstones/DVs materialize, but
+   *  every key resolves to the same row before and after). Raw-row change
+   *  capture still refuses to cross it (the raw appended versions DID
+   *  change); the resolved-state diff ([[diffCandidateFiles]]) skips it. */
+  case object Fold extends CommitKind("fold")
+
+  // Body-line markers (grammar on [[Snapshots]]); a plain line is a data
+  // file, so a version file predating a marker parses unchanged.
+  /** INHERITS: the live (data file → deletion-vector file) bindings. */
+  private val DvMarker = "dv"
+  /** INHERITS: each streaming app's last epoch (the Delta `txn` action), so
+   *  maintenance between micro-batches never erases a replay guard. */
+  private val TxnMarker = "txn"
+  /** PER-COMMIT: the change-data files of this version's copy-on-write DML
+   *  (the Delta `_change_data` design), never inherited. */
+  private val CdcMarker = "cdc"
+  /** INHERITS: the live (data file → base row id) bindings (the Delta
+   *  `baseRowId` design). */
+  private val RidMarker = "rid"
+  /** INHERITS, monotone: the next free row id; its presence is what marks
+   *  the table row-tracked. */
+  private val RidHwmMarker = "ridhwm"
+  /** INHERITS: each IDENTITY column's next value; the allocating commit
+   *  guards the mark it allocated from. */
+  private val IdHwmMarker = "idhwm"
+
+  /** Sidecar dir for CDC files (underscore prefix keeps it invisible to
+   *  data listings, like [[DeletionVectors.Dir]]). */
+  val CdcDir = "_graft_cdc"
+
+  /**
+   * One version file, decoded: the header and every body line, with paths
+   * absolute (resolved against the table root). [[LogEntry.parse]] and
+   * [[render]] are the only reader and writer of the format, and every log
+   * walk decodes each version file once into one of these.
+   *
+   * @param files  live data files
+   * @param dvs    data file → deletion-vector file
+   * @param txns   streaming app id → last committed epoch
+   * @param idHwms IDENTITY column → next unallocated value
+   * @param cdcs   this commit's change-data files
+   * @param rids   data file → base row id (row-tracked tables)
+   * @param ridHwm next unallocated row id; `Some` iff row-tracked
+   */
+  final case class LogEntry(
+      version: Long,
+      committedAt: Long,
+      parent: Option[Long],
+      kind: CommitKind,
+      files: Seq[String],
+      dvs: Map[String, String] = Map.empty,
+      txns: Map[String, Long] = Map.empty,
+      idHwms: Map[String, Long] = Map.empty,
+      cdcs: Seq[String] = Nil,
+      rids: Map[String, Long] = Map.empty,
+      ridHwm: Option[Long] = None) {
+
+    /** The version file's text; [[LogEntry.parse]] inverts it. */
+    def render(root: Path): String = {
+      def rel(p: String): String = relativize(root, p)
+      val out = new StringBuilder()
+      def line(cols: Any*): Unit = out.append(cols.mkString("\t")).append('\n')
+      line(Magic, 1, version, committedAt, parent.getOrElse("-"), kind.tag)
+      files.map(rel).distinct.sorted.foreach(line(_))
+      dvs.toSeq.map { case (b, d) => (rel(b), rel(d)) }.sorted
+        .foreach { case (b, d) => line(DvMarker, b, d) }
+      txns.toSeq.sorted.foreach { case (a, e) => line(TxnMarker, a, e) }
+      idHwms.toSeq.sorted.foreach { case (c, n) => line(IdHwmMarker, c, n) }
+      cdcs.map(rel).distinct.sorted.foreach(line(CdcMarker, _))
+      rids.toSeq.map { case (p, b) => (rel(p), b) }.sorted
+        .foreach { case (p, b) => line(RidMarker, p, b) }
+      ridHwm.foreach(line(RidHwmMarker, _))
+      out.toString
+    }
   }
 
-  private def readText(f: FileSystem, root: Path, version: Long): String = {
+  object LogEntry {
+    private val Kinds = Seq(Logical, Layout, Fold).map(k => k.tag -> k).toMap
+
+    /** Decode a version file's text — or just its header line, whose body
+     *  then reads as empty. A malformed marker line fails loudly. */
+    def parse(text: String, root: Path): LogEntry = {
+      val lines = text.linesIterator
+      val header = lines.next().split('\t')
+      def abs(rel: String): String = new Path(root, rel).toString
+      def cols(l: String, marker: String, n: Int): Array[String] = {
+        val c = l.split('\t')
+        require(c.length == n, s"corrupt $marker line: $l")
+        c
+      }
+      val files, cdcs = Seq.newBuilder[String]
+      val dvs = Map.newBuilder[String, String]
+      val txns, idHwms, rids = Map.newBuilder[String, Long]
+      var ridHwm: Option[Long] = None
+      lines.filter(_.nonEmpty).foreach { l =>
+        l.substring(0, math.max(l.indexOf('\t'), 0)) match {
+          case DvMarker => val c = cols(l, DvMarker, 3); dvs += abs(c(1)) -> abs(c(2))
+          case TxnMarker => val c = cols(l, TxnMarker, 3); txns += c(1) -> c(2).toLong
+          case IdHwmMarker => val c = cols(l, IdHwmMarker, 3); idHwms += c(1) -> c(2).toLong
+          case CdcMarker => cdcs += abs(l.substring(CdcMarker.length + 1))
+          case RidMarker => val c = cols(l, RidMarker, 3); rids += abs(c(1)) -> c(2).toLong
+          case RidHwmMarker =>
+            if (ridHwm.isEmpty) ridHwm = Some(cols(l, RidHwmMarker, 2)(1).toLong)
+          case _ => files += abs(l)
+        }
+      }
+      LogEntry(header(2).toLong, header(3).toLong,
+        Some(header(4)).filter(_ != "-").map(_.toLong),
+        if (header.length > 5) Kinds.getOrElse(header(5), Logical) else Logical,
+        files.result(), dvs.result(), txns.result(), idHwms.result(), cdcs.result(),
+        rids.result(), ridHwm)
+    }
+  }
+
+  /** The empty table before its first commit (version 0). */
+  private val Empty = LogEntry(0L, 0L, None, Logical, Nil)
+
+  /** The path of committed version `version` — the one "does not exist"
+   *  refusal every version-file reader shares. */
+  private def existing(f: FileSystem, root: Path, version: Long): Path = {
     val p = vPath(root, version)
     if (!f.exists(p))
       throw new IllegalArgumentException(
         s"snapshot v$version does not exist under $root (latest: " +
           s"${latest(f, root).map(_.toString).getOrElse("none")}) — " +
           "it was never committed or was vacuumed past retention")
+    p
+  }
+
+  /** Version `version`'s file: one open, one parse. */
+  private def entry(f: FileSystem, root: Path, version: Long): LogEntry = {
+    val p = existing(f, root, version)
     val in = f.open(p)
     val text = try {
-      val len = f.getFileStatus(p).getLen.toInt
-      val bytes = new Array[Byte](len)
+      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
       in.readFully(0, bytes)
       new String(bytes, StandardCharsets.UTF_8)
     } finally in.close()
-    require(text.startsWith(Magic + "\t"),
-      s"corrupt snapshot file $p: missing header")
-    text
+    require(text.startsWith(Magic + "\t"), s"corrupt snapshot file $p: missing header")
+    LogEntry.parse(text, root)
   }
 
-  /** Body lines starting with this tab-delimited marker bind a DATA file
-   *  to its deletion vector for the version: `dv<TAB><rel base><TAB><rel
-   *  dv>`. All readers in this object skip/parse them positionally; plain
-   *  lines remain the data-file set, so pre-DV snapshots parse unchanged. */
-  private val DvMarker = "dv\t"
+  /** [[entry]] with version 0 read as the empty table. */
+  private def entryOrEmpty(f: FileSystem, root: Path, version: Long): LogEntry =
+    if (version == 0L) Empty else entry(f, root, version)
 
-  /** Body lines binding a streaming writer's progress to the version:
-   *  `txn<TAB><appId><TAB><epochId>` — the Delta `txn` action shape. The
-   *  latest epoch per appId INHERITS across every commit (appends, DML,
-   *  rewrites), so a replayed micro-batch can always see whether it
-   *  already landed, however much maintenance ran in between. */
-  private val TxnMarker = "txn\t"
+  /** Version `version` of the table at `dir`, decoded. */
+  private def at(spark: SparkSession, dir: String, version: Long): LogEntry = {
+    val (f, root) = fs(spark, dir)
+    entry(f, root, version)
+  }
 
-  /** Body lines referencing a commit's CHANGE-DATA files:
-   *  `cdc<TAB><rel path>` — row-level events (delete preimages + insert
-   *  postimages, `_change_type`-tagged) a copy-on-write DML recorded for
-   *  the rewrite it committed (the Delta `_change_data` design). Unlike
-   *  [[TxnMarker]] lines these are PER-COMMIT, never inherited: they
-   *  describe exactly one version's row-level delta, and the change feed
-   *  delivers them INSTEAD of refusing at that rewrite. */
-  private val CdcMarker = "cdc\t"
+  /** The table's latest version, decoded; None without a log. */
+  private def head(spark: SparkSession, dir: String): Option[LogEntry] = {
+    val (f, root) = fs(spark, dir)
+    latest(f, root).map(entry(f, root, _))
+  }
 
-  /** Sidecar dir for CDC files (underscore prefix keeps it invisible to
-   *  data listings, like [[DeletionVectors.Dir]]). */
-  val CdcDir = "_graft_cdc"
-
-  /** Body lines binding a data file to its BASE ROW ID (row tracking —
-   *  the Delta `baseRowId` design): `rid<TAB><rel file><TAB><base>`.
-   *  A row's stable id is `coalesce(stored _graft_row_id column,
-   *  base + physical position)`; bases are allocated from [[RidHwmMarker]]
-   *  so no id is ever reused, and rewrites MATERIALIZE carried rows' ids
-   *  into the replacement files. Bindings INHERIT like DV lines: every
-   *  version carries the full live map. */
-  private val RidMarker = "rid\t"
-
-  /** `ridhwm<TAB><next free row id>` — the allocation high-water mark.
-   *  Its PRESENCE is what marks a table row-tracked: the first commit of
-   *  a `rowTracking 'true'` table writes it, and every later commit (any
-   *  path) sees it in the parent and keeps allocating. Monotone across
-   *  restore (max of parent and restored marks). */
-  private val RidHwmMarker = "ridhwm\t"
-
-  /** `idhwm<TAB><column><TAB><next value>` — IDENTITY column allocation
-   *  marks (one line per identity column). Inherit like txn markers;
-   *  the allocating commit GUARDS its expected base mark and loses the
-   *  race loudly ([[ConcurrentCommitException]]) when a concurrent
-   *  writer consumed the same value range — identity values are baked
-   *  into data files, so a silent retry would duplicate them. */
-  private val IdHwmMarker = "idhwm\t"
-
-  /** Every non-data body line this format knows. */
-  private def isMarkerLine(l: String): Boolean =
-    l.startsWith(DvMarker) || l.startsWith(TxnMarker) ||
-      l.startsWith(CdcMarker) || l.startsWith(RidMarker) ||
-      l.startsWith(RidHwmMarker) || l.startsWith(IdHwmMarker)
-
-  private def readFiles(f: FileSystem, root: Path, version: Long): Seq[String] =
-    parseFiles(readText(f, root, version), root)
-
-  private def parseFiles(text: String, root: Path): Seq[String] =
-    text.linesIterator.drop(1)
-      .filter(l => l.nonEmpty && !isMarkerLine(l))
-      .map(rel => new Path(root, rel).toString).toSeq
-
-  private def readRids(f: FileSystem, root: Path, version: Long): Map[String, Long] =
-    parseRids(readText(f, root, version), root)
-
-  private def parseRids(text: String, root: Path): Map[String, Long] =
-    text.linesIterator.drop(1)
-      .filter(_.startsWith(RidMarker))
-      .map { l =>
-        val cols = l.split('\t')
-        require(cols.length == 3, s"corrupt rid line: $l")
-        new Path(root, cols(1)).toString -> cols(2).toLong
-      }.toMap
-
-  private def readRidHwm(f: FileSystem, root: Path, version: Long): Option[Long] =
-    parseRidHwm(readText(f, root, version))
-
-  private def parseRidHwm(text: String): Option[Long] =
-    text.linesIterator.drop(1)
-      .find(_.startsWith(RidHwmMarker))
-      .map { l =>
-        val cols = l.split('\t')
-        require(cols.length == 2, s"corrupt ridhwm line: $l")
-        cols(1).toLong
-      }
-
-  private def readIdHwms(f: FileSystem, root: Path, version: Long): Map[String, Long] =
-    parseIdHwms(readText(f, root, version))
-
-  private def parseIdHwms(text: String): Map[String, Long] =
-    text.linesIterator.drop(1)
-      .filter(_.startsWith(IdHwmMarker))
-      .map { l =>
-        val cols = l.split('\t')
-        require(cols.length == 3, s"corrupt idhwm line: $l")
-        cols(1) -> cols(2).toLong
-      }.toMap
+  /** The absolute data-file paths of one committed version.
+   *  Throws for an unknown version — a typo'd pin must not fall back to
+   *  "whatever is on disk". */
+  def files(spark: SparkSession, dir: String, version: Long): Seq[String] =
+    at(spark, dir, version).files
 
   /** IDENTITY allocation marks (column → next value) at `version` —
    *  empty for tables without identity columns or before their first
    *  allocating write. */
   def identityHighWaterMarks(
-      spark: SparkSession, dir: String, version: Long): Map[String, Long] = {
-    val (f, root) = fs(spark, dir)
-    if (version == 0L) Map.empty else readIdHwms(f, root, version)
-  }
+      spark: SparkSession, dir: String, version: Long): Map[String, Long] =
+    if (version == 0L) Map.empty else at(spark, dir, version).idHwms
 
   /** (data file → base row id) bindings of one committed version. Empty
    *  for tables without row tracking. */
-  def rowIdBindings(spark: SparkSession, dir: String, version: Long): Map[String, Long] = {
-    val (f, root) = fs(spark, dir)
-    if (version == 0L) Map.empty else readRids(f, root, version)
-  }
+  def rowIdBindings(spark: SparkSession, dir: String, version: Long): Map[String, Long] =
+    if (version == 0L) Map.empty else at(spark, dir, version).rids
 
   /** The next unallocated row id at `version` — `Some` iff the table is
    *  row-tracked (the first commit wrote the mark). */
-  def rowIdHighWaterMark(spark: SparkSession, dir: String, version: Long): Option[Long] = {
-    val (f, root) = fs(spark, dir)
-    if (version == 0L) None else readRidHwm(f, root, version)
-  }
+  def rowIdHighWaterMark(spark: SparkSession, dir: String, version: Long): Option[Long] =
+    if (version == 0L) None else at(spark, dir, version).ridHwm
 
   /** Whether the table's log head carries row tracking. */
-  def rowTracked(spark: SparkSession, dir: String): Boolean = {
-    val (f, root) = fs(spark, dir)
-    latest(f, root).exists(v => readRidHwm(f, root, v).isDefined)
-  }
-
-  private def readCdcs(f: FileSystem, root: Path, version: Long): Seq[String] =
-    readText(f, root, version).linesIterator.drop(1)
-      .filter(_.startsWith(CdcMarker))
-      .map(l => new Path(root, l.substring(CdcMarker.length)).toString).toSeq
+  def rowTracked(spark: SparkSession, dir: String): Boolean =
+    head(spark, dir).exists(_.ridHwm.isDefined)
 
   /** The change-data files a version's commit recorded (empty for
    *  appends, delta commits, and CDC-less rewrites). */
-  def changeDataFiles(spark: SparkSession, dir: String, version: Long): Seq[String] = {
-    val (f, root) = fs(spark, dir)
-    readCdcs(f, root, version)
-  }
-
-  private def readTxns(f: FileSystem, root: Path, version: Long): Map[String, Long] =
-    parseTxns(readText(f, root, version))
-
-  private def parseTxns(text: String): Map[String, Long] =
-    text.linesIterator.drop(1)
-      .filter(_.startsWith(TxnMarker))
-      .map { l =>
-        val cols = l.split('\t')
-        require(cols.length == 3, s"corrupt txn line: $l")
-        cols(1) -> cols(2).toLong
-      }.toMap
+  def changeDataFiles(spark: SparkSession, dir: String, version: Long): Seq[String] =
+    at(spark, dir, version).cdcs
 
   /** The highest epoch `appId` has committed to this table, per the HEAD
    *  version — the streaming sink's replay guard ([[commitAppend]]'s
    *  `txn`). None = no log or no batch from this writer yet. */
-  def streamTxn(spark: SparkSession, dir: String, appId: String): Option[Long] = {
-    val (f, root) = fs(spark, dir)
-    latest(f, root).flatMap(v => readTxns(f, root, v).get(appId))
-  }
-
-  private def readDvs(f: FileSystem, root: Path, version: Long): Map[String, String] =
-    parseDvs(readText(f, root, version), root)
-
-  private def parseDvs(text: String, root: Path): Map[String, String] =
-    text.linesIterator.drop(1)
-      .filter(_.startsWith(DvMarker))
-      .map { l =>
-        val cols = l.split('\t')
-        require(cols.length == 3, s"corrupt dv line: $l")
-        new Path(root, cols(1)).toString -> new Path(root, cols(2)).toString
-      }.toMap
-
-  /** [[readDvs]] tolerating version 0 (the empty pre-first-commit table). */
-  private def dvsAt(f: FileSystem, root: Path, version: Long): Map[String, String] =
-    if (version == 0L) Map.empty else readDvs(f, root, version)
+  def streamTxn(spark: SparkSession, dir: String, appId: String): Option[Long] =
+    head(spark, dir).flatMap(_.txns.get(appId))
 
   /** (data file → deletion-vector file) bindings of one committed version
    *  — empty for versions committed before any merge-on-read DML. */
   def deletionVectors(spark: SparkSession, dir: String, version: Long)
-      : Map[String, String] = {
-    val (f, root) = fs(spark, dir)
-    readDvs(f, root, version)
-  }
+      : Map[String, String] =
+    at(spark, dir, version).dvs
 
   /**
    * One resolved table state — what a read plans from. Built by
@@ -483,14 +494,14 @@ object Snapshots {
     if (version.isEmpty && spelled.contains("latest"))
       throw new IllegalArgumentException(
         s"snapshotVersion=latest but $dir has no snapshot log")
-    val text = version.map(readText(f, root, _))
+    val pinned = version.map(entry(f, root, _))
     val listed = graft.sources.TokenPruner.listFiles(spark, dir)
-    val files = version.zip(text) match {
-      case Some((v, t)) if !spelled.contains("listing") =>
+    val files = version.zip(pinned) match {
+      case Some((v, e)) if !spelled.contains("listing") =>
         // a SHALLOW CLONE's log references files OUTSIDE the table root
         // (the source's data) — they can never appear in this dir's
         // listing; admit them with manifest-first/footer stats instead
-        val (local, foreign) = parseFiles(t, root).toSet.partition(underRoot(root))
+        val (local, foreign) = e.files.toSet.partition(underRoot(root))
         val have = listed.filter(m => local.contains(m.path))
         if (have.length != local.size) {
           val missing = (local -- have.map(_.path)).toSeq.sorted
@@ -503,30 +514,23 @@ object Snapshots {
         else have ++ graft.sources.TokenPruner.foreignMetas(spark, dir, foreign.toSeq.sorted)
       case _ => listed
     }
-    TableSnapshot(version, files,
-      text.map(parseDvs(_, root)).getOrElse(Map.empty),
-      text.map(parseRids(_, root)).getOrElse(Map.empty),
-      listed.length)
+    TableSnapshot(version, files, pinned.map(_.dvs).getOrElse(Map.empty),
+      pinned.map(_.rids).getOrElse(Map.empty), listed.length)
   }
 
   /** Commit wall-clock (epoch millis) recorded in a version's header — the
    *  age [[vacuum]]'s `keepCommittedWithinMs` retains by. */
   def commitTimeMillis(spark: SparkSession, dir: String, version: Long): Long = {
     val (f, root) = fs(spark, dir)
-    headerTime(f, root, version)
+    headerLine(f, root, version).committedAt
   }
 
-  /** First line only — vacuum's age filter, versionAsOf, and history call
-   *  this per retained version, and a version file can list 100k+ data
-   *  files; decoding megabytes to parse one header field would make every
-   *  metadata query O(total log bytes). */
-  private def headerLine(f: FileSystem, root: Path, version: Long): String = {
-    val p = vPath(root, version)
-    if (!f.exists(p))
-      throw new IllegalArgumentException(
-        s"snapshot v$version does not exist under $root (latest: " +
-          s"${latest(f, root).map(_.toString).getOrElse("none")}) — " +
-          "it was never committed or was vacuumed past retention")
+  /** The header line alone, decoded (an entry with an empty body) — vacuum's
+   *  age filter and versionAsOf call this per retained version, and a
+   *  version file can list 100k+ data files; decoding megabytes to parse
+   *  one header field would make every metadata query O(total log bytes). */
+  private def headerLine(f: FileSystem, root: Path, version: Long): LogEntry = {
+    val p = existing(f, root, version)
     val in = f.open(p)
     try {
       val buf = new Array[Byte](4096) // headers are tens of bytes
@@ -552,31 +556,8 @@ object Snapshots {
       val line = new String(buf, 0, upto, StandardCharsets.UTF_8)
       require(line.startsWith(Magic + "\t"),
         s"corrupt snapshot file $p: missing header")
-      line
+      LogEntry.parse(line, root)
     } finally in.close()
-  }
-
-  private def headerTime(f: FileSystem, root: Path, version: Long): Long =
-    headerLine(f, root, version).split('\t')(3).toLong
-
-  /** True when version `v` was committed as a LAYOUT-ONLY rewrite
-   *  (OPTIMIZE bin-packing): bytes moved, logical rows identical — change
-   *  capture skips it. Pre-marker commits (5-column header) are never
-   *  layout-only. */
-  private def isLayoutOnly(f: FileSystem, root: Path, version: Long): Boolean = {
-    val cols = headerLine(f, root, version).split('\t')
-    cols.length > 5 && cols(5) == "layout"
-  }
-
-  /** "fold" marks a rewrite that preserves the table's RESOLVED state (the
-    * compaction LWW fold: multi-version rows collapse, tombstones/DVs
-    * materialize, but every key resolves to the same row before and
-    * after). Raw-row change capture still refuses to cross it (the raw
-    * appended versions DID change); the resolved-state diff
-    * ([[diffCandidateFiles]]) may skip it. */
-  private def isFold(f: FileSystem, root: Path, version: Long): Boolean = {
-    val cols = headerLine(f, root, version).split('\t')
-    cols.length > 5 && cols(5) == "fold"
   }
 
   /** Append-commit: next version = parent's files ∪ `added`; DV bindings
@@ -642,22 +623,22 @@ object Snapshots {
    *  appended files from the log (and a later vacuum would delete them:
    *  data loss, not just staleness). With the guard, the late rewrite
    *  fails loudly and the caller recomputes against the new head. Omitted
-   *  = last-writer-wins (single-writer deployments only). */
+   *  = last-writer-wins (single-writer deployments only). `kind` tags the
+   *  header ([[CommitKind]]): a LAYOUT repack or a resolved-state FOLD. */
   def commitRewrite(
       spark: SparkSession,
       dir: String,
       fileSet: Seq[String],
       expectedParent: Option[Long] = None,
-      layoutOnly: Boolean = false,
+      kind: CommitKind = Logical,
       dvOverride: Option[Map[String, String]] = None,
       cdcFiles: Seq[String] = Nil,
       ridOverride: Option[(Map[String, Long], Long)] = None,
       idUpdate: Map[String, (Long, Long)] = Map.empty,
-      expectEmpty: Boolean = false,
-      fold: Boolean = false): Long =
-    commitLoop(spark, dir, expectedParent, layoutOnly, cdcAdds = cdcFiles,
+      expectEmpty: Boolean = false): Long =
+    commitLoop(spark, dir, expectedParent, kind, cdcAdds = cdcFiles,
       ridOverride = ridOverride, idUpdate = idUpdate,
-      expectEmpty = expectEmpty, fold = fold) { case (_, dvs) =>
+      expectEmpty = expectEmpty) { case (_, dvs) =>
       // DV bindings survive for KEPT files and drop with replaced ones —
       // sound because every rewrite path reads its inputs with DVs applied
       // ([[DeletionVectors.applyToRead]] / the DSv2 DV readers), so the
@@ -683,48 +664,124 @@ object Snapshots {
   private def commitLoop(
       spark: SparkSession, dir: String,
       expectedParent: Option[Long] = None,
-      layoutOnly: Boolean = false,
+      kind: CommitKind = Logical,
       txnUpdate: Option[(String, Long)] = None,
       cdcAdds: Seq[String] = Nil,
       rowTracking: Boolean = false,
       ridOverride: Option[(Map[String, Long], Long)] = None,
       idUpdate: Map[String, (Long, Long)] = Map.empty,
-      expectEmpty: Boolean = false,
-      fold: Boolean = false)(
+      expectEmpty: Boolean = false)(
       next: (Seq[String], Map[String, String]) => (Seq[String], Map[String, String]))
       : Long = {
     val (f, root) = fs(spark, dir)
     val allowUnsafe =
       spark.conf.getOption(AllowNonAtomicConf).exists(_.trim.toBoolean)
-    val lock = commitLocks.computeIfAbsent(root.toString, _ => new Object)
-    lock.synchronized {
-      commitLoopLocked(f, root, dir, allowUnsafe, expectedParent, layoutOnly,
-        txnUpdate, cdcAdds, rowTracking, ridOverride, idUpdate, expectEmpty,
-        fold)(next)
+    // qualify before relativizing: callers hand in paths from different
+    // producers (listings, inputFiles) whose URI spellings differ
+    // (file:/ vs file:///) for the same file
+    def q(p: String): String = f.makeQualified(new Path(p)).toString
+    commitLocks.computeIfAbsent(root.toString, _ => new Object).synchronized {
+      var committed: Option[Long] = None
+      var attempt = 0
+      while (committed.isEmpty && attempt < MaxCommitAttempts) {
+        attempt += 1
+        val parent = latest(f, root)
+        // "expect NO parent" (shallow clone's first commit): a concurrent
+        // first commit must fail THIS caller loudly, never be silently
+        // superseded by a retried clone landing as its child
+        if (expectEmpty && parent.isDefined)
+          throw new ConcurrentCommitException(
+            s"commit on $dir expected an EMPTY log but found v${parent.get} — " +
+              "a concurrent writer created the table first")
+        expectedParent.foreach { want =>
+          if (!parent.contains(want))
+            throw new ConcurrentCommitException(
+              s"rewrite of $dir was computed against v$want but the log head is " +
+                s"now v${parent.getOrElse(0L)} — a concurrent commit landed; " +
+                "recompute the rewrite from the current head (committing anyway " +
+                "would drop the concurrent files from the log)")
+        }
+        // ONE parent read per attempt — every inherited field comes from it
+        // (version files are the hot-path IO on high-ingest tables)
+        val base = parent.map(entry(f, root, _)).getOrElse(Empty)
+        val version = parent.getOrElse(0L) + 1
+        val (nextFiles, nextDvs) = next(base.files, base.dvs)
+        val files = nextFiles.map(q).distinct
+        // the allocating commit guards the IDENTITY mark it allocated FROM —
+        // identity values are baked into the just-written files, so a lost
+        // race must fail loudly (the caller re-runs the whole write), never
+        // silently re-commit the same range
+        idUpdate.foreach { case (c, (expectedBase, _)) =>
+          val cur = base.idHwms.getOrElse(c, expectedBase) // absent = first allocation
+          if (cur != expectedBase)
+            throw new IdentityAllocationRaceException(
+              s"identity allocation on $dir column '$c' lost a race: allocated from " +
+                s"next=$expectedBase but the log now records next=$cur — the written " +
+                "values may collide; re-run the write against the current head")
+        }
+        // row tracking: bindings for live files inherit; files NEW to the
+        // log get bases allocated from the high-water mark (footer row
+        // counts of just-written files — O(added) cheap probes), which then
+        // bumps past them so no id is ever reused. Self-perpetuating: the
+        // parent's mark keeps every later commit path allocating; restore
+        // passes the historical bindings with a monotone mark.
+        val (rids, ridHwm) =
+          if (base.ridHwm.isEmpty && !rowTracking && ridOverride.isEmpty)
+            (Map.empty[String, Long], None)
+          else {
+            val (seedRids, seedHwm) = ridOverride match {
+              case Some((m, h)) => (m, math.max(h, base.ridHwm.getOrElse(0L)))
+              case None => (base.rids, base.ridHwm.getOrElse(0L))
+            }
+            val fresh = files.filterNot(seedRids.contains).sorted
+            val counts = footerRowCounts(f, fresh)
+            var hwm = seedHwm
+            val assigned = fresh.map { p => val b = hwm; hwm += counts(p); p -> b }
+            val live = files.toSet
+            (seedRids.filter { case (p, _) => live(p) } ++ assigned, Some(hwm))
+          }
+        // txn and identity marks inherit, the update replacing its key's
+        // entry; change-data references are this commit's alone
+        val body = LogEntry(version, System.currentTimeMillis(), parent, kind, files,
+          nextDvs.map { case (b, d) => q(b) -> q(d) }, base.txns ++ txnUpdate,
+          base.idHwms ++ idUpdate.map { case (c, (_, n)) => c -> n }, cdcAdds.map(q),
+          rids, ridHwm).render(root)
+        try {
+          // exclusive create IS the commit: exactly one writer wins a version
+          createExclusive(f, vPath(root, version),
+            body.getBytes(StandardCharsets.UTF_8), allowUnsafe)
+          committed = Some(version)
+        } catch {
+          // both collision shapes fall through to the loop exit on the last
+          // attempt, so exhaustion always surfaces as the diagnostic below
+          // rather than a raw store exception. The message heuristic is
+          // scoped to THIS version file (the conditionalCreate discipline):
+          // an "already exists" about a different path — a nested failure
+          // creating an intermediate dir, another object in a store error —
+          // is a real failure and must propagate, not be retried 20 times
+          // into the misleading "runaway committer" diagnostic
+          case _: FileAlreadyExistsException => () // lost the race — re-read, retry
+          case e: java.io.IOException
+              if Option(e.getMessage).exists(m => m.contains("already exists") &&
+                (m.contains(vPath(root, version).toString) ||
+                  m.contains(vPath(root, version).getName))) => ()
+        }
+      }
+      committed.getOrElse(throw new IllegalStateException(
+        s"snapshot commit on $dir lost $MaxCommitAttempts consecutive races — " +
+          "a runaway committer is monopolizing the log"))
     }
   }
 
   /** Physical row counts (deleted positions included — base-id allocation
-   *  is positional) of freshly-committed files, from their footers only;
-   *  bounded-parallel like the OPTIMIZE candidate probe. */
-  private def footerRowCounts(f: FileSystem, paths: Seq[String]): Map[String, Long] = {
-    if (paths.isEmpty) return Map.empty
-    def rows(p: String): Long = {
+   *  is positional) of freshly-committed files, from their footers only. */
+  private def footerRowCounts(f: FileSystem, paths: Seq[String]): Map[String, Long] =
+    DriverPool.map(paths) { p =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(new Path(p), f.getConf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(16, paths.length))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = paths.map(p => new java.util.concurrent.Callable[(String, Long)] {
-        override def call(): (String, Long) = p -> rows(p)
-      })
-      pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-    } finally pool.shutdown()
-  }
+      p -> (try r.getRecordCount finally r.close())
+    }.toMap
 
   /** Exclusive create of one version file — THE commit point. Dispatch by
    *  store class so losing a race is always loud, never a double-commit:
@@ -779,148 +836,6 @@ object Snapshots {
     }
   }
 
-  private def commitLoopLocked(
-      f: FileSystem, root: Path, dir: String, allowUnsafe: Boolean,
-      expectedParent: Option[Long] = None,
-      layoutOnly: Boolean = false,
-      txnUpdate: Option[(String, Long)] = None,
-      cdcAdds: Seq[String] = Nil,
-      rowTracking: Boolean = false,
-      ridOverride: Option[(Map[String, Long], Long)] = None,
-      idUpdate: Map[String, (Long, Long)] = Map.empty,
-      expectEmpty: Boolean = false,
-      fold: Boolean = false)(
-      next: (Seq[String], Map[String, String]) => (Seq[String], Map[String, String]))
-      : Long = {
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val parent = latest(f, root)
-      // "expect NO parent" (shallow clone's first commit): a concurrent
-      // first commit must fail THIS caller loudly, never be silently
-      // superseded by a retried clone landing as its child
-      if (expectEmpty && parent.isDefined)
-        throw new ConcurrentCommitException(
-          s"commit on $dir expected an EMPTY log but found v${parent.get} — " +
-            "a concurrent writer created the table first")
-      expectedParent.foreach { want =>
-        if (!parent.contains(want))
-          throw new ConcurrentCommitException(
-            s"rewrite of $dir was computed against v$want but the log head is " +
-              s"now v${parent.getOrElse(0L)} — a concurrent commit landed; " +
-              "recompute the rewrite from the current head (committing anyway " +
-              "would drop the concurrent files from the log)")
-      }
-      // ONE parent read per attempt — files, DVs, txn markers, rid
-      // bindings and both high-water-mark families all parse from it
-      // (version files are the hot-path IO on high-ingest tables)
-      val ptext = parent.map(readText(f, root, _))
-      val base = ptext.map(parseFiles(_, root)).getOrElse(Nil)
-      val baseDvs = ptext.map(parseDvs(_, root)).getOrElse(Map.empty[String, String])
-      val version = parent.getOrElse(0L) + 1
-      val body = new StringBuilder()
-        .append(Magic).append('\t').append(1).append('\t').append(version)
-        .append('\t').append(System.currentTimeMillis())
-        .append('\t').append(parent.map(_.toString).getOrElse("-"))
-        // 6th header column: "layout" marks a rewrite that repacked bytes
-        // without changing logical rows (OPTIMIZE) — change capture may
-        // skip it; "fold" marks a resolved-state-preserving rewrite (the
-        // compaction LWW fold — raw rows changed, resolved state did not);
-        // "-" for every logical commit. Readers index columns positionally,
-        // so appending stays backward-compatible.
-        .append('\t')
-        .append(if (layoutOnly) "layout" else if (fold) "fold" else "-")
-        .append('\n')
-      // qualify before relativizing: callers hand in paths from different
-      // producers (listings, inputFiles) whose URI spellings differ
-      // (file:/ vs file:///) for the same file
-      val (nextFiles, nextDvs) = next(base, baseDvs)
-      def rel(p: String): String = relativize(root, f.makeQualified(new Path(p)).toString)
-      nextFiles.map(rel).distinct.sorted.foreach(r => body.append(r).append('\n'))
-      nextDvs.toSeq.map { case (b, d) => (rel(b), rel(d)) }.sorted
-        .foreach { case (b, d) =>
-          body.append(DvMarker).append(b).append('\t').append(d).append('\n')
-        }
-      // streaming-progress markers INHERIT across every commit (the update,
-      // if any, replaces its app's entry): maintenance between micro-batches
-      // must never erase a writer's replay guard
-      val baseTxns = ptext.map(parseTxns).getOrElse(Map.empty[String, Long])
-      (baseTxns ++ txnUpdate).toSeq.sorted.foreach { case (a, e) =>
-        body.append(TxnMarker).append(a).append('\t').append(e).append('\n')
-      }
-      // IDENTITY allocation marks inherit; the allocating commit guards
-      // the mark it allocated FROM — identity values are baked into the
-      // just-written files, so a lost race must fail loudly (the caller
-      // re-runs the whole write), never silently re-commit the same range
-      val baseIds = ptext.map(parseIdHwms).getOrElse(Map.empty[String, Long])
-      idUpdate.foreach { case (c, (expectedBase, _)) =>
-        val cur = baseIds.getOrElse(c, expectedBase) // absent = first allocation
-        if (cur != expectedBase)
-          throw new IdentityAllocationRaceException(
-            s"identity allocation on $dir column '$c' lost a race: allocated from " +
-              s"next=$expectedBase but the log now records next=$cur — the written " +
-              "values may collide; re-run the write against the current head")
-      }
-      (baseIds ++ idUpdate.map { case (c, (_, n)) => c -> n }).toSeq.sorted
-        .foreach { case (c, n) =>
-          body.append(IdHwmMarker).append(c).append('\t').append(n).append('\n')
-        }
-      // change-data references are PER-COMMIT: exactly this version's
-      // row-level delta, never inherited
-      cdcAdds.map(rel).distinct.sorted.foreach { r =>
-        body.append(CdcMarker).append(r).append('\n')
-      }
-      // row tracking: bindings for live files inherit; files NEW to the
-      // log get bases allocated from the high-water mark (footer row
-      // counts of just-written files — O(added) cheap probes), which then
-      // bumps past them so no id is ever reused. Self-perpetuating: the
-      // parent's mark keeps every later commit path allocating; restore
-      // passes the historical bindings with a monotone mark.
-      val baseRids = ptext.map(parseRids(_, root)).getOrElse(Map.empty[String, Long])
-      val baseHwm = ptext.flatMap(parseRidHwm)
-      if (baseHwm.isDefined || rowTracking || ridOverride.isDefined) {
-        val qFiles = nextFiles.map(p => f.makeQualified(new Path(p)).toString).distinct
-        val (seedRids, seedHwm) = ridOverride match {
-          case Some((m, h)) => (m, math.max(h, baseHwm.getOrElse(0L)))
-          case None => (baseRids, baseHwm.getOrElse(0L))
-        }
-        val fresh = qFiles.filterNot(seedRids.contains).sorted
-        val counts = footerRowCounts(f, fresh)
-        var hwm = seedHwm
-        val assigned = fresh.map { p => val b = hwm; hwm += counts(p); p -> b }
-        val live = qFiles.toSet
-        val rids = seedRids.filter { case (p, _) => live(p) } ++ assigned
-        rids.toSeq.map { case (p, b) => (rel(p), b) }.sorted.foreach { case (r, b) =>
-          body.append(RidMarker).append(r).append('\t').append(b).append('\n')
-        }
-        body.append(RidHwmMarker).append(hwm).append('\n')
-      }
-      try {
-        // exclusive create IS the commit: exactly one writer wins a version
-        createExclusive(f, vPath(root, version),
-          body.toString.getBytes(StandardCharsets.UTF_8), allowUnsafe)
-        return version
-      } catch {
-        // both collision shapes fall through to the loop exit on the last
-        // attempt, so exhaustion always surfaces as the diagnostic below
-        // rather than a raw store exception. The message heuristic is
-        // scoped to THIS version file (the conditionalCreate discipline):
-        // an "already exists" about a different path — a nested failure
-        // creating an intermediate dir, another object in a store error —
-        // is a real failure and must propagate, not be retried 20 times
-        // into the misleading "runaway committer" diagnostic
-        case _: FileAlreadyExistsException => () // lost the race — re-read, retry
-        case e: java.io.IOException
-            if Option(e.getMessage).exists(m => m.contains("already exists") &&
-              (m.contains(vPath(root, version).toString) ||
-                m.contains(vPath(root, version).getName))) => ()
-      }
-    }
-    throw new IllegalStateException(
-      s"snapshot commit on $dir lost $MaxCommitAttempts consecutive races — " +
-        "a runaway committer is monopolizing the log")
-  }
-
   /**
    * Reconcile physical files to the retained log suffix: keep the last
    * `keepLast` snapshots, delete (a) older snapshot files and (b) data
@@ -952,7 +867,7 @@ object Snapshots {
       if (keepCommittedWithinMs <= 0) _ => false
       else {
         val cutoff = System.currentTimeMillis() - keepCommittedWithinMs
-        v => headerTime(f, root, v) >= cutoff
+        v => headerLine(f, root, v).committedAt >= cutoff
       }
     // tagged versions are pinned by name — count/age policies never
     // reclaim them (delete the tag to release)
@@ -960,17 +875,15 @@ object Snapshots {
     val (drop, keep) = all.partition(v =>
       v <= last - keepLast && !ageProtected(v) && !tagged.contains(v))
     if (drop.isEmpty) return Nil
-    val keptFiles = keep.flatMap(readFiles(f, root, _)).toSet
     // DV and change-data files age out with the snapshots that reference
     // them, same rule as data
-    val keptDvs = keep.flatMap(readDvs(f, root, _).values).toSet
-    val keptCdcs = keep.flatMap(readCdcs(f, root, _)).toSet
+    val (kept, dropped) = (keep.map(entry(f, root, _)), drop.map(entry(f, root, _)))
+    def doomedOf(refs: LogEntry => Iterable[String]): Seq[String] =
+      dropped.flatMap(refs).distinct.filterNot(kept.flatMap(refs).toSet)
     // out-of-root references (a shallow clone's view of its SOURCE's
     // files) are never deleted — the source owns them; dropping a clone
     // version only forgets the reference
-    val doomed = (drop.flatMap(readFiles(f, root, _)).distinct.filterNot(keptFiles) ++
-      drop.flatMap(readDvs(f, root, _).values).distinct.filterNot(keptDvs) ++
-      drop.flatMap(readCdcs(f, root, _)).distinct.filterNot(keptCdcs))
+    val doomed = (doomedOf(_.files) ++ doomedOf(_.dvs.values) ++ doomedOf(_.cdcs))
       .filter(underRoot(root))
     if (dryRun) return doomed // report what WOULD go; touch nothing
     doomed.foreach(p => f.delete(new Path(p), false))
@@ -980,16 +893,6 @@ object Snapshots {
     doomed
   }
 
-  /**
-   * Rollback: commit a NEW version whose live file set is exactly that of
-   * `toVersion` — history is never rewritten (the bad versions stay
-   * readable under their pins until vacuumed), the table's LATEST simply
-   * becomes the old content again. This is the operational undo for a bad
-   * batch: at 100 TB, re-deriving yesterday's table is a full-table job,
-   * while restore is one metadata commit. Fails loudly if any file of
-   * `toVersion` has already been vacuumed (a restore must never resurrect
-   * a partial table). Returns the new version number.
-   */
   /**
    * SHALLOW CLONE (Delta's `CREATE TABLE … SHALLOW CLONE`): a
    * metadata-only copy — the clone's v1 references the SOURCE's data
@@ -1020,17 +923,15 @@ object Snapshots {
     val (tf, troot) = fs(spark, targetDir)
     require(latest(tf, troot).isEmpty,
       s"shallowClone: $targetDir already has a snapshot log")
-    val files = readFiles(sf, sroot, v)
-    val missing = missingParallel(spark.sessionState.newHadoopConf(), files)
+    val src = entry(sf, sroot, v)
+    val missing = missingParallel(spark.sessionState.newHadoopConf(), src.files)
     require(missing.isEmpty,
       s"shallowClone: v$v of $sourceDir references ${missing.length} missing " +
         s"file(s) (first: ${missing.headOption.getOrElse("")})")
-    val rids = readRids(sf, sroot, v)
-    commitRewrite(spark, targetDir, files,
-      dvOverride = Some(readDvs(sf, sroot, v)),
-      ridOverride = readRidHwm(sf, sroot, v).map(h => (rids, h)),
-      idUpdate = identityHighWaterMarks(spark, sourceDir, v)
-        .map { case (c, m) => c -> (m, m) },
+    commitRewrite(spark, targetDir, src.files,
+      dvOverride = Some(src.dvs),
+      ridOverride = src.ridHwm.map(h => (src.rids, h)),
+      idUpdate = src.idHwms.map { case (c, m) => c -> (m, m) },
       // the emptiness pre-check above is check-then-act; the guard must
       // hold INSIDE the committed attempt or a racing first commit to
       // the target is silently superseded
@@ -1069,9 +970,8 @@ object Snapshots {
     require(latest(tf, troot).isEmpty,
       s"deepClone: $targetDir already has a snapshot log")
     val conf = spark.sessionState.newHadoopConf()
-    val files = readFiles(sf, sroot, v)
-    val dvs = readDvs(sf, sroot, v)
-    val all = (files ++ dvs.values).distinct
+    val src = entry(sf, sroot, v)
+    val all = (src.files ++ src.dvs.values).distinct
     val missing = missingParallel(conf, all)
     require(missing.isEmpty,
       s"deepClone: v$v of $sourceDir references ${missing.length} missing " +
@@ -1143,31 +1043,39 @@ object Snapshots {
     // manifest stats for the fresh local files while their footers are
     // hot, then the normal v1 commit over them
     Manifest.appendFor(spark, targetDir)
-    val rids = readRids(sf, sroot, v).map { case (p, b) =>
+    val rids = src.rids.map { case (p, b) =>
       mapping.getOrElse(qualify(p), qualify(p)) -> b
     }
-    commitRewrite(spark, targetDir, files.map(p => mapping(qualify(p))),
-      dvOverride = Some(dvs.map { case (b, d) =>
+    commitRewrite(spark, targetDir, src.files.map(p => mapping(qualify(p))),
+      dvOverride = Some(src.dvs.map { case (b, d) =>
         mapping(qualify(b)) -> mapping(qualify(d)) }),
-      ridOverride = readRidHwm(sf, sroot, v).map(h => (rids, h)),
-      idUpdate = identityHighWaterMarks(spark, sourceDir, v)
-        .map { case (c, m) => c -> (m, m) },
+      ridOverride = src.ridHwm.map(h => (rids, h)),
+      idUpdate = src.idHwms.map { case (c, m) => c -> (m, m) },
       expectEmpty = true)
   }
 
+  /**
+   * Rollback: commit a NEW version whose live file set is exactly that of
+   * `toVersion` — history is never rewritten (the bad versions stay
+   * readable under their pins until vacuumed), the table's LATEST simply
+   * becomes the old content again. This is the operational undo for a bad
+   * batch: at 100 TB, re-deriving yesterday's table is a full-table job,
+   * while restore is one metadata commit. Fails loudly if any file of
+   * `toVersion` has already been vacuumed (a restore must never resurrect
+   * a partial table). Returns the new version number.
+   */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long = {
     val (f, root) = fs(spark, dir)
     // the head we are undoing TO-FROM is the rewrite's concurrency guard:
     // an append landing mid-restore must fail the commit loudly, or its
     // files would vanish from the log and be vacuumed later (data loss)
     val head = latest(f, root)
-    val want = readFiles(f, root, toVersion)
-    val wantDvs = readDvs(f, root, toVersion)
-    val gone = (want ++ wantDvs.values).filterNot(p => f.exists(new Path(p)))
+    val want = entry(f, root, toVersion)
+    val gone = (want.files ++ want.dvs.values).filterNot(p => f.exists(new Path(p)))
     if (gone.nonEmpty)
       throw new IllegalStateException(
         s"restore to v$toVersion of $dir impossible: ${gone.length} of its " +
-          s"${want.length} file(s) were vacuumed or deleted out-of-band " +
+          s"${want.files.length} file(s) were vacuumed or deleted out-of-band " +
           s"(first missing: ${gone.head})")
     // restore re-installs the historical DV bindings too — restoring files
     // without their DVs would resurrect that version's deleted rows — and,
@@ -1175,10 +1083,8 @@ object Snapshots {
     // restored files fresh would renumber every row). The high-water mark
     // stays monotone (max of then and now): ids minted after toVersion
     // stay burned forever, never reissued.
-    val wantRids = readRids(f, root, toVersion)
-    val ridOv = readRidHwm(f, root, toVersion).map(h => (wantRids, h))
-    val v = commitRewrite(spark, dir, want, expectedParent = head,
-      dvOverride = Some(wantDvs), ridOverride = ridOv)
+    val v = commitRewrite(spark, dir, want.files, expectedParent = head,
+      dvOverride = Some(want.dvs), ridOverride = want.ridHwm.map(h => (want.rids, h)))
     graft.sources.TokenPruner.invalidateListing(dir)
     v
   }
@@ -1195,36 +1101,27 @@ object Snapshots {
     val last = latest(f, root).getOrElse(throw new IllegalArgumentException(
       s"versionAsOf: $dir has no snapshot log"))
     val retained = (1L to last).filter(v => f.exists(vPath(root, v)))
-    val vs = retained.filter(v => headerTime(f, root, v) <= tsMillis)
+    val vs = retained.filter(v => headerLine(f, root, v).committedAt <= tsMillis)
     if (vs.isEmpty)
       throw new IllegalArgumentException(
         s"versionAsOf: no snapshot of $dir committed at or before $tsMillis " +
           "(earliest retained commit: " +
-          retained.headOption.map(v => headerTime(f, root, v).toString)
+          retained.headOption.map(v => headerLine(f, root, v).committedAt.toString)
             .getOrElse("none") + ")")
     vs.max
   }
 
-  /**
-   * One row per RETAINED version, oldest first: version, commit wall-clock
-   * (epoch millis), parent version (null for the root), file count, and
-   * whether the commit was a rewrite (its parent's set is not a subset) —
-   * the `DESCRIBE HISTORY` analog, driver-side metadata only (the log is
-   * one small file per version; no data IO).
-   */
   /** [[history]] as a queryable DataFrame — the `DESCRIBE HISTORY`
    *  surface, with the layout-only flag exposed so operators can tell
    *  repacks from logical rewrites, and the live deletion-vector binding
    *  count so merge-on-read debt (the OPTIMIZE trigger) is visible per
    *  version. Driver-side metadata only. */
   def historyDf(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val (f, root) = fs(spark, dir)
-    val rows = history(spark, dir).map { case (v, ts, parent, n, rewrite) =>
-      (v, new java.sql.Timestamp(ts), parent, n, rewrite, isLayoutOnly(f, root, v),
-        readDvs(f, root, v).size)
-    }
     import spark.implicits._
-    rows.toDF("version", "committed_at", "parent", "n_files", "rewrite",
+    historyEntries(spark, dir).map { case (e, rewrite) =>
+      (e.version, new java.sql.Timestamp(e.committedAt), e.parent, e.files.size, rewrite,
+        e.kind == Layout, e.dvs.size)
+    }.toDF("version", "committed_at", "parent", "n_files", "rewrite",
       "layout_only", "n_dvs")
   }
 
@@ -1248,27 +1145,31 @@ object Snapshots {
         "n_dvs", "deleted_rows", "n_tags")
   }
 
+  /**
+   * One row per RETAINED version, oldest first: version, commit wall-clock
+   * (epoch millis), parent version (null for the root), file count, and
+   * whether the commit was a rewrite (its parent's set is not a subset) —
+   * the `DESCRIBE HISTORY` analog, driver-side metadata only (the log is
+   * one small file per version; no data IO).
+   */
   def history(spark: SparkSession, dir: String)
-      : Seq[(Long, Long, Option[Long], Int, Boolean)] = {
+      : Seq[(Long, Long, Option[Long], Int, Boolean)] =
+    historyEntries(spark, dir).map { case (e, rewrite) =>
+      (e.version, e.committedAt, e.parent, e.files.size, rewrite)
+    }
+
+  /** Each retained version's entry, oldest first, with its rewrite flag
+   *  ([[history]]); a parent that was vacuumed makes it unknowable: false. */
+  private def historyEntries(spark: SparkSession, dir: String): Seq[(LogEntry, Boolean)] = {
     val (f, root) = fs(spark, dir)
     val last = latest(f, root).getOrElse(return Nil)
-    val retained = (1L to last).filter(v => f.exists(vPath(root, v)))
-    retained.map { v =>
-      val text = readText(f, root, v)
-      val header = text.linesIterator.next().split('\t')
-      val ts = header(3).toLong
-      val parent = header(4) match { case "-" => None; case p => Some(p.toLong) }
-      // data lines only (a DV'd table's binding lines are not files — the
-      // pre-rid filter let them inflate n_changes)
-      val files = text.linesIterator.drop(1)
-        .filter(l => l.nonEmpty && !isMarkerLine(l))
-        .toSeq
-      val rewrite = parent.exists { p =>
-        if (!f.exists(vPath(root, p))) false // parent vacuumed: unknowable
-        else !readFiles(f, root, p).map(relativize(root, _))
-          .forall(files.map(relativize(root, _)).toSet)
-      }
-      (v, ts, parent, files.size, rewrite)
+    var prev: Option[LogEntry] = None
+    (1L to last).filter(v => f.exists(vPath(root, v))).map { v =>
+      val e = entry(f, root, v)
+      val rewrite =
+        prev.exists(p => e.parent.contains(p.version) && !p.files.forall(e.files.toSet))
+      prev = Some(e)
+      e -> rewrite
     }
   }
 
@@ -1298,8 +1199,8 @@ object Snapshots {
     val last = latest(f, root).getOrElse(throw new IllegalStateException(
       s"vacuumOrphans on $dir: table has no snapshot log — every file would " +
         "count as an orphan; this GC is only sound against a log"))
-    val retained = (1L to last).filter(v => f.exists(vPath(root, v)))
-    val referenced = retained.flatMap(readFiles(f, root, _)).toSet
+    val retained = (1L to last).filter(v => f.exists(vPath(root, v))).map(entry(f, root, _))
+    val referenced = retained.flatMap(_.files).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
     val orphans = graft.sources.TokenPruner.listDataFiles(f, root)
       .filter(s => !referenced.contains(s.getPath.toString) &&
@@ -1309,7 +1210,7 @@ object Snapshots {
     // delta commit that lost its race (or a crashed driver) is referenced
     // by NO retained version and would otherwise leak in _graft_dv forever
     // (data listings skip _-prefixed dirs by design)
-    val referencedDvs = retained.flatMap(readDvs(f, root, _).values).toSet
+    val referencedDvs = retained.flatMap(_.dvs.values).toSet
     val dvDir = new Path(root, DeletionVectors.Dir)
     val dvOrphans =
       if (!f.exists(dvDir)) Nil
@@ -1319,7 +1220,7 @@ object Snapshots {
         .map(_.getPath.toString).toSeq.sorted
     // change-data sidecars from aborted/lost-race CoW DMLs leak the same
     // way (cdc-<uuid>/ subdirs under _graft_cdc)
-    val referencedCdcs = retained.flatMap(readCdcs(f, root, _)).toSet
+    val referencedCdcs = retained.flatMap(_.cdcs).toSet
     val cdcRoot = new Path(root, CdcDir)
     def walkCdc(d: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       f.listStatus(d).toSeq.flatMap(st =>
@@ -1370,22 +1271,12 @@ object Snapshots {
       s"diffCandidateFiles: fromVersion $fromVersion > toVersion $toVersion")
     if (fromVersion == toVersion) return Some(Nil)
     val (f, root) = fs(spark, dir)
-    val versions = (fromVersion + 1) to toVersion
-    val walkable = (fromVersion == 0L || f.exists(vPath(root, fromVersion))) &&
-      versions.forall(v => f.exists(vPath(root, v)))
-    if (!walkable) return None
+    if (vacuumed(f, root, fromVersion, toVersion).nonEmpty) return None
     try {
-      var prevFiles: Set[String] =
-        if (fromVersion == 0L) Set.empty
-        else readFiles(f, root, fromVersion).toSet
-      var prevDvs: Map[String, String] =
-        if (fromVersion == 0L) Map.empty else dvsAt(f, root, fromVersion)
       val out = scala.collection.mutable.LinkedHashSet[String]()
-      versions.foreach { v =>
-        val cur = readFiles(f, root, v).toSet
-        val dvs = dvsAt(f, root, v)
-        val statePreserving = isLayoutOnly(f, root, v) || isFold(f, root, v)
-        if (!statePreserving) {
+      steps(f, root, fromVersion, toVersion).foreach { case (prev, e) =>
+        if (e.kind == Logical) { // layout repacks and folds preserve every key's row
+          val (prevFiles, cur) = (prev.files.toSet, e.files.toSet)
           val removed = prevFiles -- cur
           // a legacy (pre-fold-tag) rewrite commit: could be a compaction
           // fold OR CoW DML — indistinguishable, so the enumeration is
@@ -1394,12 +1285,10 @@ object Snapshots {
           // first); the caller's cost model is "candidates are small".
           out ++= (cur -- prevFiles)
           out ++= removed
-          val dvChanged = (dvs.toSet diff prevDvs.toSet).map(_._1) ++
-            (prevDvs.toSet diff dvs.toSet).map(_._1)
+          val dvChanged = (e.dvs.toSet diff prev.dvs.toSet).map(_._1) ++
+            (prev.dvs.toSet diff e.dvs.toSet).map(_._1)
           out ++= dvChanged
         }
-        prevFiles = cur
-        prevDvs = dvs
       }
       val files = out.toSeq
       if (files.forall(p => f.exists(new Path(p)))) Some(files) else None
@@ -1412,46 +1301,32 @@ object Snapshots {
   def diff(spark: SparkSession, dir: String, fromVersion: Long, toVersion: Long)
       : (Seq[String], Seq[String]) = {
     val (f, root) = fs(spark, dir)
-    def setOf(v: Long): Set[String] =
-      if (v == 0L) Set.empty else readFiles(f, root, v).toSet
-    val from = setOf(fromVersion)
-    val to = setOf(toVersion)
-    ((to -- from).toSeq.sorted, (from -- to).toSeq.sorted)
+    fileDiff(entryOrEmpty(f, root, fromVersion), entryOrEmpty(f, root, toVersion))
   }
 
-  /**
-   * Change feed: the rows APPENDED between two snapshot versions, read from
-   * exactly the files the later version added — the incremental-consumption
-   * primitive. A nightly pipeline pass ("process the documents that arrived
-   * since my last run") costs IO proportional to the INCREMENT, never a
-   * rescan of the table: at 100 TB with a 0.1% daily append, that is a
-   * thousandfold difference, and no "updated_at > ?" predicate or full
-   * anti-join is involved — immutable files + the log make membership
-   * exact.
-   *
-   * Append-lineage only: if any file was REMOVED across the range (a
-   * rewrite/compaction landed in between), file-level provenance can no
-   * longer equate "new files" with "new rows" — the call fails loudly
-   * rather than double-count rows that compaction rewrote into fresh files.
-   *
-   * Rows are the RAW APPENDED VERSIONS, exactly as written: no LWW
-   * collapse, no tombstone application — a feed consumer that needs merged
-   * rows joins the feed keys back through a normalized read. Engine
-   * bookkeeping columns (`_graft_token` for `keepTokenColumn` layouts and
-   * friends) ARE stripped: they describe the write layout, not the data,
-   * and leaking them would make the feed schema depend on write options.
-   *
-   * Merge-on-read DML in the range:
-   *  - a DV-ONLY commit (MoR DELETE — deletion vectors re-bound, zero
-   *    files added) is an EMPTY increment: append-capture never claimed
-   *    deletes, and skipping the commit delivers nothing wrong;
-   *  - a commit that both re-binds DVs AND adds files (MoR UPDATE/MERGE
-   *    re-insert generations) REFUSES loudly: delivering the re-inserts
-   *    as appends would present updated rows as brand-new inserts while
-   *    their paired positional deletes are silently dropped — a
-   *    duplicate-producing feed. Row-level consumers use
-   *    [[readChangesWithDeletes]], which delivers BOTH sides tagged.
-   */
+  private def fileDiff(from: LogEntry, to: LogEntry): (Seq[String], Seq[String]) = {
+    val (a, b) = (from.files.toSet, to.files.toSet)
+    ((b -- a).toSeq.sorted, (a -- b).toSeq.sorted)
+  }
+
+  /** The versions of `[fromVersion, toVersion]` whose file is gone
+   *  (version 0, the empty table, has none). */
+  private def vacuumed(f: FileSystem, root: Path, fromVersion: Long, toVersion: Long)
+      : Seq[Long] =
+    (math.max(fromVersion, 1L) to toVersion).filterNot(v => f.exists(vPath(root, v)))
+
+  /** (v-1's entry, v's entry) for each v in `(fromVersion, toVersion]`,
+   *  lazily and in order — every version file of a walk is read once. */
+  private def steps(f: FileSystem, root: Path, fromVersion: Long, toVersion: Long)
+      : Iterator[(LogEntry, LogEntry)] = {
+    var prev = entryOrEmpty(f, root, fromVersion)
+    ((fromVersion + 1) to toVersion).iterator.map { v =>
+      val step = (prev, entry(f, root, v))
+      prev = step._2
+      step
+    }
+  }
+
   /**
    * The files whose rows constitute the logical changes over
    * `(fromVersion, toVersion]` — the shared walk behind [[readChanges]]
@@ -1489,32 +1364,29 @@ object Snapshots {
           "are not files). Consume row-level changes with " +
           "Snapshots.readChangesWithDeletes (inserts + deletes, _change_type-" +
           "tagged), or compact and restart the feed from the DML version")
-    val versions = (fromVersion + 1) to toVersion
-    val walkable = versions.forall(v => f.exists(vPath(root, v))) &&
-      (fromVersion == 0L || f.exists(vPath(root, fromVersion)))
+    val walkable = vacuumed(f, root, fromVersion, toVersion).isEmpty
     val added =
       if (!walkable) {
-        val (a, r) = diff(spark, dir, fromVersion, toVersion)
+        val (from, to) = (entryOrEmpty(f, root, fromVersion), entry(f, root, toVersion))
+        val (a, r) = fileDiff(from, to)
         if (r.nonEmpty) crossing(fromVersion, toVersion, r)
-        if (a.nonEmpty && dvsAt(f, root, toVersion) != dvsAt(f, root, fromVersion))
-          morUpdate(fromVersion, toVersion, a)
+        if (a.nonEmpty && to.dvs != from.dvs) morUpdate(fromVersion, toVersion, a)
         a
       } else {
-        versions.flatMap { v =>
-          val (a, r) = diff(spark, dir, v - 1, v)
-          if (isLayoutOnly(f, root, v)) Nil // repack: rows already delivered via originals
+        steps(f, root, fromVersion, toVersion).flatMap { case (prev, e) =>
+          if (e.kind == Layout) Nil // repack: rows already delivered via originals
           else {
-            if (r.nonEmpty) crossing(v - 1, v, r)
+            val (a, r) = fileDiff(prev, e)
+            if (r.nonEmpty) crossing(prev.version, e.version, r)
             // DV-only commit (merge-on-read DELETE, zero files added): the
             // append-capture feed's documented contract — nothing delivered
             // here, deletes available via readChangesWithDeletes. A commit
             // that BOTH adds files and re-binds DVs is a MoR UPDATE/MERGE
             // and must not masquerade as an append.
-            if (a.nonEmpty && dvsAt(f, root, v) != dvsAt(f, root, v - 1))
-              morUpdate(v - 1, v, a)
+            if (a.nonEmpty && e.dvs != prev.dvs) morUpdate(prev.version, e.version, a)
             a
           }
-        }
+        }.toSeq
       }
     val missing = added.filterNot(p => f.exists(new Path(p)))
     if (missing.nonEmpty)
@@ -1527,6 +1399,39 @@ object Snapshots {
     added.distinct.sorted
   }
 
+  /**
+   * Change feed: the rows APPENDED between two snapshot versions, read from
+   * exactly the files the later version added — the incremental-consumption
+   * primitive. A nightly pipeline pass ("process the documents that arrived
+   * since my last run") costs IO proportional to the INCREMENT, never a
+   * rescan of the table: at 100 TB with a 0.1% daily append, that is a
+   * thousandfold difference, and no "updated_at > ?" predicate or full
+   * anti-join is involved — immutable files + the log make membership
+   * exact.
+   *
+   * Append-lineage only: if any file was REMOVED across the range (a
+   * rewrite/compaction landed in between), file-level provenance can no
+   * longer equate "new files" with "new rows" — the call fails loudly
+   * rather than double-count rows that compaction rewrote into fresh files.
+   *
+   * Rows are the RAW APPENDED VERSIONS, exactly as written: no LWW
+   * collapse, no tombstone application — a feed consumer that needs merged
+   * rows joins the feed keys back through a normalized read. Engine
+   * bookkeeping columns (`_graft_token` for `keepTokenColumn` layouts and
+   * friends) ARE stripped: they describe the write layout, not the data,
+   * and leaking them would make the feed schema depend on write options.
+   *
+   * Merge-on-read DML in the range:
+   *  - a DV-ONLY commit (MoR DELETE — deletion vectors re-bound, zero
+   *    files added) is an EMPTY increment: append-capture never claimed
+   *    deletes, and skipping the commit delivers nothing wrong;
+   *  - a commit that both re-binds DVs AND adds files (MoR UPDATE/MERGE
+   *    re-insert generations) REFUSES loudly: delivering the re-inserts
+   *    as appends would present updated rows as brand-new inserts while
+   *    their paired positional deletes are silently dropped — a
+   *    duplicate-producing feed. Row-level consumers use
+   *    [[readChangesWithDeletes]], which delivers BOTH sides tagged.
+   */
   def readChanges(
       spark: SparkSession, dir: String, fromVersion: Long, toVersion: Long)
       : org.apache.spark.sql.DataFrame = {
@@ -1539,7 +1444,7 @@ object Snapshots {
       if (added.isEmpty) {
         // zero changed rows, but keep the TABLE schema on the empty frame
         val (f, root) = fs(spark, dir)
-        val toFiles = if (toVersion == 0L) Nil else readFiles(f, root, toVersion)
+        val toFiles = entryOrEmpty(f, root, toVersion).files
         if (toFiles.isEmpty) spark.emptyDataFrame
         else graft.sources.ExistsDefaults.read(spark, dir, toFiles).limit(0)
       } else graft.sources.ExistsDefaults.read(spark, dir, added)
@@ -1553,13 +1458,15 @@ object Snapshots {
 
   /** One commit's row-level changes: files it ADDED (rows = inserts) and
    *  its deletion-vector re-binds (fresh deleted positions = the new DV's
-   *  positions minus the previous binding's — deletes). */
+   *  positions minus the previous binding's — deletes), with the version's
+   *  (data file → base row id) bindings. */
   final case class DvDelta(carrier: String, dv: String, prevDv: Option[String])
   final case class ChangeEvent(
       version: Long,
       added: Seq[String],
       dvDeltas: Seq[DvDelta],
-      cdcFiles: Seq[String] = Nil)
+      cdcFiles: Seq[String] = Nil,
+      rowIds: Map[String, Long] = Map.empty)
 
   /**
    * The row-level change events of `(fromVersion, toVersion]` — the shared
@@ -1577,9 +1484,7 @@ object Snapshots {
       s"change feed: fromVersion $fromVersion > toVersion $toVersion")
     if (fromVersion == toVersion) return Nil
     val (f, root) = fs(spark, dir)
-    val versions = (fromVersion + 1) to toVersion
-    val needed = (if (fromVersion == 0L) Nil else Seq(fromVersion)) ++ versions
-    val gone = needed.filterNot(v => f.exists(vPath(root, v)))
+    val gone = vacuumed(f, root, fromVersion, toVersion)
     if (gone.nonEmpty)
       throw new IllegalStateException(
         s"change feed $fromVersion→$toVersion: version file(s) " +
@@ -1587,34 +1492,30 @@ object Snapshots {
           "capture needs per-version attribution (which commit deleted which " +
           "row); raise vacuum retention (keepLast / keepCommittedWithin) to " +
           s"cover the consumer's lag, or restart the feed from version $toVersion")
-    val events = versions.flatMap { v =>
-      if (isLayoutOnly(f, root, v)) None // repack (incl. DV fold): rows unchanged
+    val events = steps(f, root, fromVersion, toVersion).flatMap { case (prev, e) =>
+      if (e.kind == Layout) None // repack (incl. DV fold): rows unchanged
+      else if (e.cdcs.nonEmpty)
+        // a CDC-recording rewrite (copy-on-write DML with changeFeedCow):
+        // the recorded events ARE this version's row-level delta; the
+        // rewritten generation files must NOT additionally appear as
+        // inserts (they re-carry unchanged rows)
+        Some(ChangeEvent(e.version, Nil, Nil, e.cdcs, e.rids))
       else {
-        val (a, r) = diff(spark, dir, v - 1, v)
-        val cdc = readCdcs(f, root, v)
-        if (cdc.nonEmpty)
-          // a CDC-recording rewrite (copy-on-write DML with changeFeedCow):
-          // the recorded events ARE this version's row-level delta; the
-          // rewritten generation files must NOT additionally appear as
-          // inserts (they re-carry unchanged rows)
-          Some(ChangeEvent(v, Nil, Nil, cdc))
-        else {
-          if (r.nonEmpty)
-            throw new IllegalStateException(
-              s"change feed ${v - 1}→$v crosses a logical rewrite " +
-                s"(${r.length} file(s) removed, e.g. ${r.head}) — row provenance " +
-                "is broken across it; consume up to the rewrite, then restart " +
-                "(copy-on-write DML records row-level events when the table " +
-                "sets changeFeedCow 'true')")
-          val prev = dvsAt(f, root, v - 1)
-          val dels = dvsAt(f, root, v).toSeq.sortBy(_._1).collect {
-            case (carrier, dv) if !prev.get(carrier).contains(dv) =>
-              DvDelta(carrier, dv, prev.get(carrier))
-          }
-          if (a.isEmpty && dels.isEmpty) None else Some(ChangeEvent(v, a, dels))
+        val (a, r) = fileDiff(prev, e)
+        if (r.nonEmpty)
+          throw new IllegalStateException(
+            s"change feed ${prev.version}→${e.version} crosses a logical rewrite " +
+              s"(${r.length} file(s) removed, e.g. ${r.head}) — row provenance " +
+              "is broken across it; consume up to the rewrite, then restart " +
+              "(copy-on-write DML records row-level events when the table " +
+              "sets changeFeedCow 'true')")
+        val dels = e.dvs.toSeq.sortBy(_._1).collect {
+          case (carrier, dv) if !prev.dvs.get(carrier).contains(dv) =>
+            DvDelta(carrier, dv, prev.dvs.get(carrier))
         }
+        if (a.isEmpty && dels.isEmpty) None else Some(ChangeEvent(e.version, a, dels, Nil, e.rids))
       }
-    }
+    }.toSeq
     // a version's originals can be repacked-then-vacuumed while the
     // consumer lagged even though the version FILES are all retained
     val refs = events.flatMap(e =>
@@ -1675,7 +1576,7 @@ object Snapshots {
           "row-tracked — create or write it with rowTracking 'true' first")
     val RidCol = graft.sources.GraftDataSource.RowIdCol
     def emptyFeed: org.apache.spark.sql.DataFrame = {
-      val toFiles = if (toVersion == 0L) Nil else readFiles(f, root, toVersion)
+      val toFiles = entryOrEmpty(f, root, toVersion).files
       val base =
         if (toFiles.isEmpty) spark.emptyDataFrame
         else stripEngineColumns(
@@ -1688,11 +1589,9 @@ object Snapshots {
     if (fromVersion == toVersion) return emptyFeed
     val events = changeEvents(spark, dir, fromVersion, toVersion)
     if (events.isEmpty) return emptyFeed
-    // per-version (file → base row id) bindings, read once per event —
+    // per-version (file → base row id) bindings from the walk's entries —
     // identity for withRowIds: stored materialized id, else base + position
-    val ridsAt = scala.collection.mutable.Map.empty[Long, Map[String, Long]]
-    def basesFor(version: Long): Map[String, Long] =
-      ridsAt.getOrElseUpdate(version, readRids(f, root, version))
+    val basesFor = events.map(e => e.version -> e.rowIds).toMap
     def ridFrom(raw: org.apache.spark.sql.DataFrame,
         bases: Seq[(String, Long)]): org.apache.spark.sql.DataFrame = {
       val stored =
@@ -1799,34 +1698,18 @@ object Snapshots {
     engine.foldLeft(df)(_.drop(_))
   }
 
-  /** Bounded-parallel existence probe (pool of ≤16, the
-   *  readFootersParallel shape): the tables worth validating file-by-file
-   *  are exactly the big ones — a serial exists() loop over ~100k object-
-   *  store paths is minutes of driver RPC latency. Paths resolve their own
-   *  FileSystem (a clone-of-a-clone's list mixes roots). */
+  /** Bounded-parallel existence probe ([[DriverPool]]): the tables worth
+   *  validating file-by-file are exactly the big ones — a serial exists()
+   *  loop over ~100k object-store paths is minutes of driver RPC latency.
+   *  Paths resolve their own FileSystem (a clone-of-a-clone's list mixes
+   *  roots). */
   private[graft] def missingParallel(
       conf: org.apache.hadoop.conf.Configuration,
-      paths: Seq[String]): Seq[String] = {
-    def probe(p: String): Option[String] = {
+      paths: Seq[String]): Seq[String] =
+    DriverPool.map(paths) { p =>
       val hp = new Path(p)
       if (hp.getFileSystem(conf).exists(hp)) None else Some(p)
-    }
-    if (paths.isEmpty) Nil
-    else if (paths.length == 1) paths.flatMap(probe)
-    else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(16, paths.length))
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks = paths.map { p =>
-          new java.util.concurrent.Callable[Option[String]] {
-            override def call(): Option[String] = probe(p)
-          }
-        }
-        pool.invokeAll(tasks.asJava).asScala.flatMap(_.get()).toSeq
-      } finally pool.shutdown()
-    }
-  }
+    }.flatten
 
   private def relativize(root: Path, abs: String): String = {
     val rootStr = root.toString.stripSuffix("/") + "/"

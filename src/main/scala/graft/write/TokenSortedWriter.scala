@@ -1116,7 +1116,7 @@ object TokenSortedWriter {
     // "fold": the rewrite preserves every key's RESOLVED row (that is the
     // compaction contract) — the resolved-state diff may ride across it
     val version = Snapshots.commitRewrite(spark, dir, genFiles,
-      expectedParent = Some(sourceVersion), fold = true)
+      expectedParent = Some(sourceVersion), kind = Snapshots.Fold)
     Snapshots.vacuum(spark, dir, vacuumRetain)
     graft.sources.TokenPruner.invalidateListing(dir)
     version
@@ -1240,8 +1240,8 @@ object TokenSortedWriter {
     // differ in feature columns (writetime/TTL), and a cross-schema read
     // would null-fill or drop columns — a silent semantic change this
     // layout-only op must never make. Footer-only probes, bounded-parallel
-    // (the TokenPruner.readFootersParallel shape — 10k candidates cost one
-    // pooled footer sweep, not 10k serial DataFrame constructions).
+    // ([[DriverPool]] — 10k candidates cost one pooled footer sweep, not
+    // 10k serial DataFrame constructions).
     // candidates: sub-threshold files PLUS any file (whatever its size)
     // whose deletion vector hides more than `maxDvFraction` of its rows —
     // the merge-on-read compaction trigger: a heavily-deleted large file
@@ -1261,19 +1261,7 @@ object TokenSortedWriter {
       try r.getFooter.getFileMetaData.getSchema.toString finally r.close()
     }
     val schemaKeys: Map[String, String] =
-      if (candidates.isEmpty) Map.empty
-      else {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(16, candidates.length))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks = candidates.toSeq.map(m =>
-            new java.util.concurrent.Callable[(String, String)] {
-              override def call(): (String, String) = m.path -> schemaKey(m.path)
-            })
-          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-        } finally pool.shutdown()
-      }
+      DriverPool.map(candidates.toSeq)(m => m.path -> schemaKey(m.path)).toMap
     val bins = candidates
       .groupBy(f => (new Path(f.path).getParent.toString, schemaKeys(f.path)))
       .toSeq.sortBy(_._1)
@@ -1376,9 +1364,9 @@ object TokenSortedWriter {
       case Some(v) =>
         val gone = replaced.toSet
         val keep = snapFiles.map(_.path).toSeq.filterNot(gone.contains)
-        // layoutOnly: change capture skips this commit (rows identical)
+        // a Layout commit: change capture skips it (rows identical)
         try Snapshots.commitRewrite(spark, dir, keep ++ fresh,
-          expectedParent = Some(v), layoutOnly = true)
+          expectedParent = Some(v), kind = Snapshots.Layout)
         catch {
           case e: Snapshots.ConcurrentCommitException =>
             // the packed part-opt-* files already sit in live data dirs

@@ -14,7 +14,7 @@ class NormalizeSpec extends SparkSpec {
 
   test("latestWriteWins keeps exactly the highest-writetime version per (pk, ck)") {
     val df = versions.toDF("pk", "ck", "wt", "v")
-    val got = Normalize.latestWriteWins(df, Seq("pk", "ck"), Seq("wt"))
+    val got = Normalize.latestWriteWinsAgg(df, Seq("pk", "ck"), Seq("wt"))
       .select("pk", "ck", "v").as[(Long, Int, String)].collect().toSet
     assert(got === Set((1L, 1, "new"), (1L, 2, "only"), (2L, 1, "c")))
   }
@@ -25,7 +25,7 @@ class NormalizeSpec extends SparkSpec {
       .distinct // unique (pk,ck,wt) so max-wt winner is well-defined
       .map { case (pk, ck, wt) => (pk, ck, wt, s"v$wt") }
     val df = rows.toDF("pk", "ck", "wt", "v")
-    val got = Normalize.latestWriteWins(df, Seq("pk", "ck"), Seq("wt"))
+    val got = Normalize.latestWriteWinsAgg(df, Seq("pk", "ck"), Seq("wt"))
       .select("pk", "ck", "wt").as[(Long, Int, Long)].collect().toSet
     val expected = rows.groupBy(r => (r._1, r._2)).map { case ((pk, ck), vs) =>
       (pk, ck, vs.map(_._3).max)

@@ -149,4 +149,43 @@ class SnapshotInterleavingSpec extends SparkSpec {
     assert(listings == 1L && opens == 1L,
       s"planning made $listings log listing(s) and $opens version-file open(s)")
   }
+
+  test("every log walk opens each version file at most once") {
+    val dir = freshDir()
+    writeSnap(0 until 100, dir, partitions = 1) // v1 append
+    writeSnap(50 until 150, dir, partitions = 1) // v2 append
+    TokenSortedWriter.compactInPlace(spark, schema, dir, vacuumRetain = 10) // v3 fold
+    writeSnap(150 until 1150, dir, partitions = 1) // v4 append
+    val appended = Snapshots.changedFiles(spark, dir, 3L, 4L).head
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val dv = DeletionVectors.newDvPath(dir)
+    DeletionVectors.write(fs, dv, (0L until 300L).toArray)
+    Snapshots.commitDeltas(spark, dir, Map(appended -> dv), Nil, Some(4L)) // v5 MoR delete
+    TokenSortedWriter.optimizeSmallFiles(spark, schema, dir,
+      smallBytes = 1L, targetBytes = 1L << 30) // v6 layout, folds the DV
+    assert(Snapshots.latestVersion(spark, dir).contains(6L))
+    assert(Snapshots.historyDf(spark, dir).select("layout_only").as[Boolean]
+      .collect().toSeq == Seq(false, false, false, false, false, true))
+
+    val hooked = s"hooked://host$dir"
+    val logDir = s"$dir/${Snapshots.Dir}"
+    def maxOpens(walk: => Any): Long = {
+      HookedFileSystem.reset()
+      walk
+      (1L to 6L).map(v => HookedFileSystem.calls("open",
+        _ == f"$logDir/v$v%012d.txt")).max
+    }
+    val opens = Seq(
+      "diffCandidateFiles(0, 6)" ->
+        maxOpens(Snapshots.diffCandidateFiles(spark, hooked, 0L, 6L)),
+      "changedFiles(0, 2)" -> maxOpens(Snapshots.changedFiles(spark, hooked, 0L, 2L)),
+      "changeEvents(3, 6)" -> maxOpens(Snapshots.changeEvents(spark, hooked, 3L, 6L)),
+      // the fold at v3 is a logical rewrite to the row-level feed
+      "changeEvents(0, 6)" -> maxOpens(intercept[IllegalStateException](
+        Snapshots.changeEvents(spark, hooked, 0L, 6L))),
+      "historyDf" -> maxOpens(Snapshots.historyDf(spark, hooked).collect()),
+      "vacuum(keepLast = 1)" -> maxOpens(Snapshots.vacuum(spark, hooked, keepLast = 1)))
+    assert(opens.forall(_._2 <= 1L),
+      s"version-file opens per walk (max over versions): ${opens.mkString(", ")}")
+  }
 }

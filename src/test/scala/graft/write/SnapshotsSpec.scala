@@ -582,4 +582,88 @@ class SnapshotsSpec extends SparkSpec {
     }
     assert(e.getMessage != null)
   }
+
+  // A version file as the commit loop wrote it before the LogEntry codec:
+  // two streaming apps' txn marks, identity marks, a CoW DML's change data,
+  // DV and row-id bindings, and a shallow clone's out-of-root file.
+  private val committedV3 = Seq(
+    "graft-snapshot\t1\t3\t1792289306167\t2\t-",
+    "file:/data/source/t/part-00003-s.parquet",
+    "gen-1f2e3d4c5b6a/part-00000-c.parquet",
+    "graft_p_0/part-00000-a.parquet",
+    "graft_p_1/part-00001-b.parquet",
+    "dv\tfile:/data/source/t/part-00003-s.parquet\t_graft_dv/dv-9f8e.bin",
+    "dv\tgraft_p_0/part-00000-a.parquet\t_graft_dv/dv-0a1b.bin",
+    "txn\tstream-a\t12",
+    "txn\tstream-b\t3",
+    "idhwm\tid\t100",
+    "idhwm\tseq\t5",
+    "cdc\t_graft_cdc/cdc-77aa/part-00000.parquet",
+    "cdc\t_graft_cdc/cdc-77aa/part-00001.parquet",
+    "rid\tfile:/data/source/t/part-00003-s.parquet\t1000",
+    "rid\tgen-1f2e3d4c5b6a/part-00000-c.parquet\t90",
+    "rid\tgraft_p_0/part-00000-a.parquet\t0",
+    "rid\tgraft_p_1/part-00001-b.parquet\t40",
+    "ridhwm\t1200").mkString("", "\n", "\n")
+
+  test("log-entry codec: render(parse(text)) reproduces a version file byte for byte") {
+    import Snapshots.LogEntry
+    val root = new org.apache.hadoop.fs.Path("file:/warehouse/t")
+    val e = LogEntry.parse(committedV3, root)
+    assert(e.render(root) == committedV3)
+    val foreign = "file:/data/source/t/part-00003-s.parquet"
+    val a = "file:/warehouse/t/graft_p_0/part-00000-a.parquet"
+    assert(e.version == 3L && e.committedAt == 1792289306167L &&
+      e.parent.contains(2L) && e.kind == Snapshots.Logical)
+    assert(e.files.length == 4 && e.files.head == foreign && e.files.contains(a))
+    assert(e.dvs == Map(foreign -> "file:/warehouse/t/_graft_dv/dv-9f8e.bin",
+      a -> "file:/warehouse/t/_graft_dv/dv-0a1b.bin"))
+    assert(e.txns == Map("stream-a" -> 12L, "stream-b" -> 3L))
+    assert(e.idHwms == Map("id" -> 100L, "seq" -> 5L))
+    assert(e.cdcs.length == 2 && e.rids(foreign) == 1000L && e.rids(a) == 0L)
+    assert(e.ridHwm.contains(1200L))
+    Seq("layout" -> Snapshots.Layout, "fold" -> Snapshots.Fold).foreach { case (tag, kind) =>
+      val text = committedV3.replace("\t2\t-\n", s"\t2\t$tag\n")
+      assert(LogEntry.parse(text, root).kind == kind)
+      assert(LogEntry.parse(text, root).render(root) == text)
+    }
+    // a legacy 5-column header is a logical commit
+    val legacy = LogEntry.parse("graft-snapshot\t1\t1\t0\t-\npart-0.parquet\n", root)
+    assert(legacy.kind == Snapshots.Logical && legacy.parent.isEmpty &&
+      legacy.files == Seq("file:/warehouse/t/part-0.parquet"))
+    // malformed marker lines still fail loudly, naming the line
+    Seq("dv\tgraft_p_0/part-00000-a.parquet", "rid\tgraft_p_0/part-00000-a.parquet",
+      "txn\tstream-a\t12\t13").foreach { bad =>
+      val err = intercept[IllegalArgumentException](
+        LogEntry.parse(s"graft-snapshot\t1\t1\t0\t-\t-\n$bad\n", root))
+      assert(err.getMessage ==
+        s"requirement failed: corrupt ${bad.takeWhile(_ != '\t')} line: $bad")
+    }
+  }
+
+  test("the commit loop writes the same version-file bytes as before the codec") {
+    val dir = freshDir()
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(dir)).toString
+    Snapshots.commitAppend(spark, dir, Nil, Some(("stream-b", 3L)))
+    Snapshots.commitAppend(spark, dir, Nil, Some(("stream-a", 12L)))
+    val Seq(a, b, c) = Seq("graft_p_0/part-00000-a.parquet",
+      "graft_p_1/part-00001-b.parquet", "gen-1f2e3d4c5b6a/part-00000-c.parquet")
+      .map(r => s"$root/$r")
+    val foreign = "file:/data/source/t/part-00003-s.parquet"
+    Snapshots.commitRewrite(spark, dir, Seq(c, b, a, foreign),
+      expectedParent = Some(2L),
+      dvOverride = Some(Map(a -> s"$root/_graft_dv/dv-0a1b.bin",
+        foreign -> s"$root/_graft_dv/dv-9f8e.bin")),
+      cdcFiles = Seq(s"$root/_graft_cdc/cdc-77aa/part-00001.parquet",
+        s"$root/_graft_cdc/cdc-77aa/part-00000.parquet"),
+      ridOverride = Some((Map(a -> 0L, b -> 40L, c -> 90L, foreign -> 1000L), 1200L)),
+      idUpdate = Map("seq" -> (0L, 5L), "id" -> (0L, 100L)))
+    val written = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      s"$dir/${Snapshots.Dir}/v000000000003.txt")), "UTF-8")
+    // only the commit wall-clock (header column 4) differs
+    val (header, body) = written.splitAt(written.indexOf('\n'))
+    assert(header.split('\t').updated(3, "1792289306167").mkString("\t") + body ==
+      committedV3)
+  }
 }
