@@ -2,11 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.GraftShims
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -105,4 +105,82 @@ object NgramMd5Hashes {
     }
     new GenericArrayData(out)
   }
+}
+
+/**
+ * `drop_hashed_lines(text, hashes, sep)` — `text` split on the literal
+ * `sep`, every line whose `xxhash64` is in `hashes` removed, the rest
+ * re-joined with `sep`. Exactly
+ * `array_join(filter(split(text, quote(sep)), l -> !array_contains(hashes, xxhash64(l))), sep)`
+ * (the same `split`, the same seed-42 hash), but membership is a
+ * [[LongSet]] probe instead of a scan of `hashes` per line.
+ *
+ * Contract: `hashes` holds the SAME value on every row — the one-row
+ * broadcast frequent set of `Dedup.dropFrequentLines`. The set is built
+ * from the first row's array and reused while the array's buffer stays
+ * the same, so a 10M-hash set costs one build per task instead of a 10M
+ * scan per line.
+ */
+case class DropHashedLines(text: Expression, hashes: Expression, sep: String)
+    extends BinaryExpression {
+
+  override def left: Expression = text
+  override def right: Expression = hashes
+  override def dataType: DataType = StringType
+
+  override def checkInputDataTypes(): TypeCheckResult = (text.dataType, hashes.dataType) match {
+    case (StringType, ArrayType(LongType, _)) if sep.nonEmpty => TypeCheckResult.TypeCheckSuccess
+    case (StringType, ArrayType(LongType, _)) =>
+      TypeCheckResult.TypeCheckFailure("drop_hashed_lines needs a non-empty separator")
+    case (t, h) => TypeCheckResult.TypeCheckFailure(
+      s"drop_hashed_lines needs (string, array<bigint>), got ($t, $h)")
+  }
+
+  @transient private lazy val pattern =
+    UTF8String.fromString(java.util.regex.Pattern.quote(sep))
+  @transient private lazy val sepUtf8 = UTF8String.fromString(sep)
+  // (buffer, offset, set) of the last array seen
+  @transient @volatile private var cached: (AnyRef, Long, LongSet) = _
+
+  private def setOf(a: ArrayData): LongSet = {
+    val (base, off) = a match {
+      case u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData =>
+        (u.getBaseObject, u.getBaseOffset)
+      case other => (other, 0L)
+    }
+    val c = cached
+    if (c != null && (c._1 eq base) && c._2 == off) c._3
+    else {
+      val s = new LongSet(a)
+      cached = (base, off, s)
+      s
+    }
+  }
+
+  def drop(t: UTF8String, h: ArrayData): UTF8String = {
+    val set = setOf(h)
+    val kept = t.split(pattern, -1).filterNot(l =>
+      set.contains(XXH64.hashUnsafeBytes(l.getBaseObject, l.getBaseOffset, l.numBytes, 42L)))
+    UTF8String.concatWs(sepUtf8, kept: _*)
+  }
+
+  override def nullSafeEval(t: Any, h: Any): Any =
+    drop(t.asInstanceOf[UTF8String], h.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dropLines", this, classOf[DropHashedLines].getName)
+    nullSafeCodeGen(ctx, ev, (t, h) => s"${ev.value} = $ref.drop($t, $h);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(text = newLeft, hashes = newRight)
+
+  override def prettyName: String = "drop_hashed_lines"
+}
+
+object DropHashedLines {
+  def apply(text: Column, hashes: Column, sep: String): Column =
+    GraftShims.column(new DropHashedLines(
+      GraftShims.expression(text), GraftShims.expression(hashes), sep))
 }

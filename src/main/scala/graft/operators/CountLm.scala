@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{LmProbe, LmTables, WordNgrams}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,11 +27,13 @@ import org.apache.spark.sql.functions._
  *    as exact membership rather than a smoothed conditional.
  *
  * 100 TB shape: training is one map-side-combined count aggregation per
- * order; the model rides either as a plan-literal map (≤
- * `maxBroadcastTerms`, zero exchanges on the corpus — the
- * [[TextAnalysis.scoreLinear]] discipline) or as a broadcast join on
- * exploded (id, term) rows with integer partial aggregation (narrow rows,
- * corpus text never shuffles). Bucketing compares against FIXED
+ * order (bigrams from the native [[graft.functions.WordNgrams]], linear
+ * per document). Scoring is one path for every model size: the model is
+ * collected once, ships as one Spark `Broadcast`, and
+ * [[graft.functions.LmProbe]] computes every statistic of a document in
+ * one pass over its bytes — zero exchanges on the corpus, text never
+ * shuffles. (The driver holds the model either way: a broadcast join
+ * would collect the same tables.) Bucketing compares against FIXED
  * boundaries (CCNet derives them from a profiled sample) — pure codegen,
  * no global sort, no single-partition window.
  */
@@ -65,132 +69,72 @@ object CountLm {
    *  the engine-wide convention). `maxVocab > 0` keeps the top terms and
    *  bigrams by `(count desc, value asc)` — the head-truncation every real
    *  LM applies, with a deterministic tie-break — via the distributed
-   *  [[capTopK]] (never a single-partition global window). */
+   *  [[capTopK]] (never a single-partition global window). Two jobs: the
+   *  totals ride the term table's materialization as observed metrics. */
   def train(corpus: DataFrame, textCol: String, maxVocab: Int = 0): Model = {
     // the two explode+count passes below are heavy per-row work over the
     // whole corpus: fan a starved single-file scan out first (guide §2.5;
     // operator-local per the round-19 verdict, q151 2x driver evidence)
     val c = Fanout.widen(corpus, Seq(col(textCol)))
-    val t = toks(col(textCol))
     def cap(df: DataFrame, key: String): DataFrame =
       if (maxVocab <= 0) df else capTopK(df, key, maxVocab)
+    val totals = Observation()
     val terms = cap(
-      c.select(explode(t).as("term"))
+      c.select(explode(toks(col(textCol))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("cnt")), "term")
+      .observe(totals, coalesce(sum(col("cnt")), lit(0L)).as("n"), count(lit(1)).as("v"))
       .localCheckpoint(eager = true)
     val bigrams = cap(
-      c.select(explode(
-          when(size(t) >= 2,
-            transform(sequence(lit(1), size(t) - 1),
-              i => concat_ws(" ", element_at(t, i), element_at(t, i + 1))))
-            .otherwise(array().cast("array<string>"))).as("bg"))
+      c.select(explode(WordNgrams(col(textCol), 2)).as("bg"))
         .groupBy(col("bg")).agg(count(lit(1)).as("cnt")), "bg")
       .localCheckpoint(eager = true)
-    val totals = terms.agg(
-      coalesce(sum(col("cnt")), lit(0L)).as("n"),
-      count(lit(1)).as("v")).head()
-    Model(terms, bigrams, totals.getLong(0), totals.getLong(1))
+    val m = totals.get
+    Model(terms, bigrams, m("n").asInstanceOf[Long], m("v").asInstanceOf[Long])
+  }
+
+  /** The model's tables as one broadcast for [[LmProbe]]; `withBigrams =
+   *  false` ships an empty bigram set (unigram statistics only). */
+  private def probeTables(model: Model, withBigrams: Boolean): Broadcast[LmTables] = {
+    val terms = model.terms.collect().map(r => r.getString(0) -> r.getLong(1))
+    val bigrams =
+      if (withBigrams) model.bigrams.collect().map(_.getString(0)) else Array.empty[String]
+    model.terms.sparkSession.sparkContext.broadcast(LmTables(terms, bigrams))
+  }
+
+  /** `lm_score` from a probe struct: mean add-one token probability,
+   *  `(sum_c + n) / (n · (N + V))`, 0 on an empty (or null) document. */
+  private def scoreOf(p: Column, model: Model): Column = {
+    val n = p.getField("n")
+    when(n === 0, lit(0.0)).otherwise(
+      (p.getField("sum_c") + n).cast("double") /
+        (n * lit(model.totalTokens + model.vocabSize)).cast("double"))
   }
 
   /**
    * Score every document under `model`, appending `lm_score`,
-   * `lm_oov_frac`, `lm_bigram_hit_frac`. Models at or under
-   * `maxBroadcastTerms` entries ride as plan-literal maps — zero
-   * exchanges on the corpus (plan-gated); larger models switch to the
-   * broadcast-join strategy of [[scoreJoin]].
+   * `lm_oov_frac`, `lm_bigram_hit_frac` — one [[LmProbe]] pass per row
+   * against the broadcast model, zero exchanges on the corpus for every
+   * model size (plan-gated). Null text scores 0.0 on all three, the same
+   * as a document with no tokens.
    */
   def score(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      model: Model,
-      maxBroadcastTerms: Int = 100000): DataFrame = {
-    // per-row token folds below are heavy: fan a starved scan out first
+      model: Model): DataFrame = {
+    // the per-row probe below is heavy: fan a starved scan out first
     // (guide §2.5; operator-local, round-19 q157 evidence)
     val dfw = Fanout.widen(df, Seq(col(idCol)))
-    val nTerms = model.terms.count()
-    val nBigrams = model.bigrams.count()
-    if (nTerms <= maxBroadcastTerms && nBigrams <= maxBroadcastTerms) {
-      val termMap = typedLit(
-        model.terms.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-      val bgMap = typedLit(
-        model.bigrams.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-      val t = toks(col(textCol))
-      val n = size(t).cast("long")
-      val sumC = aggregate(t, lit(0L),
-        (acc, w) => acc + coalesce(element_at(termMap, w), lit(0L)))
-      val oov = aggregate(t, lit(0L),
-        (acc, w) => acc + when(element_at(termMap, w).isNull, 1L).otherwise(0L))
-      val hits = when(n >= 2, aggregate(sequence(lit(1), (n - 1).cast("int")),
-          lit(0L),
-          (acc, i) => acc + when(element_at(bgMap,
-            concat_ws(" ", element_at(t, i), element_at(t, i + 1))).isNotNull,
-            1L).otherwise(0L)))
-        .otherwise(lit(0L))
-      dfw.withColumn("lm_score",
-          when(n === 0, lit(0.0)).otherwise(
-            (sumC + n).cast("double") /
-              (n * lit(model.totalTokens + model.vocabSize)).cast("double")))
-        .withColumn("lm_oov_frac",
-          when(n === 0, lit(0.0)).otherwise(oov.cast("double") / n.cast("double")))
-        .withColumn("lm_bigram_hit_frac",
-          when(n < 2, lit(0.0)).otherwise(
-            hits.cast("double") / (n - 1).cast("double")))
-    } else scoreJoin(dfw, idCol, textCol, model)
-  }
-
-  /** Join-strategy scoring for models past the plan-literal threshold:
-   *  exploded (id, term)/(id, bigram) rows broadcast-join the model
-   *  tables, integer partial sums regroup per document, and the corpus
-   *  rejoins by id — text never shuffles, every exchanged row is
-   *  (id, long). Identical output to the literal path (spec-gated). */
-  def scoreJoin(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      model: Model): DataFrame = {
-    val t = toks(col(textCol))
-    val termRows = df.select(col(idCol).as("__graft_lm_id"),
-        explode(t).as("term"))
-      .join(broadcast(model.terms), Seq("term"), "left")
-      .groupBy(col("__graft_lm_id"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("cnt")), lit(0L)).as("sumC"),
-        count(when(col("cnt").isNull, 1)).as("oov"))
-    val bgRows = df.select(col(idCol).as("__graft_lm_id"),
-        explode(when(size(t) >= 2,
-          transform(sequence(lit(1), size(t) - 1),
-            i => concat_ws(" ", element_at(t, i), element_at(t, i + 1))))
-          .otherwise(array().cast("array<string>"))).as("bg"))
-      .join(broadcast(model.bigrams), Seq("bg"), "left_semi")
-      .groupBy(col("__graft_lm_id"))
-      .agg(count(lit(1)).as("hits"))
-    val stats = termRows.join(bgRows, Seq("__graft_lm_id"), "left")
-    df.join(stats, df(idCol) === stats("__graft_lm_id"), "left")
-      .withColumn("lm_score",
-        when(col("n").isNull || col("n") === 0, lit(0.0)).otherwise(
-          (col("sumC") + col("n")).cast("double") /
-            (col("n") * lit(model.totalTokens + model.vocabSize)).cast("double")))
+    val p = col("__graft_lm")
+    val n = p.getField("n")
+    dfw.withColumn("__graft_lm", LmProbe(col(textCol), probeTables(model, withBigrams = true)))
+      .withColumn("lm_score", scoreOf(p, model))
       .withColumn("lm_oov_frac",
-        when(col("n").isNull || col("n") === 0, lit(0.0))
-          .otherwise(col("oov").cast("double") / col("n").cast("double")))
+        when(n === 0, lit(0.0)).otherwise(p.getField("oov").cast("double") / n.cast("double")))
       .withColumn("lm_bigram_hit_frac",
-        when(col("n").isNull || col("n") < 2, lit(0.0)).otherwise(
-          coalesce(col("hits"), lit(0L)).cast("double") /
-            (col("n") - 1).cast("double")))
-      .drop("__graft_lm_id", "n", "sumC", "oov", "hits")
-  }
-
-  /** Mean add-one token probability under a term map — the `lm_score`
-   *  statistic alone, shared by the DSIR weighting below (no bigram work). */
-  private def unigramScoreCol(
-      t: Column, termMap: Column, totalTokens: Long, vocabSize: Long): Column = {
-    val n = size(t).cast("long")
-    val sumC = aggregate(t, lit(0L),
-      (acc, w) => acc + coalesce(element_at(termMap, w), lit(0L)))
-    when(n === 0, lit(0.0)).otherwise(
-      (sumC + n).cast("double") /
-        (n * lit(totalTokens + vocabSize)).cast("double"))
+        when(n < 2, lit(0.0)).otherwise(
+          p.getField("hits").cast("double") / (n - 1).cast("double")))
+      .drop("__graft_lm")
   }
 
   /**
@@ -205,11 +149,9 @@ object CountLm {
    * lm_score_target / lm_score_raw`, one IEEE division of two
    * already-exact scores, so any engine reproduces the doubles
    * bit-for-bit. (The noisy resampling variant is one Gumbel column away;
-   * left out so selection stays an exact-oracle ranking.) Both term maps
-   * ride as plan literals — zero exchanges on the candidate corpus
-   * (plan-gated); models past `maxBroadcastTerms` fall back to two
-   * [[scoreJoin]] passes whose integer partial sums are order-free, so
-   * the weights are identical (spec-gated).
+   * left out so selection stays an exact-oracle ranking.) Both term tables
+   * ride as broadcasts into two [[LmProbe]] passes — zero exchanges on the
+   * candidate corpus for every model size (plan-gated).
    */
   def importanceWeights(
       df: DataFrame,
@@ -217,27 +159,15 @@ object CountLm {
       textCol: String,
       target: Model,
       raw: Model,
-      maxBroadcastTerms: Int = 100000,
       outCol: String = "dsir_weight"): DataFrame = {
-    def ratio(st: Column, sr: Column): Column =
-      when(sr === 0.0, lit(0.0)).otherwise(st / sr)
-    val dfw = Fanout.widen(df, Seq(col(idCol)))
-    if (target.terms.count() <= maxBroadcastTerms &&
-        raw.terms.count() <= maxBroadcastTerms) {
-      def termMap(m: Model): Column = typedLit(
-        m.terms.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-      val t = toks(col(textCol))
-      dfw.withColumn(outCol, ratio(
-        unigramScoreCol(t, termMap(target), target.totalTokens, target.vocabSize),
-        unigramScoreCol(t, termMap(raw), raw.totalTokens, raw.vocabSize)))
-    } else {
-      val st = scoreJoin(dfw, idCol, textCol, target)
-        .withColumnRenamed("lm_score", "__graft_dsir_t")
-        .drop("lm_oov_frac", "lm_bigram_hit_frac")
-      scoreJoin(st, idCol, textCol, raw)
-        .withColumn(outCol, ratio(col("__graft_dsir_t"), col("lm_score")))
-        .drop("__graft_dsir_t", "lm_score", "lm_oov_frac", "lm_bigram_hit_frac")
-    }
+    def probe(m: Model): Column = LmProbe(col(textCol), probeTables(m, withBigrams = false))
+    val st = scoreOf(col("__graft_dsir_t"), target)
+    val sr = scoreOf(col("__graft_dsir_r"), raw)
+    Fanout.widen(df, Seq(col(idCol)))
+      .withColumn("__graft_dsir_t", probe(target))
+      .withColumn("__graft_dsir_r", probe(raw))
+      .withColumn(outCol, when(sr === 0.0, lit(0.0)).otherwise(st / sr))
+      .drop("__graft_dsir_t", "__graft_dsir_r")
   }
 
   /** DSIR selection: the `k` most target-like candidates by
@@ -249,10 +179,9 @@ object CountLm {
       textCol: String,
       target: Model,
       raw: Model,
-      k: Int,
-      maxBroadcastTerms: Int = 100000): DataFrame =
+      k: Int): DataFrame =
     Sampling.topKByOrder(
-      importanceWeights(df, idCol, textCol, target, raw, maxBroadcastTerms),
+      importanceWeights(df, idCol, textCol, target, raw),
       k, Seq(col("dsir_weight").desc, col(idCol).asc))
 
   /**
@@ -307,9 +236,9 @@ object CountLm {
    * order-independent, so the total is bit-reproducible from the counts
    * alone.
    *
-   * Physical shape mirrors [[score]]: models at or under
-   * `maxBroadcastTerms` ride as plan literals and the whole score is one
-   * per-row array fold — ZERO corpus exchanges; larger models take
+   * Physical shape: models at or under `maxBroadcastTerms` ride as plan
+   * literals and the whole score is one per-row array fold over the
+   * document's adjacent pairs — ZERO corpus exchanges; larger models take
    * [[scoreKnJoin]] (exploded narrow rows, broadcast joins, decimal
    * partial sums — text never shuffles). Paths are bit-identical
    * (spec-gated).
@@ -330,11 +259,10 @@ object CountLm {
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
       val rightMap = typedLit(
         kn.rights.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-      val t = toks(col(textCol))
-      val n = size(t).cast("long")
-      def termAt(i: Column): Column = {
-        val w1 = element_at(t, i)
-        val w2 = element_at(t, i + 1)
+      val n = size(toks(col(textCol))).cast("long")
+      def termAt(p: Column): Column = {
+        val w1 = p.getField("0")
+        val w2 = p.getField("1")
         val bg = concat_ws(" ", w1, w2)
         knTerm(element_at(bgMap, bg),
           element_at(ctxMap, w1).getField("_1"),
@@ -343,13 +271,21 @@ object CountLm {
           kn.bigramTypes, kn.rightTypes)
       }
       val total = when(n >= 2,
-          aggregate(sequence(lit(1), (n - 1).cast("int")),
+          aggregate(adjacentPairs(col(textCol)),
             lit(java.math.BigDecimal.ZERO).cast("decimal(22,7)"),
-            (acc, i) => (acc + termAt(i)).cast("decimal(22,7)")))
+            (acc, p) => (acc + termAt(p)).cast("decimal(22,7)")))
         .otherwise(lit(java.math.BigDecimal.ZERO).cast("decimal(22,7)"))
       dfw.withColumn("kn_logprob", total.cast("double"))
         .withColumn("kn_bigrams", greatest(n - 1, lit(0L)))
     } else scoreKnJoin(dfw, idCol, textCol, kn)
+  }
+
+  /** Adjacent token pairs of `text` as `array<struct<0: w1, 1: w2>>`,
+   *  zipped from two slices of ONE `split` — built once per row, never
+   *  re-split inside a lambda. Empty for fewer than two tokens. */
+  private def adjacentPairs(text: Column): Column = {
+    val t = toks(text)
+    arrays_zip(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1))
   }
 
   /** The per-bigram DECIMAL(22,7) ln-probability term, shared verbatim by
@@ -375,13 +311,10 @@ object CountLm {
       idCol: String,
       textCol: String,
       kn: KnModel): DataFrame = {
-    val t = toks(col(textCol))
     val pairs = df.select(col(idCol).as("__graft_kn_id"),
-      explode(when(size(t) >= 2,
-        transform(sequence(lit(1), size(t) - 1),
-          i => struct(element_at(t, i).as("w1"), element_at(t, i + 1).as("w2"))))
-        .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("p"))
-      .select(col("__graft_kn_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
+        explode(adjacentPairs(col(textCol))).as("p"))
+      .select(col("__graft_kn_id"), col("p").getField("0").as("w1"),
+        col("p").getField("1").as("w2"))
     val scored = pairs
       .join(broadcast(kn.bigrams
         .select(split(col("bg"), " ").as("w"), col("cnt"))

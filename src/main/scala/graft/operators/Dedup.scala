@@ -781,9 +781,10 @@ object Dedup {
    *  2. at or below `maxBroadcastLines` (the common case — boilerplate is
    *     bounded by totalLines/minDocs and small by definition) it
    *     collapses to ONE broadcast row holding the hash array, and the
-   *     rewrite is a pure per-row `filter`/`array_join` expression over
-   *     that broadcast membership — zero exchanges on the corpus, order
-   *     preserved for free because documents are never exploded;
+   *     rewrite is one per-row [[graft.functions.DropHashedLines]] pass
+   *     that probes a hash set built once per task from that broadcast
+   *     row — zero exchanges on the corpus, order preserved for free
+   *     because documents are never exploded;
    *  3. ABOVE the threshold (adversarial data / very low `minDocs`, where
    *     the single-row array would be a multi-GB driver+executor bomb)
    *     the guard switches to a distributed membership join: each
@@ -820,9 +821,7 @@ object Dedup {
       val frequent = freq.agg(collect_list(col("lh")).as("__graft_freq_lines"))
       df.crossJoin(broadcast(frequent))
         .withColumn(s"${textCol}_clean",
-          array_join(
-            filter(lineArr, l => !array_contains(col("__graft_freq_lines"), xxhash64(l))),
-            sep))
+          graft.functions.DropHashedLines(col(textCol), col("__graft_freq_lines"), sep))
         .drop("__graft_freq_lines")
     } else {
       val hits = df

@@ -398,11 +398,7 @@ object TextAnalysis {
       n: Int = 3,
       outCol: String = "rep_ratio"): DataFrame = {
     require(n >= 2, "n-gram size must be >= 2")
-    val toks = split(col(textCol), " ")
-    val grams = when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
+    val grams = wordGrams(col(textCol), n)
     df.withColumn(outCol,
       when(size(grams) > 0,
         lit(1.0) - size(array_distinct(grams)).cast("double") / size(grams).cast("double"))
@@ -411,15 +407,11 @@ object TextAnalysis {
 
   // ---------- Gopher repetition battery (§A1.1 repetition filters) -------
 
-  /** Word n-grams of `text` (space-tokenized, same convention as
-   *  [[withRepetition]]); empty array when the document is shorter than n. */
-  private def wordGrams(text: Column, n: Int): Column = {
-    val toks = split(text, " ")
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
+  /** Word n-grams of `text` (tokens of `split(text, " ")`), one native
+   *  pass ([[graft.functions.WordNgrams]]); empty array when the document
+   *  is shorter than n or null. */
+  private def wordGrams(text: Column, n: Int): Column =
+    coalesce(graft.functions.WordNgrams(text, n), array().cast("array<string>"))
 
   /** Fraction of elements that duplicate an earlier one:
    *  `(total - distinct) / total`, 0 on empty. One division, so the DuckDB

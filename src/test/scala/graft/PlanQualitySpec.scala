@@ -784,16 +784,23 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("DSIR importance weighting: plan-literal models, zero exchanges on candidates") {
-    import spark.implicits._
-    val corpus = (0L until 50L).map(i => (i, s"w${i % 7} w${i % 5} common"))
-      .toDF("doc_id", "text")
+    // a range source, not a local Seq: a LocalRelation would be folded into
+    // one LocalTableScan and leave nothing to gate
+    val corpus = spark.range(50L).select(col("id").as("doc_id"),
+      concat(lit("w"), (col("id") % 7).cast("string"), lit(" w"),
+        (col("id") % 5).cast("string"), lit(" common")).as("text"))
     val target = graft.operators.CountLm.train(corpus.filter(col("doc_id") < 10L), "text")
     val raw = graft.operators.CountLm.train(corpus, "text")
-    val plan = graft.operators.CountLm.importanceWeights(
-        corpus, "doc_id", "text", target, raw)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"literal-map DSIR weighting must score at scan speed:\n$plan")
+    // (name kept from the plan-literal era: the models now ride as one
+    // broadcast each into a per-row probe, for every model size)
+    for (df <- Seq(
+        graft.operators.CountLm.importanceWeights(corpus, "doc_id", "text", target, raw),
+        graft.operators.CountLm.score(corpus, "doc_id", "text", raw))) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"),
+        s"LM scoring must run at scan speed:\n$plan")
+      assert(plan.contains("lm_probe"), s"expected the native probe:\n$plan")
+    }
   }
 
   test("CountLm vocab cap: TakeOrderedAndProject, never a single-partition window") {

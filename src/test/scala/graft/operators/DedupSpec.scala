@@ -308,6 +308,40 @@ class DedupSpec extends SparkSpec {
       s"guard branch must carry per-document hit arrays:\n$plan")
   }
 
+  test("dropFrequentLines: a 200k-hash frequent set gives the array_contains rewrite's output") {
+    import spark.implicits._
+    val boiler = (0 until 200000).map(i => s"boiler $i")
+    val rnd = new scala.util.Random(5L)
+    val probes: Seq[(Long, String)] = (1L to 40L).map { i =>
+      val lines = Seq.fill(1 + rnd.nextInt(12))(rnd.nextInt(4) match {
+        case 0 => boiler(rnd.nextInt(boiler.size))
+        case 1 => s"unique $i ${rnd.nextInt()}"
+        case 2 => ""
+        case _ => "é boiler"
+      })
+      (i, lines.mkString("\n") + (if (i % 5 == 0) "\n" else ""))
+    } :+ ((41L, null: String))
+    // two carrier documents make all 200k boiler lines frequent
+    val carrier = boiler.mkString("\n")
+    val docs = (Seq((100L, carrier), (101L, carrier)) ++ probes).toDF("doc_id", "text")
+    val out = Dedup.dropFrequentLines(docs, "doc_id", "text", minDocs = 2L)
+      .select("doc_id", "text_clean").as[(Long, Option[String])].collect().toMap
+    // reference: the frequent-hash list as one broadcast row and an
+    // array_contains scan per line, over the probe documents only
+    val lineArr = split($"text", java.util.regex.Pattern.quote("\n"))
+    val frequent = docs
+      .select(explode(array_distinct(transform(lineArr, l => xxhash64(l)))).as("lh"))
+      .groupBy($"lh").count().filter($"count" >= 2L)
+      .agg(collect_list($"lh").as("freq"))
+    assert(frequent.select(size($"freq")).as[Int].head() >= 200000)
+    val want = probes.toDF("doc_id", "text").crossJoin(broadcast(frequent))
+      .select($"doc_id", array_join(
+        filter(lineArr, l => !array_contains($"freq", xxhash64(l))), "\n"))
+      .as[(Long, Option[String])].collect().toMap
+    assert(out -- Seq(100L, 101L) === want)
+    assert(out(100L) === Some("") && out(101L) === Some(""))
+  }
+
   test("dropExactAgainstCorpus drops only content already in the corpus") {
     import spark.implicits._
     val corpus = Seq(
