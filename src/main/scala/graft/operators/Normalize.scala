@@ -31,9 +31,12 @@ import org.apache.spark.sql.functions._
  *  - LWW is one hash-shuffle on the primary key — the theoretical minimum
  *    for a global dedup. At 1000 executors this is a standard shuffle whose
  *    skew (hot partition keys) AQE's skew-join/skew-agg handling splits.
- *  - Deletes use a LEFT ANTI join; delete sets are typically ≪ base data,
- *    so Spark auto-broadcasts them below the broadcast threshold — zero
- *    shuffle of the 100 TB side.
+ *  - Deletes are a conditional LEFT ANTI join on the raw tombstone rows
+ *    (key equality plus `row.wt <= del.wt`), with no aggregate over the
+ *    tombstones: partition and range tombstones share one join on the
+ *    partition key, row tombstones keep an equi-join on the full row key.
+ *    Delete sets are typically ≪ base data, so Spark auto-broadcasts them
+ *    below the broadcast threshold — zero shuffle of the 100 TB side.
  *  - TTL is a plain filter: pushed to the parquet scan when the expiry
  *    column is a stored column (row-group min/max skipping applies).
  */

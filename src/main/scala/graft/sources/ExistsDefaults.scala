@@ -73,67 +73,8 @@ object ExistsDefaults {
    *
    *  `homogeneous = true` asserts every file shares one schema (a single
    *  commit's files, a schema-keyed OPTIMIZE bin): inference then reads
-   *  ONE footer on the driver instead of running the distributed
-   *  mergeSchema job — only genuinely mixed-generation sets (the feed's
-   *  cross-commit delete carriers, a CoW DML's scanned set) pay it. */
-  /** Session-scoped file→schema cache: data files are immutable once
-   *  written (generational names), so a footer's schema pins for the
-   *  JVM's lifetime. A long change-feed replay over a defaulted table
-   *  then reads each footer ONCE across all events, instead of running
-   *  one distributed mergeSchema inference job per event. */
-  private val footerSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  private[graft] def invalidateSchemaCache(): Unit = footerSchemaCache.clear()
-
-  /** Merged Spark schema of a file set from driver-side footer reads
-   *  (cached per path, bounded-parallel for misses) — ZERO Spark jobs.
-   *  Files sharing a schema merge for free (set dedup); distinct schemas
-   *  merge field-by-field. None when the shapes genuinely conflict
-   *  (same name, different type) — the caller then falls back to Spark's
-   *  own distributed mergeSchema semantics and its error messages. */
-  private def mergedFooterSchema(
-      spark: SparkSession, files: Seq[String]): Option[StructType] = {
-    val conf = spark.sessionState.newHadoopConf()
-    // capture the session's SQLConf HERE (driver thread) — pool threads
-    // may not inherit the active session, and the converter's flags
-    // (binaryAsString, int96, NTZ inference, …) come from it. The cache
-    // key carries the same flags so two sessions with different parquet
-    // settings never share a converted schema.
-    val sqlConf = spark.sessionState.conf
-    val confKey = org.apache.spark.sql.graftshim.GraftShims.footerSchemaConfKey(sqlConf)
-    def cacheKey(p: String): String = p + "|" + confKey
-    val misses = files.filterNot(p => footerSchemaCache.containsKey(cacheKey(p))).distinct
-    try graft.write.DriverPool.map(misses) { p =>
-      p -> org.apache.spark.sql.graftshim.GraftShims.footerSchema(conf, sqlConf, new Path(p))
-    }.foreach { case (p, s) => footerSchemaCache.put(cacheKey(p), s) }
-    catch {
-      // one transient FS hiccup or unreadable footer must not fail the
-      // read with a driver exception: fall back to the distributed
-      // mergeSchema job (Spark-side task retries included)
-      case scala.util.control.NonFatal(_) => return None
-    }
-    // first-seen field order, new fields appended — Spark's merge order.
-    // Shared names must carry the IDENTICAL dataType (incl. nested
-    // nullability) or we fall back; top-level nullability then relaxes to
-    // nullable like Spark's own inference (a column REQUIRED in one
-    // generation can be absent/null in another).
-    // The cache is WRITE-THROUGH only: a concurrent invalidateSchemaCache()
-    // between the miss-fill above and this read would return null — take
-    // the safe distributed-mergeSchema fallback instead of a driver NPE.
-    val fetched = files.map(p => footerSchemaCache.get(cacheKey(p)))
-    if (fetched.contains(null)) return None
-    val distinct = fetched.distinct
-    distinct.tail.foldLeft(Option(distinct.head)) {
-      case (None, _) => None
-      case (Some(acc), s) =>
-        val known = acc.fieldNames.toSet
-        if (s.fields.exists(f => known.contains(f.name) &&
-            acc(f.name).dataType != f.dataType)) None
-        else Some(StructType(acc.fields ++ s.fields.filterNot(f => known.contains(f.name))))
-    }.map(st => StructType(st.fields.map(_.copy(nullable = true))))
-  }
-
+   *  ONE file's schema; other sets merge every footer through
+   *  [[FooterSchema]]. */
   def read(
       spark: SparkSession,
       defaults: Map[String, (String, org.apache.spark.sql.types.DataType)],
@@ -143,8 +84,7 @@ object ExistsDefaults {
     else {
       val merged =
         if (homogeneous) spark.read.parquet(files.head).schema
-        else mergedFooterSchema(spark, files).getOrElse(
-          spark.read.option("mergeSchema", "true").parquet(files: _*).schema)
+        else FooterSchema.of(spark, files)
       val annotated = StructType(merged.fields.map { f =>
         defaults.get(f.name) match {
           case Some((sql, _)) if !f.metadata.contains(Key) =>

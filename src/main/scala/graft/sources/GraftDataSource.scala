@@ -112,27 +112,39 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     // graft_p_X whose data column X actually exists (the twin invariant) —
     // a user column that merely happens to carry the prefix must stay
     // visible.
+    val prefix = TokenSortedWriter.partCol("")
     def strip(full: StructType): StructType = {
       val names = full.fields.map(_.name).toSet
-      val prefix = TokenSortedWriter.partCol("")
       StructType(full.fields.filterNot(f => f.name == TokenSortedWriter.TokenCol
         || (f.name.startsWith(prefix) && names.contains(f.name.substring(prefix.length)))))
     }
-    try {
-      // mergeSchema: appends may evolve the schema (e.g. a later write adds
-      // the writetime/TTL feature columns) — the union schema is the table
-      strip(spark.read.option("mergeSchema", "true").parquet(pathOf(options)).schema)
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        // a compacted-in-place table keeps its data under `gen-<uuid>/`
-        // subdirs, which plain parquet partition discovery rejects (non
-        // key=value dir names) — recursiveFileLookup sees the files and
-        // skips discovery; dir-partitioned (key=value) tables never reach
-        // this fallback, so graft_p twin stripping above still governs them
-        try strip(spark.read.option("mergeSchema", "true")
-          .option("recursiveFileLookup", "true").parquet(pathOf(options)).schema)
+    // the union of the data files' footers is the table (appends may add
+    // columns): files from the scan's signature-validated listing, which
+    // also walks a compacted table's `gen-<uuid>/` subdirs — no Spark job
+    val dir = pathOf(options)
+    val files =
+      try TokenPruner.listFiles(spark, dir).map(_.path).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (files.isEmpty) return new StructType()
+    val root = new Path(dir)
+    val rootUri = root.getFileSystem(spark.sessionState.newHadoopConf())
+      .makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+    val dirKeys = files.flatMap(f =>
+      new Path(f).getParent.toUri.getPath.stripPrefix(rootUri).split('/')
+        .filter(_.contains('=')).map(_.takeWhile(_ != '='))).toSet
+    FooterSchema.merged(spark, files)
+      .filter(s => dirKeys.forall(k => k.startsWith(prefix) &&
+        s.fieldNames.contains(k.substring(prefix.length))))
+      .map(strip)
+      .getOrElse {
+        // Spark's own inference for what the footers cannot settle: a type
+        // conflict between generations, or a key=value directory column
+        // with no data-column twin (only partition discovery surfaces it)
+        val reader = spark.read.option("mergeSchema", "true")
+          .option("recursiveFileLookup", dirKeys.isEmpty.toString)
+        try strip(reader.parquet(dir).schema)
         catch { case _: org.apache.spark.sql.AnalysisException => new StructType() }
-    }
+      }
   }
 
   override def getTable(

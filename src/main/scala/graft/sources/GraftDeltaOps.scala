@@ -216,10 +216,10 @@ class GraftDeltaWrite(
       // LWW feature-column guard (same contract as copy-on-write): the
       // delete leg alone would be sound, but UPDATE/MERGE re-inserts
       // cannot reproduce writetime/TTL — refuse on carriers or staged
-      // schema mismatch potential, mergeSchema so no generation hides it
+      // schema mismatch potential, every footer merged so no generation
+      // hides it
       if (fresh.nonEmpty) {
-        val affectedSchema = spark.read.option("mergeSchema", "true")
-          .parquet(fresh.keys.toIndexedSeq: _*).schema
+        val affectedSchema = FooterSchema.of(spark, fresh.keys.toIndexedSeq)
         val engineFeatures =
           Seq(TokenSortedWriter.WritetimeCol, TokenSortedWriter.ExpiresCol)
             .filter(affectedSchema.fieldNames.contains)

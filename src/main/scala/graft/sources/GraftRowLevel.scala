@@ -478,14 +478,13 @@ class GraftReplaceDataWrite(
       // feature columns (writetime/TTL) from the affected files, corrupting
       // LWW ordering for every surviving version — refuse loudly; LWW
       // tables update by appending a newer-writetime version instead.
-      // mergeSchema: generations can differ in feature columns (the exact
-      // case optimizeSmallFiles documents) — a single-footer inference would
-      // let a DML whose sampled file lacks writetime/ttl bypass this guard
-      // and silently drop those columns from the other scanned files
+      // every footer merged: generations can differ in feature columns (the
+      // exact case optimizeSmallFiles documents) — a single-footer inference
+      // would let a DML whose sampled file lacks writetime/ttl bypass this
+      // guard and silently drop those columns from the other scanned files
       val affectedSchema =
         if (scanned.isEmpty) StructType(Nil)
-        else spark.read.option("mergeSchema", "true")
-          .parquet(scanned.toIndexedSeq: _*).schema
+        else FooterSchema.of(spark, scanned.toIndexedSeq)
       val engineFeatures = Seq(TokenSortedWriter.WritetimeCol, TokenSortedWriter.ExpiresCol)
         .filter(affectedSchema.fieldNames.contains)
       if (engineFeatures.nonEmpty)

@@ -585,15 +585,22 @@ object TokenSortedWriter {
    *  1. last-write-wins collapse of multi-version rows by `_graft_writetime`
    *     (the merge-compaction of `CompactionStreamScanner`, S5) — present
    *     whenever appends overlapped;
-   *  2. tombstone purge: left-anti/time-aware join against the
-   *     `_graft_deletes/` key set (§2.8; delete wins only over rows it is
-   *     newer than, like Cassandra deletion timestamps);
+   *  2. tombstone purge: conditional left-anti joins against the raw
+   *     `_graft_deletes/` rows — one keyed on the partition key for
+   *     partition and range tombstones, one on the full row key for row
+   *     tombstones — each with the time rule `row.wt <= del.wt` (§2.8;
+   *     delete wins only over rows it is at-or-newer than, like Cassandra
+   *     deletion timestamps; the reference purges inline in its merge,
+   *     `CompactionStreamScanner`). No aggregate over the tombstones;
    *  3. TTL expiry against a FIXED `nowMicros` (reproducible scans — the
    *     reference pins `nowInSec` per scan, `CompactionStreamScanner:120`).
    *
-   * Each step is a plain Catalyst operator (window / join / filter), so
-   * pushdown BELOW and AQE ABOVE both still apply: at 100 TB the LWW is one
-   * pk-shuffle, the delete set broadcasts, and TTL is a pushable filter.
+   * Building the DataFrame runs no Spark job: the table and tombstone
+   * schemas come from cached parquet footers on the driver. Each step is a
+   * plain Catalyst operator (window / join / filter), so pushdown BELOW and
+   * AQE ABOVE both still apply: at 100 TB the LWW is one pk-shuffle, the
+   * tombstone side broadcasts while it is small, and TTL is a pushable
+   * filter.
    */
   def readNormalized(
       spark: SparkSession,
@@ -640,39 +647,40 @@ object TokenSortedWriter {
         df, schema.primaryKey, WritetimeCol +: tiebreaks)
     }
 
-    // 2. tombstones — partition-level (pk only) and row-level (pk + ck)
-    // coexist in one _graft_deletes dir; a merged read distinguishes them by
-    // null ck columns (ck is part of a primary key, never legitimately null)
+    // 2. tombstones — partition-level (pk only), row-level (pk + ck) and
+    // range (pk + ck bounds) coexist in one _graft_deletes dir; a merged
+    // read distinguishes them by which columns are null (ck is part of a
+    // primary key, never legitimately null)
     tombstones(spark, path).foreach { deletesAll =>
       // time-scoped tombstones: a PINNED state reconstruction (diffRows'
       // from-side) must not let deletes that landed AFTER the pin
       // retro-erase rows the downstream consumer synced before the delete
       // existed. Unstamped tombstones carry no time and stay in effect.
-      val deletes0 = tombstonesAsOfMicros match {
+      val deletes = tombstonesAsOfMicros match {
         case Some(h) if deletesAll.columns.contains(WritetimeCol) =>
           deletesAll.filter(col(WritetimeCol).isNull || col(WritetimeCol) <= h)
         case _ => deletesAll
       }
       val pk = schema.partitionKeys
-      // range tombstones are marked by a non-null ck bound; split them off
-      // before the point-tombstone dispatch (mergeSchema gives every row the
-      // union schema, so the other kinds see null bounds)
-      val hasRange = deletes0.columns.contains(CkMinCol) || deletes0.columns.contains(CkMaxCol)
+      val hasRange = deletes.columns.contains(CkMinCol) || deletes.columns.contains(CkMaxCol)
       val isRange =
         if (hasRange) col(CkMinCol).isNotNull || col(CkMaxCol).isNotNull else lit(false)
-      val deletes = if (hasRange) deletes0.filter(!isRange) else deletes0
       val ckInDels = schema.clusteringKeys.filter(deletes.columns.contains)
-      if (ckInDels.isEmpty) {
-        df = applyTombstones(df, deletes, pk)
-      } else {
-        val isRowLevel = ckInDels.map(c => qcol(c).isNotNull).reduce(_ && _)
-        df = applyTombstones(df, deletes.filter(!isRowLevel), pk)
-        df = applyTombstones(df, deletes.filter(isRowLevel), pk ++ ckInDels)
-      }
-      if (hasRange) {
-        df = applyRangeTombstones(df, deletes0.filter(isRange), pk,
-          schema.clusteringKeys.head)
-      }
+      val isRowLevel =
+        if (ckInDels.isEmpty) lit(false)
+        else ckInDels.map(c => qcol(c).isNotNull).reduce(_ && _) && !isRange
+      // partition and range tombstones key on the partition key; a
+      // partition tombstone is a range with both bounds null
+      val (bounds, inRange) =
+        if (!hasRange) (Nil, lit(true))
+        else {
+          val ck = qcol(schema.clusteringKeys.head)
+          val (lo, hi) = (col(s"__del_$CkMinCol"), col(s"__del_$CkMaxCol"))
+          (Seq(CkMinCol, CkMaxCol), (lo.isNull || ck >= lo) && (hi.isNull || ck <= hi))
+        }
+      df = antiJoinTombstones(df, deletes.filter(!isRowLevel), pk, bounds, inRange)
+      if (ckInDels.nonEmpty)
+        df = antiJoinTombstones(df, deletes.filter(isRowLevel), pk ++ ckInDels, Nil, lit(true))
     }
 
     // 3. TTL at pinned now
@@ -686,18 +694,18 @@ object TokenSortedWriter {
   }
 
   /** The table's `_graft_deletes` tombstones, or None when the dir holds no
-   *  data file (Spark cannot infer a schema from an empty dir). The one
-   *  reader of the dir: `mergeSchema` because partition, row and range
-   *  tombstones append with different columns; the listed files are read
-   *  by name, since Spark warns on every read of a `_`-prefixed path. */
+   *  data file. The one reader of the dir: partition, row and range
+   *  tombstones append with different columns, so the schema is the merged
+   *  footer schema (no Spark job); the listed files are read by name, since
+   *  Spark warns on every read of a `_`-prefixed path. */
   private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
     val delPath = new Path(dir, DeletesDir)
     val fs = delPath.getFileSystem(spark.sessionState.newHadoopConf())
     val files =
-      if (!fs.exists(delPath)) Array.empty[String]
-      else graft.sources.TokenPruner.listDataFiles(fs, delPath).map(_.getPath.toString)
+      try graft.sources.TokenPruner.listDataFiles(fs, delPath).map(_.getPath.toString).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
     if (files.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true").parquet(files.toIndexedSeq: _*))
+    else Some(spark.read.schema(graft.sources.FooterSchema.of(spark, files)).parquet(files: _*))
   }
 
   /**
@@ -859,7 +867,8 @@ object TokenSortedWriter {
             val parts = schema.partitionKeys
             val touched =
               if (files.isEmpty) None
-              else Some(spark.read.parquet(files: _*).select(parts.map(qcol): _*))
+              else Some(spark.read.schema(graft.sources.FooterSchema.of(spark, files))
+                .parquet(files: _*).select(parts.map(qcol): _*))
             // a horizon resurrects tombstoned rows on the from side ONLY —
             // every tombstoned key is then a potential 'delete' candidate
             // (without a horizon both pins apply the same tombstones, so
@@ -1384,45 +1393,26 @@ object TokenSortedWriter {
     replaced.length.toLong
   }
 
-  /** Range-tombstone purge: drop rows whose pk matches and whose first
-   *  clustering key falls inside the tombstone's [min, max] (null bound =
-   *  unbounded), subject to the same time rule as point tombstones. The
-   *  tombstone side is tiny (one row per deleted range) and broadcasts;
-   *  the equi part of the anti-join hashes on pk, the bounds run as the
-   *  residual condition — no cross product, corpus moves once. */
-  private def applyRangeTombstones(
-      df: DataFrame, dels: DataFrame, pk: Seq[String], ck: String): DataFrame = {
-    val hasWt = dels.columns.contains(WritetimeCol) && df.columns.contains(WritetimeCol)
-    val renamed = dels.select(
-      (pk.map(c => qcol(c).as(s"__rd_$c")) ++ Seq(
-        col(CkMinCol).as("__rd_min"), col(CkMaxCol).as("__rd_max")) ++
-        (if (hasWt) Seq(coalesce(col(WritetimeCol), lit(Long.MaxValue)).as("__rd_wt"))
-         else Nil)): _*)
-    val keyEq = pk.map(c => qcol(c) === col(s"__rd_$c")).reduce(_ && _)
-    val inRange =
-      (col("__rd_min").isNull || qcol(ck) >= col("__rd_min")) &&
-        (col("__rd_max").isNull || qcol(ck) <= col("__rd_max"))
-    // a row with NULL writetime (unstamped generation) must die like it does
-    // under point tombstones — coalesce, or the NULL comparison would make
-    // it immune to stamped range deletes
+  /** Time-aware tombstone purge: one anti-join against the raw tombstone
+   *  rows, equi on `keys`, with `extra` tombstone columns visible to `cond`
+   *  as `__del_<name>`. A tombstone wins over rows it is at-or-newer than
+   *  (Cassandra deletion timestamps); an UNSTAMPED tombstone always wins,
+   *  and so does any tombstone over a row of an unstamped generation;
+   *  without a writetime on the data the rule drops out. Spark picks
+   *  broadcast or sort-merge for the join from the tombstone size. */
+  private def antiJoinTombstones(
+      df: DataFrame, dels: DataFrame, keys: Seq[String], extra: Seq[String],
+      cond: Column): DataFrame = {
+    val hasWt = df.columns.contains(WritetimeCol)
+    val renamed = dels.select((keys ++ extra).map(c => qcol(c).as(s"__del_$c")) ++
+      (if (hasWt) Seq(
+        (if (dels.columns.contains(WritetimeCol)) coalesce(col(WritetimeCol), lit(Long.MaxValue))
+         else lit(Long.MaxValue)).as("__graft_del_wt"))
+       else Nil): _*)
+    val keyEq = keys.map(c => qcol(c) === col(s"__del_$c")).reduce(_ && _)
     val timeRule =
-      if (hasWt) coalesce(col(WritetimeCol), lit(Long.MinValue)) <= col("__rd_wt")
+      if (hasWt) coalesce(col(WritetimeCol), lit(Long.MinValue)) <= col("__graft_del_wt")
       else lit(true)
-    df.join(broadcast(renamed), keyEq && inRange && timeRule, "left_anti")
+    df.join(renamed, keyEq && cond && timeRule, "left_anti")
   }
-
-  /** Time-aware tombstone purge on `keys`: a tombstone wins over rows it is
-   *  at-or-newer than (Cassandra deletion-timestamp semantics); an UNSTAMPED
-   *  tombstone (null/absent writetime) always wins. Falls back to a plain
-   *  anti-join when the data itself carries no writetime. */
-  private def applyTombstones(df: DataFrame, dels: DataFrame, keys: Seq[String]): DataFrame =
-    if (dels.columns.contains(WritetimeCol) && df.columns.contains(WritetimeCol)) {
-      val delAgg = dels.groupBy(keys.map(qcol): _*)
-        .agg(max(coalesce(col(WritetimeCol), lit(Long.MaxValue))).as("__graft_del_wt"))
-      df.join(delAgg, keys, "left")
-        .filter(col("__graft_del_wt").isNull || col(WritetimeCol) > col("__graft_del_wt"))
-        .drop("__graft_del_wt")
-    } else {
-      df.join(dels.select(keys.map(qcol): _*).distinct(), keys, "left_anti")
-    }
 }

@@ -50,6 +50,12 @@ object GraftShims {
     finally reader.close()
   }
 
+  /** Every field, element and value nullable at every depth — what Spark's
+   *  file-source schema inference returns (`StructType.asNullable` is
+   *  `private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** The SQLConf flags [[footerSchema]]'s conversion depends on, as a
    *  cache-key fragment — sessions differing in any of them must not
    *  share converted schemas. */

@@ -309,17 +309,21 @@ class CountLmSpec extends SparkSpec {
   }
 
   test("scoreKnJoin is bit-identical to the literal path; literal path zero-exchange") {
-    val c = (0L until 60L).map(i =>
-      (i, s"w${i % 7} w${i % 5} w${i % 3} common end${i % 2}"))
-      .toDF("doc_id", "text")
+    // a range source, not a local Seq: a LocalRelation would be folded into
+    // one LocalTableScan and leave nothing to gate
+    def mod(m: Int) = (col("id") % m).cast("string")
+    val c = spark.range(60L).select(col("id").as("doc_id"),
+      concat(lit("w"), mod(7), lit(" w"), mod(5), lit(" w"), mod(3),
+        lit(" common end"), mod(2)).as("text"))
     val kn = CountLm.deriveKn(CountLm.train(c.filter($"doc_id" < 20L), "text"))
     def collectOf(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id", $"kn_logprob", $"kn_bigrams")
         .as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
-    val lit = CountLm.scoreKn(c, "doc_id", "text", kn)
+    val literal = CountLm.scoreKn(c, "doc_id", "text", kn)
     val join = CountLm.scoreKnJoin(c, "doc_id", "text", kn)
-    assert(collectOf(lit) == collectOf(join))
-    val plan = lit.queryExecution.executedPlan.toString
+    assert(collectOf(literal) == collectOf(join))
+    val plan = literal.queryExecution.executedPlan.toString
+    assert(plan.contains("Range"), s"expected the range source in the plan:\n$plan")
     assert(!plan.contains("Exchange"),
       s"plan-literal KN must score at scan speed:\n$plan")
   }

@@ -154,4 +154,23 @@ class MergeOnReadSpec extends SparkSpec {
     val dir = s"$baseDir/db/nolog"
     assert(Snapshots.latestVersion(spark, dir).isEmpty, "still log-less after CoW DML")
   }
+
+  test("merge-on-read DML refuses when only one touched generation carries writetime") {
+    val dir = createMor("wtmix", rows = 60, parts = 3)
+    graft.write.TokenSortedWriter.write(
+      spark.range(1, 6).selectExpr("id", "'odd' AS cat", "id AS v"),
+      graft.model.CqlSchema("wtmix", Seq("id")), dir, org.apache.spark.sql.SaveMode.Append,
+      graft.write.TokenSortedWriter.WriteConf(numPartitions = 1, snapshot = true,
+        writetimeMicros = Some(1000L)))
+    val v0 = Snapshots.latestVersion(spark, dir).get
+    val e = intercept[Exception] {
+      spark.sql(s"UPDATE $catName.db.wtmix SET v = -1 WHERE id <= 30")
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(c => c.isInstanceOf[UnsupportedOperationException] &&
+      c.getMessage.contains(graft.write.TokenSortedWriter.WritetimeCol)),
+      s"expected the feature-column refusal, got $e")
+    assert(Snapshots.latestVersion(spark, dir).get == v0, "a refused DML must not commit")
+  }
 }

@@ -208,4 +208,23 @@ class RowLevelOpsSpec extends SparkSpec {
     val t = spark.read.format("graft").option("path", dir).option("pk", "id").load()
     assert(t.filter(col("id") === 3).head().getLong(1) == 6L)
   }
+
+  test("row-level ops refuse when only one scanned generation carries writetime") {
+    val dir = createLogged("wtmix", rows = 60, parts = 3)
+    // a later stamped generation over a few keys: the unstamped files
+    // scanned beside it must not hide its feature column from the guard
+    TokenSortedWriter.write(spark.range(1, 6).selectExpr("id", "'odd' AS cat", "id AS v"),
+      CqlSchema("wtmix", Seq("id")), dir, SaveMode.Append,
+      TokenSortedWriter.WriteConf(numPartitions = 1, snapshot = true,
+        writetimeMicros = Some(1000L)))
+    val e = intercept[Exception] {
+      spark.sql(s"UPDATE $catName.db.wtmix SET v = -1")
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(c => c.isInstanceOf[UnsupportedOperationException] &&
+      c.getMessage.contains(TokenSortedWriter.WritetimeCol)),
+      s"expected the feature-column refusal, got $e")
+    assert(spark.table(s"$catName.db.wtmix").filter(col("v") === -1L).count() == 0L)
+  }
 }

@@ -7,6 +7,8 @@ import graft.model.CqlSchema
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** End-to-end reference read-path semantics over the sink/source pair:
  *  multi-version LWW, partition tombstones, TTL at pinned now (S5/§2.8/W9). */
 class NormalizedReadSpec extends SparkSpec {
@@ -322,5 +324,180 @@ class NormalizedReadSpec extends SparkSpec {
     val out = TokenSortedWriter.readNormalized(spark, schema, dir)
     assert(out.count() == 1)
     assert(out.select("v").head().getString(0) == "new")
+  }
+
+  /** Jobs launched while `body` runs: a marker job after it flushes the
+   *  (asynchronous, FIFO) listener bus, so every job `body` started has
+   *  been counted once the marker is seen. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      spark.sparkContext.setJobDescription("__jobs_marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("__jobs_marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains("__jobs_marker"), "listener bus never delivered the marker job")
+      (out, seen.asScala.takeWhile(_ != "__jobs_marker").size)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Two generations (the first unstamped) plus partition, row and range
+   *  tombstones under (k; c1, c2). */
+  private def tombstonedTable(): (CqlSchema, String) = {
+    import spark.implicits._
+    val sk = CqlSchema("pt", Seq("k"), Seq("c1", "c2"))
+    val dir = Files.createTempDirectory("graft_purge_plan_").toString + "/pt"
+    val rows = for (k <- 1L to 20L; c1 <- 1L to 3L; c2 <- 1L to 2L) yield (k, c1, c2, s"v${k}_$c1$c2")
+    TokenSortedWriter.write(rows.toDF("k", "c1", "c2", "v"), sk, dir, SaveMode.Append,
+      TokenSortedWriter.WriteConf(numPartitions = 2, keepTokenColumn = true))
+    TokenSortedWriter.write(rows.filter(_._1 % 2 == 0).map(r => r.copy(_4 = r._4 + "'"))
+      .toDF("k", "c1", "c2", "v"), sk, dir, SaveMode.Append,
+      TokenSortedWriter.WriteConf(numPartitions = 2, keepTokenColumn = true,
+        writetimeMicros = Some(2000L)))
+    TokenSortedWriter.writeDeletes(Seq(1L, 2L).toDF("k"), sk, dir, Some(1500L))
+    TokenSortedWriter.writeDeletes(Seq((3L, 1L, 1L), (4L, 2L, 2L)).toDF("k", "c1", "c2"),
+      sk, dir, Some(2500L), rowLevel = true)
+    TokenSortedWriter.writeRangeDeletes(Seq((5L, Some(2L), Option.empty[Long]))
+      .toDF("k", "ck_min", "ck_max"), sk, dir)
+    (sk, dir)
+  }
+
+  test("readNormalized plans with zero Spark jobs; the tombstone side is raw rows, " +
+      "no shuffle and no aggregate") {
+    val (sk, dir) = tombstonedTable()
+    val (out, jobs) = jobsDuring(TokenSortedWriter.readNormalized(spark, sk, dir))
+    assert(jobs == 0, s"building the normalized read launched $jobs Spark job(s)")
+    // k=1 stays (unstamped rows die under the stamped partition tombstone,
+    // none is newer); k=2 was rewritten at 2000 > 1500 and survives;
+    // k=3 loses one row, k=4's row tombstone at 2500 beats its 2000 rows;
+    // k=5 keeps only c1=1 (unstamped range tombstone)
+    // collect `out` itself, so its adaptive plan below is the final one
+    val got = out.collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[Long]("c1"), r.getAs[Long]("c2"))).toSet
+    val all = for (k <- 1L to 20L; c1 <- 1L to 3L; c2 <- 1L to 2L) yield (k, c1, c2)
+    val expect = all.filterNot { case (k, c1, c2) =>
+      k == 1L || (k == 3L && c1 == 1L && c2 == 1L) || (k == 4L && c1 == 2L && c2 == 2L) ||
+        (k == 5L && c1 >= 2L)
+    }.toSet
+    assert(got == expect)
+    object Helper extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plan = out.queryExecution.executedPlan
+    val antiJoins = Helper.collect(plan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+    }
+    assert(antiJoins.size == 2, s"expected a partition/range and a row anti-join:\n$plan")
+    antiJoins.foreach { j =>
+      val side = Helper.collect(j.right) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.nodeName
+        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a.nodeName
+      }
+      assert(side.isEmpty, s"tombstone side must be raw rows, found $side:\n$plan")
+    }
+  }
+
+  test("a column added by a later write shows in the next readNormalized, " +
+      "listing cache on and off") {
+    import spark.implicits._
+    for (cacheOn <- Seq(true, false)) {
+      spark.conf.set("graft.listing.cache", cacheOn.toString)
+      try {
+        val dir = freshDir()
+        TokenSortedWriter.write((1L to 10L).map(k => (k, s"v_$k")).toDF("k", "v"), schema,
+          dir, SaveMode.Append, TokenSortedWriter.WriteConf(writetimeMicros = Some(1000L)))
+        assert(TokenSortedWriter.readNormalized(spark, schema, dir).columns.toSeq == Seq("k", "v"))
+        TokenSortedWriter.write(Seq((3L, "w_3", 7L)).toDF("k", "v", "extra"), schema, dir,
+          SaveMode.Append, TokenSortedWriter.WriteConf(writetimeMicros = Some(2000L)))
+        val out = TokenSortedWriter.readNormalized(spark, schema, dir)
+        assert(out.columns.toSeq == Seq("k", "v", "extra"), s"cache=$cacheOn")
+        assert(out.filter(col("extra").isNotNull).select("k", "extra").as[(Long, Long)]
+          .collect().toSeq == Seq((3L, 7L)), s"cache=$cacheOn")
+      } finally spark.conf.unset("graft.listing.cache")
+    }
+  }
+
+  test("property: the tombstone purge equals a plain-Scala model (kinds, stamps, " +
+      "unstamped generations, horizons, ck prefixes, no-writetime tables)") {
+    import spark.implicits._
+    // a tombstone: partition when every key column past k and both bounds
+    // are None, range when a bound is set, row otherwise
+    final case class Tomb(k: Long, c1: Option[Long], c2: Option[Long],
+        lo: Option[Long], hi: Option[Long], wt: Option[Long])
+    final case class Version(k: Long, c1: Long, c2: Long, v: String, wt: Option[Long])
+    val stamps = Seq(1000L, 2000L, 3000L)
+    for (seed <- 1 to 5) {
+      val rnd = new scala.util.Random(seed)
+      val sk = CqlSchema("pm", Seq("k"), Seq("c1", "c2"))
+      val dir = Files.createTempDirectory(s"graft_purge_$seed").toString + "/pm"
+      // seed 5 has no writetime anywhere: one generation, plain anti-joins
+      val stamped = seed != 5
+      val gens: Seq[Option[Long]] =
+        if (!stamped) Seq(None)
+        else None +: stamps.filter(_ => rnd.nextBoolean()).map(Some(_)) :+ Some(4000L)
+      val versions = gens.zipWithIndex.flatMap { case (wt, g) =>
+        val rows = for (k <- 1L to 10L; c1 <- 1L to 3L; c2 <- 1L to 2L
+                        if g == 0 || rnd.nextInt(3) == 0) yield Version(k, c1, c2, s"g${g}_$k$c1$c2", wt)
+        TokenSortedWriter.write(rows.map(r => (r.k, r.c1, r.c2, r.v)).toDF("k", "c1", "c2", "v"),
+          sk, dir, SaveMode.Append, TokenSortedWriter.WriteConf(numPartitions = 2,
+            keepTokenColumn = true, writetimeMicros = wt))
+        rows
+      }
+      def stamp(): Option[Long] =
+        if (rnd.nextInt(4) == 0) None else Some((stamps :+ 4000L)(rnd.nextInt(4)))
+      // even seeds: row tombstones over the ck prefix (c1) only
+      val prefix = seed % 2 == 0
+      val parts = Seq.fill(3)(Tomb(1L + rnd.nextInt(10), None, None, None, None, stamp()))
+      val rowDels = Seq.fill(6)(Tomb(1L + rnd.nextInt(10), Some(1L + rnd.nextInt(3)),
+        if (prefix) None else Some(1L + rnd.nextInt(2)), None, None, stamp()))
+      val ranges = Seq.fill(3) {
+        val lo = 1L + rnd.nextInt(3)
+        if (rnd.nextBoolean()) Tomb(1L + rnd.nextInt(10), None, None, Some(lo), None, stamp())
+        else Tomb(1L + rnd.nextInt(10), None, None,
+          if (rnd.nextBoolean()) Some(lo) else None, Some(lo + rnd.nextInt(2)), stamp())
+      }
+      for ((wt, ts) <- parts.groupBy(_.wt))
+        TokenSortedWriter.writeDeletes(ts.map(_.k).toDF("k"), sk, dir, wt)
+      for ((wt, ts) <- rowDels.groupBy(_.wt)) {
+        if (prefix)
+          TokenSortedWriter.writeDeletes(ts.map(t => (t.k, t.c1.get)).toDF("k", "c1"),
+            CqlSchema("pm", Seq("k"), Seq("c1")), dir, wt, rowLevel = true)
+        else
+          TokenSortedWriter.writeDeletes(ts.map(t => (t.k, t.c1.get, t.c2.get))
+            .toDF("k", "c1", "c2"), sk, dir, wt, rowLevel = true)
+      }
+      for ((wt, ts) <- ranges.groupBy(_.wt))
+        TokenSortedWriter.writeRangeDeletes(ts.map(t => (t.k, t.lo, t.hi))
+          .toDF("k", "ck_min", "ck_max"), sk, dir, wt)
+
+      // the model: LWW by (writetime, value) with a null writetime lowest,
+      // then a tombstone kills a row it is at-or-newer than
+      val live = if (!stamped) versions else versions.groupBy(r => (r.k, r.c1, r.c2)).values
+        .map(_.maxBy(r => (r.wt, r.v))).toSeq
+      def kills(r: Version, t: Tomb): Boolean = {
+        val keyed = r.k == t.k && t.c1.forall(_ == r.c1) && t.c2.forall(_ == r.c2) &&
+          t.lo.forall(r.c1 >= _) && t.hi.forall(r.c1 <= _)
+        keyed && (!stamped || r.wt.getOrElse(Long.MinValue) <= t.wt.getOrElse(Long.MaxValue))
+      }
+      val tombs = parts ++ rowDels ++ ranges
+      for (horizon <- Seq(None, Some(stamps(rnd.nextInt(3))))) {
+        val inForce = tombs.filter(t => horizon.forall(h => t.wt.forall(_ <= h)))
+        val expect = live.filterNot(r => inForce.exists(kills(r, _)))
+          .map(r => (r.k, r.c1, r.c2, r.v)).toSet
+        val got = TokenSortedWriter.readNormalized(spark, sk, dir,
+          tombstonesAsOfMicros = horizon).select("k", "c1", "c2", "v")
+          .as[(Long, Long, Long, String)].collect()
+        assert(got.length == got.toSet.size, s"seed $seed horizon $horizon: duplicate rows")
+        assert(got.toSet == expect, s"seed $seed horizon $horizon: " +
+          s"missing ${expect -- got.toSet}, extra ${got.toSet -- expect}")
+      }
+    }
   }
 }
