@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types.StructType
 
@@ -30,24 +30,16 @@ private[graft] object FooterSchema {
     val confKey = GraftShims.footerSchemaConfKey(sqlConf)
     def cacheKey(p: String): String = p + "|" + confKey
     val misses = files.filterNot(p => cache.containsKey(cacheKey(p))).distinct
-    try {
-      val fresh = graft.write.DriverPool.map(misses) { p =>
-        p -> GraftShims.asNullable(GraftShims.footerSchema(conf, sqlConf, new Path(p)))
-      }
-      if (cache.size() + fresh.size > 100000) cache.clear() // bound driver state
-      fresh.foreach { case (p, s) => cache.put(cacheKey(p), s) }
-    } catch {
+    try graft.write.DriverPool.map(misses) { p =>
+      p -> GraftShims.asNullable(GraftShims.footerSchema(conf, sqlConf, new Path(p)))
+    }.foreach { case (p, s) => cache.put(cacheKey(p), s) }
+    catch {
       // one transient FS hiccup or unreadable footer must not fail the
       // read with a driver exception: fall back to the distributed
       // mergeSchema job (Spark-side task retries included)
       case scala.util.control.NonFatal(_) => return None
     }
-    // a concurrent clear() (the size bound above) between the miss-fill and
-    // this read returns null — take the safe distributed fallback instead
-    // of a driver NPE
-    val fetched = files.sorted.map(p => cache.get(cacheKey(p)))
-    if (fetched.contains(null)) return None
-    val distinct = fetched.distinct
+    val distinct = files.sorted.map(p => cache.get(cacheKey(p))).distinct
     distinct.tail.foldLeft(Option(distinct.head)) {
       case (None, _) => None
       case (Some(acc), s) =>
@@ -63,4 +55,9 @@ private[graft] object FooterSchema {
   def of(spark: SparkSession, files: Seq[String]): StructType =
     merged(spark, files).getOrElse(
       spark.read.option("mergeSchema", "true").parquet(files: _*).schema)
+
+  /** `files` read by name under their merged schema ([[of]]): files of
+   *  different generations may carry different columns. */
+  def read(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.schema(of(spark, files)).parquet(files: _*)
 }

@@ -129,8 +129,11 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     val root = new Path(dir)
     val rootUri = root.getFileSystem(spark.sessionState.newHadoopConf())
       .makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+    // key=value directory names between the root and each file (a root
+    // file has none; the root's own ancestors never count, as in Spark's
+    // partition discovery)
     val dirKeys = files.flatMap(f =>
-      new Path(f).getParent.toUri.getPath.stripPrefix(rootUri).split('/')
+      new Path(f).toUri.getPath.stripPrefix(rootUri).split('/').init
         .filter(_.contains('=')).map(_.takeWhile(_ != '='))).toSet
     FooterSchema.merged(spark, files)
       .filter(s => dirKeys.forall(k => k.startsWith(prefix) &&
@@ -139,11 +142,20 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       .getOrElse {
         // Spark's own inference for what the footers cannot settle: a type
         // conflict between generations, or a key=value directory column
-        // with no data-column twin (only partition discovery surfaces it)
-        val reader = spark.read.option("mergeSchema", "true")
-          .option("recursiveFileLookup", dirKeys.isEmpty.toString)
-        try strip(reader.parquet(dir).schema)
-        catch { case _: org.apache.spark.sql.AnalysisException => new StructType() }
+        // with no data-column twin (only partition discovery surfaces it).
+        // Partition discovery rejects a `gen-<uuid>/` dir beside key=value
+        // dirs; the recursive walk then sees every file, without them.
+        def infer(recursive: Boolean): StructType = strip(spark.read
+          .option("mergeSchema", "true")
+          .option("recursiveFileLookup", recursive.toString).parquet(dir).schema)
+        val discovered =
+          if (dirKeys.isEmpty) None
+          else try Some(infer(recursive = false))
+          catch { case scala.util.control.NonFatal(_) => None }
+        discovered.getOrElse {
+          try infer(recursive = true)
+          catch { case _: org.apache.spark.sql.AnalysisException => new StructType() }
+        }
       }
   }
 

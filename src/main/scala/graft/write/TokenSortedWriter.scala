@@ -675,7 +675,7 @@ object TokenSortedWriter {
         if (!hasRange) (Nil, lit(true))
         else {
           val ck = qcol(schema.clusteringKeys.head)
-          val (lo, hi) = (col(s"__del_$CkMinCol"), col(s"__del_$CkMaxCol"))
+          val (lo, hi) = (qcol(s"__del_$CkMinCol"), qcol(s"__del_$CkMaxCol"))
           (Seq(CkMinCol, CkMaxCol), (lo.isNull || ck >= lo) && (hi.isNull || ck <= hi))
         }
       df = antiJoinTombstones(df, deletes.filter(!isRowLevel), pk, bounds, inRange)
@@ -705,7 +705,7 @@ object TokenSortedWriter {
       try graft.sources.TokenPruner.listDataFiles(fs, delPath).map(_.getPath.toString).toSeq
       catch { case _: java.io.FileNotFoundException => Nil }
     if (files.isEmpty) None
-    else Some(spark.read.schema(graft.sources.FooterSchema.of(spark, files)).parquet(files: _*))
+    else Some(graft.sources.FooterSchema.read(spark, files))
   }
 
   /**
@@ -867,8 +867,8 @@ object TokenSortedWriter {
             val parts = schema.partitionKeys
             val touched =
               if (files.isEmpty) None
-              else Some(spark.read.schema(graft.sources.FooterSchema.of(spark, files))
-                .parquet(files: _*).select(parts.map(qcol): _*))
+              else Some(graft.sources.FooterSchema.read(spark, files)
+                .select(parts.map(qcol): _*))
             // a horizon resurrects tombstoned rows on the from side ONLY —
             // every tombstoned key is then a potential 'delete' candidate
             // (without a horizon both pins apply the same tombstones, so
@@ -1409,7 +1409,7 @@ object TokenSortedWriter {
         (if (dels.columns.contains(WritetimeCol)) coalesce(col(WritetimeCol), lit(Long.MaxValue))
          else lit(Long.MaxValue)).as("__graft_del_wt"))
        else Nil): _*)
-    val keyEq = keys.map(c => qcol(c) === col(s"__del_$c")).reduce(_ && _)
+    val keyEq = keys.map(c => qcol(c) === qcol(s"__del_$c")).reduce(_ && _)
     val timeRule =
       if (hasWt) coalesce(col(WritetimeCol), lit(Long.MinValue)) <= col("__graft_del_wt")
       else lit(true)

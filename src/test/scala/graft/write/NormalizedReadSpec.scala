@@ -424,6 +424,63 @@ class NormalizedReadSpec extends SparkSpec {
     }
   }
 
+  /** Spark's own schema inference over every file under `dir` (the
+   *  recursive walk skips partition discovery), engine token stripped. */
+  private def sparkInferred(dir: String): Seq[(String, org.apache.spark.sql.types.DataType)] =
+    spark.read.option("mergeSchema", "true").option("recursiveFileLookup", "true")
+      .parquet(dir).schema.fields.toSeq.filterNot(_.name == TokenSortedWriter.TokenCol)
+      .map(f => f.name -> f.dataType)
+
+  /** A table under `parent` that was compacted in place (its data moves
+   *  into a `gen-<uuid>/` dir) and then appended to with a new column. */
+  private def compactedThenAppended(parent: String): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_infer_").toString + s"/$parent/kv"
+    val conf = TokenSortedWriter.WriteConf(snapshot = true)
+    TokenSortedWriter.write((1L to 10L).map(k => (k, s"v_$k")).toDF("k", "v"), schema, dir,
+      SaveMode.Append, conf.copy(writetimeMicros = Some(1000L)))
+    TokenSortedWriter.compactInPlace(spark, schema, dir)
+    TokenSortedWriter.write(Seq((3L, "w_3", 7L)).toDF("k", "v", "extra"), schema, dir,
+      SaveMode.Append, conf.copy(writetimeMicros = Some(2000L)))
+    dir
+  }
+
+  private def inferred(dir: String): Seq[(String, org.apache.spark.sql.types.DataType)] =
+    new graft.sources.GraftDataSource().inferSchema(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(Map("path" -> dir).asJava))
+      .fields.toSeq.map(f => f.name -> f.dataType)
+
+  test("a compacted-then-appended table under a key=value parent dir infers its " +
+      "full schema with zero Spark jobs") {
+    // the parent's k=v name lies above the table root: no partition column
+    val dir = compactedThenAppended("wh/dt=2024")
+    val (got, jobs) = jobsDuring(inferred(dir))
+    assert(jobs == 0, s"schema inference launched $jobs Spark job(s)")
+    assert(got == sparkInferred(dir))
+    assert(got.map(_._1).contains("extra"))
+    import spark.implicits._
+    val out = TokenSortedWriter.readNormalized(spark, schema, dir)
+    assert(out.filter(col("extra").isNotNull).select("k", "extra").as[(Long, Long)]
+      .collect().toSeq == Seq((3L, 7L)))
+  }
+
+  test("a key=value dir with no data-column twin beside gen-<uuid>/ dirs and root " +
+      "files falls back to Spark's recursive inference") {
+    val dir = compactedThenAppended("wh")
+    // a stray k=v subdir: partition discovery cannot reconcile it with the
+    // gen dir and the root files, so only the recursive walk can infer
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val src = graft.sources.TokenPruner.listDataFiles(fs, new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath).find(_.getParent.getName.startsWith("gen-")).get
+    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+      new org.apache.hadoop.fs.Path(s"$dir/stray=1/${src.getName}"), false,
+      spark.sessionState.newHadoopConf())
+    graft.sources.TokenPruner.invalidateListing(dir)
+    val got = inferred(dir)
+    assert(got.nonEmpty && got == sparkInferred(dir), s"got $got")
+  }
+
   test("property: the tombstone purge equals a plain-Scala model (kinds, stamps, " +
       "unstamped generations, horizons, ck prefixes, no-writetime tables)") {
     import spark.implicits._

@@ -51,9 +51,16 @@ class QuotedIdentifiersSpec extends SparkSpec {
       TokenSortedWriter.WriteConf(numPartitions = 1, keepTokenColumn = true,
         writetimeMicros = Some(200L)))
     TokenSortedWriter.writeDeletes(mk(Seq((2L, 2L, 0.0, "x"))), schema, dir, Some(300L))
+    // a row tombstone keys on the dotted clustering column too
+    TokenSortedWriter.write(mk(Seq((3L, 1L, 3.0, "row1"), (3L, 2L, 3.5, "row2"))),
+      schema, dir, SaveMode.Append,
+      TokenSortedWriter.WriteConf(numPartitions = 1, keepTokenColumn = true,
+        writetimeMicros = Some(200L)))
+    TokenSortedWriter.writeDeletes(mk(Seq((3L, 1L, 0.0, "x"))), schema, dir, Some(300L),
+      rowLevel = true)
     val got = TokenSortedWriter.readNormalized(spark, schema, dir)
       .select(col("`user id`"), col("`select`"), col("`Mixed-Case`"))
       .as[(Long, Double, String)].collect().toSet
-    assert(got == Set((1L, 10.0, "new")))
+    assert(got == Set((1L, 10.0, "new"), (3L, 3.5, "row2")))
   }
 }
