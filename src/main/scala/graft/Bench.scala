@@ -36,7 +36,7 @@ object Bench {
     // co-tenancy noise (page-cache/GC churn from 100+ preceding queries —
     // judged twice as phantom regressions). After the battery, re-run every
     // query that took > 2 s twice more in the now-quiet warm session (the
-    // RunOne recipe) and report min(battery, reruns) as its steady number.
+    // ProfileOne recipe) and report min(battery, reruns) as its steady number.
     val steady = results.filter { case (n, t) => t > 2.0 && !failed.contains(n) }
       .flatMap { case (name, t) =>
         val reruns = (1 to 2).map(_ => timeOne(name))

@@ -1028,7 +1028,7 @@ object Battery {
         maxHamming = 3)),
     // end-to-end near-dup REMOVAL on the twin corpus: survivors are exactly
     // the min-id doc of each exact-text group (DedupSpec pins the real-corpus
-    // semantics; RunOne keeps the old real-corpus workload measurable)
+    // semantics; ProfileOne keeps the old real-corpus workload measurable)
     "q69_dedup_drop" -> ((s, d) =>
       Dedup.dropNearDuplicates(
         twinCopy(s, d, 0).unionByName(twinCopy(s, d, 1)), "doc_id", "text",

@@ -186,16 +186,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     // one) — fail at write-resolve, not at some later read
     GraftDataSource.validateWriteTypes(options)
     val cql = GraftDataSource.cqlFrom(options, data.schema)
-    val conf = TokenSortedWriter.WriteConf(
-      numPartitions = options.getInt("partitions", 0),
-      maxRecordsPerFile = options.getLong("maxRecordsPerFile", 0L),
-      allowOverwrite = options.getBoolean("allowOverwrite", false),
-      keepTokenColumn = options.getBoolean("keepToken", true),
-      snapshot = options.getBoolean("snapshot", false),
-      partitionBy = Option(options.get("partitionBy"))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
-      zorderBy = GraftDataSource.zorderByFrom(options),
-      rowTracking = options.getBoolean("rowTracking", false))
+    val conf = TokenSortedWriter.WriteConf.fromOptions(options)
     TokenSortedWriter.write(
       GraftDataSource.renameColumns(data, GraftDataSource.colMapFrom(options)),
       cql, pathOf(options), mode, conf)
@@ -226,12 +217,6 @@ object GraftDataSource {
    *  mark, re-assigns, re-writes — a multi-writer ingest loop converges
    *  without caller-side re-runs; exhaustion rethrows the race). */
   val MaxIdentityWriteAttempts = 5
-
-  /** `zorderBy` option (written by the catalog's CLUSTER BY): csv column
-   *  list driving the Z-order write layout. */
-  def zorderByFrom(options: CaseInsensitiveStringMap): Seq[String] =
-    Option(options.get("zorderBy"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
 
   // ---- column name mapping (`colmap` option, written by the catalog's
   // RENAME COLUMN): logical→physical indirection in the Delta column-
@@ -650,17 +635,8 @@ class GraftTable(
                 // the stable physical names (see the colmap notes above)
                 val data = GraftDataSource.renameColumns(
                   withIds, GraftDataSource.colMapFrom(tableOptions))
-                val conf = TokenSortedWriter.WriteConf(
-                  numPartitions = tableOptions.getInt("partitions", 0),
-                  maxRecordsPerFile = tableOptions.getLong("maxRecordsPerFile", 0L),
-                  allowOverwrite = tableOptions.getBoolean("allowOverwrite", false),
-                  keepTokenColumn = tableOptions.getBoolean("keepToken", true),
-                  snapshot = tableOptions.getBoolean("snapshot", false),
-                  partitionBy = Option(tableOptions.get("partitionBy"))
-                    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
-                  zorderBy = GraftDataSource.zorderByFrom(tableOptions),
-                  rowTracking = tableOptions.getBoolean("rowTracking", false),
-                  identityUpdate = idUpdate)
+                val conf = TokenSortedWriter.WriteConf.fromOptions(tableOptions)
+                  .copy(identityUpdate = idUpdate)
                 try {
                   if (ow && graft.write.Snapshots
                       .latestVersion(data.sparkSession, dir).isDefined) {

@@ -6,9 +6,9 @@ import java.util.UUID
 import scala.collection.mutable
 
 import graft.model.CqlSchema
-import graft.write.{DeletionVectors, Manifest, Snapshots, TokenSortedWriter}
+import graft.write.{DeletionVectors, Snapshots, TokenSortedWriter}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -241,6 +241,7 @@ class GraftDeltaWrite(
       }.toMap
 
       // insert leg: token-sorted generation, exactly like copy-on-write
+      val conf = TokenSortedWriter.WriteConf.fromOptions(tableOptions)
       val genFiles: Seq[String] =
         if (staged.isEmpty) Nil
         else {
@@ -252,31 +253,13 @@ class GraftDeltaWrite(
               spark.read.schema(stagingSchema).parquet(staged.toIndexedSeq: _*),
               annotated), annotated, s"delta ${op.command()}"),
             GraftDataSource.colMapFrom(tableOptions))
-          val conf = TokenSortedWriter.WriteConf(
-            numPartitions = tableOptions.getInt("partitions", 0),
-            maxRecordsPerFile = tableOptions.getLong("maxRecordsPerFile", 0L),
-            keepTokenColumn = tableOptions.getBoolean("keepToken", true),
-            partitionBy = Option(tableOptions.get("partitionBy"))
-              .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil))
-          val gen = s"$dir/gen-${UUID.randomUUID().toString.take(12)}"
-          TokenSortedWriter.write(replacement, cql, gen, SaveMode.Append, conf)
-          Manifest.appendFor(spark, dir)
-          TokenPruner.listDataFiles(fs, fs.makeQualified(new Path(gen)))
-            .map(_.getPath.toString).toSeq
+          TokenSortedWriter.writeGeneration(replacement, cql, dir, conf)
         }
 
-      try Snapshots.commitDeltas(spark, dir, dvUpdates, genFiles,
-        expectedParent = Some(sourceVersion))
-      catch {
-        case e: Throwable =>
-          // the freshly written DVs are referenced by NOTHING if the
-          // commit lost — reclaim now rather than leaving garbage for the
-          // orphan GC (generation files stay for vacuumOrphans' horizon,
-          // matching the CoW path's crash contract)
-          dvUpdates.values.foreach(p => fs.delete(new Path(p), false))
-          throw e
+      TokenSortedWriter.publish(spark, dir, genFiles, conf.ringLayout, dvUpdates.values.toSeq) {
+        Snapshots.commitDeltas(spark, dir, dvUpdates, genFiles,
+          expectedParent = Some(sourceVersion))
       }
-      TokenPruner.invalidateListing(dir)
     } finally {
       fs.delete(new Path(stagingDir), true)
     }

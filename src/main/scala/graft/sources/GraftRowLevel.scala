@@ -3,7 +3,7 @@ package graft.sources
 import java.util.UUID
 
 import graft.model.CqlSchema
-import graft.write.{Manifest, Snapshots, TokenSortedWriter}
+import graft.write.{Snapshots, TokenSortedWriter}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -505,24 +505,13 @@ class GraftReplaceDataWrite(
           else spark.read.schema(stagingSchema).parquet(staged.toIndexedSeq: _*),
           annotated), annotated, s"row-level ${op.command()}"),
         GraftDataSource.colMapFrom(tableOptions))
-      val conf = TokenSortedWriter.WriteConf(
-        numPartitions = tableOptions.getInt("partitions", 0),
-        maxRecordsPerFile = tableOptions.getLong("maxRecordsPerFile", 0L),
-        keepTokenColumn = tableOptions.getBoolean("keepToken", true),
-        partitionBy = Option(tableOptions.get("partitionBy"))
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil))
+      val conf = TokenSortedWriter.WriteConf.fromOptions(tableOptions)
 
       op.sourceVersion match {
         case Some(v) =>
-          val gen = s"$dir/gen-${UUID.randomUUID().toString.take(12)}"
-          if (staged.nonEmpty) {
-            TokenSortedWriter.write(replacement, cql, gen, SaveMode.Append, conf)
-            Manifest.appendFor(spark, dir) // generation stats → table-root manifest
-          }
           val genFiles =
-            if (staged.isEmpty) Seq.empty
-            else TokenPruner.listDataFiles(fs, fs.makeQualified(new Path(gen)))
-              .map(_.getPath.toString).toSeq
+            if (staged.isEmpty) Nil
+            else TokenSortedWriter.writeGeneration(replacement, cql, dir, conf)
           val scannedSet = scanned.toSet
           val keep = op.source.get.files.map(_.path).toSeq.filterNot(scannedSet.contains)
           val cdcFiles =
@@ -531,14 +520,16 @@ class GraftReplaceDataWrite(
             // tables (identity pairing), never treated as a value column
             else GraftCowChangeData.record(spark, dir, cql, op.source.get,
               scanned.toSeq, replacement)
-          Snapshots.commitRewrite(spark, dir, keep ++ genFiles,
-            expectedParent = Some(v), cdcFiles = cdcFiles)
+          TokenSortedWriter.publish(spark, dir, genFiles, conf.ringLayout, cdcFiles) {
+            Snapshots.commitRewrite(spark, dir, keep ++ genFiles,
+              expectedParent = Some(v), cdcFiles = cdcFiles)
+          }
         case None =>
           if (staged.nonEmpty)
-            TokenSortedWriter.write(replacement, cql, dir, SaveMode.Append, conf)
+            TokenSortedWriter.write(replacement, cql, dir, SaveMode.Append, conf.unlogged)
           scanned.foreach(p => fs.delete(new Path(p), false))
+          TokenPruner.invalidateListing(dir)
       }
-      TokenPruner.invalidateListing(dir)
     } finally {
       fs.delete(new Path(stagingDir), true)
     }

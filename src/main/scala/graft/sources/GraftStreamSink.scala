@@ -90,16 +90,8 @@ class GraftStreamSink(
     val batch: DataFrame = org.apache.spark.sql.graftshim.StreamBatchUtil.rebatch(data)
     GraftDataSource.validateWriteTypes(options)
     val cql = GraftDataSource.cqlFrom(options, batch.schema)
-    val conf = TokenSortedWriter.WriteConf(
-      numPartitions = options.getInt("partitions", 0),
-      maxRecordsPerFile = options.getLong("maxRecordsPerFile", 0L),
-      keepTokenColumn = options.getBoolean("keepToken", true),
-      ringSplits = options.getInt("ringSplits", 0),
-      partitionBy = Option(options.get("partitionBy"))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
-      snapshot = true,
-      streamTxn = Some(appId -> batchId),
-      rowTracking = options.getBoolean("rowTracking", false))
+    val conf = TokenSortedWriter.WriteConf.fromOptions(options)
+      .copy(snapshot = true, streamTxn = Some(appId -> batchId))
     TokenSortedWriter.write(
       GraftDataSource.renameColumns(batch, GraftDataSource.colMapFrom(options)),
       cql, dir, SaveMode.Append, conf)

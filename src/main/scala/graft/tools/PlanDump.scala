@@ -5,8 +5,8 @@ import java.io.PrintWriter
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for a LIST of battery queries into
-  * `<outDir>/<qNN>_<tag>.txt`, one JVM for the whole batch (the per-query
-  * Probe pays ~25 s of session bootstrap per plan). Usage:
+  * `<outDir>/<qNN>_<tag>.txt`, one JVM for the whole batch (a JVM per
+  * query pays ~25 s of session bootstrap per plan). Usage:
   * `runMain graft.tools.PlanDump <outDir> <tag> <query> [query…]`;
   * `SPARK_GRAFT_SF_DIR` picks the dataset (default sf0.01). */
 object PlanDump {

@@ -5,17 +5,22 @@ import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** Dev profiling harness (optimization guide §1): run one battery query with
-  * the Bench session config and print every Spark job it submits — wall
-  * time, description, stage count — so the per-phase cost of multi-action
-  * queries (write → digest → footer → commit → read) is visible without the
-  * UI. `runMain graft.tools.ProfileOne <query> [reps]`; env like RunOne. */
+/** Dev timing and profiling harness (optimization guide §1): run one
+  * battery query N times with the [[graft.Bench]] session config
+  * (local[cpus], shuffle.partitions = cpus, warm-up pass), print each rep's
+  * time and a min/median/max line — comparable to `BENCH_r*.json` entries
+  * without the battery's run-order and co-tenancy effects — and, for the
+  * last rep, every Spark job it submits (wall time, description, stage
+  * count), so the per-phase cost of multi-action queries (write → digest →
+  * footer → commit → read) is visible without the UI.
+  * `runMain graft.tools.ProfileOne <query> [reps]`; env `SPARK_GRAFT_SF_DIR`
+  * (default sf0.1), `SPARK_GRAFT_CPUS` (default 4). */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: ProfileOne <query> [reps]"))
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val builder0 = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -63,7 +68,7 @@ object ProfileOne {
       }
     }
 
-    (1 to reps).foreach { i =>
+    val times = (1 to reps).map { i =>
       jobs.clear()
       phaseTotals.clear()
       if (i == reps) {
@@ -96,7 +101,9 @@ object ProfileOne {
           println(f"[profile]   job=${j.id}%3d ${ms / 1e3}%7.3f s stages=${j.stages}%2d  ${j.desc.take(110)}")
         }
       }
+      dt
     }
+    println(f"[profile] $name min=${times.min}%.3f median=${times.sorted.apply(reps / 2)}%.3f max=${times.max}%.3f")
     spark.stop()
   }
 }

@@ -18,8 +18,13 @@ import org.apache.spark.sql.SparkSession
  * footer facts ONCE when a file is created, so a later scan plans with one
  * small TSV read instead of ~800k sequential footer walks.
  *
+ * Rows cover exactly the files a publish names ([[TokenSortedWriter
+ * .publish]], the one step by which written files join a table): one row
+ * per file, written before its commit. A file written out of band has no
+ * row and is footer-read at plan time.
+ *
  * Format: TSV lines under `<table>/_graft_manifest/manifest-<uuid>.tsv`
- * (append-only — one manifest file per write batch; underscore prefix hides
+ * (append-only — one manifest file per publish; underscore prefix hides
  * the dir from plain parquet listings and from [[TokenPruner.listDataFiles]]).
  * Columns: relative path, size, uncompressedSize, rows, hasToken,
  * tokenMin|-, tokenMax|-, colRanges (`col=min:max;...`), nominal ring range,
@@ -35,38 +40,39 @@ object Manifest {
 
   private val PartIndex = """part-(\d+)""".r
 
-  /** Record manifest rows for any data file not yet covered (call after a
-   *  write; reads only the NEW files' footers). When the write used the
-   *  exact ring-split layout, `ringSplits = Some(n)` stamps each new file
-   *  with its NOMINAL `splitRing(n)` range (recovered from the part index in
-   *  the file name — FileFormatWriter numbers files by task partition id). */
+  /** Record manifest rows for exactly `files`, the data files one publish
+   *  names ([[TokenSortedWriter.publish]]); nothing else is listed or read.
+   *  A file written out of band gets no row and is footer-read at plan
+   *  time. When the write used the exact ring-split layout,
+   *  `ringSplits = Some(n)` stamps each file with its NOMINAL
+   *  `splitRing(n)` range (recovered from the part index in the file name —
+   *  FileFormatWriter numbers files by task partition id). */
   def appendFor(
       spark: SparkSession,
       tableDir: String,
+      files: Seq[String],
       ringSplits: Option[Int] = None): Unit = {
+    if (files.isEmpty) return
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(tableDir).getFileSystem(conf)
-    // qualify so relativize matches the scheme-qualified listing paths —
-    // manifests then store RELATIVE paths and survive a table move/rename
+    // qualify so relativize matches the scheme-qualified paths — manifests
+    // then store RELATIVE paths and survive a table move/rename
     val root = fs.makeQualified(new Path(tableDir))
-    val known = read(fs, root).keySet
-    val fresh = TokenPruner.listDataFiles(fs, root)
-      .filterNot(f => known.contains(f.getPath.toString))
+    // a file deleted before its row is written (vacuum_orphans) simply
+    // gets none — the manifest is a cache, a miss only costs a footer read
+    val fresh = DriverPool.map(files) { f =>
+      val p = fs.makeQualified(new Path(f))
+      try Some(fs.getFileStatus(p)) catch { case _: java.io.FileNotFoundException => None }
+    }.flatten
     if (fresh.isEmpty) return
     val splits = ringSplits.map(n => graft.token.TokenRanges.splitRing(n))
-    // content digests computed DISTRIBUTED (one streaming pass per new file
-    // on an executor — the reference digests during its SSTable write,
-    // `SortedSSTableWriter.java:67-327`; post-write re-read is the parquet
-    // equivalent, and at any scale it parallelizes like the write itself)
-    val digests = digestAll(spark, fresh.map(_.getPath.toString))
-    // bounded-parallel footer reads (the same pool the scan fallback uses) —
-    // a large write lands many files and a sequential driver walk here would
-    // serialize the one O(#newFiles) step of the commit. Tolerant: a file
-    // another writer's commit-race cleanup (or a vacuum) deleted between
-    // our listing and this read simply gets no manifest row — the manifest
-    // is a cache, a miss only costs a later footer fallback
+    // content digests (the reference digests during its SSTable write,
+    // `SortedSSTableWriter.java:67-327`; a post-write re-read is the parquet
+    // equivalent, distributed once the batch is large)
+    val digests = digestAll(spark, fresh.map(f => f.getPath.toString -> f.getLen))
+    // bounded-parallel footer reads (the same pool the scan fallback uses)
     val bases = TokenPruner
-      .readFootersParallel(conf, fresh.map(f => (f.getPath, f.getLen)), tolerant = true)
+      .readFootersParallel(conf, fresh.map(f => (f.getPath, f.getLen)).toArray, tolerant = true)
       .map(m => m.path -> m).toMap
     val metas = fresh.flatMap { f =>
       bases.get(f.getPath.toString).map { base =>
@@ -76,9 +82,8 @@ object Manifest {
             .filter(_ < rs.length)
             .map(i => (rs(i).start, rs(i).end))
             // the stamp must be TRUE of the file, not just of its name: an
-            // unmanifested leftover from a crashed PLAIN write also matches
-            // part-NNNNN, and stamping it with a range its tokens don't
-            // satisfy would let Colocated.nominalRanges "prove"
+            // impostor named part-NNNNN stamped with a range its tokens
+            // don't satisfy would let Colocated.nominalRanges "prove"
             // co-partitioning and zero-shuffle-join wrong rows. Containment
             // against the footer's actual token bounds ((start, end]
             // semantics) keeps every legitimately ring-written file and
@@ -322,20 +327,14 @@ object Manifest {
   private[write] val DriverDigestMaxFiles = 64
   private[write] val DriverDigestMaxBytes = 256L << 20
 
-  private def digestAll(spark: SparkSession, paths: Array[String]): Map[String, Option[Long]] = {
-    if (paths.isEmpty) return Map.empty
+  private def digestAll(
+      spark: SparkSession, files: Seq[(String, Long)]): Map[String, Option[Long]] = {
+    if (files.isEmpty) return Map.empty
     val conf = spark.sessionState.newHadoopConf()
-    val small = paths.length <= DriverDigestMaxFiles && {
-      val sizes = paths.map { p =>
-        val hp = new Path(p)
-        try hp.getFileSystem(conf).getFileStatus(hp).getLen
-        catch { case _: java.io.IOException => Long.MaxValue }
-      }
-      sizes.sum >= 0 && sizes.forall(_ != Long.MaxValue) &&
-        sizes.sum <= DriverDigestMaxBytes
-    }
+    val paths = files.map(_._1)
+    val small = files.length <= DriverDigestMaxFiles && files.map(_._2).sum <= DriverDigestMaxBytes
     if (small) {
-      DriverPool.map(paths.toSeq) { p =>
+      DriverPool.map(paths) { p =>
         val hp = new Path(p)
         (p, try Some(digestFile(hp.getFileSystem(conf), hp))
             catch { case _: java.io.IOException => None })
@@ -345,7 +344,7 @@ object Manifest {
         new org.apache.spark.util.SerializableConfiguration(conf))
       JobDesc.withDesc(spark, s"graft.manifest: xxhash64 digest ${paths.length} file(s)") {
         spark.sparkContext
-          .parallelize(paths.toSeq, math.min(paths.length, 32))
+          .parallelize(paths, math.min(paths.length, 32))
           .map { p =>
             val hp = new Path(p)
             (p, try Some(digestFile(hp.getFileSystem(bc.value.value), hp))
@@ -365,18 +364,19 @@ object Manifest {
     val root = new Path(tableDir)
     val conf = spark.sessionState.newHadoopConf()
     val fs = root.getFileSystem(conf)
-    val recorded = read(fs, root).collect {
-      // per-path FS for the exists probe (digestAll already resolves one
-      // per file): a shallow clone records out-of-root rows that may live
-      // on a DIFFERENT filesystem, and probing those with the table
-      // root's FS throws "Wrong FS" instead of verifying
-      case (p, m) if m.digest.isDefined && {
-        val hp = new Path(p); hp.getFileSystem(conf).exists(hp)
-      } => p -> m.digest.get
+    // per-path FS for the size probe: a shallow clone records out-of-root
+    // rows that may live on a DIFFERENT filesystem, and probing those with
+    // the table root's FS throws "Wrong FS" instead of verifying
+    val recorded = read(fs, root).toSeq.flatMap { case (p, m) =>
+      m.digest.flatMap { d =>
+        val hp = new Path(p)
+        try Some((p, hp.getFileSystem(conf).getFileStatus(hp).getLen, d))
+        catch { case _: java.io.FileNotFoundException => None }
+      }
     }
     if (recorded.isEmpty) return Nil
-    val actual = digestAll(spark, recorded.keys.toArray)
-    recorded.collect { case (p, d) if !actual.get(p).flatten.contains(d) => p }.toSeq.sorted
+    val actual = digestAll(spark, recorded.map(r => r._1 -> r._2))
+    recorded.collect { case (p, _, d) if !actual.get(p).flatten.contains(d) => p }.sorted
   }
 
   private def relativize(root: Path, abs: String): String = {

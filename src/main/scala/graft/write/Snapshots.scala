@@ -839,7 +839,8 @@ object Snapshots {
   /**
    * Reconcile physical files to the retained log suffix: keep the last
    * `keepLast` snapshots, delete (a) older snapshot files and (b) data
-   * files referenced ONLY by those dropped snapshots. Files never
+   * files referenced ONLY by those dropped snapshots, then (c) each
+   * `gen-*` dir that (b) left with no data file. Files never
    * referenced by any snapshot (out-of-band writes) are untouched — vacuum
    * must not eat data it was never told about. After a vacuum following a
    * [[commitRewrite]], the live listing equals the latest snapshot again,
@@ -887,6 +888,9 @@ object Snapshots {
       .filter(underRoot(root))
     if (dryRun) return doomed // report what WOULD go; touch nothing
     doomed.foreach(p => f.delete(new Path(p), false))
+    // a `gen-*` dir left with no data file would cost every full listing
+    // walk one `listStatus` forever
+    TokenSortedWriter.dropEmptiedGenerations(f, root, doomed)
     drop.foreach(v => f.delete(vPath(root, v), false))
     // stale listing signatures would resurrect deleted files from cache
     graft.sources.TokenPruner.invalidateListing(dir)
@@ -1040,18 +1044,20 @@ object Snapshots {
             s"verification (first: ${failures.head})")
       }
     }
-    // manifest stats for the fresh local files while their footers are
-    // hot, then the normal v1 commit over them
-    Manifest.appendFor(spark, targetDir)
+    // manifest stats for the local copies, then the normal v1 commit over
+    // them; a racing first commit to the target deletes every copy
     val rids = src.rids.map { case (p, b) =>
       mapping.getOrElse(qualify(p), qualify(p)) -> b
     }
-    commitRewrite(spark, targetDir, src.files.map(p => mapping(qualify(p))),
-      dvOverride = Some(src.dvs.map { case (b, d) =>
-        mapping(qualify(b)) -> mapping(qualify(d)) }),
-      ridOverride = src.ridHwm.map(h => (rids, h)),
-      idUpdate = src.idHwms.map { case (c, m) => c -> (m, m) },
-      expectEmpty = true)
+    val files = src.files.map(p => mapping(qualify(p)))
+    val dvs = src.dvs.map { case (b, d) => mapping(qualify(b)) -> mapping(qualify(d)) }
+    TokenSortedWriter.publish(spark, targetDir, files, sidecars = dvs.values.toSeq.distinct) {
+      commitRewrite(spark, targetDir, files,
+        dvOverride = Some(dvs),
+        ridOverride = src.ridHwm.map(h => (rids, h)),
+        idUpdate = src.idHwms.map { case (c, m) => c -> (m, m) },
+        expectEmpty = true)
+    }
   }
 
   /**

@@ -135,7 +135,38 @@ object TokenSortedWriter {
       // truncate of the freshly-created table): the commit refuses if any
       // version landed since the emptiness check — two racing
       // overwrite-of-empty writers must not silently union.
-      expectEmptyLog: Boolean = false)
+      expectEmptyLog: Boolean = false) {
+
+    /** `ringSplits` as the manifest's nominal-range stamp, None when unset. */
+    def ringLayout: Option[Int] = Some(ringSplits).filter(_ > 0)
+
+    /** This conf with every log-coupled field cleared — for writes whose
+     *  files the CALLER commits (or a log-less table never commits). */
+    def unlogged: WriteConf = copy(snapshot = false, rowTracking = false,
+      identityUpdate = Map.empty, streamTxn = None, expectEmptyLog = false)
+  }
+
+  object WriteConf {
+    /** The one reader of the write options a table or sink carries:
+     *  `partitions`, `maxRecordsPerFile`, `allowOverwrite`, `keepToken`
+     *  (default true), `ringSplits`, `snapshot`, `partitionBy` and
+     *  `zorderBy` (csv; the catalog's CLUSTER BY writes the latter) and
+     *  `rowTracking`. */
+    def fromOptions(options: org.apache.spark.sql.util.CaseInsensitiveStringMap): WriteConf = {
+      def csv(key: String): Seq[String] = Option(options.get(key))
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+      WriteConf(
+        numPartitions = options.getInt("partitions", 0),
+        maxRecordsPerFile = options.getLong("maxRecordsPerFile", 0L),
+        allowOverwrite = options.getBoolean("allowOverwrite", false),
+        keepTokenColumn = options.getBoolean("keepToken", true),
+        ringSplits = options.getInt("ringSplits", 0),
+        snapshot = options.getBoolean("snapshot", false),
+        partitionBy = csv("partitionBy"),
+        zorderBy = csv("zorderBy"),
+        rowTracking = options.getBoolean("rowTracking", false))
+    }
+  }
 
   /** Directory-key twin of a partitioned column (see `WriteConf.partitionBy`). */
   def partCol(c: String): String = s"graft_p_$c"
@@ -359,7 +390,8 @@ object TokenSortedWriter {
     spark.createDataFrame(rdd, schema)
   }
 
-  /** Full write: returns the output path for read-back. */
+  /** Full write: the files land, get manifest rows, and (snapshot=true)
+   *  commit as one append version — see [[publish]]. */
   def write(
       df: DataFrame,
       schema: CqlSchema,
@@ -371,11 +403,6 @@ object TokenSortedWriter {
       throw new IllegalArgumentException(
         "SaveMode.Overwrite rejected (reference sink semantics); set allowOverwrite to opt in")
     }
-    require(conf.partitionBy.isEmpty || conf.ringSplits == 0,
-      "partitionBy and ringSplits are mutually exclusive layouts")
-    require(conf.zorderBy.isEmpty ||
-      (conf.partitionBy.isEmpty && conf.ringSplits == 0),
-      "zorderBy is mutually exclusive with partitionBy and ringSplits")
     if (conf.snapshot && mode == SaveMode.Overwrite)
       throw new IllegalArgumentException(
         "snapshot commits reject SaveMode.Overwrite: the parquet committer deletes " +
@@ -395,40 +422,64 @@ object TokenSortedWriter {
         "identity columns require snapshot=true: the allocation mark lives " +
           "in the log")
     }
-    // Snapshotted writes land in a hidden per-batch staging dir and are then
-    // moved into the table root, so the committed "added" set is EXACTLY the
-    // files THIS job wrote — a whole-table listing diff would absorb any
-    // concurrent writer's files that landed between its two walks, blurring
-    // per-batch atomicity. Dot-prefixed dirs are invisible to every lister
-    // (ours, Spark's, an oracle glob), so a crashed staging dir never
-    // pollutes reads; the move is a per-file rename (metadata op on
-    // HDFS/local, server-side copy on object stores — the documented cost of
-    // exact provenance without a custom commit protocol).
-    val snapshotTarget: Option[Path] =
-      if (!conf.snapshot) None
-      else {
-        // the staging dir is always fresh, so the parquet writer can no
-        // longer see the REAL target — ErrorIfExists AND Ignore semantics
-        // must be re-applied against the table path by hand, or Ignore
-        // would silently append where the caller asked for a no-op
-        if (mode == SaveMode.ErrorIfExists || mode == SaveMode.Ignore) {
-          val p = new Path(path)
-          val fsx = p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-          if (fsx.exists(p)) {
-            if (mode == SaveMode.Ignore) return
-            throw new IllegalArgumentException(
-              s"path $path already exists (SaveMode.ErrorIfExists)")
-          }
-        }
-        Some(new Path(path,
-          s".graft_staging/${java.util.UUID.randomUUID().toString.take(16)}"))
+    // the staging dir is always fresh, so the parquet writer cannot see the
+    // REAL target — ErrorIfExists AND Ignore semantics are re-applied
+    // against the table path by hand, or Ignore would silently append
+    // where the caller asked for a no-op
+    if (mode == SaveMode.ErrorIfExists || mode == SaveMode.Ignore) {
+      val p = new Path(path)
+      if (p.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).exists(p)) {
+        if (mode == SaveMode.Ignore) return
+        throw new IllegalArgumentException(
+          s"path $path already exists (SaveMode.ErrorIfExists)")
       }
+    }
+    val fresh = writeFiles(df, schema, path, conf, overwrite = mode == SaveMode.Overwrite)
+    publish(df.sparkSession, path, fresh, conf.ringLayout) {
+      if (conf.snapshot)
+        Snapshots.commitAppend(df.sparkSession, path, fresh, conf.streamTxn,
+          rowTracking = conf.rowTracking, idUpdate = conf.identityUpdate,
+          expectEmpty = conf.expectEmptyLog)
+    }
+  }
+
+  /** Run the write job and return exactly the data files it produced.
+   *
+   *  An append lands in a hidden per-batch staging dir and is then moved
+   *  into the table root, so the returned set is EXACTLY the files THIS
+   *  job wrote — a whole-table listing diff would absorb any concurrent
+   *  writer's files that landed between its two walks. Dot-prefixed dirs
+   *  are invisible to every lister (ours, Spark's, an oracle glob), so a
+   *  crashed staging dir never pollutes reads; the move is a per-file
+   *  rename (metadata op on HDFS/local, server-side copy on object stores —
+   *  the documented cost of exact provenance without a custom commit
+   *  protocol). `overwrite` (the parquet committer replaces the whole dir)
+   *  and a fresh generation dir write in place: everything listed there
+   *  afterwards is this job's. */
+  private def writeFiles(
+      df: DataFrame,
+      schema: CqlSchema,
+      path: String,
+      conf: WriteConf,
+      overwrite: Boolean = false,
+      inPlace: Boolean = false): Seq[String] = {
+    require(conf.partitionBy.isEmpty || conf.ringSplits == 0,
+      "partitionBy and ringSplits are mutually exclusive layouts")
+    require(conf.zorderBy.isEmpty ||
+      (conf.partitionBy.isEmpty && conf.ringSplits == 0),
+      "zorderBy is mutually exclusive with partitionBy and ringSplits")
+    val p = new Path(path)
+    val fs = p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+    val root = fs.makeQualified(p)
+    val target =
+      if (overwrite || inPlace) root
+      else new Path(root, s".graft_staging/${java.util.UUID.randomUUID().toString.take(16)}")
     val sorted =
       if (conf.zorderBy.nonEmpty) zorderSorted(withWriteOptions(df, conf), conf)
       else tokenSorted(withWriteOptions(df, conf), schema, conf)
     val out = if (conf.keepTokenColumn) sorted
       else sorted.drop(TokenCol).drop(ZOrderCol)
-    val writer = out.write.mode(mode)
+    val writer = out.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append)
     val w2 = if (conf.maxRecordsPerFile > 0)
       writer.option("maxRecordsPerFile", conf.maxRecordsPerFile) else writer
     val w3 = if (conf.partitionBy.nonEmpty)
@@ -443,63 +494,111 @@ object TokenSortedWriter {
       else en
     }
     JobDesc.withDesc(df.sparkSession,
-      s"graft.write: range+sort+parquet -> ${new Path(path).getName}") {
-      w4.parquet(snapshotTarget.map(_.toString).getOrElse(path))
+      s"graft.write: range+sort+parquet -> ${p.getName}") {
+      w4.parquet(target.toString)
     }
-    val added: Seq[String] = snapshotTarget match {
-      case None => Nil
-      case Some(stage0) =>
-        val p = new Path(path)
-        val fs = p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-        val root = fs.makeQualified(p)
-        val stage = fs.makeQualified(stage0)
-        // move data files root-ward preserving any partition-dir layout;
-        // _SUCCESS and other committer artifacts stay behind and die with
-        // the staging dir
-        def walk(d: Path): Seq[Path] =
-          fs.listStatus(d).toSeq.flatMap { s =>
-            if (s.isDirectory) walk(s.getPath)
-            else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getPath)
-            else Nil
-          }
-        val stagePrefix = stage.toString.stripSuffix("/") + "/"
-        val moved = walk(stage).map { src =>
-          val rel = src.toString.stripPrefix(stagePrefix)
-          val dst = new Path(root, rel)
-          Option(dst.getParent).foreach(fs.mkdirs(_))
-          if (!fs.rename(src, dst))
-            throw new java.io.IOException(
-              s"snapshot staging move failed: $src -> $dst")
-          dst.toString
-        }
-        fs.delete(stage, true)
-        graft.sources.TokenPruner.invalidateListing(path)
-        moved
+    if (target == root)
+      return graft.sources.TokenPruner.listDataFiles(fs, root).map(_.getPath.toString).toSeq
+    // move data files root-ward preserving any partition-dir layout;
+    // _SUCCESS and other committer artifacts stay behind and die with the
+    // staging dir
+    def walk(d: Path): Seq[Path] =
+      fs.listStatus(d).toSeq.flatMap { s =>
+        if (s.isDirectory) walk(s.getPath)
+        else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getPath)
+        else Nil
+      }
+    val stagePrefix = target.toString.stripSuffix("/") + "/"
+    val moved = walk(target).map { src =>
+      val dst = new Path(root, src.toString.stripPrefix(stagePrefix))
+      Option(dst.getParent).foreach(fs.mkdirs(_))
+      if (!fs.rename(src, dst))
+        throw new java.io.IOException(s"staging move failed: $src -> $dst")
+      dst.toString
     }
-    // record planning stats for the new files while their footers are hot —
-    // scans then plan from the manifest in O(1) driver IO (S3 at 100 TB)
-    Manifest.appendFor(df.sparkSession, path,
-      if (conf.ringSplits > 0) Some(conf.ringSplits) else None)
-    if (conf.snapshot)
-      try Snapshots.commitAppend(df.sparkSession, path, added, conf.streamTxn,
-        rowTracking = conf.rowTracking, idUpdate = conf.identityUpdate,
-        expectEmpty = conf.expectEmptyLog)
+    fs.delete(target, true)
+    moved
+  }
+
+  /** Prefix of a generation dir: one fresh, uniquely named subdir per
+   *  rewrite ([[writeGeneration]]). */
+  private[write] val GenPrefix = "gen-"
+
+  /** Write `df` as a fresh `gen-<uuid>/` generation under `dir` and return
+   *  its data files. No manifest row and no commit: the caller publishes
+   *  them ([[publish]]), usually as part of a rewrite. Log-coupled conf
+   *  fields are cleared — the generation's own write commits nothing. */
+  private[graft] def writeGeneration(
+      df: DataFrame, schema: CqlSchema, dir: String, conf: WriteConf): Seq[String] =
+    writeFiles(df, schema,
+      s"${dir.stripSuffix("/")}/$GenPrefix${java.util.UUID.randomUUID().toString.take(12)}",
+      conf.unlogged, inPlace = true)
+
+  /**
+   * The one step by which written files join a table:
+   *  1. manifest rows for exactly `fresh` (stats + digests, one fragment);
+   *  2. `commit` — a log commit, a log-less swap, or nothing;
+   *  3. on [[Snapshots.ConcurrentCommitException]], delete `fresh` and
+   *     `sidecars` (DV or change-data files the commit would reference) and
+   *     rethrow: it is raised strictly BEFORE the exclusive create, so the
+   *     commit definitively did not land and no version references them. A
+   *     retrying writer (or a log-less listing read) must never see the
+   *     abandoned attempt. Any other failure may come after the version
+   *     file is published, so it deletes nothing (orphans are
+   *     [[Snapshots.vacuumOrphans]]' job);
+   *  4. the listing cache is invalidated whatever happened.
+   */
+  private[graft] def publish[T](
+      spark: SparkSession,
+      dir: String,
+      fresh: Seq[String],
+      ringSplits: Option[Int] = None,
+      sidecars: Seq[String] = Nil)(commit: => T): T =
+    try {
+      Manifest.appendFor(spark, dir, fresh, ringSplits)
+      try commit
       catch {
         case e: Snapshots.ConcurrentCommitException =>
-          // thrown strictly BEFORE the exclusive create — the commit
-          // definitively did not land, so the just-moved files are
-          // referenced by no version. Delete them: a retrying writer (or a
-          // log-less listing read) must never see the abandoned attempt.
-          // Stale manifest entries are harmless (listing drives; the
-          // manifest only supplies stats).
-          val p = new Path(path)
-          val fs = p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-          added.foreach(a => fs.delete(new Path(a), false))
-          graft.sources.TokenPruner.invalidateListing(path)
+          val p = new Path(dir)
+          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+          (fresh ++ sidecars).foreach(f => fs.delete(new Path(f), false))
+          dropEmptiedGenerations(fs, fs.makeQualified(p), fresh)
           throw e
       }
-    // (the snapshot-coupled conf flags were validated up top, before any
-    // data landed)
+    } finally graft.sources.TokenPruner.invalidateListing(dir)
+
+  /** Remove each `gen-*` dir directly under `root` that held one of
+   *  `removed` and now holds no data file (committer leftovers and dead
+   *  manifest fragments go with it). Partition dirs are never removed: a
+   *  concurrent append can rename a file into one at any time. */
+  private[write] def dropEmptiedGenerations(
+      fs: org.apache.hadoop.fs.FileSystem, root: Path, removed: Seq[String]): Unit = {
+    val prefix = root.toString.stripSuffix("/") + "/"
+    removed.filter(_.startsWith(prefix)).map(_.substring(prefix.length))
+      .filter(rel => rel.startsWith(GenPrefix) && rel.contains('/'))
+      .map(rel => new Path(root, rel.takeWhile(_ != '/'))).distinct
+      .filter(g => fs.exists(g) && graft.sources.TokenPruner.listDataFiles(fs, g).isEmpty)
+      .foreach(fs.delete(_, true))
+  }
+
+  /** Write a single-partition frame as ONE parquet file: into a hidden tmp
+   *  dir under `root`, then renamed to `parent/part-<tag>-<uuid>.parquet`
+   *  (beside the file it replaces, so a `graft_p_*` dir keeps its rows).
+   *  Returns the new file's path. */
+  private def writeBeside(
+      one: DataFrame, fs: org.apache.hadoop.fs.FileSystem, root: Path, parent: Path,
+      tag: String): String = {
+    val tmp = new Path(root, s".$tag-${java.util.UUID.randomUUID().toString.take(12)}")
+    one.write.parquet(tmp.toString)
+    val part = fs.listStatus(tmp).map(_.getPath)
+      .find(_.getName.endsWith(".parquet"))
+      .getOrElse(throw new IllegalStateException(s"no parquet part under $tmp"))
+    val dest = new Path(parent,
+      s"part-$tag-${java.util.UUID.randomUUID().toString.take(12)}.parquet")
+    if (!fs.rename(part, dest))
+      throw new IllegalStateException(s"rename $part -> $dest failed")
+    fs.delete(tmp, true)
+    dest.toString
   }
 
   /**
@@ -967,53 +1066,28 @@ object TokenSortedWriter {
       } else if (keptN == 0L) {
         replacements += meta.path -> None
       } else {
-        val tmp = new Path(root, s".delete-${java.util.UUID.randomUUID().toString.take(12)}")
-        kept.coalesce(1).write.parquet(tmp.toString)
-        val part = fs.listStatus(tmp).map(_.getPath)
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no parquet part under $tmp"))
         // a shallow clone's out-of-root (source-owned) original must not
         // get a sibling written into the SOURCE's directory — its
         // replacement materializes under the clone root instead
         val parent =
           if (Snapshots.underRoot(root, meta.path)) new Path(meta.path).getParent
           else root
-        val dest = new Path(parent,
-          s"part-cow-${java.util.UUID.randomUUID().toString.take(12)}.parquet")
-        if (!fs.rename(part, dest))
-          throw new IllegalStateException(s"rename $part -> $dest failed")
-        fs.delete(tmp, true)
-        replacements += meta.path -> Some(dest.toString)
+        replacements += meta.path -> Some(writeBeside(kept.coalesce(1), fs, root, parent, "cow"))
       }
       } finally kept.unpersist()
     }
     if (removed == 0L) return 0L
-    Manifest.appendFor(spark, dir) // stats+digests for the replacement files
     val newLive = live.map(_.path).flatMap(pth =>
       replacements.getOrElse(pth, Some(pth)))
-    if (head.isDefined) {
-      try Snapshots.commitRewrite(spark, dir, newLive.toSeq, expectedParent = head)
-      catch {
-        case e: Snapshots.ConcurrentCommitException =>
-          // the guarded commit did not land: the part-cow-* replacements
-          // already renamed into live data dirs are referenced by no
-          // version — delete them (the write() discipline) or a
-          // listing-driven read double-counts every kept row, and each
-          // retry leaks another set
-          replacements.foreach {
-            case (old, Some(rep)) if rep != old => fs.delete(new Path(rep), false)
-            case _ => ()
-          }
-          graft.sources.TokenPruner.invalidateListing(dir)
-          throw e
-      }
-    } else {
-      replacements.foreach {
+    val fresh = replacements.collect { case (old, Some(rep)) if rep != old => rep }.toSeq
+    publish(spark, dir, fresh) {
+      if (head.isDefined)
+        Snapshots.commitRewrite(spark, dir, newLive.toSeq, expectedParent = head)
+      else replacements.foreach {
         case (old, rep) if !rep.contains(old) => fs.delete(new Path(old), false)
         case _ => ()
       }
     }
-    graft.sources.TokenPruner.invalidateListing(dir)
     removed
   }
 
@@ -1110,24 +1184,17 @@ object TokenSortedWriter {
       snapshotVersion = Some(sourceVersion.toString))
     val carryWt = normalized.columns.contains(WritetimeCol)
     val outConf = conf.copy(
-      keepTokenColumn = true, snapshot = false,
+      keepTokenColumn = true,
       writetimeColumn = if (carryWt) Some(WritetimeCol) else conf.writetimeColumn,
       writetimeMicros = None, ttlColumn = None, ttlSeconds = None)
-    val gen = s"$dir/gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    write(normalized, schema, gen, SaveMode.Append, outConf)
-    // stats for the fresh generation belong in the TABLE-root manifest (the
-    // gen subdir got its own during write — root listing never reads it)
-    Manifest.appendFor(spark, dir,
-      if (outConf.ringSplits > 0) Some(outConf.ringSplits) else None)
-    val genFiles = graft.sources.TokenPruner
-      .listDataFiles(fs, fs.makeQualified(new Path(gen)))
-      .map(_.getPath.toString).toSeq
+    val genFiles = writeGeneration(normalized, schema, dir, outConf)
     // "fold": the rewrite preserves every key's RESOLVED row (that is the
     // compaction contract) — the resolved-state diff may ride across it
-    val version = Snapshots.commitRewrite(spark, dir, genFiles,
-      expectedParent = Some(sourceVersion), kind = Snapshots.Fold)
+    val version = publish(spark, dir, genFiles, outConf.ringLayout) {
+      Snapshots.commitRewrite(spark, dir, genFiles,
+        expectedParent = Some(sourceVersion), kind = Snapshots.Fold)
+    }
     Snapshots.vacuum(spark, dir, vacuumRetain)
-    graft.sources.TokenPruner.invalidateListing(dir)
     version
   }
 
@@ -1154,38 +1221,13 @@ object TokenSortedWriter {
         s"overwriteLogged: $dir has no snapshot log — atomic logical overwrite " +
           "needs one (write with snapshot=true), or opt into the physical " +
           "overwrite via allowOverwrite"))
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val gen = s"$dir/gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    // the STAGING write is log-less by design (the real commit is the
-    // rewrite below) — clear the log-coupled conf bits or their
-    // snapshot-required guards would refuse a legitimate overwrite.
     // Row-id bases for the fresh generation allocate in commitRewrite's
-    // body (the parent's ridhwm self-perpetuates); identity marks
-    // inherit (the overwrite path never ALLOCATES — the caller guards)
-    write(df, schema, gen, SaveMode.Append,
-      conf.copy(snapshot = false, rowTracking = false,
-        identityUpdate = Map.empty, streamTxn = None))
-    Manifest.appendFor(spark, dir)
-    val genFiles = graft.sources.TokenPruner
-      .listDataFiles(fs, fs.makeQualified(new Path(gen)))
-      .map(_.getPath.toString).toSeq
-    val version =
-      try Snapshots.commitRewrite(spark, dir, genFiles,
-        expectedParent = Some(head))
-      catch {
-        case e: Snapshots.ConcurrentCommitException =>
-          // same contract as the append path's cleanup above: the commit
-          // definitively did not land, so the staged generation is
-          // referenced by no version — delete it, or every lost race
-          // (including the identity-retry loop re-entering here) leaks a
-          // full unreferenced file set until vacuum_orphans
-          fs.delete(new Path(gen), true)
-          graft.sources.TokenPruner.invalidateListing(dir)
-          throw e
-      }
-    graft.sources.TokenPruner.invalidateListing(dir)
-    version
+    // body (the parent's ridhwm self-perpetuates); identity marks inherit
+    // (the overwrite path never ALLOCATES — the caller guards)
+    val genFiles = writeGeneration(df, schema, dir, conf)
+    publish(spark, dir, genFiles, conf.ringLayout) {
+      Snapshots.commitRewrite(spark, dir, genFiles, expectedParent = Some(head))
+    }
   }
 
   /**
@@ -1355,41 +1397,22 @@ object TokenSortedWriter {
         (if (raw.columns.contains(ZOrderCol)) Seq(ZOrderCol)
          else if (raw.columns.contains(TokenCol)) TokenCol +: schema.primaryKey
          else schema.primaryKey).filter(raw.columns.contains).map(qcol)
-      val tmp = new Path(root, s".optimize-${java.util.UUID.randomUUID().toString.take(12)}")
-      raw.coalesce(1).sortWithinPartitions(sortCols: _*).write.parquet(tmp.toString)
-      val part = fs.listStatus(tmp).map(_.getPath)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no parquet part under $tmp"))
-      val dest = new Path(new Path(bin.head.path).getParent,
-        s"part-opt-${java.util.UUID.randomUUID().toString.take(12)}.parquet")
-      if (!fs.rename(part, dest))
-        throw new IllegalStateException(s"rename $part -> $dest failed")
-      fs.delete(tmp, true)
       replaced ++= bin.map(_.path)
-      fresh += dest.toString
+      fresh += writeBeside(raw.coalesce(1).sortWithinPartitions(sortCols: _*), fs, root,
+        new Path(bin.head.path).getParent, "opt")
     }
-    Manifest.appendFor(spark, dir) // stats + digests for the packed files
-    head match {
-      case Some(v) =>
-        val gone = replaced.toSet
-        val keep = snapFiles.map(_.path).toSeq.filterNot(gone.contains)
-        // a Layout commit: change capture skips it (rows identical)
-        try Snapshots.commitRewrite(spark, dir, keep ++ fresh,
-          expectedParent = Some(v), kind = Snapshots.Layout)
-        catch {
-          case e: Snapshots.ConcurrentCommitException =>
-            // the packed part-opt-* files already sit in live data dirs
-            // but no version references them — delete (the write()
-            // discipline) so a listing read can't double-count the
-            // packed rows, and a retry doesn't leak another set
-            fresh.foreach(f => fs.delete(new Path(f), false))
-            graft.sources.TokenPruner.invalidateListing(dir)
-            throw e
-        }
-      case None =>
-        replaced.foreach(f => fs.delete(new Path(f), false))
+    publish(spark, dir, fresh.toSeq) {
+      head match {
+        case Some(v) =>
+          val gone = replaced.toSet
+          val keep = snapFiles.map(_.path).toSeq.filterNot(gone.contains)
+          // a Layout commit: change capture skips it (rows identical)
+          Snapshots.commitRewrite(spark, dir, keep ++ fresh,
+            expectedParent = Some(v), kind = Snapshots.Layout)
+        case None =>
+          replaced.foreach(f => fs.delete(new Path(f), false))
+      }
     }
-    graft.sources.TokenPruner.invalidateListing(dir)
     replaced.length.toLong
   }
 

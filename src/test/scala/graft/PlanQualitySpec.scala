@@ -388,7 +388,7 @@ class PlanQualitySpec extends SparkSpec {
     val impostor = new org.apache.hadoop.fs.Path(dir, "part-00001-impostor.parquet")
     org.apache.hadoop.fs.FileUtil.copy(fsx, split0, fsx, impostor, false,
       spark.sessionState.newHadoopConf())
-    graft.write.Manifest.appendFor(spark, dir, Some(4))
+    graft.write.Manifest.appendFor(spark, dir, Seq(impostor.toString), Some(4))
     graft.sources.TokenPruner.invalidateListing(dir)
     val metas = graft.sources.TokenPruner.listFiles(spark, dir)
     assert(metas.exists(_.path.endsWith("part-00001-impostor.parquet")),

@@ -8,7 +8,9 @@ import java.util.concurrent.atomic.AtomicLong
 import graft.SparkSpec
 import graft.model.CqlSchema
 import graft.sources.{GraftDataSource, GraftScan, GraftScanBuilder}
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.execution.datasources.FilePartition
 
@@ -16,8 +18,12 @@ import org.apache.spark.sql.execution.datasources.FilePartition
  *  [[CondPutFileSystem]] pattern): counts `listStatus`/`open` calls per
  *  path and runs a one-shot hook on the first open of a snapshot-log
  *  version file — so a spec can land a commit INSIDE scan planning and
- *  count the metadata calls planning makes. State is JVM-global: the
- *  filesystem cache may hand out several instances. */
+ *  count the metadata calls planning makes — and another just before the
+ *  first create of one, so a concurrent commit can take the version a
+ *  commit is about to claim (committing here needs
+ *  [[Snapshots.AllowNonAtomicConf]]: the scheme is not an atomic store).
+ *  State is JVM-global: the filesystem cache may hand out several
+ *  instances. */
 class HookedFileSystem extends FilterFileSystem(new RawLocalFileSystem {
   override def getScheme: String = "hooked"
   override def getUri: URI = URI.create("hooked://host/")
@@ -35,11 +41,20 @@ class HookedFileSystem extends FilterFileSystem(new RawLocalFileSystem {
       Option(HookedFileSystem.hook.getAndSet(null)).foreach(_.apply())
     super.open(f, bufferSize)
   }
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    if (HookedFileSystem.isVersionFile(f))
+      Option(HookedFileSystem.createHook.getAndSet(null)).foreach(_.apply())
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
 }
 
 object HookedFileSystem {
   private val counts = new ConcurrentHashMap[(String, String), AtomicLong]()
   private val hook = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+  private val createHook = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
 
   def isVersionFile(p: Path): Boolean =
     p.getParent != null && p.getParent.getName == Snapshots.Dir &&
@@ -59,6 +74,11 @@ object HookedFileSystem {
   /** Run `f` on the next open of a version file (once). */
   def armOnVersionOpen(f: () => Unit): Unit = hook.set(f)
   def armed: Boolean = hook.get != null
+
+  /** Run `f` just before the next create of a version file (once). */
+  def armOnVersionCreate(f: () => Unit): Unit = createHook.set(f)
+  def createArmed: Boolean = createHook.get != null
+  def disarm(): Unit = { hook.set(null); createHook.set(null) }
 }
 
 /**
