@@ -1,16 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.install(spark)
+    val spark = Graft.localSession(cpus, "WARN")
     // warm up the JVM/session once (codegen compiler, parquet reader, shuffle
     // machinery) so the first measured query isn't charged for JIT/bootstrap
     spark.range(1000000L).selectExpr("sum(id)").collect()

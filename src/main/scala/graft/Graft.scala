@@ -20,6 +20,19 @@ object Graft {
     graft.functions.registerAll(spark)
   }
 
+  /** The local session of [[Bench]] and the dev tools (`graft.tools`):
+   *  `local[cpus]` with `cpus` shuffle partitions, no UI, `conf` on top,
+   *  the given log level and graft [[install]]ed. */
+  def localSession(cpus: String, logLevel: String, conf: Seq[(String, String)] = Nil): SparkSession = {
+    val builder = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    install(spark)
+    spark
+  }
+
   /**
    * Debug dump analog of the reference's `sstableToJson` surface
    * (reference `CassandraBridge.java:421`): every row of a written graft

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for a LIST of battery queries into
   * `<outDir>/<qNN>_<tag>.txt`, one JVM for the whole batch (a JVM per
   * query pays ~25 s of session bootstrap per plan). Usage:
@@ -16,13 +14,8 @@ object PlanDump {
     val tag = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Graft.install(spark)
+    val spark = graft.Graft.localSession("4", "ERROR",
+      Seq("spark.sql.session.timeZone" -> "UTC"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))

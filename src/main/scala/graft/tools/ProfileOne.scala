@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev timing and profiling harness (optimization guide §1): run one
   * battery query N times with the [[graft.Bench]] session config
@@ -21,17 +20,10 @@ object ProfileOne {
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
     // A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" for config experiments
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF").getOrElse("").split(';')
-      .filter(_.contains('=')).foldLeft(builder0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Graft.install(spark)
+    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "").split(';').toSeq
+      .filter(_.contains('=')).map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = graft.Graft.localSession(cpus, "WARN", extra)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/nation.parquet").count()
     val fn = graft.SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))

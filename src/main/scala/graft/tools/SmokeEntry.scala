@@ -1,14 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev smoke: drives SparkEntry.entry exactly as the driver does. */
 object SmokeEntry {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Graft.install(spark)
+    val spark = graft.Graft.localSession("4", "ERROR",
+      Seq("spark.sql.session.timeZone" -> "UTC"))
     val df = graft.SparkEntry.entry(spark)
     df.show(10, false)
     println("ENTRY ROWS=" + df.count())

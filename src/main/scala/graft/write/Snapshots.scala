@@ -891,6 +891,7 @@ object Snapshots {
     // a `gen-*` dir left with no data file would cost every full listing
     // walk one `listStatus` forever
     TokenSortedWriter.dropEmptiedGenerations(f, root, doomed)
+    TokenSortedWriter.dropEmptiedChangeDirs(f, doomed)
     drop.foreach(v => f.delete(vPath(root, v), false))
     // stale listing signatures would resurrect deleted files from cache
     graft.sources.TokenPruner.invalidateListing(dir)
@@ -1240,6 +1241,8 @@ object Snapshots {
     val all = orphans ++ dvOrphans ++ cdcOrphans
     if (!dryRun) {
       all.foreach(p => f.delete(new Path(p), false))
+      // a cdc-<uuid>/ dir whose last files were orphans goes with them
+      TokenSortedWriter.dropEmptiedChangeDirs(f, cdcOrphans)
       if (orphans.nonEmpty) graft.sources.TokenPruner.invalidateListing(dir)
     }
     all

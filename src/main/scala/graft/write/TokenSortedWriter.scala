@@ -563,6 +563,7 @@ object TokenSortedWriter {
           val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
           (fresh ++ sidecars).foreach(f => fs.delete(new Path(f), false))
           dropEmptiedGenerations(fs, fs.makeQualified(p), fresh)
+          dropEmptiedChangeDirs(fs, sidecars)
           throw e
       }
     } finally graft.sources.TokenPruner.invalidateListing(dir)
@@ -580,6 +581,17 @@ object TokenSortedWriter {
       .filter(g => fs.exists(g) && graft.sources.TokenPruner.listDataFiles(fs, g).isEmpty)
       .foreach(fs.delete(_, true))
   }
+
+  /** Remove each `_graft_cdc/cdc-*` dir that held one of `removed` and now
+   *  holds no parquet file: a change-data stage is written through Spark's
+   *  committer, so its `_SUCCESS` marker would otherwise keep it forever. */
+  private[write] def dropEmptiedChangeDirs(
+      fs: org.apache.hadoop.fs.FileSystem, removed: Seq[String]): Unit =
+    removed.map(new Path(_).getParent).distinct
+      .filter(d => d.getName.startsWith("cdc-") && d.getParent.getName == Snapshots.CdcDir)
+      .filter(d => fs.exists(d) &&
+        !fs.listStatus(d).exists(_.getPath.getName.endsWith(".parquet")))
+      .foreach(fs.delete(_, true))
 
   /** Write a single-partition frame as ONE parquet file: into a hidden tmp
    *  dir under `root`, then renamed to `parent/part-<tag>-<uuid>.parquet`
@@ -606,7 +618,9 @@ object TokenSortedWriter {
    * `WriteMode.DELETE_PARTITION` generates `DELETE FROM ks.tbl WHERE pk=?`,
    * `TableSchema.getDeleteStatement():227-238`). Our file-native analog:
    * append the distinct partition-key set as a tombstone table under
-   * `_graft_deletes/`; [[readNormalized]] applies it as a left-anti join.
+   * `_graft_deletes/`; [[readNormalized]] drops the rows it keys inside
+   * the scan task, through a broadcast index of the tombstones (left-anti
+   * joins once they pass the broadcast threshold — [[Tombstones]]).
    * Tombstones carry a writetime so delete-then-reinsert resolves by time.
    *
    * With `rowLevel = true` the tombstone carries the FULL primary key
@@ -684,22 +698,28 @@ object TokenSortedWriter {
    *  1. last-write-wins collapse of multi-version rows by `_graft_writetime`
    *     (the merge-compaction of `CompactionStreamScanner`, S5) — present
    *     whenever appends overlapped;
-   *  2. tombstone purge: conditional left-anti joins against the raw
-   *     `_graft_deletes/` rows — one keyed on the partition key for
-   *     partition and range tombstones, one on the full row key for row
-   *     tombstones — each with the time rule `row.wt <= del.wt` (§2.8;
-   *     delete wins only over rows it is at-or-newer than, like Cassandra
-   *     deletion timestamps; the reference purges inline in its merge,
-   *     `CompactionStreamScanner`). No aggregate over the tombstones;
+   *  2. tombstone purge ([[Tombstones]]) with the time rule `row.wt <=
+   *     del.wt` (§2.8; a delete wins only over rows it is at-or-newer than,
+   *     like Cassandra deletion timestamps). Like the reference, which
+   *     purges inline in its merge (`CompactionStreamScanner`), it runs in
+   *     the scan task: the driver decodes the `_graft_deletes/` rows itself
+   *     (cached per immutable file) into a broadcast key index, and a
+   *     [[graft.functions.TombstoneProbe]] filter drops the rows it kills.
+   *     Tombstone files past `spark.sql.autoBroadcastJoinThreshold` (or
+   *     keys that do not compare as bytes) take conditional left-anti
+   *     joins against the raw rows instead — one keyed on the partition key
+   *     for partition and range tombstones, one on the full row key for row
+   *     tombstones — with the same answer;
    *  3. TTL expiry against a FIXED `nowMicros` (reproducible scans — the
    *     reference pins `nowInSec` per scan, `CompactionStreamScanner:120`).
    *
    * Building the DataFrame runs no Spark job: the table and tombstone
-   * schemas come from cached parquet footers on the driver. Each step is a
-   * plain Catalyst operator (window / join / filter), so pushdown BELOW and
-   * AQE ABOVE both still apply: at 100 TB the LWW is one pk-shuffle, the
-   * tombstone side broadcasts while it is small, and TTL is a pushable
-   * filter.
+   * schemas come from cached parquet footers on the driver, and so do the
+   * probe's tombstone rows. Each step is a plain Catalyst operator (window
+   * / filter, or join on the fallback), so pushdown BELOW and AQE ABOVE
+   * both still apply: at 100 TB the LWW is one pk-shuffle, the purge costs
+   * no job or exchange while the tombstones are small, and TTL is a
+   * pushable filter.
    */
   def readNormalized(
       spark: SparkSession,
@@ -746,41 +766,12 @@ object TokenSortedWriter {
         df, schema.primaryKey, WritetimeCol +: tiebreaks)
     }
 
-    // 2. tombstones — partition-level (pk only), row-level (pk + ck) and
-    // range (pk + ck bounds) coexist in one _graft_deletes dir; a merged
-    // read distinguishes them by which columns are null (ck is part of a
-    // primary key, never legitimately null)
-    tombstones(spark, path).foreach { deletesAll =>
-      // time-scoped tombstones: a PINNED state reconstruction (diffRows'
-      // from-side) must not let deletes that landed AFTER the pin
-      // retro-erase rows the downstream consumer synced before the delete
-      // existed. Unstamped tombstones carry no time and stay in effect.
-      val deletes = tombstonesAsOfMicros match {
-        case Some(h) if deletesAll.columns.contains(WritetimeCol) =>
-          deletesAll.filter(col(WritetimeCol).isNull || col(WritetimeCol) <= h)
-        case _ => deletesAll
-      }
-      val pk = schema.partitionKeys
-      val hasRange = deletes.columns.contains(CkMinCol) || deletes.columns.contains(CkMaxCol)
-      val isRange =
-        if (hasRange) col(CkMinCol).isNotNull || col(CkMaxCol).isNotNull else lit(false)
-      val ckInDels = schema.clusteringKeys.filter(deletes.columns.contains)
-      val isRowLevel =
-        if (ckInDels.isEmpty) lit(false)
-        else ckInDels.map(c => qcol(c).isNotNull).reduce(_ && _) && !isRange
-      // partition and range tombstones key on the partition key; a
-      // partition tombstone is a range with both bounds null
-      val (bounds, inRange) =
-        if (!hasRange) (Nil, lit(true))
-        else {
-          val ck = qcol(schema.clusteringKeys.head)
-          val (lo, hi) = (qcol(s"__del_$CkMinCol"), qcol(s"__del_$CkMaxCol"))
-          (Seq(CkMinCol, CkMaxCol), (lo.isNull || ck >= lo) && (hi.isNull || ck <= hi))
-        }
-      df = antiJoinTombstones(df, deletes.filter(!isRowLevel), pk, bounds, inRange)
-      if (ckInDels.nonEmpty)
-        df = antiJoinTombstones(df, deletes.filter(isRowLevel), pk ++ ckInDels, Nil, lit(true))
-    }
+    // 2. tombstones — partition, row and range tombstones coexist in one
+    // _graft_deletes dir. A PINNED state reconstruction (diffRows' from-side)
+    // passes a horizon: deletes that landed after the pin must not
+    // retro-erase rows a downstream consumer synced before the delete
+    // existed. Unstamped tombstones carry no time and stay in effect.
+    df = Tombstones.purge(spark, df, schema, path, tombstonesAsOfMicros)
 
     // 3. TTL at pinned now
     if (df.columns.contains(ExpiresCol)) {
@@ -790,21 +781,6 @@ object TokenSortedWriter {
     }
 
     if (keepFeatureColumns) df else df.drop(WritetimeCol, ExpiresCol)
-  }
-
-  /** The table's `_graft_deletes` tombstones, or None when the dir holds no
-   *  data file. The one reader of the dir: partition, row and range
-   *  tombstones append with different columns, so the schema is the merged
-   *  footer schema (no Spark job); the listed files are read by name, since
-   *  Spark warns on every read of a `_`-prefixed path. */
-  private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val delPath = new Path(dir, DeletesDir)
-    val fs = delPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val files =
-      try graft.sources.TokenPruner.listDataFiles(fs, delPath).map(_.getPath.toString).toSeq
-      catch { case _: java.io.FileNotFoundException => Nil }
-    if (files.isEmpty) None
-    else Some(graft.sources.FooterSchema.read(spark, files))
   }
 
   /**
@@ -974,7 +950,7 @@ object TokenSortedWriter {
             // they cancel and contribute no candidates)
             val tombs: Option[DataFrame] =
               if (fromTombstoneHorizonMicros.isEmpty) None
-              else tombstones(spark, dir).map(_.select(parts.map(qcol): _*))
+              else Tombstones.frame(spark, dir).map(_.select(parts.map(qcol): _*))
             val all = (touched.toSeq ++ tombs.toSeq).reduceOption(_ unionByName _)
             Some(all.getOrElse(from.select(parts.map(qcol): _*).limit(0))
               .distinct())
@@ -1414,28 +1390,5 @@ object TokenSortedWriter {
       }
     }
     replaced.length.toLong
-  }
-
-  /** Time-aware tombstone purge: one anti-join against the raw tombstone
-   *  rows, equi on `keys`, with `extra` tombstone columns visible to `cond`
-   *  as `__del_<name>`. A tombstone wins over rows it is at-or-newer than
-   *  (Cassandra deletion timestamps); an UNSTAMPED tombstone always wins,
-   *  and so does any tombstone over a row of an unstamped generation;
-   *  without a writetime on the data the rule drops out. Spark picks
-   *  broadcast or sort-merge for the join from the tombstone size. */
-  private def antiJoinTombstones(
-      df: DataFrame, dels: DataFrame, keys: Seq[String], extra: Seq[String],
-      cond: Column): DataFrame = {
-    val hasWt = df.columns.contains(WritetimeCol)
-    val renamed = dels.select((keys ++ extra).map(c => qcol(c).as(s"__del_$c")) ++
-      (if (hasWt) Seq(
-        (if (dels.columns.contains(WritetimeCol)) coalesce(col(WritetimeCol), lit(Long.MaxValue))
-         else lit(Long.MaxValue)).as("__graft_del_wt"))
-       else Nil): _*)
-    val keyEq = keys.map(c => qcol(c) === qcol(s"__del_$c")).reduce(_ && _)
-    val timeRule =
-      if (hasWt) coalesce(col(WritetimeCol), lit(Long.MinValue)) <= col("__graft_del_wt")
-      else lit(true)
-    df.join(renamed, keyEq && cond && timeRule, "left_anti")
   }
 }

@@ -1,9 +1,13 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.read.{Batch, VariantExtraction}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -61,5 +65,32 @@ object ParquetScanBridge {
       Nil,
       Nil,
       Array.empty[VariantExtraction]).toBatch
+  }
+
+  /**
+   * A driver-side decoder of whole parquet files: `(path, length) => rows`,
+   * every row of the file under `schema` (the file's own footer schema; a
+   * field the file lacks reads as null), copied out of the reader's reused
+   * buffers as `UnsafeRow`s. It is Spark's own parquet reader — the one a
+   * scan task runs, vectorized when the schema allows — called on the
+   * calling thread, so decoding launches no Spark job. The function is
+   * safe to call from several threads at once.
+   */
+  def rowDecoder(spark: SparkSession, schema: StructType): ((String, Long)) => Array[InternalRow] = {
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    (file: (String, Long)) => {
+      val (path, length) = file
+      val toUnsafe = UnsafeProjection.create(schema)
+      val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L,
+        length, Array.empty, 0L, length, Map.empty))
+      try rows.map(r => toUnsafe(r).copy(): InternalRow).toArray
+      finally rows match {
+        case c: java.io.Closeable => c.close()
+        case _ => ()
+      }
+    }
   }
 }

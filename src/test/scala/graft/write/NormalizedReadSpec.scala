@@ -349,9 +349,9 @@ class NormalizedReadSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** Two generations (the first unstamped) plus partition, row and range
-   *  tombstones under (k; c1, c2). */
-  private def tombstonedTable(): (CqlSchema, String) = {
+  /** Two generations (the first unstamped) plus, with `tombstones`,
+   *  partition, row and range tombstones under (k; c1, c2). */
+  private def tombstonedTable(tombstones: Boolean = true): (CqlSchema, String) = {
     import spark.implicits._
     val sk = CqlSchema("pt", Seq("k"), Seq("c1", "c2"))
     val dir = Files.createTempDirectory("graft_purge_plan_").toString + "/pt"
@@ -362,24 +362,22 @@ class NormalizedReadSpec extends SparkSpec {
       .toDF("k", "c1", "c2", "v"), sk, dir, SaveMode.Append,
       TokenSortedWriter.WriteConf(numPartitions = 2, keepTokenColumn = true,
         writetimeMicros = Some(2000L)))
-    TokenSortedWriter.writeDeletes(Seq(1L, 2L).toDF("k"), sk, dir, Some(1500L))
-    TokenSortedWriter.writeDeletes(Seq((3L, 1L, 1L), (4L, 2L, 2L)).toDF("k", "c1", "c2"),
-      sk, dir, Some(2500L), rowLevel = true)
-    TokenSortedWriter.writeRangeDeletes(Seq((5L, Some(2L), Option.empty[Long]))
-      .toDF("k", "ck_min", "ck_max"), sk, dir)
+    if (tombstones) {
+      TokenSortedWriter.writeDeletes(Seq(1L, 2L).toDF("k"), sk, dir, Some(1500L))
+      TokenSortedWriter.writeDeletes(Seq((3L, 1L, 1L), (4L, 2L, 2L)).toDF("k", "c1", "c2"),
+        sk, dir, Some(2500L), rowLevel = true)
+      TokenSortedWriter.writeRangeDeletes(Seq((5L, Some(2L), Option.empty[Long]))
+        .toDF("k", "ck_min", "ck_max"), sk, dir)
+    }
     (sk, dir)
   }
 
-  test("readNormalized plans with zero Spark jobs; the tombstone side is raw rows, " +
-      "no shuffle and no aggregate") {
-    val (sk, dir) = tombstonedTable()
-    val (out, jobs) = jobsDuring(TokenSortedWriter.readNormalized(spark, sk, dir))
-    assert(jobs == 0, s"building the normalized read launched $jobs Spark job(s)")
-    // k=1 stays (unstamped rows die under the stamped partition tombstone,
-    // none is newer); k=2 was rewritten at 2000 > 1500 and survives;
-    // k=3 loses one row, k=4's row tombstone at 2500 beats its 2000 rows;
-    // k=5 keeps only c1=1 (unstamped range tombstone)
-    // collect `out` itself, so its adaptive plan below is the final one
+  /** [[tombstonedTable]]'s rows after the purge: k=1 goes (unstamped rows
+   *  die under the stamped partition tombstone, none is newer); k=2 was
+   *  rewritten at 2000 > 1500 and survives; k=3 loses one row, k=4's row
+   *  tombstone at 2500 beats its 2000 rows; k=5 keeps only c1=1 (unstamped
+   *  range tombstone). */
+  private def tombstonedTableRows(out: org.apache.spark.sql.DataFrame): Unit = {
     val got = out.collect()
       .map(r => (r.getAs[Long]("k"), r.getAs[Long]("c1"), r.getAs[Long]("c2"))).toSet
     val all = for (k <- 1L to 20L; c1 <- 1L to 3L; c2 <- 1L to 2L) yield (k, c1, c2)
@@ -388,20 +386,165 @@ class NormalizedReadSpec extends SparkSpec {
         (k == 5L && c1 >= 2L)
     }.toSet
     assert(got == expect)
-    object Helper extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  }
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private def antiJoins(plan: org.apache.spark.sql.execution.SparkPlan) = Plans.collect(plan) {
+    case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+        if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+  }
+
+  /** Runs `body` with the tombstone purge forced onto its join plan: at
+   *  `autoBroadcastJoinThreshold = -1` no tombstone set is small enough
+   *  for the probe. */
+  private def onJoinPath[T](body: => T): T = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  /** The plan that purged `df`'s tombstones: "probe", "join" or "none". */
+  private def purgePath(df: org.apache.spark.sql.DataFrame): String = {
+    val plan = df.queryExecution.optimizedPlan
+    if (plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.functions.TombstoneProbe]))))
+      "probe"
+    else if (plan.exists {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+        j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti
+      case _ => false
+    }) "join"
+    else "none"
+  }
+
+  /** The rows of `read()` under the probe (or, with `probe = false`, the
+   *  default session's own choice of the joins) and under the forced join
+   *  plan, checking each plan was the one taken and no row came twice. */
+  private def onBothPaths(read: () => org.apache.spark.sql.DataFrame,
+      probe: Boolean = true): (Set[org.apache.spark.sql.Row], Set[org.apache.spark.sql.Row]) = {
+    def rows(df: org.apache.spark.sql.DataFrame, path: String) = {
+      assert(purgePath(df) == path, s"expected the $path plan:\n${df.queryExecution.optimizedPlan}")
+      val got = df.collect()
+      assert(got.length == got.toSet.size, s"$path plan: duplicate rows")
+      got.toSet
+    }
+    (rows(read(), if (probe) "probe" else "join"), onJoinPath(rows(read(), "join")))
+  }
+
+  test("readNormalized plans with zero Spark jobs; the probe purges tombstones with no " +
+      "join, no tombstone scan and no job of its own") {
+    val (sk, dir) = tombstonedTable()
+    val (out, jobs) = jobsDuring(TokenSortedWriter.readNormalized(spark, sk, dir))
+    assert(jobs == 0, s"building the normalized read launched $jobs Spark job(s)")
+    assert(purgePath(out) == "probe")
+    // collect `out` itself, so its adaptive plan below is the final one
+    val (_, runJobs) = jobsDuring(tombstonedTableRows(out))
     val plan = out.queryExecution.executedPlan
-    val antiJoins = Helper.collect(plan) {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+    assert(antiJoins(plan).isEmpty, s"no anti-join on the probe plan:\n$plan")
+    val tombstoneSide = Plans.collect(plan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.nodeName
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => b.nodeName
     }
-    assert(antiJoins.size == 2, s"expected a partition/range and a row anti-join:\n$plan")
-    antiJoins.foreach { j =>
-      val side = Helper.collect(j.right) {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.nodeName
-        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a.nodeName
+    assert(tombstoneSide.isEmpty, s"no tombstone scan or broadcast, found $tombstoneSide:\n$plan")
+    // the tombstones cost the read no job: it runs as many as without them
+    val (plainSchema, plain) = tombstonedTable(tombstones = false)
+    val (_, plainJobs) = jobsDuring(
+      TokenSortedWriter.readNormalized(spark, plainSchema, plain).collect())
+    assert(runJobs == plainJobs, s"$runJobs jobs with tombstones, $plainJobs without")
+  }
+
+  test("the join plan, forced by autoBroadcastJoinThreshold=-1: zero Spark jobs to build, " +
+      "a partition/range and a row anti-join over raw tombstone rows") {
+    val (sk, dir) = tombstonedTable()
+    onJoinPath {
+      val (out, jobs) = jobsDuring(TokenSortedWriter.readNormalized(spark, sk, dir))
+      assert(jobs == 0, s"building the normalized read launched $jobs Spark job(s)")
+      tombstonedTableRows(out)
+      val plan = out.queryExecution.executedPlan
+      val joins = antiJoins(plan)
+      assert(joins.size == 2, s"expected a partition/range and a row anti-join:\n$plan")
+      // with no broadcast allowed the joins sort-merge, so the tombstone
+      // side is shuffled; it is never aggregated
+      joins.foreach { j =>
+        val side = Plans.collect(j.right) {
+          case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a.nodeName
+        }
+        assert(side.isEmpty, s"tombstone side must be raw rows, found $side:\n$plan")
       }
-      assert(side.isEmpty, s"tombstone side must be raw rows, found $side:\n$plan")
     }
+  }
+
+  test("past 32 tombstone files the probe plan still builds with zero Spark jobs and " +
+      "purges with none of its own") {
+    import spark.implicits._
+    def table(): String = {
+      val dir = freshDir()
+      TokenSortedWriter.write((1L to 100L).map(k => (k, s"v_$k")).toDF("k", "v"), schema, dir,
+        SaveMode.Append, TokenSortedWriter.WriteConf(numPartitions = 2,
+          writetimeMicros = Some(1000L)))
+      dir
+    }
+    val (dir, plain) = (table(), table())
+    (1L to 40L).foreach(k =>
+      TokenSortedWriter.writeDeletes(Seq(k).toDF("k"), schema, dir, Some(2000L)))
+    val files = Tombstones.files(spark, dir).size
+    assert(files > 32, s"only $files tombstone files")
+    val (out, jobs) = jobsDuring(TokenSortedWriter.readNormalized(spark, schema, dir))
+    assert(jobs == 0, s"building the normalized read launched $jobs Spark job(s)")
+    val (n, runJobs) = jobsDuring(out.count())
+    assert(n == 60L)
+    val (_, plainJobs) = jobsDuring(TokenSortedWriter.readNormalized(spark, schema, plain).count())
+    assert(runJobs == plainJobs, s"$runJobs jobs with $files tombstone files, $plainJobs without")
+  }
+
+  test("probe and joins agree: an int tombstone key on a bigint pk (joins only), " +
+      "string ck ranges, dotted keys, unstamped tombstones") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    // an int-typed tombstone key cannot compare as the bigint pk's bytes:
+    // both settings take the joins, with the same answer
+    val ik = freshDir()
+    TokenSortedWriter.write((1L to 10L).map(k => (k, s"v_$k")).toDF("k", "v"), schema, ik,
+      SaveMode.Append, TokenSortedWriter.WriteConf(writetimeMicros = Some(1000L)))
+    TokenSortedWriter.writeDeletes(Seq(3, 5).toDF("k"), schema, ik, Some(2000L))
+    val (ikDefault, ikJoin) = onBothPaths(
+      () => TokenSortedWriter.readNormalized(spark, schema, ik), probe = false)
+    assert(ikDefault == ikJoin && ikJoin.map(_.getLong(0)) == (1L to 10L).toSet -- Set(3L, 5L))
+
+    // string clustering key: inclusive bounds, null = unbounded; the
+    // tombstones are unstamped, so they kill every version of their keys
+    val sk = CqlSchema("sr", Seq("k"), Seq("c"))
+    val sr = Files.createTempDirectory("graft_str_range_").toString + "/sr"
+    val cs = ('a' to 'j').map(_.toString)
+    val base = for (k <- 1L to 4L; c <- cs) yield (k, c, s"$k$c")
+    TokenSortedWriter.write(base.toDF("k", "c", "v"), sk, sr, SaveMode.Append,
+      TokenSortedWriter.WriteConf(numPartitions = 2, writetimeMicros = Some(1000L)))
+    TokenSortedWriter.write(Seq((1L, "d", "new")).toDF("k", "c", "v"), sk, sr, SaveMode.Append,
+      TokenSortedWriter.WriteConf(numPartitions = 1, writetimeMicros = Some(9000L)))
+    TokenSortedWriter.writeRangeDeletes(Seq((1L, Some("c"), Some("f")), (2L, None, Some("b")),
+      (3L, Some("h"), None)).toDF("k", "ck_min", "ck_max"), sk, sr)
+    TokenSortedWriter.writeDeletes(Seq((4L, "e")).toDF("k", "c"), sk, sr, rowLevel = true)
+    val (srProbe, srJoin) = onBothPaths(
+      () => TokenSortedWriter.readNormalized(spark, sk, sr).select("k", "c"))
+    val srExpect = base.collect {
+      case (k, c, _) if !(k == 1L && c >= "c" && c <= "f") && !(k == 2L && c <= "b") &&
+        !(k == 3L && c >= "h") && !(k == 4L && c == "e") => Row(k, c)
+    }.toSet
+    assert(srProbe == srExpect && srJoin == srExpect)
+
+    // dotted and spaced key names, partition and row tombstones
+    val qk = CqlSchema("exotic", Seq("user id"), Seq("Order.Key"))
+    val qd = Files.createTempDirectory("graft_dotted_").toString + "/q"
+    def mk(rows: Seq[(Long, Long, String)]) =
+      rows.toDF("a", "b", "v").select(col("a").as("user id"), col("b").as("Order.Key"), col("v"))
+    TokenSortedWriter.write(mk(for (a <- 1L to 4L; b <- 1L to 3L) yield (a, b, s"$a.$b")), qk, qd,
+      SaveMode.Append, TokenSortedWriter.WriteConf(numPartitions = 2, writetimeMicros = Some(100L)))
+    TokenSortedWriter.writeDeletes(mk(Seq((2L, 0L, ""))), qk, qd, Some(300L))
+    TokenSortedWriter.writeDeletes(mk(Seq((3L, 2L, ""))), qk, qd, Some(300L), rowLevel = true)
+    val (qProbe, qJoin) = onBothPaths(() => TokenSortedWriter.readNormalized(spark, qk, qd)
+      .select(col("`user id`"), col("`Order.Key`")))
+    val qExpect = (for (a <- 1L to 4L; b <- 1L to 3L if a != 2L && !(a == 3L && b == 2L))
+      yield Row(a, b)).toSet
+    assert(qProbe == qExpect && qJoin == qExpect)
   }
 
   test("a column added by a later write shows in the next readNormalized, " +
@@ -483,6 +626,7 @@ class NormalizedReadSpec extends SparkSpec {
 
   test("property: the tombstone purge equals a plain-Scala model (kinds, stamps, " +
       "unstamped generations, horizons, ck prefixes, no-writetime tables)") {
+    // every case runs on both purge plans: the probe and the forced joins
     import spark.implicits._
     // a tombstone: partition when every key column past k and both bounds
     // are None, range when a bound is set, row otherwise
@@ -548,12 +692,13 @@ class NormalizedReadSpec extends SparkSpec {
         val inForce = tombs.filter(t => horizon.forall(h => t.wt.forall(_ <= h)))
         val expect = live.filterNot(r => inForce.exists(kills(r, _)))
           .map(r => (r.k, r.c1, r.c2, r.v)).toSet
-        val got = TokenSortedWriter.readNormalized(spark, sk, dir,
-          tombstonesAsOfMicros = horizon).select("k", "c1", "c2", "v")
-          .as[(Long, Long, Long, String)].collect()
-        assert(got.length == got.toSet.size, s"seed $seed horizon $horizon: duplicate rows")
-        assert(got.toSet == expect, s"seed $seed horizon $horizon: " +
-          s"missing ${expect -- got.toSet}, extra ${got.toSet -- expect}")
+        val (viaProbe, viaJoins) = onBothPaths(() => TokenSortedWriter.readNormalized(spark,
+          sk, dir, tombstonesAsOfMicros = horizon).select("k", "c1", "c2", "v"))
+        for ((path, rows) <- Seq("probe" -> viaProbe, "join" -> viaJoins)) {
+          val got = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+          assert(got == expect, s"seed $seed horizon $horizon $path: " +
+            s"missing ${expect -- got}, extra ${got -- expect}")
+        }
       }
     }
   }

@@ -166,6 +166,23 @@ class PublishSpec extends SparkSpec {
       () => spark.sql(s"INSERT INTO pub.db.$name SELECT id, 'c' FROM range(1000, 1010)")
     val cow = table("cow", ", changeFeedCow 'true'")
     losesRace(cow, insert("cow"))(_ => spark.sql("DELETE FROM pubhk.db.cow WHERE id % 3 = 0"))
+    val cdcRoot = new Path(cow, Snapshots.CdcDir)
+    def changeDirs(): Seq[String] =
+      if (!fsOf(cow).exists(cdcRoot)) Nil
+      else fsOf(cow).listStatus(cdcRoot).map(_.getPath.getName).filter(_.startsWith("cdc-")).toSeq
+    assert(changeDirs().isEmpty, s"the lost race's change-data dir stays: ${changeDirs()}")
+    // vacuumOrphans removes a cdc-* dir once its last orphan goes
+    val stale = new Path(cdcRoot, "cdc-stale/_SUCCESS")
+    fsOf(cow).create(stale).close()
+    fsOf(cow).setTimes(stale, 0L, -1L)
+    assert(Snapshots.vacuumOrphans(spark, cow, olderThanMs = 0L).exists(_.endsWith("cdc-stale/_SUCCESS")))
+    assert(changeDirs().isEmpty, s"vacuumOrphans left ${changeDirs()}")
+    // and vacuum drops the dir of the change data it expires
+    spark.sql("DELETE FROM pub.db.cow WHERE id = 1")
+    assert(changeDirs().size == 1)
+    insert("cow")()
+    Snapshots.vacuum(spark, cow, keepLast = 1)
+    assert(changeDirs().isEmpty, s"vacuum left ${changeDirs()}")
     val mor = table("mor", ", dmlMode 'merge-on-read'")
     losesRace(mor, insert("mor"))(_ => spark.sql("DELETE FROM pubhk.db.mor WHERE id % 3 = 0"))
   }
