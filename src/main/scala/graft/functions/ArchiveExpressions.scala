@@ -1,10 +1,10 @@
 package graft.functions
 
+import graft.functions.Bytes.{leU16, leU32, leU64}
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
@@ -247,50 +247,16 @@ object TarHeaders {
 /** `tar_member(blob, name)` → binary payload of a tar member; null when
  *  absent or the bytes are not a tar. */
 case class TarMemberExpr(child: Expression, name: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
+    extends BlobDecoder with BinaryLike[Expression] {
   override def left: Expression = child
   override def right: Expression = name
+  override protected def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (child.dataType, name.dataType) match {
-      case (BinaryType, StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"tar_member needs (binary, string), got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val b = child.eval(input)
-    val n = name.eval(input)
-    if (b == null || n == null) null
-    else TarHeaders.memberOrNull(b.asInstanceOf[Array[Byte]],
-      n.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = child.genCode(ctx)
-    val n = name.genCode(ctx)
-    val cls = TarHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${b.code}
-      |${n.code}
-      |byte[] ${ev.value} = null;
-      |boolean ${ev.isNull} = ${b.isNull} || ${n.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.memberOrNull(${b.value}, ${n.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any =
+    TarHeaders.memberOrNull(blob(in), in(1).asInstanceOf[UTF8String])
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(child = newLeft, name = newRight)
-
   override def prettyName: String = "tar_member"
 }
 
@@ -302,42 +268,13 @@ object TarMemberExpr {
 
 /** `tar_entries(blob)` → array<struct<name, size, offset, type>>; null
  *  for non-tar bytes, truncated members end the listing. */
-case class TarEntriesExpr(child: Expression) extends UnaryExpression {
-
+case class TarEntriesExpr(child: Expression)
+    extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType =
     ArrayType(TarHeaders.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"tar_entries needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else TarHeaders.entriesArray(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = TarHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.entriesArray(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = TarHeaders.entriesArray(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "tar_entries"
 }
 
@@ -358,14 +295,6 @@ object ZipHeaders {
       size: Long, localOff: Long)
 
   private[graft] val MaxEntries = 1 << 20
-
-  private[graft] def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24)
-  private def leU64(b: Array[Byte], i: Int): Long =
-    leU32(b, i) | (leU32(b, i + 4) << 32)
 
   private[graft] final case class Eocd(count: Long, cdOff: Long, cdEnd: Long)
 
@@ -639,42 +568,13 @@ object ZipHeaders {
 
 /** `zip_entries(blob)` → array<struct<name, method, comp_size, size>>;
  *  null for non-zip bytes. */
-case class ZipEntriesExpr(child: Expression) extends UnaryExpression {
-
+case class ZipEntriesExpr(child: Expression)
+    extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType =
     ArrayType(ZipHeaders.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"zip_entries needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else ZipHeaders.entriesArray(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = ZipHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.entriesArray(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = ZipHeaders.entriesArray(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "zip_entries"
 }
 
@@ -687,49 +587,16 @@ object ZipEntriesExpr {
  *  member — the npz path: `npy_meta(zip_stored_member(blob, 'arr_0.npy'))`.
  *  Null when the member is absent, compressed, or the headers lie. */
 case class ZipStoredMemberExpr(child: Expression, name: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
+    extends BlobDecoder with BinaryLike[Expression] {
   override def left: Expression = child
   override def right: Expression = name
+  override protected def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (child.dataType, name.dataType) match {
-      case (BinaryType, StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"zip_stored_member needs (binary, string), got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val b = child.eval(input)
-    val n = name.eval(input)
-    if (b == null || n == null) null
-    else ZipHeaders.memberOrNull(b.asInstanceOf[Array[Byte]], n.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = child.genCode(ctx)
-    val n = name.genCode(ctx)
-    val cls = ZipHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${b.code}
-      |${n.code}
-      |byte[] ${ev.value} = null;
-      |boolean ${ev.isNull} = ${b.isNull} || ${n.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.memberOrNull(${b.value}, ${n.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any =
+    ZipHeaders.memberOrNull(blob(in), in(1).asInstanceOf[UTF8String])
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(child = newLeft, name = newRight)
-
   override def prettyName: String = "zip_stored_member"
 }
 
@@ -746,52 +613,19 @@ object ZipStoredMemberExpr {
  *  or the headers/stream lie (inflated length must equal the declared
  *  size exactly). */
 case class ZipMemberExpr(child: Expression, name: Expression, maxBytes: Long)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BlobDecoder with BinaryLike[Expression] {
 
   require(maxBytes > 0, "maxBytes must be positive")
 
   override def left: Expression = child
   override def right: Expression = name
+  override protected def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (child.dataType, name.dataType) match {
-      case (BinaryType, StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"zip_member needs (binary, string), got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val b = child.eval(input)
-    val n = name.eval(input)
-    if (b == null || n == null) null
-    else ZipHeaders.memberAnyOrNull(
-      b.asInstanceOf[Array[Byte]], n.asInstanceOf[UTF8String], maxBytes)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = child.genCode(ctx)
-    val n = name.genCode(ctx)
-    val cls = ZipHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${b.code}
-      |${n.code}
-      |byte[] ${ev.value} = null;
-      |boolean ${ev.isNull} = ${b.isNull} || ${n.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.memberAnyOrNull(${b.value}, ${n.value}, ${maxBytes}L);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any =
+    ZipHeaders.memberAnyOrNull(blob(in), in(1).asInstanceOf[UTF8String], maxBytes)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(child = newLeft, name = newRight)
-
   override def prettyName: String = "zip_member"
 }
 
@@ -844,43 +678,15 @@ object GzipBytes {
 
 /** `gunzip(blob, maxBytes)` → decompressed binary (first gzip member),
  *  null for non-gzip bytes, truncation, or output past `maxBytes`. */
-case class GunzipExpr(child: Expression, maxBytes: Int) extends UnaryExpression {
+case class GunzipExpr(child: Expression, maxBytes: Int)
+    extends BlobDecoder with UnaryLike[Expression] {
 
   require(maxBytes > 0, "maxBytes must be positive")
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"gunzip needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else GzipBytes.gunzip(v.asInstanceOf[Array[Byte]], maxBytes)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = GzipBytes.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |byte[] ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.gunzip(${c.value}, $maxBytes);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = GzipBytes.gunzip(blob(in), maxBytes)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "gunzip"
 }
 
@@ -935,43 +741,15 @@ object ZstdBytes {
 /** `zunstd(blob, maxBytes)` → decompressed binary of a zstd frame
  *  sequence; null for non-zstd bytes, truncation, or output past
  *  `maxBytes` — the zstd twin of [[GunzipExpr]]. */
-case class ZunstdExpr(child: Expression, maxBytes: Int) extends UnaryExpression {
+case class ZunstdExpr(child: Expression, maxBytes: Int)
+    extends BlobDecoder with UnaryLike[Expression] {
 
   require(maxBytes > 0, "maxBytes must be positive")
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"zunstd needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else ZstdBytes.zunstd(v.asInstanceOf[Array[Byte]], maxBytes)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = ZstdBytes.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |byte[] ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.zunstd(${c.value}, $maxBytes);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = ZstdBytes.zunstd(blob(in), maxBytes)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "zunstd"
 }
 
@@ -1064,59 +842,8 @@ object ArchiveCodec {
    *  record + locator (sentinel classic fields). */
   def zipStored(members: Seq[(String, Array[Byte])],
       comment: Array[Byte] = Array.emptyByteArray,
-      zip64: Boolean = false): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    def le64(v: Long): Unit = { le32(v & 0xffffffffL); le32(v >>> 32) }
-    val crc = new java.util.zip.CRC32
-    val locals = members.map { case (name, data) =>
-      val off = out.size()
-      val nb = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      crc.reset(); crc.update(data)
-      out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(20); le16(0); le16(0); le16(0); le16(0) // ver/flags/method/time/date
-      le32(crc.getValue); le32(data.length); le32(data.length)
-      le16(nb.length); le16(0)
-      out.write(nb); out.write(data)
-      (name, nb, data, off, crc.getValue)
-    }
-    val cdStart = out.size()
-    for ((_, nb, data, off, c) <- locals) {
-      out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(20); le16(if (zip64) 45 else 20); le16(0); le16(0); le16(0); le16(0)
-      le32(c); le32(data.length); le32(data.length)
-      le16(nb.length); le16(if (zip64) 12 else 0); le16(0) // name/extra/comment
-      le16(0); le16(0); le32(0) // disk/int attrs/ext attrs
-      if (zip64) le32(0xffffffffL) else le32(off)
-      out.write(nb)
-      if (zip64) { le16(1); le16(8); le64(off) } // zip64 extra: offset only
-    }
-    val cdSize = out.size() - cdStart
-    if (!zip64) {
-      out.write('P'); out.write('K'); out.write(5); out.write(6)
-      le16(0); le16(0); le16(locals.length); le16(locals.length)
-      le32(cdSize); le32(cdStart); le16(comment.length)
-      out.write(comment)
-    } else {
-      val z = out.size()
-      out.write('P'); out.write('K'); out.write(6); out.write(6)
-      le64(44) // record size minus first 12 bytes
-      le16(45); le16(45); le32(0); le32(0)
-      le64(locals.length); le64(locals.length)
-      le64(cdSize); le64(cdStart)
-      out.write('P'); out.write('K'); out.write(6); out.write(7) // locator
-      le32(0); le64(z); le32(1)
-      out.write('P'); out.write('K'); out.write(5); out.write(6)
-      le16(0); le16(0); le16(0xffff); le16(0xffff)
-      le32(0xffffffffL); le32(0xffffffffL); le16(comment.length)
-      out.write(comment)
-    }
-    out.toByteArray
-  }
+      zip64: Boolean = false): Array[Byte] =
+    zip(members.map { case (n, d) => (n, d, 0) }, comment, zip64)
 
   /** Mixed-method zip: per-member method 0 (stored) or 8 (raw-deflated) —
    *  the `numpy.savez_compressed` layout, whose npy members all deflate.
@@ -1127,52 +854,19 @@ object ArchiveCodec {
     // listing a validating reader then rejects — fail at the writer
     require(members.size <= 0xffff,
       s"zipMixed writes classic (non-zip64) archives: ${members.size} members exceed 65535")
+    zip(members, comment, zip64 = false)
+  }
+
+  private def zip(members: Seq[(String, Array[Byte], Int)], comment: Array[Byte],
+      zip64: Boolean): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    val crc = new java.util.zip.CRC32
-    val locals = members.map { case (name, data, method) =>
+    val w = new ZipWriter(out)
+    for ((name, data, method) <- members) {
       require(method == 0 || method == 8, s"method $method unsupported")
-      val off = out.size()
-      val nb = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      crc.reset(); crc.update(data)
-      val body =
-        if (method == 0) data
-        else {
-          val d = new java.util.zip.Deflater(
-            java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-          d.setInput(data); d.finish()
-          val bo = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          while (!d.finished()) bo.write(buf, 0, d.deflate(buf))
-          d.end()
-          bo.toByteArray
-        }
-      out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(20); le16(0); le16(method); le16(0); le16(0)
-      le32(crc.getValue); le32(body.length); le32(data.length)
-      le16(nb.length); le16(0)
-      out.write(nb); out.write(body)
-      (nb, data.length, body.length, method, off, crc.getValue)
+      w.add(name.getBytes(java.nio.charset.StandardCharsets.UTF_8), data,
+        if (method == 8) ZipWriter.deflateRaw(data) else data, method)
     }
-    val cdStart = out.size()
-    for ((nb, size, compSize, method, off, c) <- locals) {
-      out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(20); le16(20); le16(0); le16(method); le16(0); le16(0)
-      le32(c); le32(compSize); le32(size)
-      le16(nb.length); le16(0); le16(0)
-      le16(0); le16(0); le32(0)
-      le32(off)
-      out.write(nb)
-    }
-    val cdSize = out.size() - cdStart
-    out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(0); le16(0); le16(locals.length); le16(locals.length)
-    le32(cdSize); le32(cdStart); le16(comment.length)
-    out.write(comment)
+    w.finish(comment, zip64)
     out.toByteArray
   }
 
@@ -1188,8 +882,7 @@ object ArchiveCodec {
     require(nibble >= 0 && nibble <= 15)
     val out = new Array[Byte](8 + body.length)
     out(0) = (0x50 | nibble).toByte; out(1) = 0x2a; out(2) = 0x4d; out(3) = 0x18
-    var k = 0
-    while (k < 4) { out(4 + k) = ((body.length >> (8 * k)) & 0xff).toByte; k += 1 }
+    Bytes.putLe32(out, 4, body.length)
     System.arraycopy(body, 0, out, 8, body.length)
     out
   }
@@ -1200,18 +893,99 @@ object ArchiveCodec {
     out.write(if (withName) 8 else 0)
     out.write(Array[Byte](0, 0, 0, 0, 0, 0)) // mtime/xfl/os
     if (withName) { out.write("fixture.bin".getBytes); out.write(0) }
-    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-    d.setInput(data); d.finish()
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
+    out.write(ZipWriter.deflateRaw(data))
     val crc = new java.util.zip.CRC32
     crc.update(data)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    le32(crc.getValue); le32(data.length.toLong & 0xffffffffL)
+    out.write(Bytes.le32(crc.getValue)); out.write(Bytes.le32(data.length.toLong))
     out.toByteArray
+  }
+}
+
+/** Streaming zip writer — the one encoder behind the fixture zips and the
+ *  `writeBundles` shard parts. [[add]] writes a member's local header and
+ *  body at once and keeps its central-directory record; [[finish]] writes
+ *  the central directory and the end record: classic, or with `zip64` the
+ *  zip64 record + locator chain, each central entry's local offset moved
+ *  into a 0x0001 extra field. No data descriptors and zeroed timestamps,
+ *  so the bytes are a pure function of the members. */
+final class ZipWriter(out: java.io.OutputStream) {
+  import Bytes.{putLe16, putLe32, putLe64}
+  import ZipWriter.Central
+
+  private val central = scala.collection.mutable.ArrayBuffer.empty[Central]
+  private val crc32 = new java.util.zip.CRC32
+  private var off = 0L
+
+  /** Bytes written so far (before [[finish]]: local headers and bodies). */
+  def offset: Long = off
+  def members: Int = central.size
+
+  private def write(b: Array[Byte]): Unit = { out.write(b); off += b.length }
+
+  /** One member: `body` is `data` itself for method 0 (stored) or
+   *  [[ZipWriter.deflateRaw]]`(data)` for method 8 (deflated). */
+  def add(name: Array[Byte], data: Array[Byte], body: Array[Byte], method: Int): Unit = {
+    crc32.reset(); crc32.update(data)
+    val h = new Array[Byte](30) // version 20; flags, time, date, extra: 0
+    putLe32(h, 0, 0x04034b50); putLe16(h, 4, 20); putLe16(h, 8, method)
+    putLe32(h, 14, crc32.getValue.toInt); putLe32(h, 18, body.length)
+    putLe32(h, 22, data.length); putLe16(h, 26, name.length)
+    central += Central(name, crc32.getValue, body.length, data.length, method, off)
+    write(h); write(name); write(body)
+  }
+
+  def finish(comment: Array[Byte] = Array.emptyByteArray, zip64: Boolean = false): Unit = {
+    val cdStart = off
+    for (c <- central) {
+      val h = new Array[Byte](46) // flags, time, date, comment, disk, attrs: 0
+      putLe32(h, 0, 0x02014b50); putLe16(h, 4, 20); putLe16(h, 6, if (zip64) 45 else 20)
+      putLe16(h, 10, c.method); putLe32(h, 16, c.crc.toInt)
+      putLe32(h, 20, c.compSize); putLe32(h, 24, c.size); putLe16(h, 28, c.name.length)
+      putLe16(h, 30, if (zip64) 12 else 0)
+      putLe32(h, 42, if (zip64) -1 else c.localOff.toInt)
+      write(h); write(c.name)
+      if (zip64) { // extra 0x0001, 8 bytes: the local offset
+        val x = new Array[Byte](12)
+        putLe16(x, 0, 1); putLe16(x, 2, 8); putLe64(x, 4, c.localOff)
+        write(x)
+      }
+    }
+    val cdSize = off - cdStart
+    val eocd = new Array[Byte](22)
+    putLe32(eocd, 0, 0x06054b50); putLe16(eocd, 20, comment.length)
+    if (!zip64) {
+      putLe16(eocd, 8, central.size); putLe16(eocd, 10, central.size)
+      putLe32(eocd, 12, cdSize.toInt); putLe32(eocd, 16, cdStart.toInt)
+    } else {
+      val rec = new Array[Byte](56) // zip64 end record; disks 0
+      putLe32(rec, 0, 0x06064b50); putLe64(rec, 4, 44)
+      putLe16(rec, 12, 45); putLe16(rec, 14, 45)
+      putLe64(rec, 24, central.size); putLe64(rec, 32, central.size)
+      putLe64(rec, 40, cdSize); putLe64(rec, 48, cdStart)
+      val loc = new Array[Byte](20) // locator: disk 0, record offset, 1 disk
+      putLe32(loc, 0, 0x07064b50); putLe64(loc, 8, off); putLe32(loc, 16, 1)
+      write(rec); write(loc)
+      putLe32(eocd, 8, -1); putLe32(eocd, 12, -1); putLe32(eocd, 16, -1)
+    }
+    write(eocd); write(comment)
+  }
+}
+
+object ZipWriter {
+
+  private final case class Central(name: Array[Byte], crc: Long, compSize: Int,
+      size: Int, method: Int, localOff: Long)
+
+  /** Raw (no zlib wrapper) deflate at the default level — the body of a
+   *  method-8 zip member and of a gzip member. */
+  def deflateRaw(data: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+    try {
+      d.setInput(data); d.finish()
+      val out = new java.io.ByteArrayOutputStream(math.max(64, data.length / 2))
+      val buf = new Array[Byte](8192)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.end()
   }
 }

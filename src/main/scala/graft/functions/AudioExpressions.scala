@@ -1,10 +1,11 @@
 package graft.functions
 
+import graft.functions.Bytes.{leU16, leU32, putLe16, putLe32}
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
 
@@ -24,11 +25,6 @@ object AudioHeaders {
       channels: Int, sampleRate: Int, bitsPerSample: Int,
       nFrames: Long, durationMs: Long)
 
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24)
   private def tag(b: Array[Byte], i: Int, s: String): Boolean =
     b(i) == s.charAt(0) && b(i + 1) == s.charAt(1) &&
       b(i + 2) == s.charAt(2) && b(i + 3) == s.charAt(3)
@@ -82,41 +78,11 @@ object AudioHeaders {
 /** `audio_meta(blob)` → struct(channels, sample_rate, bits, n_frames,
  *  duration_ms), null for non-WAV bytes. Same codegen shape as
  *  [[ImageDims]]. */
-case class AudioMeta(child: Expression) extends UnaryExpression {
-
+case class AudioMeta(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = AudioHeaders.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"audio_meta needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else AudioHeaders.parseRow(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = AudioHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.parseRow(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = AudioHeaders.parseRow(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "audio_meta"
 }
 
@@ -136,11 +102,6 @@ object AudioMeta {
  */
 object AudioSamples {
 
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24)
   private def tag(b: Array[Byte], i: Int, s: String): Boolean =
     b(i) == s.charAt(0) && b(i + 1) == s.charAt(1) &&
       b(i + 2) == s.charAt(2) && b(i + 3) == s.charAt(3)
@@ -257,13 +218,10 @@ object AudioFingerprint {
 }
 
 /** `audio_ahash(blob)` → 64-bit energy-envelope fingerprint (long), null
- *  for non-PCM16 bytes. Shares the [[PerceptualHash]] expression shape
- *  with the image hashes. */
-case class AudioAHash(child: Expression) extends PerceptualHash {
-  override protected def host: AnyRef = AudioFingerprint
-  override protected def method: String = "ahash64"
-  override protected def compute(b: Array[Byte]): java.lang.Long =
-    AudioFingerprint.ahash64(b)
+ *  for non-PCM16 bytes, like the image hashes. */
+case class AudioAHash(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
+  override def dataType: DataType = LongType
+  override def decode(in: Array[Any]): Any = AudioFingerprint.ahash64(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "audio_ahash"
@@ -348,11 +306,9 @@ object AudioSpectral {
  *  for non-PCM16 bytes. Nibble-packed, so near-dup mining feeds the same
  *  [[graft.operators.Dedup.hammingPairs]] machinery (one window's bin
  *  change flips ≤ 3 bits). */
-case class AudioSHash(child: Expression) extends PerceptualHash {
-  override protected def host: AnyRef = AudioSpectral
-  override protected def method: String = "shash64"
-  override protected def compute(b: Array[Byte]): java.lang.Long =
-    AudioSpectral.shash64(b)
+case class AudioSHash(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
+  override def dataType: DataType = LongType
+  override def decode(in: Array[Any]): Any = AudioSpectral.shash64(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "audio_shash"
@@ -427,7 +383,8 @@ object AudioSegments {
  *  array<struct<start_ms, end_ms>> of voiced segments; see
  *  [[AudioSegments]]. */
 case class AudioSegmentsExpr(child: Expression, silenceBelow: Int,
-    minSilenceMs: Int, maxSegments: Int) extends UnaryExpression {
+    minSilenceMs: Int, maxSegments: Int)
+    extends BlobDecoder with UnaryLike[Expression] {
 
   require(silenceBelow > 0 && minSilenceMs > 0 &&
     maxSegments > 0 && maxSegments <= 1000000,
@@ -435,41 +392,10 @@ case class AudioSegmentsExpr(child: Expression, silenceBelow: Int,
 
   override def dataType: DataType =
     ArrayType(AudioSegments.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"audio_segments needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else AudioSegments.segmentsArray(
-      v.asInstanceOf[Array[Byte]], silenceBelow, minSilenceMs, maxSegments)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = AudioSegments.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.segmentsArray(${c.value}, $silenceBelow,
-      |    $minSilenceMs, $maxSegments);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any =
+    AudioSegments.segmentsArray(blob(in), silenceBelow, minSilenceMs, maxSegments)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "audio_segments"
 }
 
@@ -483,42 +409,12 @@ object AudioSegmentsExpr {
 /** `audio_stats(blob, silenceBelow)` → struct(n_samples, peak, sum_sq,
  *  n_clipped, n_silent) over 16-bit PCM samples; null for non-PCM16 WAV
  *  or foreign bytes. Same codegen shape as [[AudioMeta]]. */
-case class AudioStats(child: Expression, silenceBelow: Int) extends UnaryExpression {
-
+case class AudioStats(child: Expression, silenceBelow: Int)
+    extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = AudioSamples.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"audio_stats needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else AudioSamples.statsRow(v.asInstanceOf[Array[Byte]], silenceBelow)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = AudioSamples.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.statsRow(${c.value}, $silenceBelow);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = AudioSamples.statsRow(blob(in), silenceBelow)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "audio_stats"
 }
 
@@ -533,19 +429,14 @@ object AudioCodec {
   def encodeWavPcm16(sampleRate: Int, channels: Int, samples: Array[Int]): Array[Byte] = {
     val dataSize = samples.length * 2
     val b = new Array[Byte](44 + dataSize)
-    def le16(i: Int, v: Int): Unit = { b(i) = v.toByte; b(i + 1) = (v >>> 8).toByte }
-    def le32(i: Int, v: Int): Unit = {
-      b(i) = v.toByte; b(i + 1) = (v >>> 8).toByte
-      b(i + 2) = (v >>> 16).toByte; b(i + 3) = (v >>> 24).toByte
-    }
     def t(i: Int, s: String): Unit = { var k = 0; while (k < 4) { b(i + k) = s.charAt(k).toByte; k += 1 } }
-    t(0, "RIFF"); le32(4, 36 + dataSize); t(8, "WAVE")
-    t(12, "fmt "); le32(16, 16); le16(20, 1); le16(22, channels)
-    le32(24, sampleRate); le32(28, sampleRate * channels * 2)
-    le16(32, channels * 2); le16(34, 16)
-    t(36, "data"); le32(40, dataSize)
+    t(0, "RIFF"); putLe32(b, 4, 36 + dataSize); t(8, "WAVE")
+    t(12, "fmt "); putLe32(b, 16, 16); putLe16(b, 20, 1); putLe16(b, 22, channels)
+    putLe32(b, 24, sampleRate); putLe32(b, 28, sampleRate * channels * 2)
+    putLe16(b, 32, channels * 2); putLe16(b, 34, 16)
+    t(36, "data"); putLe32(b, 40, dataSize)
     var k = 0
-    while (k < samples.length) { le16(44 + 2 * k, samples(k) & 0xffff); k += 1 }
+    while (k < samples.length) { putLe16(b, 44 + 2 * k, samples(k) & 0xffff); k += 1 }
     b
   }
 }

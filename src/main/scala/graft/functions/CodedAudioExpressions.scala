@@ -1,10 +1,11 @@
 package graft.functions
 
+import graft.functions.Bytes.beU32
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
 
@@ -56,10 +57,6 @@ object Mp3Headers {
 
   /** How far past the ID3 tag (or file start) to scan for the first sync. */
   private val MaxSyncScan = 1 << 16
-
-  private def beU32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
 
   /** Decoded fields of one frame header, or null if the 4 bytes at `i`
    *  are not a valid frame header. */
@@ -215,41 +212,11 @@ object Mp3Headers {
 
 /** `mp3_meta(blob)` → struct(version, layer, bitrate_kbps, sample_rate,
  *  channels, frames, duration_ms, vbr); null for non-MPEG-audio bytes. */
-case class Mp3MetaExpr(child: Expression) extends UnaryExpression {
-
+case class Mp3MetaExpr(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = Mp3Headers.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"mp3_meta needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else Mp3Headers.parseRow(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = Mp3Headers.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.parseRow(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = Mp3Headers.parseRow(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "mp3_meta"
 }
 
@@ -289,9 +256,7 @@ object FlacHeaders {
           ((b(p + 12) & 0xff) >> 4)
         val channels = ((b(p + 12) >> 1) & 7) + 1
         val bits = (((b(p + 12) & 1) << 4) | ((b(p + 13) & 0xff) >> 4)) + 1
-        val total = ((b(p + 13) & 0xfL) << 32) |
-          ((b(p + 14) & 0xffL) << 24) | ((b(p + 15) & 0xffL) << 16) |
-          ((b(p + 16) & 0xffL) << 8) | (b(p + 17) & 0xffL)
+        val total = ((b(p + 13) & 0xfL) << 32) | beU32(b, p + 14)
         if (sr <= 0) return null
         return FlacMeta(sr, channels, bits, total, total * 1000L / sr,
           minBlock = ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff),
@@ -326,41 +291,12 @@ object FlacHeaders {
 
 /** `flac_meta(blob)` → struct(sample_rate, channels, bits, total_samples,
  *  duration_ms) from the STREAMINFO block; null for non-FLAC bytes. */
-case class FlacMetaExpr(child: Expression) extends UnaryExpression {
-
+case class FlacMetaExpr(child: Expression)
+    extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = FlacHeaders.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"flac_meta needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else FlacHeaders.parseRow(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = FlacHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.parseRow(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = FlacHeaders.parseRow(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "flac_meta"
 }
 

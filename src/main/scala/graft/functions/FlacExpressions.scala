@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.{TernaryLike, UnaryLike}
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
 
@@ -481,18 +479,12 @@ object FlacSeek {
     var e = 0
     var prev = -1L
     var ok = true
-    def beU64(p: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < 8) { v = (v << 8) | (b(p + k) & 0xffL); k += 1 }
-      v
-    }
     while (ok && e < n) {
       val p = (table + 18L * e).toInt
-      val sample = beU64(p)
+      val sample = Bytes.beU64(b, p)
       if (sample == -1L) e += 1 // placeholder point: skip
       else {
-        val off = beU64(p + 8)
+        val off = Bytes.beU64(b, p + 8)
         val ns = ((b(p + 16) & 0xff) << 8) | (b(p + 17) & 0xff)
         val abs = firstFrame + off
         // lying tables end the plan: offsets must land inside the stream,
@@ -525,45 +517,14 @@ object FlacSeek {
  *  metadata block (absolute byte offsets); null for non-FLAC bytes or
  *  streams without a seektable. */
 case class FlacSeekpointsExpr(child: Expression, maxPoints: Int)
-    extends UnaryExpression {
+    extends BlobDecoder with UnaryLike[Expression] {
 
   require(maxPoints > 0 && maxPoints <= 1000000, "need 0 < maxPoints <= 1e6")
 
-  override def dataType: DataType =
-    ArrayType(FlacSeek.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"flac_seekpoints needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else FlacSeek.seekpointsArray(v.asInstanceOf[Array[Byte]], maxPoints)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = FlacSeek.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.seekpointsArray(${c.value}, $maxPoints);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def dataType: DataType = ArrayType(FlacSeek.elementType, containsNull = false)
+  override def decode(in: Array[Any]): Any = FlacSeek.seekpointsArray(blob(in), maxPoints)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "flac_seekpoints"
 }
 
@@ -579,56 +540,20 @@ object FlacSeekpointsExpr {
  *  never misplaced audio). */
 case class FlacPcmFromExpr(child: Expression, sampleOff: Expression,
     byteOff: Expression, maxSamples: Int)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
+    extends BlobDecoder with TernaryLike[Expression] {
 
   require(maxSamples > 0, "maxSamples must be positive")
 
   override def first: Expression = child
   override def second: Expression = sampleOff
   override def third: Expression = byteOff
+  override protected def inputTypes: Seq[DataType] = Seq(BinaryType, LongType, LongType)
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (child.dataType, sampleOff.dataType, byteOff.dataType) match {
-      case (BinaryType, LongType, LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"flac_pcm_from needs (binary, bigint, bigint), got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val b = child.eval(input)
-    val s = sampleOff.eval(input)
-    val o = byteOff.eval(input)
-    if (b == null || s == null || o == null) null
-    else FlacPcm.toWavFrom(b.asInstanceOf[Array[Byte]],
-      s.asInstanceOf[Long], o.asInstanceOf[Long], maxSamples)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = child.genCode(ctx)
-    val s = sampleOff.genCode(ctx)
-    val o = byteOff.genCode(ctx)
-    val cls = FlacPcm.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${b.code}
-      |${s.code}
-      |${o.code}
-      |byte[] ${ev.value} = null;
-      |boolean ${ev.isNull} = ${b.isNull} || ${s.isNull} || ${o.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.toWavFrom(${b.value}, ${s.value}, ${o.value}, $maxSamples);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = FlacPcm.toWavFrom(blob(in),
+    in(1).asInstanceOf[Long], in(2).asInstanceOf[Long], maxSamples)
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
     copy(child = newFirst, sampleOff = newSecond, byteOff = newThird)
-
   override def prettyName: String = "flac_pcm_from"
 }
 
@@ -645,44 +570,15 @@ object FlacPcmFromExpr {
  *  non-FLAC/undecodable bytes or streams past `maxSamples` interleaved
  *  samples. Compose with `audio_stats`, `audio_ahash`,
  *  `audio_segments`, ... exactly like `gunzip` feeds `tar_entries`. */
-case class FlacPcmExpr(child: Expression, maxSamples: Int) extends UnaryExpression {
+case class FlacPcmExpr(child: Expression, maxSamples: Int)
+    extends BlobDecoder with UnaryLike[Expression] {
 
   require(maxSamples > 0, "maxSamples must be positive")
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"flac_pcm needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else FlacPcm.toWav(v.asInstanceOf[Array[Byte]], maxSamples)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = FlacPcm.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |byte[] ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.toWav(${c.value}, $maxSamples);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = FlacPcm.toWav(blob(in), maxSamples)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "flac_pcm"
 }
 

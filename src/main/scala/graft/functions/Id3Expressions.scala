@@ -1,10 +1,10 @@
 package graft.functions
 
+import graft.functions.Bytes.beU32
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
@@ -73,8 +73,7 @@ object Id3Headers {
           ((buf(i) & 0x7f) << 21) | ((buf(i + 1) & 0x7f) << 14) |
             ((buf(i + 2) & 0x7f) << 7) | (buf(i + 3) & 0x7f)
         else
-          (((buf(i) & 0xffL) << 24) | ((buf(i + 1) & 0xffL) << 16) |
-            ((buf(i + 2) & 0xffL) << 8) | (buf(i + 3) & 0xffL)).toInt + 4
+          beU32(buf, i).toInt + 4
       if (ext < 4 || i + ext > end) return Seq.empty
       i += ext
     }
@@ -92,8 +91,7 @@ object Id3Headers {
           ((buf(i + 4) & 0x7f) << 21) | ((buf(i + 5) & 0x7f) << 14) |
             ((buf(i + 6) & 0x7f) << 7) | (buf(i + 7) & 0x7f)
         } else {
-          val v = ((buf(i + 4) & 0xffL) << 24) | ((buf(i + 5) & 0xffL) << 16) |
-            ((buf(i + 6) & 0xffL) << 8) | (buf(i + 7) & 0xffL)
+          val v = beU32(buf, i + 4)
           if (v > Int.MaxValue) return out.toSeq else v.toInt
         }
       if (fsize < 0 || i + 10 + fsize > end) return out.toSeq
@@ -155,41 +153,11 @@ object Id3Headers {
 
 /** `id3_tags(blob)` → map<string,string> of ID3v2 text frames; null when
  *  no tag is present, empty map for a tag with no text frames. */
-case class Id3TagsExpr(child: Expression) extends UnaryExpression {
-
+case class Id3TagsExpr(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = Id3Headers.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"id3_tags needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else Id3Headers.parseMap(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = Id3Headers.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.ArrayBasedMapData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.parseMap(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = Id3Headers.parseMap(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "id3_tags"
 }
 

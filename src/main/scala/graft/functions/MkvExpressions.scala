@@ -2,9 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
@@ -287,41 +286,11 @@ object MkvHeaders {
 /** `mkv_meta(blob)` → struct(duration_ms, width, height, channels,
  *  sample_rate) from a Matroska/WebM EBML walk; null for non-EBML bytes.
  *  Fields are null when the corresponding element is absent. */
-case class MkvMetaExpr(child: Expression) extends UnaryExpression {
-
+case class MkvMetaExpr(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = MkvHeaders.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"mkv_meta needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else MkvHeaders.parseRow(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = MkvHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.parseRow(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = MkvHeaders.parseRow(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "mkv_meta"
 }
 
@@ -333,45 +302,16 @@ object MkvMetaExpr {
 /** `mkv_cues(blob, maxPoints)` → array<struct<t_ms, cluster_off>> of the
  *  first `maxPoints` Cues keyframe positions; null for non-EBML bytes or
  *  documents without a Cues index. */
-case class MkvCuesExpr(child: Expression, maxPoints: Int) extends UnaryExpression {
+case class MkvCuesExpr(child: Expression, maxPoints: Int)
+    extends BlobDecoder with UnaryLike[Expression] {
 
   require(maxPoints > 0, "maxPoints must be positive")
 
   override def dataType: DataType =
     ArrayType(MkvHeaders.cueElementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"mkv_cues needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else MkvHeaders.cuesArray(v.asInstanceOf[Array[Byte]], maxPoints)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = MkvHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.cuesArray(${c.value}, $maxPoints);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = MkvHeaders.cuesArray(blob(in), maxPoints)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "mkv_cues"
 }
 

@@ -1,10 +1,11 @@
 package graft.functions
 
+import graft.functions.Bytes.{le16, le32, leU16, leU32, leU64}
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,13 +28,6 @@ object OggHeaders {
 
   private val MaxPages = 1 << 20
 
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24)
-  private def leU64(b: Array[Byte], i: Int): Long =
-    leU32(b, i) | (leU32(b, i + 4) << 32)
   private def tag(b: Array[Byte], i: Int, s: String): Boolean =
     i + s.length <= b.length &&
       (0 until s.length).forall(k => b(i + k) == s.charAt(k))
@@ -123,41 +117,11 @@ object OggHeaders {
 
 /** `ogg_meta(blob)` → struct(codec, channels, sample_rate, duration_ms);
  *  null for non-Ogg bytes or unknown codecs. */
-case class OggMetaExpr(child: Expression) extends UnaryExpression {
-
+case class OggMetaExpr(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = OggHeaders.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ogg_meta needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else OggHeaders.parseRow(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = OggHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.parseRow(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = OggHeaders.parseRow(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "ogg_meta"
 }
 
@@ -187,11 +151,6 @@ object OggSeek {
   private def tag(b: Array[Byte], i: Int): Boolean =
     i + 4 <= b.length && b(i) == 'O' && b(i + 1) == 'g' &&
       b(i + 2) == 'g' && b(i + 3) == 'S'
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24)
-  private def leU64(b: Array[Byte], i: Int): Long =
-    leU32(b, i) | (leU32(b, i + 4) << 32)
 
   /**
    * Seek plan as (granule, byte_off) pairs, file order, granules
@@ -284,45 +243,14 @@ object OggSeek {
 /** `ogg_pagepoints(blob, maxPoints)` → array<struct<granule, byte_off>>
  *  seek plan from the page walk ([[OggSeek]]); null for non-Ogg bytes. */
 case class OggPagepointsExpr(child: Expression, maxPoints: Int)
-    extends UnaryExpression {
+    extends BlobDecoder with UnaryLike[Expression] {
 
   require(maxPoints >= 2 && maxPoints <= 1000000, "need 2 <= maxPoints <= 1e6")
 
-  override def dataType: DataType =
-    ArrayType(OggSeek.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ogg_pagepoints needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else OggSeek.pagepointsArray(v.asInstanceOf[Array[Byte]], maxPoints)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = OggSeek.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.pagepointsArray(${c.value}, $maxPoints);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def dataType: DataType = ArrayType(OggSeek.elementType, containsNull = false)
+  override def decode(in: Array[Any]): Any = OggSeek.pagepointsArray(blob(in), maxPoints)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "ogg_pagepoints"
 }
 
@@ -353,11 +281,6 @@ object OggCodec {
     System.arraycopy(body, 0, out, 28, body.length)
     out
   }
-
-  private def le16(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32(v: Long) = Array[Byte](
-    (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-    ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
 
   def encodeVorbis(channels: Int, sampleRate: Int, granule: Long,
       dataPages: Int = 2): Array[Byte] = {

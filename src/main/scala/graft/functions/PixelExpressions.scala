@@ -1,12 +1,13 @@
 package graft.functions
 
+import graft.functions.Bytes.{beI32, le16, leI32, leU16, putLe16, putLe32}
+
 import java.util.zip.{CRC32, Deflater, Inflater}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
 
@@ -43,13 +44,6 @@ object ImagePixels {
    *  ITU-R BT.601 integer luma ((77R+150G+29B)>>8 — exact identity on
    *  gray pixels since 77+150+29 = 256). */
   final case class Luma(width: Int, height: Int, luma: Array[Byte])
-
-  private def beI32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leI32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
   private def luma601(r: Int, g: Int, b: Int): Byte =
     ((77 * r + 150 * g + 29 * b) >> 8).toByte
@@ -639,41 +633,11 @@ object ImagePixels {
 
 /** `image_luma(blob)` → struct(width, height, luma binary) — real decoded
  *  grayscale pixels at native resolution; null for undecodable bytes. */
-case class ImageLuma(child: Expression) extends UnaryExpression {
-
+case class ImageLuma(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = ImagePixels.lumaSparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"image_luma needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else ImagePixels.lumaRow(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = ImagePixels.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.lumaRow(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = ImagePixels.lumaRow(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "image_luma"
 }
 
@@ -681,58 +645,10 @@ object ImageLuma {
   def apply(col: Column): Column = GraftShims.column(new ImageLuma(GraftShims.expression(col)))
 }
 
-/** Shared shape for the 64-bit blob-hash expressions (image aHash/dHash,
- *  the audio envelope hash): binary → nullable long, one static call in
- *  codegen. */
-abstract class PerceptualHash extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  /** Scala object hosting the static hash method (codegen call target). */
-  protected def host: AnyRef = ImagePixels
-  /** Static method name on [[host]] implementing the hash. */
-  protected def method: String
-  protected def compute(b: Array[Byte]): java.lang.Long
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val h = compute(v.asInstanceOf[Array[Byte]])
-      if (h == null) null else h.longValue()
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = host.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val boxed = ctx.freshName("boxedHash")
-    ev.copy(code = code"""
-      |${c.code}
-      |long ${ev.value} = 0L;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  java.lang.Long $boxed = $cls.$method(${c.value});
-      |  ${ev.isNull} = $boxed == null;
-      |  if (!${ev.isNull}) ${ev.value} = $boxed.longValue();
-      |}
-     """.stripMargin)
-  }
-}
-
 /** `image_ahash(blob)` → 64-bit average hash (long), null if undecodable. */
-case class ImageAHash(child: Expression) extends PerceptualHash {
-  override protected def method: String = "ahash64"
-  override protected def compute(b: Array[Byte]): java.lang.Long = ImagePixels.ahash64(b)
+case class ImageAHash(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
+  override def dataType: DataType = LongType
+  override def decode(in: Array[Any]): Any = ImagePixels.ahash64(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "image_ahash"
@@ -743,9 +659,9 @@ object ImageAHash {
 }
 
 /** `image_dhash(blob)` → 64-bit difference hash (long), null if undecodable. */
-case class ImageDHash(child: Expression) extends PerceptualHash {
-  override protected def method: String = "dhash64"
-  override protected def compute(b: Array[Byte]): java.lang.Long = ImagePixels.dhash64(b)
+case class ImageDHash(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
+  override def dataType: DataType = LongType
+  override def decode(in: Array[Any]): Any = ImagePixels.dhash64(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "image_dhash"
@@ -758,45 +674,16 @@ object ImageDHash {
 /** `image_resize(blob, w, h)` → grayscale PNG thumbnail (binary), null if
  *  undecodable — the brief's "resize" multimodal op as a pure codegen
  *  expression: decode, integer box-average, re-encode, no codec library. */
-case class ImageResize(child: Expression, w: Int, h: Int) extends UnaryExpression {
+case class ImageResize(child: Expression, w: Int, h: Int)
+    extends BlobDecoder with UnaryLike[Expression] {
 
   require(w > 0 && h > 0 && w.toLong * h <= 16 * 1024 * 1024,
     s"bad thumbnail dims: ${w}x$h")
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"image_resize needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else ImagePixels.thumbnailPng(v.asInstanceOf[Array[Byte]], w, h)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = ImagePixels.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |byte[] ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.thumbnailPng(${c.value}, $w, $h);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = ImagePixels.thumbnailPng(blob(in), w, h)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "image_resize"
 }
 
@@ -949,13 +836,13 @@ object ImageCodec {
     require(width > 0 && width <= 0xffff && height > 0 && height <= 0xffff)
     val out = new java.io.ByteArrayOutputStream()
     def w8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v); w8(v >> 8) }
     out.write("GIF89a".getBytes("US-ASCII"), 0, 6)
-    w16(width); w16(height)
+    out.write(le16(width)); out.write(le16(height))
     w8(0x80 | 7); w8(0); w8(0) // GCT, 256 entries
     var i = 0
     while (i < 256) { w8(i); w8(i); w8(i); i += 1 }
-    w8(0x2c); w16(0); w16(0); w16(width); w16(height)
+    w8(0x2c); out.write(le16(0)); out.write(le16(0))
+    out.write(le16(width)); out.write(le16(height))
     w8(if (interlaced) 0x40 else 0)
     val mcs = 8; val clear = 1 << mcs
     w8(mcs)
@@ -1009,15 +896,10 @@ object ImageCodec {
     val dataSize = rowStride * height
     val total = 54 + dataSize
     val b = new Array[Byte](total)
-    def le16(i: Int, v: Int): Unit = { b(i) = v.toByte; b(i + 1) = (v >>> 8).toByte }
-    def le32(i: Int, v: Int): Unit = {
-      b(i) = v.toByte; b(i + 1) = (v >>> 8).toByte
-      b(i + 2) = (v >>> 16).toByte; b(i + 3) = (v >>> 24).toByte
-    }
     b(0) = 'B'; b(1) = 'M'
-    le32(2, total); le32(10, 54); le32(14, 40)
-    le32(18, width); le32(22, if (topDown) -height else height)
-    le16(26, 1); le16(28, 24); le32(30, 0); le32(34, dataSize)
+    putLe32(b, 2, total); putLe32(b, 10, 54); putLe32(b, 14, 40)
+    putLe32(b, 18, width); putLe32(b, 22, if (topDown) -height else height)
+    putLe16(b, 26, 1); putLe16(b, 28, 24); putLe32(b, 30, 0); putLe32(b, 34, dataSize)
     var y = 0
     while (y < height) {
       val dstRow = if (topDown) y else height - 1 - y
@@ -1091,42 +973,12 @@ object ImageStatsEval {
 
 /** `image_stats(blob)` → struct(width, height, mean_luma, min_luma,
  *  max_luma, n_distinct, edge_frac_milli); null if undecodable. */
-case class ImageStatsExpr(child: Expression) extends UnaryExpression {
-
+case class ImageStatsExpr(child: Expression)
+    extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = ImageStatsEval.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"image_stats needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else ImageStatsEval.statsRow(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = ImageStatsEval.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.statsRow(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = ImageStatsEval.statsRow(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "image_stats"
 }
 

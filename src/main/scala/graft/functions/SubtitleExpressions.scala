@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
@@ -138,42 +136,14 @@ object SubtitleCues {
  *  `requireVtt` a missing WEBVTT signature is null; without, any text
  *  parses as SRT-ish (no parseable cue → empty array). */
 case class SubtitleCuesExpr(child: Expression, requireVttHeader: Boolean)
-    extends UnaryExpression {
-
+    extends BlobDecoder with UnaryLike[Expression] {
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType =
     ArrayType(SubtitleCues.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"subtitle_cues needs a string column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    SubtitleCues.cuesArray(v.asInstanceOf[UTF8String], requireVttHeader)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = SubtitleCues.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.cuesArray(${c.value}, $requireVttHeader);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any =
+    SubtitleCues.cuesArray(in(0).asInstanceOf[UTF8String], requireVttHeader)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "subtitle_cues"
 }
 

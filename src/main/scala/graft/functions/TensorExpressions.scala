@@ -1,10 +1,11 @@
 package graft.functions
 
+import graft.functions.Bytes.{leU16, leU32}
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
@@ -37,11 +38,10 @@ object NpyHeaders {
       b(4) != 'P' || b(5) != 'Y') return null
     val major = b(6) & 0xff
     val (hlen, hoff) =
-      if (major <= 1) (((b(8) & 0xff) | ((b(9) & 0xff) << 8)).toLong, 10)
+      if (major <= 1) (leU16(b, 8).toLong, 10)
       else {
         if (b.length < 12) return null
-        (((b(8) & 0xffL)) | ((b(9) & 0xffL) << 8) | ((b(10) & 0xffL) << 16) |
-          ((b(11) & 0xffL) << 24), 12)
+        (leU32(b, 8), 12)
       }
     if (hlen <= 0 || hlen > (1 << 20) || hoff + hlen > b.length) return null
     val h = new String(b, hoff, hlen.toInt,
@@ -108,41 +108,11 @@ object NpyHeaders {
  *  data_bytes); null for non-npy bytes. `data_bytes` is the actual
  *  payload size — compare against n_elems x dtype width to validate
  *  shards before decode. */
-case class NpyMetaExpr(child: Expression) extends UnaryExpression {
-
+case class NpyMetaExpr(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = NpyHeaders.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"npy_meta needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else NpyHeaders.parseRow(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = NpyHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.parseRow(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = NpyHeaders.parseRow(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "npy_meta"
 }
 

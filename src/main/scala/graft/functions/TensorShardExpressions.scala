@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
@@ -205,43 +203,13 @@ object SafetensorsHeaders {
 /** `safetensors_tensors(blob)` →
  *  array<struct<name, dtype, shape, n_elems, data_bytes>>; null for
  *  non-safetensors bytes. */
-case class SafetensorsExpr(child: Expression) extends UnaryExpression {
-
+case class SafetensorsExpr(child: Expression)
+    extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType =
     ArrayType(SafetensorsHeaders.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"safetensors_tensors needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else SafetensorsHeaders.tensorsArray(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = SafetensorsHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.tensorsArray(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = SafetensorsHeaders.tensorsArray(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "safetensors_tensors"
 }
 
@@ -371,43 +339,13 @@ object TfRecordHeaders {
 /** `tfrecord_entries(blob)` → array<struct<offset, size>> of record
  *  payloads (length CRCs validated); null when the bytes don't frame as
  *  TFRecord at all. */
-case class TfRecordEntriesExpr(child: Expression) extends UnaryExpression {
-
+case class TfRecordEntriesExpr(child: Expression)
+    extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType =
     ArrayType(TfRecordHeaders.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"tfrecord_entries needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else TfRecordHeaders.entriesArray(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = TfRecordHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.entriesArray(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = TfRecordHeaders.entriesArray(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "tfrecord_entries"
 }
 
@@ -420,50 +358,16 @@ object TfRecordEntriesExpr {
  *  masked CRC32C verified on extraction; null when out of range or the
  *  payload is corrupt — the TFRecord twin of `tar_member`. */
 case class TfRecordMemberExpr(child: Expression, idx: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
+    extends BlobDecoder with BinaryLike[Expression] {
   override def left: Expression = child
   override def right: Expression = idx
+  override protected def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (child.dataType, idx.dataType) match {
-      case (BinaryType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"tfrecord_member needs (binary, int), got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val b = child.eval(input)
-    val i = idx.eval(input)
-    if (b == null || i == null) null
-    else TfRecordHeaders.memberOrNull(b.asInstanceOf[Array[Byte]],
-      i.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = child.genCode(ctx)
-    val i = idx.genCode(ctx)
-    val cls = TfRecordHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${b.code}
-      |${i.code}
-      |byte[] ${ev.value} = null;
-      |boolean ${ev.isNull} = ${b.isNull} || ${i.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.memberOrNull(${b.value}, ${i.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any =
+    TfRecordHeaders.memberOrNull(blob(in), in(1).asInstanceOf[Int])
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(child = newLeft, idx = newRight)
-
   override def prettyName: String = "tfrecord_member"
 }
 
@@ -503,17 +407,11 @@ object TensorShardCodec {
   def tfrecord(payloads: Seq[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     for (p <- payloads) {
-      val lenB = new Array[Byte](8)
-      var k = 0
-      while (k < 8) { lenB(k) = ((p.length.toLong >> (8 * k)) & 0xff).toByte; k += 1 }
+      val lenB = Bytes.le64(p.length.toLong)
       out.write(lenB)
-      def le32(v: Int): Unit = {
-        out.write(v & 0xff); out.write((v >> 8) & 0xff)
-        out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-      }
-      le32(TfRecordHeaders.maskedCrc32c(lenB, 0, 8))
+      out.write(Bytes.le32(TfRecordHeaders.maskedCrc32c(lenB, 0, 8)))
       out.write(p)
-      le32(TfRecordHeaders.maskedCrc32c(p, 0, p.length))
+      out.write(Bytes.le32(TfRecordHeaders.maskedCrc32c(p, 0, p.length)))
     }
     out.toByteArray
   }

@@ -1,10 +1,11 @@
 package graft.functions
 
+import graft.functions.Bytes.{be32, be64, beU32, beU64}
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,11 +29,6 @@ object Mp4Headers {
       brand: String, timescale: Long, duration: Long, durationMs: Long,
       width: Int, height: Int)
 
-  private def beU32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-  private def beU64(b: Array[Byte], i: Int): Long =
-    (beU32(b, i) << 32) | beU32(b, i + 4)
   private def boxType(b: Array[Byte], i: Int): String =
     new String(b, i + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
 
@@ -161,42 +157,12 @@ object Mp4Headers {
 }
 
 /** `video_meta(blob)` → struct(brand, timescale, duration, duration_ms),
- *  null for non-MP4 bytes. Same codegen shape as [[ImageDims]]. */
-case class VideoMeta(child: Expression) extends UnaryExpression {
-
+ *  null for non-MP4 bytes. */
+case class VideoMeta(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = Mp4Headers.sparkType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"video_meta needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else Mp4Headers.parseRow(v.asInstanceOf[Array[Byte]])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = Mp4Headers.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |InternalRow ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.parseRow(${c.value});
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = Mp4Headers.parseRow(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "video_meta"
 }
 
@@ -214,11 +180,6 @@ object VideoMeta {
  */
 object Mp4Frames {
 
-  private def beU32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-  private def beU64(b: Array[Byte], i: Int): Long =
-    (beU32(b, i) << 32) | beU32(b, i + 4)
   private def boxType(b: Array[Byte], i: Int): String =
     new String(b, i + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
 
@@ -941,47 +902,11 @@ object Mp4Frames {
 
 /** `video_frames(blob)` → the first video track's stsz sample count
  *  (long), null for non-MP4 bytes or no video track. */
-case class VideoFrames(child: Expression) extends UnaryExpression {
-
+case class VideoFrames(child: Expression) extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"video_frames needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val n = Mp4Frames.frameCount(v.asInstanceOf[Array[Byte]])
-      if (n == null) null else n.longValue()
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = Mp4Frames.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val boxed = ctx.freshName("frameCount")
-    ev.copy(code = code"""
-      |${c.code}
-      |long ${ev.value} = 0L;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  java.lang.Long $boxed = $cls.frameCount(${c.value});
-      |  ${ev.isNull} = $boxed == null;
-      |  if (!${ev.isNull}) ${ev.value} = $boxed.longValue();
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any = Mp4Frames.frameCount(blob(in))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "video_frames"
 }
 
@@ -1013,43 +938,13 @@ object Mp4SamplePlanEval {
  *  track / missing stts. byte_off is null when the chunk or size tables
  *  don't cover the sample. */
 case class VideoSamplePlan(child: Expression, strideMs: Int, maxFrames: Int)
-    extends UnaryExpression {
-
+    extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType =
     ArrayType(Mp4SamplePlanEval.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"video_sample_plan needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else Mp4SamplePlanEval.planArray(v.asInstanceOf[Array[Byte]], strideMs, maxFrames)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = Mp4SamplePlanEval.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.planArray(${c.value}, $strideMs, $maxFrames);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any =
+    Mp4SamplePlanEval.planArray(blob(in), strideMs, maxFrames)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "video_sample_plan"
 }
 
@@ -1076,43 +971,13 @@ object Mp4KeyframeEval {
  *  ([[Mp4Frames.keyframePlan]]; every sample when stss is absent, per
  *  spec); null for non-MP4 bytes / no video track / missing stts. */
 case class VideoKeyframes(child: Expression, maxFrames: Int)
-    extends UnaryExpression {
-
+    extends BlobDecoder with UnaryLike[Expression] {
   override def dataType: DataType =
     ArrayType(Mp4SamplePlanEval.elementType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"video_keyframes needs a binary column, got $dt")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else Mp4KeyframeEval.keyframeArray(v.asInstanceOf[Array[Byte]], maxFrames)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = Mp4KeyframeEval.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    ev.copy(code = code"""
-      |${c.code}
-      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      |boolean ${ev.isNull} = ${c.isNull};
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $cls.keyframeArray(${c.value}, $maxFrames);
-      |  ${ev.isNull} = ${ev.value} == null;
-      |}
-     """.stripMargin)
-  }
-
+  override def decode(in: Array[Any]): Any =
+    Mp4KeyframeEval.keyframeArray(blob(in), maxFrames)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-
   override def prettyName: String = "video_keyframes"
 }
 
@@ -1137,8 +1002,6 @@ object Mp4Codec {
     System.arraycopy(payload, 0, out, 8, payload.length)
     out
   }
-  private def be32(v: Long): Array[Byte] =
-    Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
 
   /** Optional full sample-table layout for [[encode]] fixtures:
    *  stts run-length deltas, one of three size-table encodings (const
@@ -1154,8 +1017,6 @@ object Mp4Codec {
       chunkOffsets: Seq[Long] = Nil, // stco entries
       co64: Boolean = false, // write co64 (u64) instead of stco
       syncSamples: Seq[Long] = Nil) // stss entries (1-based sample numbers)
-
-  private def be64(v: Long): Array[Byte] = be32(v >>> 32) ++ be32(v)
 
   def encode(timescale: Int, durationTicks: Long, width: Int, height: Int,
              nFrames: Long, tail: Array[Byte] = Array.emptyByteArray,

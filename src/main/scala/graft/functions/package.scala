@@ -67,28 +67,36 @@ package object functions {
       FunctionIdentifier("jaccard_sorted"),
       new ExpressionInfo(classOf[JaccardSorted].getName, "jaccard_sorted"),
       (exprs: Seq[Expression]) => JaccardSorted(exprs(0), exprs(1)))
-    // integer-literal arguments resolved at registration: SQL passes them as
-    // foldable expressions
-    def intArg(e: Expression): Int =
-      e.eval(null) match { case i: Int => i; case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(s"expected int literal, got $other") }
+    // integer arguments are resolved at registration: SQL passes them as
+    // foldable expressions; anything else fails naming the argument
+    def intArg(e: Expression, what: String): Int =
+      (if (e.foldable) e.eval(null) else null) match {
+        case i: Int => i
+        case l: Long => l.toInt
+        case _ => throw new IllegalArgumentException(
+          s"$what must be an integer literal, got $e")
+      }
     registry.registerFunction(
       FunctionIdentifier("word_shingle_hashes"),
       new ExpressionInfo(classOf[WordShingleHashes].getName, "word_shingle_hashes"),
-      (exprs: Seq[Expression]) => WordShingleHashes(exprs(0), intArg(exprs(1))))
+      (exprs: Seq[Expression]) =>
+        WordShingleHashes(exprs(0), intArg(exprs(1), "word_shingle_hashes n")))
     registry.registerFunction(
       FunctionIdentifier("ngram_md5_hashes"),
       new ExpressionInfo(classOf[NgramMd5Hashes].getName, "ngram_md5_hashes"),
       (exprs: Seq[Expression]) =>
-        NgramMd5Hashes(exprs(0), intArg(exprs(1)), intArg(exprs(2))))
+        NgramMd5Hashes(exprs(0), intArg(exprs(1), "ngram_md5_hashes n"),
+          intArg(exprs(2), "ngram_md5_hashes hexLen")))
     registry.registerFunction(
       FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSignature(exprs(0), intArg(exprs(1))))
+      (exprs: Seq[Expression]) =>
+        MinHashSignature(exprs(0), intArg(exprs(1), "minhash_sig numPerms")))
     registry.registerFunction(
       FunctionIdentifier("band_hashes"),
       new ExpressionInfo(classOf[BandHashes].getName, "band_hashes"),
-      (exprs: Seq[Expression]) => BandHashes(exprs(0), intArg(exprs(1)), intArg(exprs(2))))
+      (exprs: Seq[Expression]) => BandHashes(exprs(0),
+        intArg(exprs(1), "band_hashes bands"), intArg(exprs(2), "band_hashes rowsPerBand")))
     registry.registerFunction(
       FunctionIdentifier("image_dims"),
       new ExpressionInfo(classOf[ImageDims].getName, "image_dims"),
@@ -117,24 +125,18 @@ package object functions {
       FunctionIdentifier("image_dhash"),
       new ExpressionInfo(classOf[ImageDHash].getName, "image_dhash"),
       (exprs: Seq[Expression]) => new ImageDHash(exprs.head))
-    def intLit(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
     registry.registerFunction(
       FunctionIdentifier("image_resize"),
       new ExpressionInfo(classOf[ImageResize].getName, "image_resize"),
       (exprs: Seq[Expression]) => new ImageResize(exprs.head,
-        intLit(exprs(1), "image_resize width"), intLit(exprs(2), "image_resize height")))
+        intArg(exprs(1), "image_resize width"), intArg(exprs(2), "image_resize height")))
     registry.registerFunction(
       FunctionIdentifier("video_sample_plan"),
       new ExpressionInfo(classOf[VideoSamplePlan].getName, "video_sample_plan"),
       // video_sample_plan(blob, strideMs, maxFrames): both knobs fold to ints
       (exprs: Seq[Expression]) => new VideoSamplePlan(exprs.head,
-        intLit(exprs(1), "video_sample_plan strideMs"),
-        intLit(exprs(2), "video_sample_plan maxFrames")))
+        intArg(exprs(1), "video_sample_plan strideMs"),
+        intArg(exprs(2), "video_sample_plan maxFrames")))
     registry.registerFunction(
       FunctionIdentifier("audio_ahash"),
       new ExpressionInfo(classOf[AudioAHash].getName, "audio_ahash"),
@@ -144,7 +146,7 @@ package object functions {
       new ExpressionInfo(classOf[AudioStats].getName, "audio_stats"),
       // audio_stats(blob, silenceBelow): the threshold folds to an int
       (exprs: Seq[Expression]) => new AudioStats(exprs.head,
-        intLit(exprs(1), "audio_stats silence threshold")))
+        intArg(exprs(1), "audio_stats silence threshold")))
     registry.registerFunction(
       FunctionIdentifier("audio_shash"),
       new ExpressionInfo(classOf[AudioSHash].getName, "audio_shash"),
@@ -161,7 +163,7 @@ package object functions {
       FunctionIdentifier("video_keyframes"),
       new ExpressionInfo(classOf[VideoKeyframes].getName, "video_keyframes"),
       (exprs: Seq[Expression]) => new VideoKeyframes(exprs.head,
-        intLit(exprs(1), "video_keyframes maxFrames")))
+        intArg(exprs(1), "video_keyframes maxFrames")))
     registry.registerFunction(
       FunctionIdentifier("ogg_meta"),
       new ExpressionInfo(classOf[OggMetaExpr].getName, "ogg_meta"),
@@ -170,7 +172,7 @@ package object functions {
       FunctionIdentifier("ogg_pagepoints"),
       new ExpressionInfo(classOf[OggPagepointsExpr].getName, "ogg_pagepoints"),
       (exprs: Seq[Expression]) => new OggPagepointsExpr(exprs.head,
-        intLit(exprs(1), "ogg_pagepoints maxPoints")))
+        intArg(exprs(1), "ogg_pagepoints maxPoints")))
     registry.registerFunction(
       FunctionIdentifier("mkv_meta"),
       new ExpressionInfo(classOf[MkvMetaExpr].getName, "mkv_meta"),
@@ -189,9 +191,9 @@ package object functions {
       FunctionIdentifier("audio_segments"),
       new ExpressionInfo(classOf[AudioSegmentsExpr].getName, "audio_segments"),
       (exprs: Seq[Expression]) => new AudioSegmentsExpr(exprs.head,
-        intLit(exprs(1), "audio_segments silenceBelow"),
-        intLit(exprs(2), "audio_segments minSilenceMs"),
-        intLit(exprs(3), "audio_segments maxSegments")))
+        intArg(exprs(1), "audio_segments silenceBelow"),
+        intArg(exprs(2), "audio_segments minSilenceMs"),
+        intArg(exprs(3), "audio_segments maxSegments")))
     registry.registerFunction(
       FunctionIdentifier("id3_tags"),
       new ExpressionInfo(classOf[Id3TagsExpr].getName, "id3_tags"),
@@ -220,37 +222,37 @@ package object functions {
       FunctionIdentifier("zip_member"),
       new ExpressionInfo(classOf[ZipMemberExpr].getName, "zip_member"),
       (exprs: Seq[Expression]) => new ZipMemberExpr(exprs(0), exprs(1),
-        intLit(exprs(2), "zip_member maxBytes").toLong))
+        intArg(exprs(2), "zip_member maxBytes").toLong))
     registry.registerFunction(
       FunctionIdentifier("gunzip"),
       new ExpressionInfo(classOf[GunzipExpr].getName, "gunzip"),
       (exprs: Seq[Expression]) => new GunzipExpr(exprs.head,
-        intLit(exprs(1), "gunzip maxBytes")))
+        intArg(exprs(1), "gunzip maxBytes")))
     registry.registerFunction(
       FunctionIdentifier("mkv_cues"),
       new ExpressionInfo(classOf[MkvCuesExpr].getName, "mkv_cues"),
       (exprs: Seq[Expression]) => new MkvCuesExpr(exprs.head,
-        intLit(exprs(1), "mkv_cues maxPoints")))
+        intArg(exprs(1), "mkv_cues maxPoints")))
     registry.registerFunction(
       FunctionIdentifier("flac_pcm"),
       new ExpressionInfo(classOf[FlacPcmExpr].getName, "flac_pcm"),
       (exprs: Seq[Expression]) => new FlacPcmExpr(exprs.head,
-        intLit(exprs(1), "flac_pcm maxSamples")))
+        intArg(exprs(1), "flac_pcm maxSamples")))
     registry.registerFunction(
       FunctionIdentifier("flac_seekpoints"),
       new ExpressionInfo(classOf[FlacSeekpointsExpr].getName, "flac_seekpoints"),
       (exprs: Seq[Expression]) => new FlacSeekpointsExpr(exprs.head,
-        intLit(exprs(1), "flac_seekpoints maxPoints")))
+        intArg(exprs(1), "flac_seekpoints maxPoints")))
     registry.registerFunction(
       FunctionIdentifier("flac_pcm_from"),
       new ExpressionInfo(classOf[FlacPcmFromExpr].getName, "flac_pcm_from"),
       (exprs: Seq[Expression]) => new FlacPcmFromExpr(exprs(0), exprs(1),
-        exprs(2), intLit(exprs(3), "flac_pcm_from maxSamples")))
+        exprs(2), intArg(exprs(3), "flac_pcm_from maxSamples")))
     registry.registerFunction(
       FunctionIdentifier("zunstd"),
       new ExpressionInfo(classOf[ZunstdExpr].getName, "zunstd"),
       (exprs: Seq[Expression]) => new ZunstdExpr(exprs.head,
-        intLit(exprs(1), "zunstd maxBytes")))
+        intArg(exprs(1), "zunstd maxBytes")))
     registry.registerFunction(
       FunctionIdentifier("safetensors_tensors"),
       new ExpressionInfo(classOf[SafetensorsExpr].getName, "safetensors_tensors"),
@@ -270,7 +272,7 @@ package object functions {
     registry.registerFunction(
       FunctionIdentifier("sign_bucket"),
       new ExpressionInfo(classOf[SignBucketExpr].getName, "sign_bucket"),
-      (exprs: Seq[Expression]) => SignBucketExpr(exprs(0), intArg(exprs(1))))
+      (exprs: Seq[Expression]) => SignBucketExpr(exprs(0), intArg(exprs(1), "sign_bucket planes")))
     registry.registerFunction(
       FunctionIdentifier("dot_i8"),
       new ExpressionInfo(classOf[DotProductI8].getName, "dot_i8"),
@@ -279,7 +281,8 @@ package object functions {
       FunctionIdentifier("winnow_fp"),
       new ExpressionInfo(classOf[WinnowFingerprint].getName, "winnow_fp"),
       (exprs: Seq[Expression]) =>
-        WinnowFingerprint(exprs(0), intArg(exprs(1)), intArg(exprs(2))))
+        WinnowFingerprint(exprs(0), intArg(exprs(1), "winnow_fp k"),
+          intArg(exprs(2), "winnow_fp w")))
     registry.registerFunction(
       FunctionIdentifier("http_body"),
       new ExpressionInfo(classOf[HttpBodyExtract].getName, "http_body"),

@@ -70,14 +70,6 @@ object Dedup {
   def minhashSignature(shingleHashCol: Column, numPerms: Int): Column =
     graft.functions.MinHashSignature(shingleHashCol, numPerms)
 
-  /** Band keys: hash each of `bands` contiguous signature slices. */
-  def bandKeys(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(
-        b.as("band"),
-        xxhash64(concat_ws(",", transform(slice(sigCol, b * rowsPerBand + 1, lit(rowsPerBand)),
-          v => v.cast("string")))).as("band_hash")))
-
   /** Signature table: (id, sig) with the MinHash signature computed once. */
   private def signatures(
       df: DataFrame, idCol: String, textCol: String, shingleN: Int, numPerms: Int): DataFrame =
@@ -1359,16 +1351,6 @@ object Dedup {
     val h = if (useDHash) imageDHash(col(blobCol)) else imageAHash(col(blobCol))
     ingestWithSignatureTable(df, idCol, h, sigDir, batchId, maxHamming, compactEvery)
   }
-
-  /** [[ingestWithSignatureTable]] with the AUDIO envelope fingerprint —
-   *  the maintained-table lifecycle for [[dropAudioAgainstSignatures]]'
-   *  signature artifact. */
-  def ingestAudioIncremental(
-      df: DataFrame, idCol: String, blobCol: String, sigDir: String,
-      batchId: Long, maxHamming: Int = 3, compactEvery: Int = 0): DataFrame =
-    ingestWithSignatureTable(df, idCol,
-      graft.functions.AudioAHash(col(blobCol)), sigDir, batchId, maxHamming,
-      compactEvery)
 
   /** The ONE spelling of the 64-bit hash-level doom decision, shared by
    *  [[dropAgainstSignatures64]] and [[ingestWithSignatureTable]]: the

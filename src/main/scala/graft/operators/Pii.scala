@@ -34,10 +34,6 @@ object Pii {
   def redactColumn(text: Column): Column =
     Rules.foldLeft(text) { case (c, (_, re, repl)) => regexp_replace(c, re, repl) }
 
-  /** One count column per rule, matched against the PRE-masking text. */
-  def countColumns(text: Column): Seq[Column] =
-    Rules.map { case (name, re, _) => regexp_count(text, lit(re)).as(s"n_$name") }
-
   /**
    * Append `<textCol>_clean` plus per-rule match counts (`n_email`,
    * `n_ipv4`, `n_phone`, `n_digits`). Counts are computed on the original

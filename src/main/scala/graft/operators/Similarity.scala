@@ -45,9 +45,6 @@ object Similarity {
       // contract rejects; the cast is exact for our |v| ≤ 64 range
       (acc, v) => (acc + v).cast("decimal(38,18)"))
 
-  /** Squared L2 norm, exact decimal. */
-  def norm2Exact(a: Column): Column = dotExact(a, a)
-
   /** Cosine similarity as double — codegen'd dot, norms computed inline.
    *  Prefer precomputing norms per side before a join (see nearDupPairs). */
   def cosine(a: Column, b: Column): Column =

@@ -134,6 +134,21 @@ object Battery {
       .unionByName(t.select((col("doc_id") + lit(TwinOff)).as("doc_id"), frag.as("text")))
   }
 
+  /** Fixed-width big-/little-endian bytes of an int column, from hex
+   *  built-ins only, so the DuckDB oracle rebuilds the same blob headers
+   *  (q35, q105, q106). */
+  private def be16(c: Column): Column = unhex(lpad(hex(c), 4, "0"))
+  private def be32(c: Column): Column = unhex(lpad(hex(c), 8, "0"))
+  private def le16(c: Column): Column = {
+    val hx = lpad(hex(c), 4, "0")
+    unhex(concat(substring(hx, 3, 2), substring(hx, 1, 2)))
+  }
+  private def le32(c: Column): Column = {
+    val hx = lpad(hex(c), 8, "0")
+    unhex(concat(substring(hx, 7, 2), substring(hx, 5, 2),
+      substring(hx, 3, 2), substring(hx, 1, 2)))
+  }
+
   // =====================================================================
   // queries
   // =====================================================================
@@ -1271,12 +1286,6 @@ object Battery {
     "q35_blob_metadata" -> ((s, d) => {
       val w = (col("doc_id") % 1024 + 1).cast("int")
       val h = (col("doc_id") % 768 + 1).cast("int")
-      def be16(c: Column) = unhex(lpad(hex(c), 4, "0"))
-      def be32(c: Column) = unhex(lpad(hex(c), 8, "0"))
-      def le16(c: Column) = {
-        val hx = lpad(hex(c), 4, "0")
-        unhex(concat(substring(hx, 3, 2), substring(hx, 1, 2)))
-      }
       val txt = col("text").cast("binary")
       // PNG: signature + IHDR(len,type) + w + h + bitdepth 8, rgba(6)
       val png = concat(unhex(lit("89504E470D0A1A0A0000000D49484452")),
@@ -1289,11 +1298,6 @@ object Battery {
         be16(h), be16(w), unhex(lit("03011100021101031101")), txt)
       // WEBP VP8L: RIFF sizes are the real payload sizes, dims+alpha packed
       // into the lossless bitstream header LE32 (version bits 0)
-      def le32(c: Column) = {
-        val hx = lpad(hex(c), 8, "0")
-        unhex(concat(substring(hx, 7, 2), substring(hx, 5, 2),
-          substring(hx, 3, 2), substring(hx, 1, 2)))
-      }
       val alpha = when(col("doc_id") % 8 === 3, 1).otherwise(0)
       val bits = (w - 1) + (h - 1) * lit(16384) + alpha * lit(268435456)
       val blen = octet_length(col("text"))
@@ -1318,15 +1322,6 @@ object Battery {
     // doc data; the engine walks the chunks back out (AudioHeaders) and the
     // oracle replays channels/rate/frames/duration arithmetically
     "q105_audio_meta" -> ((s, d) => {
-      def le16(c: Column) = {
-        val hx = lpad(hex(c), 4, "0")
-        unhex(concat(substring(hx, 3, 2), substring(hx, 1, 2)))
-      }
-      def le32(c: Column) = {
-        val hx = lpad(hex(c), 8, "0")
-        unhex(concat(substring(hx, 7, 2), substring(hx, 5, 2),
-          substring(hx, 3, 2), substring(hx, 1, 2)))
-      }
       val ch = (col("doc_id") % 2 + 1).cast("int")
       val rate = when(col("doc_id") % 3 === 0, 8000)
         .when(col("doc_id") % 3 === 1, 16000).otherwise(44100).cast("int")
@@ -1348,7 +1343,6 @@ object Battery {
     // dimensions) built from doc data; the engine walks the boxes back out
     // (Mp4Headers) and the oracle replays the metadata arithmetically
     "q106_video_meta" -> ((s, d) => {
-      def be32(c: Column) = unhex(lpad(hex(c), 8, "0"))
       val ts = when(col("doc_id") % 3 === 0, 600)
         .when(col("doc_id") % 3 === 1, 1000).otherwise(90000).cast("int")
       val dur = (col("n_chars") * 100).cast("int")

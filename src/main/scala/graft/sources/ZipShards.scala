@@ -234,80 +234,35 @@ object ZipShards {
       "writeBundles")(() => new ZipPartFormat(deflate))
   }
 
-  /** Streaming classic-zip writer: local headers + payloads as they
-   *  arrive, pending central-directory records in memory, CD + EOCD at
-   *  `finish`; the binning measure is the byte cursor (on-disk bytes
-   *  written so far, pre-CD). */
-  private final case class CdRec(nameB: Array[Byte], crc: Long,
-    compSize: Long, size: Long, localOff: Long, method: Int)
-
+  /** Streaming classic-zip part: members go straight through a
+   *  [[graft.functions.ZipWriter]]; the binning measure is its byte
+   *  cursor (on-disk bytes written so far, pre-CD). */
   private final class ZipPartFormat(deflate: Boolean)
       extends ShardExport.PartFormat {
     private var out: org.apache.hadoop.fs.FSDataOutputStream = _
+    private var zip: graft.functions.ZipWriter = _
     private var finalName: String = _
-    private var off = 0L
-    private val cd = scala.collection.mutable.ArrayBuffer.empty[CdRec]
-    private val crc32 = new java.util.zip.CRC32
-    private def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    private def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     override def open(raw: org.apache.hadoop.fs.FSDataOutputStream,
         name: String): Unit = {
       out = raw
+      zip = new graft.functions.ZipWriter(raw)
       finalName = name
-      off = 0L
-      cd.clear()
     }
     override def append(name: String, payload: Array[Byte]): Unit = {
-      crc32.reset(); crc32.update(payload)
       val body =
-        if (!deflate) payload
-        else {
-          val d = new java.util.zip.Deflater(
-            java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-          d.setInput(payload); d.finish()
-          val bo = new java.io.ByteArrayOutputStream(
-            math.max(64, payload.length / 2))
-          val buf = new Array[Byte](8192)
-          while (!d.finished()) bo.write(buf, 0, d.deflate(buf))
-          d.end()
-          bo.toByteArray
-        }
+        if (deflate) graft.functions.ZipWriter.deflateRaw(payload) else payload
       val nb = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val zmethod = if (deflate) 8 else 0
-      require(cd.size < 0xffff,
+      require(zip.members < 0xffff,
         s"bundle $finalName would exceed 65535 members — classic zip caps " +
           "the listing; lower targetBundleBytes")
-      require(off + 30L + nb.length + body.length < 0xffffffffL,
+      require(zip.offset + 30L + nb.length + body.length < 0xffffffffL,
         s"bundle $finalName would exceed 4 GiB — classic zip offsets " +
           "wrap; lower targetBundleBytes")
-      out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(20); le16(0); le16(zmethod); le16(0); le16(0)
-      le32(crc32.getValue); le32(body.length); le32(payload.length)
-      le16(nb.length); le16(0)
-      out.write(nb); out.write(body)
-      cd += CdRec(nb, crc32.getValue, body.length, payload.length,
-        off, zmethod)
-      off += 30L + nb.length + body.length
+      zip.add(nb, payload, body, if (deflate) 8 else 0)
     }
-    override def measure: Long = off
+    override def measure: Long = zip.offset
     override def finish(): Unit = {
-      val cdStart = off
-      for (r <- cd) {
-        out.write('P'); out.write('K'); out.write(1); out.write(2)
-        le16(20); le16(20); le16(0); le16(r.method); le16(0); le16(0)
-        le32(r.crc); le32(r.compSize); le32(r.size)
-        le16(r.nameB.length); le16(0); le16(0)
-        le16(0); le16(0); le32(0)
-        le32(r.localOff)
-        out.write(r.nameB)
-        off += 46L + r.nameB.length
-      }
-      out.write('P'); out.write('K'); out.write(5); out.write(6)
-      le16(0); le16(0); le16(cd.size); le16(cd.size)
-      le32(off - cdStart); le32(cdStart); le16(0)
+      zip.finish()
       out.close()
       out = null
     }
@@ -381,8 +336,8 @@ object ZipShards {
           in.readFully(off, head)
           require(head(0) == 'P' && head(1) == 'K' && head(2) == 3 && head(3) == 4,
             s"$p @ $off: not a local file header")
-          val nameLen = graft.functions.ZipHeaders.leU16(head, 26)
-          val extraLen = graft.functions.ZipHeaders.leU16(head, 28)
+          val nameLen = graft.functions.Bytes.leU16(head, 26)
+          val extraLen = graft.functions.Bytes.leU16(head, 28)
           val dataOff = off + 30 + nameLen + extraLen
           val payload =
             if (method == 0) {

@@ -5,6 +5,7 @@ import java.util.zip.{CRC32, Deflater}
 import graft.SparkSpec
 import graft.operators.{Dedup, Multimodal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
 class PixelSpec extends SparkSpec {
   import spark.implicits._
@@ -182,16 +183,20 @@ class PixelSpec extends SparkSpec {
   test("hash expressions run in codegen and interpreted modes") {
     val p = 0x00FF_00FF_0F0F_3355L
     val bytes = ImageCodec.encodePng(8, 8, 1, patternPixels(p), filterType = 3)
-    val df = Seq((1L, bytes), (2L, "junk".getBytes), (3L, null.asInstanceOf[Array[Byte]]))
-      .toDF("id", "blob")
-    val got = df.select(col("id"), Dedup.imageAHash(col("blob")).as("h"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
-    assert(got(1L) === p)
-    assert(got(2L) == null && got(3L) == null)
-    val lum = df.filter(col("id") === 1L)
-      .select(ImageLuma(col("blob")).as("l")).select("l.width", "l.height")
-      .as[(Int, Int)].head()
-    assert(lum === ((8, 8)))
+    // an RDD-backed relation: a local Seq.toDF projection is folded by the
+    // optimizer, which evaluates it interpreted whatever the mode
+    val df = BlobDecoderModesSpec.table(spark, BinaryType, Seq(bytes, "junk".getBytes, null))
+    for ((mode, confs) <- BlobDecoderModesSpec.modes)
+      BlobDecoderModesSpec.withConfs(spark, confs) {
+        val got = df.select(col("id"), Dedup.imageAHash(col("blob")).as("h"))
+          .collect().map(r => r.getInt(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
+        assert(got(1) === p, mode)
+        assert(got(2) == null && got(3) == null, mode)
+        val lum = df.filter(col("id") === 1)
+          .select(ImageLuma(col("blob")).as("l")).select("l.width", "l.height")
+          .as[(Int, Int)].head()
+        assert(lum === ((8, 8)), mode)
+      }
   }
 
   test("image near-dup: twins collapse, near images cluster, undecodable survive") {

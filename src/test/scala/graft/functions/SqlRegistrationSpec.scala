@@ -68,4 +68,17 @@ class SqlRegistrationSpec extends SparkSpec {
     val st = row.getStruct(3)
     assert(st.getLong(0) == 4L && st.getLong(1) == 32768L && st.getLong(3) == 2L)
   }
+
+  test("integer arguments fold at registration; a column names the argument") {
+    graft.functions.registerAll(spark)
+    val png = ImageCodec.encodePng(8, 8, 1, new Array[Byte](64))
+      .map("%02X".format(_)).mkString
+    assert(spark.sql(s"SELECT image_dims(image_resize(unhex('$png'), 2 + 2, 4)).width")
+      .head().getInt(0) == 4)
+    val e = intercept[Exception](
+      spark.sql(s"SELECT image_resize(unhex('$png'), CAST(id AS INT), 4) FROM range(1)"))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(t => String.valueOf(t.getMessage)
+      .contains("image_resize width must be an integer literal")), e.toString)
+  }
 }
