@@ -20,6 +20,13 @@ import org.apache.spark.storage.StorageLevel
  *  - Verification (exact Jaccard / signature agreement) happens only on
  *    candidate pairs — the classic LSH contract: O(n·bands) shuffle instead
  *    of O(n²) compare.
+ *  - Small results finish on the driver. The near-dup droppers read their
+ *    edge list once, with a bounded collect, and cluster it with a driver
+ *    union-find when it fits; [[dropFrequentLines]] reads its frequent-hash
+ *    set once the same way. Either result goes back to the corpus pass as a
+ *    broadcast local relation, so no job re-materializes what the driver
+ *    already holds. Only above the thresholds do the distributed branches
+ *    (label propagation, the membership join) run.
  */
 object Dedup {
 
@@ -120,19 +127,47 @@ object Dedup {
       numPerms: Int = 64,
       bands: Int = 16,
       minEstJaccard: Double = 0.0): DataFrame = {
+    checkBands(numPerms, bands)
+    minhashPairsOn(signatures(df, idCol, textCol, shingleN, numPerms),
+      numPerms, bands, minEstJaccard)
+  }
+
+  /** [[minhashPairs]] over signatures MATERIALIZED once, plus a cleanup
+   *  hook that drops them — the MinHash twin of [[hammingEdgesInternal]].
+   *  Both sides of the band self-join and both signature join-backs read
+   *  one MinHash pass instead of computing it in two separate map stages.
+   *  An eager localCheckpoint, not `persist`: AQE reads a persisted frame
+   *  through one table-cache stage, one Spark job, per reference (four
+   *  here), while checkpointed blocks are a plain RDD scan. The droppers
+   *  release the blocks through [[dropByPairs]]' `afterLabels` hook. */
+  private def minhashEdgesInternal(
+      df: DataFrame, idCol: String, textCol: String, shingleN: Int, numPerms: Int,
+      bands: Int, minEstJaccard: Double): (DataFrame, () => Unit) = {
+    checkBands(numPerms, bands)
+    val sigs = signatures(df, idCol, textCol, shingleN, numPerms).localCheckpoint(eager = true)
+    (minhashPairsOn(sigs, numPerms, bands, minEstJaccard), () => {
+      // the checkpointed frame is a scan of the materialized RDD
+      sigs.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      }
+      ()
+    })
+  }
+
+  private def checkBands(numPerms: Int, bands: Int): Unit =
     require(numPerms % bands == 0,
       s"bands ($bands) must divide numPerms ($numPerms) — trailing permutations " +
         "would otherwise never influence candidate generation")
-    val rowsPerBand = numPerms / bands
-    val sigs = signatures(df, idCol, textCol, shingleN, numPerms)
-    candidatePairs(sigs, bands, rowsPerBand)
+
+  private def minhashPairsOn(
+      sigs: DataFrame, numPerms: Int, bands: Int, minEstJaccard: Double): DataFrame =
+    candidatePairs(sigs, bands, numPerms / bands)
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .select(col("id_a"), col("id_b"),
         (aggregate(zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (acc, v) => acc + v).cast("double") / numPerms).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
-  }
 
   /**
    * Dedup assignment from LSH pairs: every doc maps to the smallest id it
@@ -162,12 +197,13 @@ object Dedup {
    * Transitive dedup clusters: connected components over a candidate-pair
    * edge list. ADAPTIVE, like AQE picks a join strategy by measured size:
    *
-   *  - edge list ≤ `localEdgeThreshold` (count is one cheap action on an
-   *    id-pair frame): collect the edges and run driver UNION-FIND —
-   *    O(E α(E)) in one pass, replacing N rounds of join+agg+checkpoint
-   *    jobs. A million 16-byte edges is a few MB of legitimate driver
-   *    state, the same class as the IVF centroid model; at real-world dup
-   *    rates this is the overwhelmingly common case.
+   *  - edge list ≤ `localEdgeThreshold`: ONE bounded action reads at most
+   *    `localEdgeThreshold + 1` edges (a limit collect, no separate count);
+   *    when they all fit, a driver UNION-FIND clusters them — O(E α(E)) in
+   *    one pass, replacing N rounds of join+agg+checkpoint jobs. A million
+   *    16-byte edges is a few MB of legitimate driver state, the same class
+   *    as the IVF centroid model; at real-world dup rates this is the
+   *    overwhelmingly common case.
    *  - larger: iterative min-label propagation (each vertex adopts the
    *    smallest label among itself and its neighbors until fixpoint) —
    *    every round one join + one aggregation on the edge list, documents
@@ -181,20 +217,112 @@ object Dedup {
       vertices: DataFrame, // single column "id"
       pairs: DataFrame, // (id_a, id_b) undirected edges
       maxIter: Int = 10,
-      localEdgeThreshold: Long = 1000000L): DataFrame = {
-    // Persist before the size probe: the count, the local collect (or the
-    // iterative joins) all read the materialized edges instead of
-    // re-running the mining that produced them. Unpersisted before
-    // returning — both branches end with MATERIALIZED labels (collected
-    // or checkpointed), so the cache entry would otherwise live in the
-    // CacheManager until session end, leaking one entry per mining call.
+      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+    // Persist before the size probe: the bounded collect and the iterative
+    // joins read the materialized edges instead of re-running the mining
+    // that produced them. Unpersisted before returning — both branches end
+    // with MATERIALIZED labels (checkpointed), so the cache entry would
+    // otherwise live in the CacheManager until session end, leaking one
+    // entry per mining call.
     val edgeList = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (edgeList.count() <= localEdgeThreshold) {
-      val result = connectedComponentsLocal(vertices, edgeList)
-      edgeList.unpersist(blocking = false)
-      return result
+    val labels = edgesUpTo(edgeList, localEdgeThreshold) match {
+      case Some(edges) =>
+        connectedComponentsLocal(vertices, edges, edgeList.schema.head.dataType)
+      case None => propagateLabels(vertices, edgeList, maxIter)
     }
+    edgeList.unpersist(blocking = false)
+    labels
+  }
+
+  /** Edge budget of the driver branches of [[connectedComponents]] and
+   *  [[dropByPairs]]. */
+  private[operators] val LocalEdgeThreshold = 1000000L
+
+  /** The edge budget [[dropByPairs]] uses. A test seam only (a spec binds 0
+   *  to force the distributed branch on the same inputs), not an option. */
+  private[operators] val dropEdgeThreshold =
+    new scala.util.DynamicVariable[Long](LocalEdgeThreshold)
+
+  /** All rows of `df` in ONE bounded action when it holds at most `max`
+   *  of them; `None` (after collecting at most `max + 1`) when it does not. */
+  private def collectUpTo(df: DataFrame, max: Long): Option[Array[org.apache.spark.sql.Row]] = {
+    val head = df.limit((math.min(math.max(max, -1L), Int.MaxValue - 1L) + 1L).toInt).collect()
+    if (head.length <= max) Some(head) else None
+  }
+
+  /** The (src, dst) edges of a two-column edge list, when at most
+   *  `threshold` of them exist ([[collectUpTo]]). */
+  private def edgesUpTo(edgeList: DataFrame, threshold: Long): Option[Array[(Any, Any)]] =
+    collectUpTo(edgeList, threshold).map(_.map(r => (r.get(0), r.get(1))))
+
+  /** Driver union-find over collected edges: path halving + union by MIN,
+   *  so every root IS its component's min id. Maps every vertex of the
+   *  edges (roots included) to its root. Id-type-generic (long, int,
+   *  string, …): ids are the external values Spark collects, ordered by
+   *  the natural ordering of their runtime type — "min label" must mean
+   *  the same thing the distributed branch's min() computes. */
+  private def unionFind(edges: Array[(Any, Any)]): Array[(Any, Any)] = {
+    val lt: (Any, Any) => Boolean = {
+      case (x: java.lang.Long, y: java.lang.Long) => x < y
+      case (x: java.lang.Integer, y: java.lang.Integer) => x < y
+      case (x: String, y: String) => x < y
+      case (a, b) => a.toString < b.toString
+    }
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent(r) != r) {
+        val p = parent(r)
+        parent(r) = parent(p) // path halving
+        r = p
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      // union by MIN so the final root is the component minimum
+      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keys.toArray.map(v => (v, find(v)))
+  }
+
+  /** (id, cluster) for every vertex of the collected edges, as a local
+   *  relation typed like the edge ids — built on the driver, no job. */
+  private def localLabels(
+      spark: org.apache.spark.sql.SparkSession, edges: Array[(Any, Any)],
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val rows = unionFind(edges).map { case (v, root) => org.apache.spark.sql.Row(v, root) }
+    spark.createDataFrame(rows.toSeq.asJava,
+      StructType(Seq(StructField("id", idType), StructField("cluster", idType))))
+  }
+
+  /** Driver branch of [[connectedComponents]]: union-find labels joined
+   *  back onto `vertices`; non-edge vertices label themselves via the left
+   *  join + coalesce. */
+  private def connectedComponentsLocal(
+      vertices: DataFrame, edges: Array[(Any, Any)],
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val labels = localLabels(vertices.sparkSession, edges, idType)
+      .select(col("id"), col("cluster").as("__cc_cluster"))
+    vertices.select(col("id"))
+      .join(broadcast(labels), Seq("id"), "left")
+      .select(col("id"), coalesce(col("__cc_cluster"), col("id")).as("cluster"))
+      // materialize: the result otherwise keeps referencing `vertices`
+      // (usually derived from the mined edges), and the caller unpersists
+      // those right after this returns — a lazy result would silently
+      // re-run the whole mining pass on every downstream action
+      .localCheckpoint(eager = true)
+  }
+
+  /** Distributed branch of [[connectedComponents]]: iterative min-label
+   *  propagation over the (src, dst) edge list, checkpointed per round. */
+  private def propagateLabels(
+      vertices: DataFrame, edgeList: DataFrame, maxIter: Int): DataFrame = {
     val edges = edgeList
       .union(edgeList.select(col("dst").as("src"), col("src").as("dst")))
     var labels = vertices.select(col("id"), col("id").as("cluster"))
@@ -222,57 +350,7 @@ object Dedup {
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge within $maxIter iterations; " +
         "raise maxIter (component diameter exceeds the bound)")
-    edgeList.unpersist(blocking = false) // labels are checkpointed
     labels
-  }
-
-  /** Driver union-find branch of [[connectedComponents]]: path-halving +
-   *  union-by-min so every root IS its component's min id; non-edge
-   *  vertices label themselves via the left join + coalesce. */
-  private def connectedComponentsLocal(vertices: DataFrame, edgeList: DataFrame): DataFrame = {
-    val spark = vertices.sparkSession
-    // id-type-generic (long, string, …): collect as external values and
-    // order with the natural ordering of the runtime type — "min label"
-    // must mean the same thing the distributed branch's min() computes
-    val lt: (Any, Any) => Boolean = {
-      case (x: java.lang.Long, y: java.lang.Long) => x < y
-      case (x: java.lang.Integer, y: java.lang.Integer) => x < y
-      case (x: String, y: String) => x < y
-      case (a, b) => a.toString < b.toString
-    }
-    val edges = edgeList.collect().map(r => (r.get(0), r.get(1)))
-    val parent = scala.collection.mutable.Map.empty[Any, Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) {
-        val p = parent.getOrElse(r, r)
-        parent(r) = parent.getOrElse(p, p) // path halving
-        r = p
-      }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) {
-        // union by MIN so the final root is the component minimum
-        if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
-      }
-    }
-    val idType = edgeList.schema.fields.head.dataType
-    val labelSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType),
-      org.apache.spark.sql.types.StructField("__cc_cluster", idType)))
-    val labelRows = parent.keys.toSeq.map(v => org.apache.spark.sql.Row(v, find(v)))
-    val labels = spark.createDataFrame(
-      spark.sparkContext.parallelize(labelRows, 1), labelSchema)
-    vertices.select(col("id"))
-      .join(broadcast(labels), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__cc_cluster"), col("id")).as("cluster"))
-      // materialize: the result otherwise keeps referencing `vertices`
-      // (usually derived from the mined edges), and the caller unpersists
-      // those right after this returns — a lazy result would silently
-      // re-run the whole mining pass on every downstream action
-      .localCheckpoint(eager = true)
   }
 
   /**
@@ -280,12 +358,13 @@ object Dedup {
    * pipeline: keep one canonical document (smallest id) per transitive
    * near-dup cluster, drop the rest, return the surviving full rows.
    *
-   * Scale shape: [[minhashPairs]] mines the edge list with a linear
-   * shuffle; [[connectedComponents]] runs ONLY on edge-touched vertices
-   * (documents with no near-dup edge never enter the iteration — at
-   * real-world dup rates that shrinks the CC input by 10-100×); the corpus
-   * itself moves once, through a single anti-join against the loser id set
-   * (broadcast when small, as dup sets usually are).
+   * Scale shape: [[minhashPairs]]' mining (over signatures computed once
+   * and cached for the call) produces the edge list with a linear shuffle;
+   * [[dropByPairs]] clusters ONLY edge-touched vertices (documents with no
+   * near-dup edge never enter it — at real-world dup rates that shrinks the
+   * clustering input by 10-100×); the corpus itself moves once, through a
+   * single anti-join against the loser id set (a broadcast local relation
+   * when the edges fit the driver, as dup sets usually do).
    */
   def dropNearDuplicates(
       df: DataFrame,
@@ -295,10 +374,11 @@ object Dedup {
       numPerms: Int = 64,
       bands: Int = 16,
       minEstJaccard: Double = 0.5,
-      keepBy: Seq[Column] = Nil): DataFrame =
-    dropByPairs(df, idCol,
-      minhashPairs(df, idCol, textCol, shingleN, numPerms, bands, minEstJaccard),
-      keepBy)
+      keepBy: Seq[Column] = Nil): DataFrame = {
+    val (edges, cleanup) = minhashEdgesInternal(
+      df, idCol, textCol, shingleN, numPerms, bands, minEstJaccard)
+    dropByPairs(df, idCol, edges, keepBy, cleanup)
+  }
 
   /**
    * Near-dup removal with SimHash candidate mining instead of MinHash —
@@ -481,9 +561,18 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Shared drop core: edge list → connected components over touched
-   * vertices only → broadcast-friendly anti-join of the loser ids. */
   /** Cluster-then-anti-join collapse shared by every near-dup dropper.
+   *
+   *  The edge list is persisted and read ONCE by a bounded collect (at most
+   *  the edge budget + 1 edges reach the driver). When it fits, one driver
+   *  union-find labels every touched vertex with its component's min id,
+   *  and those labels go to the final anti-join as a broadcast local
+   *  relation — no touched-vertex distinct, no label checkpoint, no further
+   *  job over the edges. Above the budget, min-label propagation runs over
+   *  the touched vertices exactly as in [[connectedComponents]]. Either
+   *  way the edge cache — and, via `afterLabels`, any upstream signature
+   *  caches the miner registered — is dropped once the labels exist, since
+   *  nothing downstream reads them again.
    *
    *  Survivor selection: with `keepBy` empty, each connected component
    *  keeps its MIN-id document (the historical contract every closed-form
@@ -494,35 +583,38 @@ object Dedup {
    *  an arbitrary id accident. The ranking window partitions by cluster
    *  label — per-component work, never a global sort; only (id, cluster,
    *  ordering-attrs) rows move, never text. */
-  private def dropByPairs(
+  private[operators] def dropByPairs(
       df: DataFrame, idCol: String, pairsDf: DataFrame,
       keepBy: Seq[Column] = Nil,
       afterLabels: () => Unit = () => ()): DataFrame = {
-    // The edge list fans out into several actions (CC's size probe, the
-    // touched-vertex set, the final anti-join); persist it so the LSH mining
-    // pass over the corpus runs ONCE, not once per action. MEMORY_AND_DISK
-    // keeps lineage for executor-loss recovery (edge lists are tiny next to
-    // the corpus — a few bytes per near-dup pair). Once connectedComponents
-    // returns, its labels are MATERIALIZED (collected or checkpointed), so
-    // the edge cache — and, via `afterLabels`, any upstream signature
-    // caches the miner registered — can be dropped instead of leaking one
-    // CacheManager entry per dedup call for the rest of the session.
+    // MEMORY_AND_DISK keeps lineage for executor-loss recovery (edge lists
+    // are tiny next to the corpus — a few bytes per near-dup pair); the
+    // cache only pays off on the distributed branch, which reads the edges
+    // once per propagation round
     val pairs = pairsDf.select(col("id_a"), col("id_b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val touched = pairs.select(col("id_a").as("id"))
-      .union(pairs.select(col("id_b").as("id"))).distinct()
-    val labels = connectedComponents(touched, pairs)
+    val labels = edgesUpTo(pairs, dropEdgeThreshold.value) match {
+      case Some(edges) =>
+        broadcast(localLabels(df.sparkSession, edges, pairs.schema.head.dataType))
+      case None =>
+        val touched = pairs.select(col("id_a").as("id"))
+          .union(pairs.select(col("id_b").as("id"))).distinct()
+        propagateLabels(touched,
+          pairs.select(col("id_a").as("src"), col("id_b").as("dst")), maxIter = 10)
+    }
     pairs.unpersist(blocking = false)
     afterLabels()
     val losers =
       if (keepBy.isEmpty)
         labels.filter(col("cluster") =!= col("id")).select(col("id").as(idCol))
       else {
-        val ranked = df.join(labels, df(idCol) === labels("id"))
+        // internal names: `df` may itself hold an `id` or `cluster` column
+        val named = labels.select(col("id").as("__graft_dd_id"), col("cluster").as("__graft_dd_cluster"))
+        val ranked = df.join(named, df(idCol) === col("__graft_dd_id"))
           .withColumn("__graft_dd_rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("cluster"))
-              .orderBy(keepBy :+ col("id").asc: _*)))
-        ranked.filter(col("__graft_dd_rank") > 1).select(col("id").as(idCol))
+            org.apache.spark.sql.expressions.Window.partitionBy(col("__graft_dd_cluster"))
+              .orderBy(keepBy :+ col("__graft_dd_id").asc: _*)))
+        ranked.filter(col("__graft_dd_rank") > 1).select(col("__graft_dd_id").as(idCol))
       }
     df.join(losers, Seq(idCol), "left_anti")
   }
@@ -768,18 +860,20 @@ object Dedup {
    * the common path:
    *  1. the document-frequency aggregation carries ONLY xxhash64(line)
    *     (8 B/row after an in-row `array_distinct`, map-side combined);
-   *     the frequent set is materialized small (hashes only) and COUNTED
-   *     before any plan touches the corpus;
+   *     the frequent set is read ONCE by a bounded collect — at most
+   *     `maxBroadcastLines + 1` hashes reach the driver — before any plan
+   *     touches the corpus;
    *  2. at or below `maxBroadcastLines` (the common case — boilerplate is
-   *     bounded by totalLines/minDocs and small by definition) it
-   *     collapses to ONE broadcast row holding the hash array, and the
-   *     rewrite is one per-row [[graft.functions.DropHashedLines]] pass
-   *     that probes a hash set built once per task from that broadcast
-   *     row — zero exchanges on the corpus, order preserved for free
-   *     because documents are never exploded;
+   *     bounded by totalLines/minDocs and small by definition) the
+   *     collected hashes become ONE broadcast row of a local relation, and
+   *     the rewrite is one per-row [[graft.functions.DropHashedLines]]
+   *     pass that probes a hash set built once per task from that row —
+   *     zero exchanges on the corpus, order preserved for free because
+   *     documents are never exploded;
    *  3. ABOVE the threshold (adversarial data / very low `minDocs`, where
    *     the single-row array would be a multi-GB driver+executor bomb)
-   *     the guard switches to a distributed membership join: each
+   *     the frequent set is materialized (localCheckpoint) and the guard
+   *     switches to a distributed membership join: each
    *     document's DISTINCT line hashes (8 B/row, never the text) join
    *     the frequent set, regroup to a per-document hit array — bounded
    *     by that document's own line count — and rejoin the corpus by id.
@@ -800,36 +894,40 @@ object Dedup {
     require(maxBroadcastLines >= 0,
       s"maxBroadcastLines must be non-negative, got $maxBroadcastLines")
     val lineArr = split(col(textCol), java.util.regex.Pattern.quote(sep))
-    // hashes only — 8 B/row; localCheckpoint cuts lineage so the count and
-    // the downstream membership plan both reuse one materialization
-    val freq = df
+    // hashes only — 8 B/row
+    val frequentHashes = df
       .select(explode(array_distinct(transform(lineArr, l => xxhash64(l)))).as("lh"))
       .groupBy(col("lh")).agg(count(lit(1)).as("dfreq"))
       .filter(col("dfreq") >= minDocs)
       .select(col("lh"))
-      .localCheckpoint(eager = true)
-    val nFrequent = freq.count()
-    if (nFrequent <= maxBroadcastLines) {
-      val frequent = freq.agg(collect_list(col("lh")).as("__graft_freq_lines"))
-      df.crossJoin(broadcast(frequent))
-        .withColumn(s"${textCol}_clean",
-          graft.functions.DropHashedLines(col(textCol), col("__graft_freq_lines"), sep))
-        .drop("__graft_freq_lines")
-    } else {
-      val hits = df
-        .select(col(idCol).as("__graft_fl_id"),
-          explode(array_distinct(transform(lineArr, l => xxhash64(l)))).as("lh"))
-        .join(freq, "lh")
-        .groupBy(col("__graft_fl_id"))
-        .agg(collect_set(col("lh")).as("__graft_doc_freq"))
-      df.join(hits, df(idCol) === hits("__graft_fl_id"), "left")
-        .withColumn(s"${textCol}_clean",
-          when(col("__graft_doc_freq").isNull, col(textCol))
-            .otherwise(array_join(
-              filter(lineArr,
-                l => !array_contains(col("__graft_doc_freq"), xxhash64(l))),
-              sep)))
-        .drop("__graft_fl_id", "__graft_doc_freq")
+    collectUpTo(frequentHashes, maxBroadcastLines) match {
+      case Some(hashes) =>
+        import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+        val frequent = df.sparkSession.createDataFrame(
+          java.util.List.of(org.apache.spark.sql.Row(hashes.map(_.getLong(0)))),
+          StructType(Seq(StructField("__graft_freq_lines", ArrayType(LongType, containsNull = false)))))
+        df.crossJoin(broadcast(frequent))
+          .withColumn(s"${textCol}_clean",
+            graft.functions.DropHashedLines(col(textCol), col("__graft_freq_lines"), sep))
+          .drop("__graft_freq_lines")
+      case None =>
+        // localCheckpoint cuts lineage so the membership plan reads one
+        // materialization of the (large) frequent set
+        val freq = frequentHashes.localCheckpoint(eager = true)
+        val hits = df
+          .select(col(idCol).as("__graft_fl_id"),
+            explode(array_distinct(transform(lineArr, l => xxhash64(l)))).as("lh"))
+          .join(freq, "lh")
+          .groupBy(col("__graft_fl_id"))
+          .agg(collect_set(col("lh")).as("__graft_doc_freq"))
+        df.join(hits, df(idCol) === hits("__graft_fl_id"), "left")
+          .withColumn(s"${textCol}_clean",
+            when(col("__graft_doc_freq").isNull, col(textCol))
+              .otherwise(array_join(
+                filter(lineArr,
+                  l => !array_contains(col("__graft_doc_freq"), xxhash64(l))),
+                sep)))
+          .drop("__graft_fl_id", "__graft_doc_freq")
     }
   }
 

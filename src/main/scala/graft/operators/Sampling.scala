@@ -518,6 +518,7 @@ object Sampling {
     val touched = pairs.select(col("id_a").as("id"))
       .union(pairs.select(col("id_b").as("id"))).distinct()
     val labels = graft.operators.Dedup.connectedComponents(touched, pairs)
+    pairs.unpersist(blocking = false) // labels are materialized
     // positive = min cluster-mate ≠ anchor: cluster label for everyone but
     // the label-holder, who pairs with the cluster's second-smallest id
     val second = labels.filter(col("id") =!= col("cluster"))

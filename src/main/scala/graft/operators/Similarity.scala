@@ -304,19 +304,6 @@ object Similarity {
   }
 
   /**
-   * Threshold near-dup pairs at corpus scale: sign-LSH over `tables`
-   * independent bucketings (each `planes` hyperplanes, salted by table id),
-   * self-join per bucket on ids only, exact cosine rescore of distinct
-   * candidates, keep pairs ≥ `minCosine`. Shuffle volume is
-   * O(n·tables·8 bytes) + collisions, never O(n²). Recall rises with
-   * `tables` (union of bucketings); precision is exact (rescored).
-   */
-  /** Embedding-space near-duplicate REMOVAL, the vector twin of
-   *  [[Dedup.dropNearDuplicates]]: [[lshNearDupPairs]] mines exact-rescored
-   *  pairs ≥ `minCosine`, transitive clusters come from the adaptive
-   *  [[Dedup.connectedComponents]] over edge-touched ids only, and the
-   *  corpus moves once through an anti-join against the losers. */
-  /**
    * SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
    * web-scale through semantic deduplication"): semantic near-duplicate
    * removal by k-means clustering + within-cluster cosine pruning. Where
@@ -371,25 +358,20 @@ object Similarity {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
+  /** Embedding-space near-duplicate REMOVAL, the vector twin of
+   *  [[Dedup.dropNearDuplicates]]: [[lshNearDupPairs]] mines exact-rescored
+   *  pairs ≥ `minCosine`, and the shared [[Dedup.dropByPairs]] collapse
+   *  clusters the edge-touched ids (driver union-find when the edges fit)
+   *  and moves the corpus once through an anti-join against the losers. */
   def dropNearDupVectors(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       minCosine: Double,
       planes: Int = 8,
-      tables: Int = 4): DataFrame = {
-    // Persisted for the same reason as Dedup.dropNearDuplicates: the edge
-    // list feeds several actions and the LSH mining + rescore pass over the
-    // vectors should run once, not once per action.
-    val pairs = lshNearDupPairs(df, idCol, vecCol, minCosine, planes, tables)
-      .select(col("id_a"), col("id_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val touched = pairs.select(col("id_a").as("id"))
-      .union(pairs.select(col("id_b").as("id"))).distinct()
-    val labels = Dedup.connectedComponents(touched, pairs)
-    val losers = labels.filter(col("cluster") =!= col("id")).select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      tables: Int = 4): DataFrame =
+    Dedup.dropByPairs(df, idCol,
+      lshNearDupPairs(df, idCol, vecCol, minCosine, planes, tables))
 
   /**
    * The persisted-artifact side of incremental embedding dedup: (id, vec,
@@ -485,6 +467,14 @@ object Similarity {
       vectorSignatures(corpus, idCol, vecCol, planes, tables),
       idCol, vecCol, minCosine, planes, tables)
 
+  /**
+   * Threshold near-dup pairs at corpus scale: sign-LSH over `tables`
+   * independent bucketings (each `planes` hyperplanes, salted by table id),
+   * self-join per bucket on ids only, exact cosine rescore of distinct
+   * candidates, keep pairs ≥ `minCosine`. Shuffle volume is
+   * O(n·tables·8 bytes) + collisions, never O(n²). Recall rises with
+   * `tables` (union of bucketings); precision is exact (rescored).
+   */
   def lshNearDupPairs(
       df: DataFrame,
       idCol: String,

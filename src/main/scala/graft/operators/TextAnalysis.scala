@@ -40,16 +40,22 @@ object TextAnalysis {
    */
   def withLangId(df: DataFrame, textCol: String, outCol: String = "lang_pred"): DataFrame = {
     val padded = concat(lit(" "), lower(col(textCol)), lit(" "))
-    val scores = langMarkers.map { case (lang, markers) =>
-      lang -> markers.map(m => occ(padded, m)).reduce(_ + _)
+    // each language's score is projected ONCE as a column, so the argmax
+    // below references it instead of copying its expression tree
+    def scoreCol(lang: String) = s"__graft_lang_$lang"
+    val langs = langMarkers.map(_._1)
+    val scored = df.select(col("*") +: langMarkers.map { case (lang, markers) =>
+      markers.map(m => occ(padded, m)).reduce(_ + _).as(scoreCol(lang))
+    }: _*)
+    val best = greatest(langs.map(l => col(scoreCol(l))): _*)
+    // the first language in list order that reaches the max — the same
+    // answer as a strict `>` fold from the first language
+    val argmax = langs.init.foldRight(lit(langs.last)) { (lang, rest) =>
+      when(col(scoreCol(lang)) === best, lit(lang)).otherwise(rest)
     }
-    val best = scores.tail.foldLeft[(Column, Column)]((lit(scores.head._1), scores.head._2)) {
-      case ((bestLang, bestScore), (lang, score)) =>
-        (when(score > bestScore, lit(lang)).otherwise(bestLang),
-          when(score > bestScore, score).otherwise(bestScore))
-    }
-    df.withColumn(outCol, when(best._2 > 0, best._1).otherwise(lit("unknown")))
-      .withColumn(s"${outCol}_score", best._2.cast("long"))
+    scored.withColumn(outCol, when(best > 0, argmax).otherwise(lit("unknown")))
+      .withColumn(s"${outCol}_score", best.cast("long"))
+      .drop(langs.map(scoreCol): _*)
   }
 
   /**

@@ -318,4 +318,42 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got.columns.toSeq === Seq("doc_id", "text"))
     assert(got.select("doc_id").as[Long].collect().toSeq === Seq(1L))
   }
+
+  test("langid: first max in language order, and the curation stage over a " +
+      "file-backed frame compiles under whole-stage codegen") {
+    val texts = Seq("the le", "le der", "der el", "el the", "the le der el",
+      "le le the", "und und der the the", "los y el le", null, "", "plain words")
+    // reference: the strict `>` fold over the languages in list order
+    def expected(t: String): (String, java.lang.Long) =
+      if (t == null) ("unknown", null)
+      else {
+        val padded = " " + t.toLowerCase + " "
+        val scores = TextAnalysis.langMarkers.map { case (lang, ms) =>
+          lang -> ms.map(m => (padded.length - padded.replace(m, "").length).toDouble / m.length).sum
+        }
+        val (lang, score) = scores.tail.foldLeft(scores.head) {
+          case (best, cand) => if (cand._2 > best._2) cand else best
+        }
+        (if (score > 0) lang else "unknown", score.toLong)
+      }
+    val dir = java.nio.file.Files.createTempDirectory("graft_langid_").toString + "/docs"
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val got = TextAnalysis.withLangId(docs, "text")
+      .select("doc_id", "lang_pred", "lang_pred_score").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), if (r.isNullAt(2)) null else Long.box(r.getLong(2))))
+      .toMap
+    assert(got === texts.zipWithIndex.map { case (t, i) => i.toLong -> expected(t) }.toMap)
+    // q87's first stage: language id, quality features and their filter
+    val stage = TextAnalysis.withQuality(TextAnalysis.withLangId(docs, "text"), "text")
+      .filter(col("lang_pred") === "en" && col("quality_score") >= 0.75)
+    val plan = stage.queryExecution.executedPlan
+    assert(plan.collect { case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }.nonEmpty)
+    val compiled = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+    assert(compiled.nonEmpty && compiled.forall(_._3 !=
+      org.apache.spark.sql.catalyst.expressions.codegen.ByteCodeStats.UNAVAILABLE),
+      "a whole-stage codegen subtree failed to compile")
+    stage.collect()
+  }
 }

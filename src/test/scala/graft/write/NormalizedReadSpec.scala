@@ -326,29 +326,6 @@ class NormalizedReadSpec extends SparkSpec {
     assert(out.select("v").head().getString(0) == "new")
   }
 
-  /** Jobs launched while `body` runs: a marker job after it flushes the
-   *  (asynchronous, FIFO) listener bus, so every job `body` started has
-   *  been counted once the marker is seen. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      spark.sparkContext.setJobDescription("__jobs_marker")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains("__jobs_marker") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains("__jobs_marker"), "listener bus never delivered the marker job")
-      (out, seen.asScala.takeWhile(_ != "__jobs_marker").size)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** Two generations (the first unstamped) plus, with `tombstones`,
    *  partition, row and range tombstones under (k; c1, c2). */
   private def tombstonedTable(tombstones: Boolean = true): (CqlSchema, String) = {
